@@ -1,24 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      // The generated-class cache defaults to 100 entries; the registry
-      // crossed 100 queries in round 7, so with the default every sweep
-      // LRU-evicts every plan and every rep pays Janino recompilation
-      // (0.1-4 s/query, worst for the big flatMapGroups plans) — the
-      // "min never reaches the warm time" pathology. Static conf: must
-      // be set before the first session in the JVM.
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = Session.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Absorb session/codegen warmup outside the timed loop so per-query
     // numbers reflect steady state, not first-job init.
@@ -131,11 +116,12 @@ object Bench {
       s"\"" + k + "\":[" + repsByName(k).map(r => f"$r%.3f").mkString(",") + "]"
     }.mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
-    // The declared driver-contract line: metric/value/unit/queries/sf.
+    // The declared driver-contract line: metric/value/unit/queries/sf/cpus
+    // (cpus, so a c8 record is never read as a c32 one).
     // Per-rep arrays moved OUT of this line and into the BENCH_FULL file
     // (r20): with 206 queries the reps tripled the line past 11 KB and
     // guaranteed it fell off the driver artifact's ~2 KB stdout tail.
-    val fullLine = s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","n_queries":${results.size},"queries":$qs,"sf":"$sfDir"}"""
+    val fullLine = s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","n_queries":${results.size},"queries":$qs,"sf":"$sfDir","cpus":$cpus}"""
     println(fullLine)
     // Per-cpus artifact (r19 verdict #3: the 8-core scaling sweep used to
     // clobber BENCH_FULL.json, destroying the 32-core per-query record).
@@ -166,7 +152,7 @@ object Bench {
       .toSeq.sortBy(_._1)
       .map { case (f, xs) => s"\"" + f + "\":" + f"${xs.map(_._2).sum}%.3f" }
       .mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","n_queries":${results.size},"n_failed":$nFailed,"top10":$top10,"families":$fams,"sf":"$sfDir","note":"compact tail line; full per-query map precedes and is mirrored in bench_summary.json. Timed action: queryExecution.toRdd.count (r9+, honest vs join-eliminating DataFrame.count; see SCALING.md)"}""")
+    println(s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","n_queries":${results.size},"n_failed":$nFailed,"top10":$top10,"families":$fams,"sf":"$sfDir","cpus":$cpus,"note":"compact tail line; full per-query map precedes and is mirrored in bench_summary.json. Timed action: queryExecution.toRdd.count (r9+, honest vs join-eliminating DataFrame.count; see SCALING.md)"}""")
     spark.stop()
   }
 

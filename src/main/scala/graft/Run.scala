@@ -761,15 +761,9 @@ object Run {
 
   def main(argv: Array[String]): Unit = {
     val a = parseArgs(argv)
-    val spark = SparkSession.builder()
-      .master(a.master)
+    val spark = Session.builder(a.master,
+        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
       .appName(s"graft.Run ${a.tool}")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try {

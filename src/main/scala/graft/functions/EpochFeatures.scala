@@ -214,7 +214,7 @@ object EpochFeatures {
     * `element_at(map, key)` on Catalyst MapData is a LINEAR key scan —
     * projecting all 144 features that way cost O(144²) string compares
     * per epoch row and measurably dominated the composed ml2/cfg1/ml9
-    * lineages (r19 Ml2Profile: the projection alone 4.5 s → 0.9 s at
+    * lineages (OPTIMIZATION_r19.md: the projection alone 4.5 s → 0.9 s at
     * sf0.1). The kernel emits keys in the fixed [[FeatureKeyOrder]],
     * so each feature reads positionally from map_values; the key at
     * that position is verified per row, so a renamed, missing or

@@ -102,7 +102,8 @@ object Cnn {
     * ([[org.apache.spark.sql.graft.Conv1dMaxPoolLogit]], codegen'd
     * tight loop — NOT composed from `transform`/`array_max`, whose
     * interpreted lambda dispatch measured ~280–1200× slower;
-    * CnnScaleProbe has the numbers). Accumulation order matches
+    * SCALING.md, "Round 13: CNN forward pass", has the numbers).
+    * Accumulation order matches
     * [[forward]] bit-for-bit. NULL for a window shorter than the
     * filter (nothing to convolve). */
   def logitCol(m: CnnModel, win: Column): Column =

@@ -137,7 +137,7 @@ object Lstm {
     * `array<double>` window
     * ([[org.apache.spark.sql.graft.LstmHardLogit]], codegen'd
     * recurrence — the HOF/`aggregate` composition is a non-starter
-    * here for the same reason CnnScaleProbe measured for the conv
+    * here for the same reason SCALING.md round 13 measured for the conv
     * kernel: interpreted lambda dispatch per timestep). Accumulation
     * order matches [[forward]] bit-for-bit. NULL for an empty
     * window. */

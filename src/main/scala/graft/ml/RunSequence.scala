@@ -205,7 +205,7 @@ object RunSequence {
     val epochs = FeatureExtract.extract(sel, extract, validate = true)
     // positional fail-loud map projection — the per-name element_at
     // scan was O(|features|²) per row and dominated this lineage
-    // (EpochFeatures.featureCols docblock; r19 Ml2Profile numbers)
+    // (EpochFeatures.featureCols docblock; OPTIMIZATION_r19.md numbers)
     val featCols = EpochFeatures.featureCols(EpochFeatures.FeatureNames)
     epochs.toDF().select(
       Seq(col("eventId"), col("type"), col("tsSec"),
@@ -303,37 +303,34 @@ object RunSequence {
                                        totNe: Long, totNep: Long)
 
   /** ONE groupBy(fold) aggregate over `src` (columns fold, nEp),
-    * collected — O(k) rows. With `validate` this ALSO enforces the
-    * requireFoldRange contract (no null folds, every fold in 0..k-1)
-    * off the same collected rows, so the skeleton pays no separate
-    * guard job: the guard that used to be its own eager `.head()` per
-    * skeleton is now a free read of the aggregate the slices need
-    * anyway. The totals are Σ over the per-fold longs — exactly the
-    * old separate grand-total aggregate (count(*) = Σ per-fold counts
-    * once zero null folds is enforced; long addition is associative
-    * and exact). */
-  private def foldCountsOf(src: DataFrame, k: Int,
-                           validate: Boolean): FoldCounts = {
+    * collected — O(k) rows. It ALSO enforces the requireFoldRange
+    * contract (no null folds, every fold in 0..k-1) off the same
+    * collected rows, so the skeleton pays no separate guard job: the
+    * guard that used to be its own eager `.head()` per skeleton is now
+    * a free read of the aggregate the slices need anyway. Because a
+    * null fold always throws, no row can fall silently out of the
+    * totals: they are Σ over the per-fold longs — exactly the old
+    * separate grand-total aggregate (count(*) = Σ per-fold counts once
+    * zero null folds is enforced; long addition is associative and
+    * exact). */
+  private def foldCountsOf(src: DataFrame, k: Int): FoldCounts = {
     val rows = src.groupBy(col("fold"))
       .agg(count(lit(1)).as("ne"), sum("nEp").as("nep")).collect()
-    if (validate) {
-      val nullNe = rows.filter(_.isNullAt(0)).map(_.getLong(1)).sum
-      require(nullNe == 0L,
-        s"foldOf evaluated to NULL on $nullNe rows " +
-          "— every fold value must land in 0..k-1")
-      val fs = rows.filterNot(_.isNullAt(0)).map(_.getLong(0))
-      if (fs.nonEmpty)
-        require(fs.min >= 0 && fs.max < k,
-          s"foldOf out of range 0..${k - 1}: saw [${fs.min}, ${fs.max}]")
-    }
-    val good = rows.filterNot(_.isNullAt(0))
+    val nullNe = rows.filter(_.isNullAt(0)).map(_.getLong(1)).sum
+    require(nullNe == 0L,
+      s"foldOf evaluated to NULL on $nullNe rows " +
+        "— every fold value must land in 0..k-1")
+    val fs = rows.map(_.getLong(0))
+    if (fs.nonEmpty)
+      require(fs.min >= 0 && fs.max < k,
+        s"foldOf out of range 0..${k - 1}: saw [${fs.min}, ${fs.max}]")
     def nepOf(r: org.apache.spark.sql.Row) =
       if (r.isNullAt(2)) 0L else r.getLong(2)
     FoldCounts(
-      good.map(r => r.getLong(0) -> r.getLong(1)).toMap,
-      good.map(r => r.getLong(0) -> nepOf(r)).toMap,
-      good.map(_.getLong(1)).sum,
-      good.map(nepOf).sum)
+      rows.map(r => r.getLong(0) -> r.getLong(1)).toMap,
+      rows.map(r => r.getLong(0) -> nepOf(r)).toMap,
+      rows.map(_.getLong(1)).sum,
+      rows.map(nepOf).sum)
   }
 
   /** The skeleton's output schema — pinned so the driver-assembled
@@ -357,7 +354,8 @@ object RunSequence {
     * per-fold aggregates; the execution cost was not the data (the
     * aggregates are O(k) rows over persisted frames) but the DRIVER —
     * Catalyst analysis of the big union tree plus one serialized
-    * `.head()` guard job per skeleton (JobTimeline: ml9's wall was
+    * `.head()` guard job per skeleton (OPTIMIZATION_r20.md §Skeleton:
+    * ml9's wall was
     * dominated by 0.6-0.7 s no-job planning gaps and ~150 ms-spaced
     * tiny jobs). The three aggregates each skeleton actually needs
     * (evW by fold, the augment plan by fold, the F14 overlap counts by
@@ -395,15 +393,15 @@ object RunSequence {
       .groupBy(col("teFold")).agg(count(lit(1)).as("nOver"))
     // three independent aggregate jobs, overlapped (§2.6). The
     // fold-range validation (load-bearing for the complement algebra)
-    // is read off the evW aggregate; a violation still throws before
+    // is read off each fold aggregate; a violation still throws before
     // any slice row is assembled.
     val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
     val (evC, augC, over) = try {
       def submit[T](f: => T) =
         pool.submit(new java.util.concurrent.Callable[T] { def call(): T = f })
       val fEv = submit(evCounts.getOrElse(
-        foldCountsOf(evW, cfg.k, validate = true)))
-      val fAug = submit(foldCountsOf(planW, cfg.k, validate = false))
+        foldCountsOf(evW, cfg.k)))
+      val fAug = submit(foldCountsOf(planW, cfg.k))
       val fOver = submit(overlaps.collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap)
       (fEv.get(), fAug.get(), fOver.get())
@@ -538,7 +536,8 @@ object RunSequence {
       // same rows as over all 144, while the window plan carries
       // (n+1) derived columns instead of 144·(n+1) — the 432-column
       // analysis/codegen weight was ml9's largest remaining driver gap
-      // (JobTimeline: 0.65 s no-job before the evW materializations).
+      // (OPTIMIZATION_r20.md: 0.65 s no-job before the evW
+      // materializations).
       // RunSequenceSpec pins the count equivalence.
       def histCountFrame(flat: DataFrame, h: Int): DataFrame =
         FeatureHistory.addHistory(
@@ -595,14 +594,14 @@ object RunSequence {
           val cFuts = combos.map { case key @ (ec, h) =>
             val w = evWCache(key)
             (key, pool.submit(new java.util.concurrent.Callable[FoldCounts] {
-              def call(): FoldCounts = foldCountsOf(w, base.k, validate = true)
+              def call(): FoldCounts = foldCountsOf(w, base.k)
             }))
           }
           cFuts.foreach { case (k, fut) => evWCounts.update(k, fut.get()) }
         } finally pool.shutdown()
       } else combos.foreach { case key @ (ec, h) =>
         evWCounts.update(key,
-          foldCountsOf(evWFor(sweepCfgs.head), base.k, validate = true))
+          foldCountsOf(evWFor(sweepCfgs.head), base.k))
       }
       // the runs' skeleton aggregates are independent of each other —
       // overlap them too (§2.6); each runOne is 2-3 tiny O(k)-row

@@ -329,9 +329,9 @@ object Trainer {
     * z-scaled here (one distributed Summarizer pass; σ=0 → 1) and the
     * (mean, std) ride with the model — [[scorerMlp]] replays them.
     *
-    * Defaults are MEASURED, not guessed (MlpProbe, SCALING.md round
-    * 13, partially-overlapping planted corpus with an event-disjoint
-    * held-out split): held-out AUROC plateaus by maxIter ≈ 100 for
+    * Defaults are MEASURED, not guessed (SCALING.md, "Round 13: MLP
+    * depth/budget measured"; partially-overlapping planted corpus with
+    * an event-disjoint held-out split): held-out AUROC plateaus by maxIter ≈ 100 for
     * both tested architectures (200 spends 1.5-2× the fit time for
     * ≤ 0.004 more), so the budget default is 100. The reference's
     * best nets are 5-layer (`documentation/ResultsSummary.md` V0.09+);
@@ -470,8 +470,8 @@ object Trainer {
     * O(partitions) per-partition row-count subtotals, broadcast the
     * prefix offsets, and run the average-rank cumsum locally per
     * partition — identical statistic, no task ever holds more than its
-    * partition's share. (TrainerScaleProbe's all-distinct ladder
-    * measures the two forms head-to-head.) */
+    * partition's share. (SCALING.md, "Round 11: distributed AUROC
+    * rank", measures the two forms head-to-head.) */
   def auroc(scored: DataFrame, probCol: String = "p_seizure",
             labelCol: String = "label"): Double = {
     val spark = scored.sparkSession

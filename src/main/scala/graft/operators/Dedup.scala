@@ -434,7 +434,8 @@ object Dedup {
     * fixed regardless of n. 128 bits because a 64-bit key
     * birthday-collides by ~2^32 grams — a count a 100 TB corpus
     * exceeds; semantics are identical in the collision-free regime the
-    * dedup contract already assumes. Measured (D7ShuffleProbe, sf0.1
+    * dedup contract already assumes. Measured (SCALING.md, "Round 10:
+    * d7 gram fingerprinting"; sf0.1
     * and 10x): total pipeline shuffle bytes drop 2.3-2.4x vs raw-string
     * keys at wall-time parity — less than the raw 130B->16B key ratio
     * because lz4 compressed the repeated gram text well and the

@@ -147,7 +147,7 @@ object FeatureExtract {
     * the SAME eventId key the extraction group pass had just used, then
     * paid a non-codegen WindowExec evaluating |features|×(historyN−1)
     * lag functions plus a 720-column analyzer/codegen pass per
-    * execution (Ml2Profile: the history stage cost ~2.5 s of which
+    * execution (OPTIMIZATION_r19.md: the history stage cost ~2.5 s of which
     * ~1.5 s was plan-time even on sf0.001). Here the lag window is the
     * group iterator itself: epochs are produced in (tsSec,
     * startSample) order, so "previous row" is the previous epoch; rows

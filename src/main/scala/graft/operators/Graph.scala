@@ -121,7 +121,8 @@ object Graph {
     * derived from the edge list, so every node has ≥1 neighbour by
     * construction. Returns `(node, lbl)`.
     *
-    * ROUND 1 IS SPECIAL-CASED (round-13 G3Profile: the round-invariant
+    * ROUND 1 IS SPECIAL-CASED (SCALING.md, "Round 13: g3 headroom": the
+    * round-invariant
     * setup was ~1 s of g3's 2.8 s at sf0.1): the initial labeling is
     * the identity (every node labelled with itself), so round 1's
     * edge⋈label join is a rename — `bi ⋈ lbl0` on y with lbl = node

@@ -451,7 +451,7 @@ object Similarity {
     // nprobe the probed fraction shrinks as 1/√N and recall decays
     // below the e7 design floor by 100× (0.889 at N = 200k). Growing
     // nprobe ∝ √nlist = N^(1/4) holds the floor (0.988 at 200k,
-    // IvfScaleProbe recall ladder) at query cost N^(1/4)·N/nlist =
+    // SCALING.md round-11 ANN recall ladder) at query cost N^(1/4)·N/nlist =
     // O(N^0.75) — still decisively sublinear vs the O(N) brute scan.
     // An EXPLICIT nlist with unspecified nprobe keeps the long-standing
     // fixed 4: a caller who pinned nlist owns the probe budget too, and
@@ -596,7 +596,8 @@ object Similarity {
     * dominated by the anchor's OWN label: the true hard negative sits
     * in an opposite-label cluster whose cell rarely ranks in the
     * anchor's top-nprobe (measured: recall@2 ~0.57 at derived knobs,
-    * ~0.76 at doubled probes — HardNegProbe). Here each label gets its
+    * ~0.76 at doubled probes — SCALING.md, "Hard-negative recall: the
+    * per-label index"). Here each label gets its
     * OWN quantizer (the FAISS per-shard-index pattern): inverted lists
     * key on (label, cell), and an anchor probes the top cells of EVERY
     * opposite label's index — the probe ranking now runs against
@@ -656,7 +657,8 @@ object Similarity {
                 // ivfKnn's self-knn law: cross-label probing ranks an
                 // anchor against ANOTHER population's centroids, where
                 // the target sits near a cluster boundary more often
-                // than in the self-knn case (HardNegProbe ladder: the
+                // than in the self-knn case (SCALING.md r17/r18
+                // hard-negative recall ladder: the
                 // 1× knob decays 0.89→0.73 across decades while the 2×
                 // row holds 0.88-0.95; e13 pins the per-SF floors)
                 val np = math.min(

@@ -31,7 +31,8 @@ object Tidy {
     * earlier single-lambda form re-ran `from_json` on the same string
     * for every referencing field (8 outer + 6 inner parses per dp).
     * Staging cut the legacy double-encoded expansion 0.89 -> 0.37 s on
-    * 200k payload-bearing dps (TidyJsonProbe, warm min). Each stage
+    * 200k payload-bearing dps (warm min; SCALING.md round-19 closing
+    * audit). Each stage
     * also keeps the old coalesce chain's LAZINESS: the outer parse runs
     * only when some consuming first-class field is null, the inner one
     * only when neither the field nor the outer payload supplied a

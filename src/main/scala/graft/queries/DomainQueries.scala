@@ -104,7 +104,7 @@ object DomainQueries {
     // P8 probe statistic: RMS of the filtered signal over the centre
     // window [250, 750) of the n=1000 tone, where the filtfilt startup
     // transient (pole radius ~0.915/sample) has decayed below 1e-9 of
-    // the signal and the zero-phase closed form holds (ToneGainProbe).
+    // the signal and the zero-phase closed form holds (ToneGainSpec).
     val y = graft.functions.Filters.highPass(a.toArray)
     var s = 0.0; var i = 250
     while (i < 750) { s += y(i) * y(i); i += 1 }

@@ -124,8 +124,8 @@ object LakeQueries {
   def lake3Compaction(s: SparkSession, d: String): DataFrame = {
     val src = qtmp(s, "lake3_src")
     val dst = qtmp(s, "lake3_dst")
-    // project EARLY (r20; guide §2/§6 — JobProfile attributed lake3's
-    // task time to bytes moved through three full-width passes:
+    // project EARLY (r20; guide §2/§6 — OPTIMIZATION_r20.md attributes
+    // lake3's task time to bytes moved through three full-width passes:
     // fabricate-write, compact read+rewrite, read-back): the declared
     // result consumes only (category, user_id, event_id), so the
     // fabricated sprawl carries exactly those — ts/value/props never

@@ -103,7 +103,7 @@ object OsdbFixture {
     * DFT *bins* of n, so at n=125 (the device epoch, P4–P7/P10/P11)
     * f1 spans 3.0–7.6 Hz and at n=1000 (the P8 filtfilt fixture, where
     * the startup transient must decay below the closed form's rounding
-    * margin — see [[graft.tools.ToneGainProbe]]) f1 spans 0.375–0.95 Hz,
+    * margin — see graft.ToneGainSpec) f1 spans 0.375–0.95 Hz,
     * straddling the 0.5 Hz high-pass corner. */
   def toneDps(s: SparkSession, dir: String,
               where: org.apache.spark.sql.Column = lit(true),

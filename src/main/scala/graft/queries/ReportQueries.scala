@@ -392,8 +392,8 @@ object ReportQueries {
   def rpt3IndexShards(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val outDir = qtmp(s, s"rpt3_${rpt3RunId.incrementAndGet()}")
-    // Materialize the index rows ONCE (r20; guide §5 — JobProfile: rpt3
-    // was 13 jobs whose task time was dominated by the UNPERSISTED idx
+    // Materialize the index rows ONCE (r20; guide §5 — OPTIMIZATION_r20.md:
+    // rpt3 was 13 jobs whose task time was dominated by the UNPERSISTED idx
     // lineage re-running the whole fixture derivation for shardAssign's
     // range-SAMPLING job, the range exchange, and the offsets pass.
     // writeReport persists idx at its call site; this direct entry

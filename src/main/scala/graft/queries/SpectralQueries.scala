@@ -142,7 +142,7 @@ object SpectralQueries {
     * startup transient has decayed to < 1e-9 of the signal. n=1000 bins
     * put f1 at 0.375-0.95 Hz — straddling the 0.5 Hz corner, so the
     * pinned gains sweep the filter's transition band rather than its
-    * flat tails. [[graft.tools.ToneGainProbe]] pins the numerics: max
+    * flat tails. graft.ToneGainSpec pins the numerics: max
     * |kernel - closedForm| = 9.0e-8 x1000-units against a worst-case
     * rounding-boundary margin of 1.1e-4 — three orders of safety. */
   def p8FiltfiltRms(s: SparkSession, d: String): DataFrame =
@@ -186,7 +186,7 @@ object SpectralQueries {
     * over the n=125 tone fixture. Only the f1 tone (3.0-7.6 Hz) lands in
     * the band, so total = peak = A1²/2 exactly — an integer after the
     * ×1000 bridge (A1 ∈ {4,8,12} → 8000/32000/72000), a 0.5-unit margin
-    * against the DFT's ~1e-9 float error (ToneGainProbe). */
+    * against the DFT's ~1e-9 float error (ToneGainSpec). */
   def p10BandPeak(s: SparkSession, d: String): DataFrame =
     OsdbFixture.toneDps(s, d)
       .select(col("e"), col("d"), bandPowerUdf(col("rawData")).as("bp"))
@@ -207,7 +207,7 @@ object SpectralQueries {
     * both statistics have closed forms:
     *   centroid = 0.2·(f1·p1 + f2·p2) / (p0 + p1 + p2)
     *   entropy  = −Σ (p/t)·ln(p/t) over the three bins
-    * ToneGainProbe pins the ×1e7 bridge: kernel-vs-closed-form error
+    * ToneGainSpec pins the ×1e7 bridge: kernel-vs-closed-form error
     * ~1e-10 units against boundary margins of 4.4e-4 (centroid) and
     * 8.9e-2 (entropy) — ≥6 orders of safety. */
   def p11SpectralShape(s: SparkSession, d: String): DataFrame =
@@ -321,7 +321,7 @@ object SpectralQueries {
     * pins are constants measured once on the driver testdata (the
     * e5/d5 pattern): any change to the detrend, window, scaling, or
     * band edges moves these integers and breaks the hash. Re-derive
-    * with `runMain graft.tools.PinProbe p9_welch_psd <sfDir>` after a
+    * with `runMain graft.tools.QueryProbe show p9_welch_psd <sfDir>` after a
     * fixture regeneration. */
   def p9WelchPsd(s: SparkSession, d: String): DataFrame =
     OsdbFixture.toneDps(s, d)
@@ -336,7 +336,7 @@ object SpectralQueries {
     * [[p9WelchPsd]]), dispatched on the events-table row count (the
     * TextQueries d5Sql pattern — an unknown sf selects zero rows and
     * fails loudly); a failure here with no code change means the
-    * fixture moved — re-pin via `graft.tools.PinProbe`. */
+    * fixture moved — re-pin via `graft.tools.QueryProbe show`. */
   val p9Sql: String =
     """SELECT n_dp, tot_x1e3, peak_x1e3, meanfreq_x1e6, entropy_x1e6
       |FROM (VALUES

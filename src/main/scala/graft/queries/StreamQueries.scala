@@ -87,7 +87,7 @@ object StreamQueries {
     * it). A stateful micro-batch runs `spark.sql.shuffle.partitions`
     * state-store tasks PER BATCH — each one a store open + commit — so
     * the session's batch-tuned constant (32 locally) made every 4-batch
-    * drain pay ~128 state commits over a sub-MB feed (StProfile:
+    * drain pay ~128 state commits over a sub-MB feed (OPTIMIZATION_r20.md §St:
     * addBatch dominated the drain), while at 100 TB the same constant
     * would be orders of magnitude too LOW. The derivation is the batch
     * side's own "what is a partition worth" knob: ceil(feedBytes /

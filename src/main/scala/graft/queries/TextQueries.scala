@@ -355,6 +355,23 @@ object TextQueries {
   val bpe2Sql: String =
     "WITH " + bpeCtes(BpeRounds) + ",\n" + bpeAccountingSql("documents")
 
+  /** pipe7's span-cleaned corpus. The persist is load-bearing: the
+    * cleaned corpus feeds THREE consumers (BPE training's vocab
+    * collapse, the tokenize pass, the per-source doc counts); without
+    * it each one re-runs the full d7 span-removal chain — measured 3x
+    * the whole entry's cost. At 100 TB this is the
+    * standard "materialize the cleaned corpus once, then train and
+    * tokenize against it" stage (disk-backed, corpus-scale). */
+  private def pipe7Cleaned(s: SparkSession, d: String): DataFrame = {
+    val docs = Tables.documents(s, d)
+    graft.operators.Dedup
+      .duplicateSpanRemoval(docs, "doc_id", "text", n = 20)
+      .join(docs.select("doc_id", "source"), "doc_id")
+      .filter(col("n_removed") * 5 < col("n_tok"))
+      .select(col("doc_id"), col("source"), col("clean_text"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  }
+
   /** PIPE7 — the CAPSTONE pretraining-data pipeline, composing this
     * round's operators end to end: duplicate-SPAN removal (d7) cleans
     * boilerplate out of every document, a content gate drops documents
@@ -368,24 +385,6 @@ object TextQueries {
     * ~60 stages, every one hash-gated through the final accounting: a
     * wrong winner in span removal shifts the cleaned text, which shifts
     * the merge table, which shifts every token count. */
-  /** pipe7's span-cleaned corpus, shared with tools.Pipe7Profile so the
-    * profiler can never drift from the benched pipeline. The persist is
-    * load-bearing: the cleaned corpus feeds THREE consumers (BPE
-    * training's vocab collapse, the tokenize pass, the per-source doc
-    * counts); without it each one re-runs the full d7 span-removal
-    * chain — measured 3x the whole entry's cost. At 100 TB this is the
-    * standard "materialize the cleaned corpus once, then train and
-    * tokenize against it" stage (disk-backed, corpus-scale). */
-  private[graft] def pipe7Cleaned(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d)
-    graft.operators.Dedup
-      .duplicateSpanRemoval(docs, "doc_id", "text", n = 20)
-      .join(docs.select("doc_id", "source"), "doc_id")
-      .filter(col("n_removed") * 5 < col("n_tok"))
-      .select(col("doc_id"), col("source"), col("clean_text"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-  }
-
   def pipe7CleanTrainTokenize(s: SparkSession, d: String): DataFrame = {
     val cleaned = pipe7Cleaned(s, d)
     val model = graft.operators.Bpe.train(cleaned, "clean_text", BpeRounds)
@@ -473,7 +472,7 @@ object TextQueries {
     * different content). An unknown sf selects ZERO rows and fails the
     * row-count compare loudly rather than matching stale constants.
     * Re-derive after a fixture regeneration with
-    * `runMain graft.tools.PinProbe d5_dedup_recall <sfDir>` — a failure
+    * `runMain graft.tools.QueryProbe show d5_dedup_recall <sfDir>` — a failure
     * here with no code change means the FIXTURE moved, not the dedup
     * paths. */
   val d5Sql: String =
@@ -1033,8 +1032,8 @@ object TextQueries {
     * CROSS-LABEL scoring + top-k, every float fold order-replicated,
     * scores bit-exact like e4's. Declared knobs stay the pinned
     * (nlist=16, nprobe=4) gate form; production derives ⌈√N⌉ lists
-    * (the measured O(N^0.75) law — HardNegProbe carries the
-    * sf0.1→sf1 decade table). */
+    * (the measured O(N^0.75) law — SCALING.md, "sf0.1 → sf1 family
+    * decade leg", carries the decade table). */
   def e12HardNegAnn(s: SparkSession, d: String): DataFrame =
     Similarity.hardNegativesAnn(Tables.embeddings(s, d), "vec_id",
       "embedding", "label", dim = 64, k = 2, nlist = 16, nprobe = 4,
@@ -1436,7 +1435,7 @@ object TextQueries {
     * distribution), dispatched on the events-table row count (see
     * [[d5Sql]] for why events, and for the unknown-sf loudness
     * property). Re-derive after a fixture regeneration with
-    * `runMain graft.tools.PinProbe e5_ann_recall <sfDir>` — a failure
+    * `runMain graft.tools.QueryProbe show e5_ann_recall <sfDir>` — a failure
     * here with no code change means the FIXTURE moved, not the ANN
     * paths. */
   val e5Sql: String =
@@ -1459,7 +1458,8 @@ object TextQueries {
     * anchor-nearest cells dominated by the anchor's own label —
     * measured recall ~0.57; per-label restores the self-knn anatomy
     * per label pair (~0.73-0.89 derived, ~0.88-0.95 at 2× probes —
-    * HardNegProbe). A LOW-ish pin is the boundary-outlier effect on
+    * SCALING.md r17 hard-negative recall table). A LOW-ish pin is the
+    * boundary-outlier effect on
     * THIS fixture (a hard negative is a peripheral point of its own
     * label's cluster structure — the worst case for cluster routing),
     * not a bug; the probe knob is the dial. */
@@ -1480,9 +1480,9 @@ object TextQueries {
   }
 
   /** Per-SF pins, events-count dispatch (see [[e5Sql]]); re-derive with
-    * `runMain graft.tools.PinProbe e13_hardneg_recall <sfDir>` after a
+    * `runMain graft.tools.QueryProbe show e13_hardneg_recall <sfDir>` after a
     * fixture regen. r18 re-pin: the derived cross-label nprobe moved
-    * to 2·max(4, ⌈√nlist_l⌉) (the HardNegProbe 2×-probe ladder row —
+    * to 2·max(4, ⌈√nlist_l⌉) (the SCALING.md r17 2×-probe ladder row —
     * cross-label probing needs a wider budget than ivfKnn's self-knn
     * law), lifting the floors from 89/88/79 to 100/100/94. */
   val e13Sql: String =
@@ -1541,7 +1541,7 @@ object TextQueries {
   /** Constants measured once PER SF on the driver testdata (see
     * [[e6CosNearDup]]), dispatched on the events-table row count (see
     * [[d5Sql]]); re-derive with
-    * `runMain graft.tools.PinProbe e6_cos_neardup <sfDir>` if the
+    * `runMain graft.tools.QueryProbe show e6_cos_neardup <sfDir>` if the
     * testdata regenerates — a failure with no code change means the
     * fixture moved, not the similarity path. */
   val e6Sql: String =
@@ -1621,7 +1621,7 @@ object TextQueries {
 
   /** Constants measured once on the driver sf0.01 testdata (see
     * [[e7DesignRecall]]); re-derive with
-    * `runMain graft.tools.PinProbe e7_design_recall <sfDir>` after a
+    * `runMain graft.tools.QueryProbe show e7_design_recall <sfDir>` after a
     * fixture regeneration. Both pins must sit at ≥ 90 — that is the
     * design-point claim this entry exists to hold. */
   val e7Sql: String =
@@ -1632,7 +1632,7 @@ object TextQueries {
   /** E7B — the DERIVED-knob IVF path under an always-on recall gate:
     * `nlist = 0, nprobe = 0` makes [[Similarity.ivfKnn]] derive
     * nlist = ⌈√N⌉ and nprobe = max(4, ⌈√nlist⌉) — the measured
-    * N^(1/4) probe law (IvfScaleProbe, SCALING.md round 11: fixed
+    * N^(1/4) probe law (SCALING.md round 11: fixed
     * nprobe=4 decays to 0.889 recall at 200k vectors; the derived
     * growth holds 0.988). e7 pins only explicit literals
     * (nlist=16, nprobe=4), so WITHOUT this entry a regression of the
@@ -1658,7 +1658,7 @@ object TextQueries {
 
   /** Constant measured once on the driver sf0.01 testdata (see
     * [[e7bDerivedRecall]]); re-derive with
-    * `runMain graft.tools.PinProbe e7b_derived_recall <sfDir>` after a
+    * `runMain graft.tools.QueryProbe show e7b_derived_recall <sfDir>` after a
     * fixture regeneration. The pin must sit ≥ 90. */
   val e7bSql: String =
     """SELECT 'ivf_derived' AS method, CAST(100 AS BIGINT) AS recall_pct"""

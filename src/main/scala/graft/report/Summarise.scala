@@ -218,7 +218,7 @@ object Summarise {
     * GIANT-EVENT GUARD: never emit more columns than pixels. A
     * 10⁶-sample event yields ~40,000 spectral slices at the default
     * 25-sample step; at w=600 that is sub-pixel columns and ~2.4M
-    * <rect>s — a 184 MB page (GiantEventProbe, SCALING.md round 13).
+    * <rect>s — a 184 MB page (SCALING.md, "Round 13: giant-event skew").
     * When slices > w, adjacent columns MAX-pool into ≤ w buckets —
     * consistent with the per-image-max grayscale (peaks survive), and
     * a no-op (bit-identical output) for every image that already fits,

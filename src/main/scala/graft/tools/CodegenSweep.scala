@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Full-registry codegen audit — the 64 KB tripwire's wide-angle
   * sibling: EXECUTE every registered query (an RDD-level count, so AQE
   * materializes each query stage — a plan-only audit sees zero stages
@@ -24,14 +22,7 @@ object CodegenSweep {
     val sf = args.headOption.getOrElse("/root/testdata/sf0.001")
     val floor = args.lift(1).map(_.toInt).getOrElse(8000)
     val maxBytes = args.lift(2).map(_.toInt).getOrElse(49152)
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .getOrCreate()
+    val spark = graft.Session.builder("local[8]", 8).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val results = graft.Queries.all.toSeq.sortBy(_._1).flatMap {
       case (name, fn) =>

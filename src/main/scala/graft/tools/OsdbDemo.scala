@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators._
 import graft.operators.Flatten.FlatDp
@@ -15,10 +14,7 @@ import graft.functions.TimeParse
   */
 object OsdbDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Session.builder("local[4]", 4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

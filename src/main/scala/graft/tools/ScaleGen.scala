@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Synthetic N× scale-up of a driver testdata dir (SCALING.md probe).
@@ -49,15 +49,8 @@ object ScaleGen {
     val only: Option[Set[String]] =
       if (args.length > 3) Some(args(3).split(",").map(_.trim).toSet) else None
     def wanted(name: String): Boolean = only.forall(_.contains(name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.Session.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def raw(name: String): DataFrame = spark.read.parquet(s"$srcDir/$name.parquet")
@@ -69,7 +62,7 @@ object ScaleGen {
       * measured 10+ min on lineitem alone); repartitioning the source
       * first spreads the expansion across the local cores. */
     def scaled(df: DataFrame)(shift: (DataFrame, org.apache.spark.sql.Column) => DataFrame): DataFrame = {
-      val withCopy = df.repartition(cpus.toInt)
+      val withCopy = df.repartition(cpus)
         .withColumn("__c", explode(lit((0 until factor).toArray)))
       shift(withCopy, col("__c").cast("long")).drop("__c")
     }

@@ -151,7 +151,7 @@ case class ArrayMag3D(child: Expression, mode: String = "V2")
   * (`transform(sequence(...), ...)` per filter + `array_max`) routes
   * every conv position through ArrayTransform's interpreted lambda
   * dispatch — measured 1.2–1.3k rows/s vs ~300k–1.6M rows/s for this
-  * kernel's codegen'd loop (CnnScaleProbe, round 13: 282× at 100k
+  * kernel's codegen'd loop (SCALING.md round 13: 282× at 100k
   * rows, 1225× at 2.5M). A Scala-UDF twin of `Cnn.forward` is
   * throughput-comparable (0.7–1.1× across probe sizes — JIT handles
   * the monomorphic kernel well); the native expression is kept because

@@ -95,8 +95,9 @@ class KMeansSpec extends SparkSpec {
     // the e5/e7 recall gates pin FIXED knobs; this is the DERIVED path's
     // gate: nlist = 0 → ceil(√500) = 23 lists on the sf0.01 planted-
     // cluster embeddings, and recall@3 vs brute force must sit in the
-    // ≥ 0.90 design band the e7 docblock claims (IvfScaleProbe measures
-    // the same law at 10×/100× where brute force can only be sampled)
+    // ≥ 0.90 design band the e7 docblock claims (SCALING.md round 11
+    // measured the same law at 10×/100×, where brute force can only be
+    // sampled)
     val emb = graft.queries.TextQueries
       .e7PlantedEmbeddings(spark, "/root/testdata/sf0.01")
     val bf = Similarity.bruteForceKnn(emb, "vec_id", "embedding", k = 3)

@@ -30,13 +30,8 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = Session.builder("local[4]", 4)
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       // Without the native Hadoop lib, the default FileContext-based
       // checkpoint manager shells out (readlink) per checkpoint file and
       // subprocess forks are pathologically slow in this VM — use the
@@ -44,7 +39,6 @@ object SparkSpec {
       .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
       .config("spark.sql.streaming.checkpointFileManagerClass",
         "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
