@@ -86,31 +86,22 @@ object Tables {
     * spread before materialization. At 100 TB the estimate is far over
     * the threshold and the spread always fires.
     *
-    * Local mode uses `localCheckpoint(eager)` — a flat LogicalRDD plan
-    * (no plan regrowth through repeated references, the r10/r19
-    * plan-time lesson); blocks are freed by the ContextCleaner once the
-    * returned frame becomes unreachable, so a lazily-returned operator
-    * result needs no explicit release hook. On a REAL cluster
-    * localCheckpoint is lineage-free — one lost executor mid-query
-    * kills the job instead of recomputing — so a non-local master falls
-    * back to an eager persist (recomputable blocks; the cluster-side
-    * caller owns unpersist via its session's cache manager). */
+    * The materialization is [[Scoped.Materialize]]'s policy (a local
+    * checkpoint on a local master, an eager persist elsewhere). No
+    * handle is kept: callers return lazy plans over the frame, so no
+    * scope could release it before they run. Local-checkpoint blocks
+    * are freed by the ContextCleaner once the returned plan becomes
+    * unreachable; a persisted frame stays in the session's cache
+    * manager until `clearCache` (Verify clears per query). */
   def materialize(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
-    val sc = spark.sparkContext
     val advisory = spark.conf
       .get("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64MB")
     val advisoryBytes =
       org.apache.spark.network.util.JavaUtils.byteStringAsBytes(advisory)
     val big = df.queryExecution.optimizedPlan.stats.sizeInBytes >
       BigInt(advisoryBytes)
-    val wide = if (big) spread(df) else df
-    if (sc.isLocal) wide.localCheckpoint(true)
-    else {
-      val p = wide.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      p.count()
-      p
-    }
+    Scoped.Materialize(if (big) spread(df) else df).df
   }
 
   def region(spark: SparkSession, d: String): DataFrame = load(spark, d, "region")

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
 import org.apache.spark.storage.StorageLevel
 
+import graft.Scoped.{Materialize, overlap}
 import graft.functions.EpochFeatures
 import graft.operators.{Augment, Curate, FeatureExtract, FeatureHistory}
 import graft.operators.Flatten.FlatDp
@@ -231,18 +232,19 @@ object RunSequence {
                foldOf: Column, cfg: Config = Config()): DataFrame = {
     val ev = selectedEvents(events, select, foldOf)
     // the raw fused frame: evW only counts rows per event, so the
-    // 724-column named projection would be pure plan weight here
-    skeletonFromHist(ev, histEpochsRaw(ev, dps, cfg), cfg)
+    // 724-column named projection would be pure plan weight here. The
+    // returned frame is built from driver rows, so evW's blocks are
+    // released as soon as the skeleton's collects return.
+    Materialize.scoped { s =>
+      skeletonFromEvW(ev, s(evWFrame(ev, histEpochsRaw(ev, dps, cfg))), cfg)
+    }
   }
 
-  /** The per-event epoch-count frame (srcId, fold, nEp), PERSISTED —
-    * the single materialization of the extract+history lineage. Split
-    * out of [[skeletonFromHist]] so the sweep can memoize it per
+  /** The per-event epoch-count frame (srcId, fold, nEp) — the single
+    * materialization of the extract+history lineage, pinned by the
+    * caller's [[Materialize.scoped]] block. The sweep memoizes it per
     * (extract config, historyN): it depends on nothing else, and three
-    * of ml9's four runs share it. Caller owns the persist lifetime
-    * (the sweep releases in its finally; the one-run [[skeleton]] path
-    * leaves it to the session, bounded by Verify's per-query
-    * clearCache). */
+    * of ml9's four runs share it. */
   private def evWFrame(ev: DataFrame, hist: DataFrame): DataFrame = {
     val perEvent = hist.groupBy(col("eventId"))
       .agg(count(lit(1)).as("nEp"))
@@ -252,47 +254,6 @@ object RunSequence {
       .select(col("srcId"), col("fold"),
         coalesce(col("nEp"), lit(0L)).as("nEp"))
   }
-
-  private def evWOf(ev: DataFrame, hist: DataFrame): DataFrame = {
-    val evW = evWFrame(ev, hist).persist(StorageLevel.MEMORY_AND_DISK)
-    evW.count()
-    evW
-  }
-
-  /** Release the executor blocks behind an eagerly localCheckpoint'ed
-    * frame: `Dataset.unpersist` is a SILENT NO-OP on checkpoint storage
-    * (the r10 BPE lesson — the RDD is not in the cache manager), so the
-    * handle is the LogicalRDD's own RDD. Only legal AFTER every action
-    * that reads the frame — a truncated-lineage RDD cannot be
-    * recomputed. */
-  private def releaseLocalCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.logical match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(false)
-      case _ => df.unpersist(false)
-    }
-
-  /** Eager materialization for the sweep's memoized frames. Local mode
-    * takes `localCheckpoint(eager)` — the flat LogicalRDD plan that cut
-    * ml9's plan-time 4× (r19). On a REAL cluster localCheckpoint blocks
-    * have NO lineage: one executor loss mid-sweep fails the whole job
-    * instead of recomputing (r19 verdict #4), so a non-local master
-    * falls back to an eager persist — recomputable, plan kept, released
-    * by the same [[releaseLocalCheckpoint]] (its non-LogicalRDD branch
-    * is a plain unpersist). */
-  private def eagerMat(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.isLocal) df.localCheckpoint(true)
-    else {
-      val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-      p.count()
-      p
-    }
-
-  /** [[skeleton]]'s aggregate half over an ALREADY-BUILT history-epoch
-    * frame — [[evWOf]] then [[skeletonFromEvW]]. */
-  private def skeletonFromHist(ev: DataFrame, hist: DataFrame,
-                               cfg: Config): DataFrame =
-    skeletonFromEvW(ev, evWOf(ev, hist), cfg)
 
   /** Per-fold (n_events, n_epochs) counts of one source frame plus the
     * grand totals — the collected form of the skeleton's ONE per-fold
@@ -345,14 +306,14 @@ object RunSequence {
     org.apache.spark.sql.types.StructField("n_epochs",
       org.apache.spark.sql.types.LongType, nullable = false)))
 
-  /** The 3k+1 skeleton aggregations over the tiny persisted evW frame
+  /** The 3k+1 skeleton aggregations over the tiny materialized evW frame
     * — the seam [[paramSweep]] re-enters per swept config with its
     * memoized extraction AND memoized evW (and, r20, its memoized
     * per-evW [[FoldCounts]] via `evCounts`).
     *
     * r20 opt round: the r19 form returned a 16-branch union plan of
     * per-fold aggregates; the execution cost was not the data (the
-    * aggregates are O(k) rows over persisted frames) but the DRIVER —
+    * aggregates are O(k) rows over materialized frames) but the DRIVER —
     * Catalyst analysis of the big union tree plus one serialized
     * `.head()` guard job per skeleton (OPTIMIZATION_r20.md §Skeleton:
     * ml9's wall was
@@ -395,17 +356,11 @@ object RunSequence {
     // fold-range validation (load-bearing for the complement algebra)
     // is read off each fold aggregate; a violation still throws before
     // any slice row is assembled.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-    val (evC, augC, over) = try {
-      def submit[T](f: => T) =
-        pool.submit(new java.util.concurrent.Callable[T] { def call(): T = f })
-      val fEv = submit(evCounts.getOrElse(
-        foldCountsOf(evW, cfg.k)))
-      val fAug = submit(foldCountsOf(planW, cfg.k))
-      val fOver = submit(overlaps.collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap)
-      (fEv.get(), fAug.get(), fOver.get())
-    } finally pool.shutdown()
+    val Seq(evC: FoldCounts, augC: FoldCounts,
+            over: Map[Long, Long] @unchecked) = overlap(Seq[() => Any](
+      () => evCounts.getOrElse(foldCountsOf(evW, cfg.k)),
+      () => foldCountsOf(planW, cfg.k),
+      () => overlaps.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap))
     // driver-side assembly: identical exact long arithmetic as the old
     // aggregate plan (train = Σ_g − own(f)), identical explicit-zero
     // discipline (every fold 0..k-1 emits a row per stage), identical
@@ -461,7 +416,7 @@ object RunSequence {
     * re-extract list (window/step/highPassOrder,
     * runOptimisation.py:72-75) — is held STRUCTURALLY here: the fused
     * validate+extract lineage ([[flatEpochs]]) is keyed by its
-    * [[FeatureExtract.Config]] and persisted once per DISTINCT config;
+    * [[FeatureExtract.Config]] and materialized once per DISTINCT config;
     * augmentation knobs re-enter [[skeletonFromEvW]] over the shared
     * materializations. Returns the frame plus TWO memoization
     * receipts the spec pins: the distinct extract configs and the
@@ -496,36 +451,19 @@ object RunSequence {
         "evaluated once against the baseline k, so a k re-run would " +
         "compare silently-wrong splits (see the docblock)")
     val spark = events.sparkSession
-    // EAGER LOCAL CHECKPOINTS, not persists (r19 opt round): the sweep
-    // is plan-time bound, not data bound — ml9 benched the same at
-    // sf0.001 and sf0.1 because every one of the 4 runs' skeleton
-    // frames re-embedded (and re-analyzed) the FULL extraction lineage
-    // through the persisted frames' logical plans (a persist caches
-    // blocks but keeps the logical tree). localCheckpoint(eager)
-    // truncates each memoized frame to a flat LogicalRDD, so the
-    // per-run skeletons analyze O(skeleton) trees, not O(lineage) —
-    // the r10 BPE plan-time lesson applied to the sweep. Legal here
-    // because the sweep COLLECTS its summary before returning, so no
-    // escaping plan references the checkpointed blocks; the finally
-    // releases them via [[releaseLocalCheckpoint]]. Storage class is
-    // the same executor MEMORY_AND_DISK as the old persists. On a
-    // non-local master [[eagerMat]] swaps in an eager persist (r20:
-    // lineage-free checkpoint blocks cannot survive executor loss).
-    val ev = eagerMat(selectedEvents(events, select, foldOf))
-    requireFoldRange(ev, base.k)
-    val flatCache =
-      scala.collection.mutable.LinkedHashMap.empty[FeatureExtract.Config, DataFrame]
-    // evW (the per-event epoch counts) depends ONLY on (extract config,
-    // historyN) — augmentation knobs reshape the aggregation
-    // multipliers, never the counts frame — so runs sharing both reuse
-    // ONE materialization (the reference's skip-if-exists applied to
-    // the history stage, not just extraction)
-    val evWCache = scala.collection.mutable.LinkedHashMap
-      .empty[(FeatureExtract.Config, Int), DataFrame]
-    try {
-      def flatFor(ec: FeatureExtract.Config): DataFrame =
-        flatCache.getOrElseUpdate(ec,
-          eagerMat(flatEpochs(ev, dps, ec)))
+    // EAGER LOCAL CHECKPOINTS, not persists (r19 opt round; the
+    // Materialize policy): the sweep is plan-time bound, not data bound
+    // — ml9 benched the same at sf0.001 and sf0.1 because every one of
+    // the 4 runs' skeleton frames re-embedded (and re-analyzed) the FULL
+    // extraction lineage through the persisted frames' logical plans (a
+    // persist caches blocks but keeps the logical tree). A flat
+    // LogicalRDD per memoized frame makes the per-run skeletons analyze
+    // O(skeleton) trees, not O(lineage) — the r10 BPE plan-time lesson
+    // applied to the sweep. Legal here because the sweep COLLECTS its
+    // summary before the scope releases the frames.
+    Materialize.scoped { s =>
+      val ev = s(selectedEvents(events, select, foldOf))
+      requireFoldRange(ev, base.k)
       // The evW frame only needs the per-event SURVIVOR COUNT of the
       // history stage, and addHistory's drop depends solely on row
       // position within the event (deepest lag null ⇔ first historyN−1
@@ -544,94 +482,47 @@ object RunSequence {
           flat.select(col("eventId"), col("tsSec"), col("startSample"),
             col(EpochFeatures.FeatureNames.head)),
           EpochFeatures.FeatureNames.take(1), h)
-      def evWFor(cfg: Config): DataFrame =
-        evWCache.getOrElseUpdate((cfg.extract, cfg.historyN),
-          eagerMat(evWFrame(ev,
-            histCountFrame(flatFor(cfg.extract), cfg.historyN))))
-      // per-distinct-evW FoldCounts memo (r20): runs sharing an evW
-      // frame share its collected per-fold aggregate (and its fold
-      // validation) exactly as they share the materialization
-      val evWCounts = scala.collection.mutable.LinkedHashMap
-        .empty[(FeatureExtract.Config, Int), FoldCounts]
-      def runOne(param: String, value: Long, cfg: Config): DataFrame =
-        skeletonFromEvW(ev, evWFor(cfg), cfg,
-          evWCounts.get((cfg.extract, cfg.historyN)))
-          .select(lit(param).as("param"), lit(value).as("value"),
-            col("fold"), col("stage"), col("n_events"), col("n_epochs"))
       // Pre-materialize the memoized frames with INDEPENDENT jobs
       // OVERLAPPED (r20; guide §2.6 — actions are only sequential
-      // because the driver calls them sequentially): the distinct
-      // (extract, historyN) history frames depend on their extraction
-      // frame but not on each other, yet the lazy cache built them one
-      // job wave at a time, leaving the cluster idle through each
-      // wave's task tail. Extraction frames first (every evW's
-      // dependency, usually one), then all history frames from a small
-      // thread pool. Determinism: cache insertion stays in the runs'
-      // combo order, each frame's content is the same single
-      // materialization as before, and the run loop below only READS
-      // the caches. Same idle-tail win on a real cluster (§2.6's
-      // back-fill), not a local-mode trick.
-      val sweepCfgs = base +: sweeps.flatMap { case (p, vs) =>
-        vs.map(v => withKnob(base, p, v))
-      }
-      sweepCfgs.map(_.extract).distinct.foreach(flatFor)
-      val combos = sweepCfgs.map(c => (c.extract, c.historyN)).distinct
-      if (combos.size > 1) {
-        val pool = java.util.concurrent.Executors
-          .newFixedThreadPool(math.min(combos.size, 3))
-        try {
-          val futs = combos.map { case (ec, h) =>
-            val flat = flatCache(ec) // read on the driver thread
-            ((ec, h), pool.submit(new java.util.concurrent.Callable[DataFrame] {
-              def call(): DataFrame =
-                eagerMat(evWFrame(ev, histCountFrame(flat, h)))
-            }))
-          }
-          futs.foreach { case (k, fut) => evWCache.update(k, fut.get()) }
-          // collect each distinct evW's per-fold aggregate once, also
-          // overlapped — runs sharing the frame share the counts (and
-          // the fold-range validation they carry)
-          val cFuts = combos.map { case key @ (ec, h) =>
-            val w = evWCache(key)
-            (key, pool.submit(new java.util.concurrent.Callable[FoldCounts] {
-              def call(): FoldCounts = foldCountsOf(w, base.k)
-            }))
-          }
-          cFuts.foreach { case (k, fut) => evWCounts.update(k, fut.get()) }
-        } finally pool.shutdown()
-      } else combos.foreach { case key @ (ec, h) =>
-        evWCounts.update(key,
-          foldCountsOf(evWFor(sweepCfgs.head), base.k))
-      }
-      // the runs' skeleton aggregates are independent of each other —
-      // overlap them too (§2.6); each runOne is 2-3 tiny O(k)-row
-      // collects over already-persisted frames. Results are assembled
-      // in the runs' declared order, so the output frame is unchanged.
+      // because the driver calls them sequentially): one extraction per
+      // distinct extract config, then one evW per distinct (extract,
+      // historyN) — evW depends ONLY on those two, augmentation knobs
+      // reshape the aggregation multipliers, never the counts frame
+      // (the reference's skip-if-exists applied to the history stage,
+      // not just extraction) — then each evW's per-fold aggregate
+      // (r20), which runs sharing the frame share with its fold
+      // validation. The run loop below only READS these immutable
+      // maps. Same idle-tail win on a real cluster (§2.6's back-fill),
+      // not a local-mode trick.
       val runSpecs = ("baseline", -1L, base) +:
         sweeps.flatMap { case (p, vs) =>
           vs.map(v => (p, v, withKnob(base, p, v)))
         }
-      val runs = if (runSpecs.size > 1) {
-        val pool = java.util.concurrent.Executors
-          .newFixedThreadPool(math.min(runSpecs.size, 4))
-        try {
-          runSpecs.map { case (p, v, cfg) =>
-            pool.submit(new java.util.concurrent.Callable[DataFrame] {
-              def call(): DataFrame = runOne(p, v, cfg)
-            })
-          }.map(_.get())
-        } finally pool.shutdown()
-      } else runSpecs.map { case (p, v, cfg) => runOne(p, v, cfg) }
+      val extracts = runSpecs.map(_._3.extract).distinct
+      val flat = extracts.zip(overlap(extracts.map(ec =>
+        () => s(flatEpochs(ev, dps, ec))))).toMap
+      val combos = runSpecs.map(r => (r._3.extract, r._3.historyN)).distinct
+      val evW = combos.zip(overlap(combos.map { case (ec, h) =>
+        () => s(evWFrame(ev, histCountFrame(flat(ec), h)))
+      })).toMap
+      val evWCounts = combos.zip(overlap(combos.map(key =>
+        () => foldCountsOf(evW(key), base.k)))).toMap
+      // the runs' skeleton aggregates are independent of each other —
+      // overlap them too (§2.6); each run is 2-3 tiny O(k)-row
+      // collects over already-materialized frames. Results come back in
+      // the runs' declared order, so the output frame is unchanged.
+      val runs = overlap(runSpecs.map { case (p, v, cfg) => () =>
+        val key = (cfg.extract, cfg.historyN)
+        skeletonFromEvW(ev, evW(key), cfg, Some(evWCounts(key)))
+          .select(lit(p).as("param"), lit(v).as("value"),
+            col("fold"), col("stage"), col("n_events"), col("n_epochs"))
+      })
       val out = runs.reduce(_.unionByName(_))
       val rows = out.collect().toSeq // the tiny summary, see docblock
       (spark.createDataFrame(
         spark.sparkContext.parallelize(rows, 1), out.schema),
-        flatCache.keys.toSeq,
-        evWCache.keys.toSeq) // the history-stage memoization receipt
-    } finally {
-      evWCache.values.foreach(releaseLocalCheckpoint)
-      flatCache.values.foreach(releaseLocalCheckpoint)
-      releaseLocalCheckpoint(ev)
+        extracts,
+        combos) // the history-stage memoization receipt
     }
   }
 
@@ -695,20 +586,16 @@ object RunSequence {
         .join(ev.select(col("srcId"), col("ofold").as("bOf")), "srcId")
         .filter(col("aOf") =!= col("bOf"))
         .groupBy(col("bOf")).agg(count(lit(1)).as("ne"))
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-      val (cells, guardMap) = try {
-        def submit[T](f: => T) =
-          pool.submit(new java.util.concurrent.Callable[T] { def call(): T = f })
-        val fc = submit(perCell.collect().map { r =>
+      val Seq(cells: Seq[(Option[Long], Option[Long], Long)] @unchecked,
+              guardMap: Map[Long, Long] @unchecked) = overlap(Seq[() => Any](
+        () => perCell.collect().map { r =>
           (if (r.isNullAt(0)) None else Some(r.getLong(0)),
            if (r.isNullAt(1)) None else Some(r.getLong(1)),
            r.getLong(2))
-        }.toSeq)
-        val fg = submit(guardAgg.collect().collect {
+        }.toSeq,
+        () => guardAgg.collect().collect {
           case r if !r.isNullAt(0) => r.getLong(0) -> r.getLong(1)
-        }.toMap)
-        (fc.get(), fg.get())
-      } finally pool.shutdown()
+        }.toMap))
       // driver-side slice sums, replicating the old filters' SQL
       // three-valued logic exactly: a NULL fold key makes the
       // comparison NULL, so the cell contributes to no slice that
@@ -787,14 +674,8 @@ object RunSequence {
           if (r.isNullAt(1)) 0L else r.getLong(1),
           if (r.isNullAt(2)) 0L else r.getLong(2),
           r.getLong(3))).toSeq
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-      val (evC, augC) = try {
-        def submit[T](f: => T) =
-          pool.submit(new java.util.concurrent.Callable[T] { def call(): T = f })
-        val fe = submit(classCounts(ev))
-        val fa = submit(classCounts(planT))
-        (fe.get(), fa.get())
-      } finally pool.shutdown()
+      val Seq(evC, augC) =
+        overlap(Seq(() => classCounts(ev), () => classCounts(planT)))
       // requireFoldRange's contract off the same collected aggregate
       val nullCnt = evC.collect { case (None, _, _, c) => c }.sum
       require(nullCnt == 0L,

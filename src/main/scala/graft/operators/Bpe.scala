@@ -6,6 +6,8 @@ import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Scoped.{Materialize, Materialized}
+
 /** Distributed byte-pair-encoding TOKENIZER TRAINING (Sennrich et al.
   * 2016, "Neural Machine Translation of Rare Words with Subword Units" —
   * the learn_bpe algorithm) — the step a training-data pipeline runs
@@ -47,26 +49,16 @@ object Bpe {
   val EndOfWord = "</w>"
 
   case class BpeModel(merges: DataFrame, vocabSeqs: DataFrame,
-                      backing: Option[org.apache.spark.rdd.RDD[_]] = None) {
+                      backing: Option[Materialized] = None) {
     /** Release the model's executor-side storage: the vocabSeqs cache
       * (local path: no-op — the table is a local relation) and, on the
-      * distributed path, the final round's localCheckpoint RDD, which
-      * `Dataset.unpersist` cannot reach (checkpoint storage is not
-      * registered with the cache manager). */
+      * distributed path, the final round's materialization, which
+      * `Dataset.unpersist` on vocabSeqs cannot reach. */
     def release(): Unit = {
       vocabSeqs.unpersist()
-      backing.foreach(_.unpersist(false))
+      backing.foreach(_.release())
     }
   }
-
-  /** The RDD behind a localCheckpoint'ed frame — the handle needed to
-    * actually FREE a checkpoint (its storage bypasses the cache
-    * manager, so Dataset.unpersist is a silent no-op there). */
-  private def checkpointRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-    df.queryExecution.logical match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => Some(lr.rdd)
-      case _ => None
-    }
 
   private val mergeUdf = udf { (seq: Seq[String], a: String, b: String) =>
     val out = ArrayBuffer.empty[String]
@@ -110,7 +102,8 @@ object Bpe {
     *         trained tokenizer's lookup table — broadcast it to
     *         tokenize the corpus, [[tokenCountsBySource]]). vocabSeqs
     *         stays resident (vocab-bounded — a local relation on the
-    *         local path, checkpoint storage on the distributed one);
+    *         local path, the final round's materialization on the
+    *         distributed one);
     *         call `model.release()` when done with the model.
     */
   def train(docs: DataFrame, textCol: String, numMerges: Int,
@@ -165,48 +158,49 @@ object Bpe {
     }
 
     val merges = ArrayBuffer.empty[(Int, String, String, Long)]
-    // the previous round's checkpoint storage — freed once the next
-    // round has materialized (see checkpointRdd: Dataset.unpersist
-    // cannot release checkpoint blocks, so without this handle a
-    // 10k-merge run accumulates O(numMerges) vocab copies)
-    var prevCkpt: Option[org.apache.spark.rdd.RDD[_]] = None
-    for (r <- 1 to numMerges) {
-      val best = seqs.filter(size(col("s")) >= 2)
-        .select(col("f"), explode(expr(
-          "transform(sequence(0, size(s) - 2), i -> struct(s[i] AS a, s[i+1] AS b))"))
-          .as("p"))
-        .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-        .agg(sum("f").as("cnt"))
-        .orderBy(col("cnt").desc, col("a"), col("b"))
-        .limit(1).collect()
-      require(best.nonEmpty,
-        s"corpus exhausted after ${r - 1} merges (every word is one symbol)")
-      val (a, b, cnt) =
-        (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
-      merges += ((r, a, b, cnt))
-      // lineage-truncating swap per round: localCheckpoint(eager) both
-      // MATERIALIZES the merged table (so round r never rebuilds the
-      // r-deep UDF chain) and REPLACES its logical plan with a flat
-      // LogicalRDD. A plain cache-swap keeps execution O(1) per round
-      // but leaves the ANALYZED plan r layers deep, and the per-round
-      // plan-time work (analysis, cache-manager canonicalization, AQE
-      // plan-string events) grows O(r²) overall — measured: 25 merges
-      // took 19+ MINUTES of pure plan-time CPU under cache-swap vs
-      // seconds with truncation. At cluster scale localCheckpoint is
-      // executor-memory-resident (lost on executor failure — retrain);
-      // swap in reliable checkpoint() if that matters.
-      val next = seqs.withColumn("s", mergeUdf(col("s"), lit(a), lit(b)))
-        .localCheckpoint(true)
-      seqs.unpersist(false) // frees round 1's cache()d base (no-op later)
-      prevCkpt.foreach(_.unpersist(false))
-      prevCkpt = checkpointRdd(next)
-      seqs = next
+    val vocab0 = seqs
+    // the latest round's materialization: the previous one is freed
+    // each round (no O(numMerges) vocab copies); a failure frees both
+    var backing: Option[Materialized] = None
+    try {
+      for (r <- 1 to numMerges) {
+        val best = seqs.filter(size(col("s")) >= 2)
+          .select(col("f"), explode(expr(
+            "transform(sequence(0, size(s) - 2), i -> struct(s[i] AS a, s[i+1] AS b))"))
+            .as("p"))
+          .groupBy(col("p.a").as("a"), col("p.b").as("b"))
+          .agg(sum("f").as("cnt"))
+          .orderBy(col("cnt").desc, col("a"), col("b"))
+          .limit(1).collect()
+        require(best.nonEmpty,
+          s"corpus exhausted after ${r - 1} merges (every word is one symbol)")
+        val (a, b, cnt) =
+          (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
+        merges += ((r, a, b, cnt))
+        // lineage-truncating swap per round: materialize the merged
+        // table (round r never rebuilds the r-deep UDF chain) and
+        // REBUILD the frame over its rows (the analyzed plan stays flat
+        // on either Materialize branch). A plain cache-swap leaves the
+        // plan r layers deep and plan-time work grows O(r²) — measured:
+        // 25 merges took 19+ MINUTES of plan-time CPU vs seconds.
+        val next = Materialize(
+          seqs.withColumn("s", mergeUdf(col("s"), lit(a), lit(b))))
+        vocab0.unpersist(false) // frees round 1's cache()d base (no-op later)
+        backing.foreach(_.release())
+        backing = Some(next)
+        seqs = spark.createDataFrame(next.df.rdd, next.df.schema)
+      }
+    } catch {
+      case t: Throwable =>
+        vocab0.unpersist(false)
+        backing.foreach(_.release())
+        throw t
     }
     import spark.implicits._
     BpeModel(
       merges.toSeq.toDF("rank", "lhs", "rhs", "freq"),
       seqs.select("w", "f", "s"),
-      backing = prevCkpt)
+      backing = backing)
   }
 
   /** UTF-8 binary "less than" — the comparison Spark's orderBy applies

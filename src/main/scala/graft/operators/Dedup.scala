@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Scoped.{Materialize, Materialized}
+
 /** Corpus deduplication at scale: exact, MinHash+LSH, SimHash, n-gram
   * Jaccard. Design target is 100 TB: every variant is
   * shuffle-on-a-compact-key (hash/bucket), never an all-pairs compare.
@@ -241,9 +243,10 @@ object Dedup {
     *
     * Every round shuffles only slim (u, v) long pairs over the doc ids
     * appearing in any candidate pair — far smaller than the corpus at
-    * 100 TB. `localCheckpoint` cuts lineage each round; the frame is
-    * then REBUILT from the checkpointed RDD because localCheckpoint
-    * preserves the plan's sizeInBytes estimate and the stars' self-joins
+    * 100 TB. [[graft.Scoped.Materialize]] cuts lineage each round; the
+    * frame is then REBUILT over the materialized rows because a local
+    * checkpoint preserves the plan's sizeInBytes estimate (and a persist
+    * keeps the whole plan) and the stars' self-joins
     * would square it every round — Catalyst's stats visitor ends up
     * multiplying BigInts of 2^rounds bits and hangs (measured, not
     * hypothetical).
@@ -292,30 +295,16 @@ object Dedup {
     * round growth). */
   def dupClustersWithRounds(pairs: DataFrame, maxIter: Int = 50): (DataFrame, Int) = {
     val ss = pairs.sparkSession
-    // checkpoint + stats reset (see docblock): flat lineage AND flat
-    // sizeInBytes every round. The RDD handle rides along so a
-    // consumed round's blocks can be RELEASED (r20): localCheckpoint
-    // storage is invisible to Dataset.unpersist (the r10 BPE lesson),
-    // and without the release every round's full edge set stays pinned
-    // in the block manager for the session — O(rounds × edges) memory
-    // at exactly the scale the operator targets.
-    def pin(df: DataFrame): (DataFrame, () => Unit) = {
-      val cp = df.localCheckpoint()
-      // the PERSISTED rdd is the LogicalRDD's own (Dataset.rdd wraps a
-      // fresh deserializer on top — unpersisting that is a no-op)
-      val release: () => Unit = cp.queryExecution.logical match {
-        case lr: org.apache.spark.sql.execution.LogicalRDD =>
-          () => lr.rdd.unpersist(false)
-        case _ => () => ()
-      }
-      (ss.createDataFrame(cp.rdd, df.schema), release)
-    }
+    // materialize + rebuild (see docblock): flat lineage AND flat
+    // sizeInBytes every round, on either Materialize branch
+    def rows(m: Materialized) = ss.createDataFrame(m.df.rdd, m.df.schema)
     // canonicalize once, keeping (x, x) self-pairs so their nodes stay
     // in the label set (as their own singleton components)
-    val (e0, _) = pin(pairs
+    val m0 = Materialize(pairs
       .select(greatest(col("id_a"), col("id_b")).as("u"),
         least(col("id_a"), col("id_b")).as("v"))
       .distinct())
+    val e0 = rows(m0)
     val nodes = e0.select(col("u").as("id"))
       .unionByName(e0.select(col("v").as("id"))).distinct()
     var e = e0.filter(col("u") =!= col("v"))
@@ -325,28 +314,37 @@ object Dedup {
     // counted as cNew one round earlier). Round 1 has no carried
     // count, so it counts its input once.
     var prevCount = -1L
-    // blocks of the round FRAMES consumed and dead (never e0 — the
-    // final labels' singleton branch still reads it — and never the
-    // final e, which the returned labels plan reads)
-    var prevRelease: Option[() => Unit] = None
+    // a consumed round's blocks are RELEASED (r20) — else every round's
+    // edge set stays pinned for the session, O(rounds × edges) — but
+    // never e0's (the labels' singleton branch reads it) nor the final
+    // round's (the returned labels read it). A failure releases all.
+    var prev = m0
+    var cur = m0
     var it = 0
     var converged = false
-    while (!converged && it < maxIter) {
-      val (e2, release2) = pin(smallStar(largeStar(e)))
-      // set equality via |A| == |B| ∧ B∖A = ∅ (both are distinct sets)
-      val cOld = if (prevCount >= 0) prevCount else e.count()
-      val cNew = e2.count()
-      converged = cOld == cNew && e2.except(e).head(1).isEmpty
-      prevRelease.foreach(_.apply())
-      prevRelease = Some(release2)
-      e = e2
-      prevCount = cNew
-      it += 1
+    try {
+      while (!converged && it < maxIter) {
+        prev = cur
+        cur = Materialize(smallStar(largeStar(e)))
+        val e2 = rows(cur)
+        // set equality via |A| == |B| ∧ B∖A = ∅ (both are distinct sets)
+        val cOld = if (prevCount >= 0) prevCount else e.count()
+        val cNew = e2.count()
+        converged = cOld == cNew && e2.except(e).head(1).isEmpty
+        if (prev ne m0) prev.release()
+        e = e2
+        prevCount = cNew
+        it += 1
+      }
+      if (!converged)
+        throw new IllegalStateException(
+          s"dupClusters did not reach the star-forest fixpoint in $maxIter " +
+            "rounds — refusing to return unconverged component ids; raise maxIter")
+    } catch {
+      case t: Throwable =>
+        Seq(m0, prev, cur).foreach(_.release())
+        throw t
     }
-    if (!converged)
-      throw new IllegalStateException(
-        s"dupClusters did not reach the star-forest fixpoint in $maxIter " +
-          "rounds — refusing to return unconverged component ids; raise maxIter")
     // star forest: every non-center node has exactly one (node, center)
     // edge; centers (and isolated self-pair nodes) label themselves
     val labels = e.select(col("u").as("doc_id"), col("v").as("component_id"))

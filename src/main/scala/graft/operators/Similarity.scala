@@ -638,39 +638,29 @@ object Similarity {
       // per-label quantizer: nlist_l = ceil(sqrt(N_l)) (the measured
       // ivfKnn law applied within the label population). The per-label
       // trainings (one sample-collect job + one driver Lloyd each) are
-      // INDEPENDENT — overlapped from a small pool (r20; guide §2.6:
+      // INDEPENDENT — overlapped (r20; guide §2.6:
       // the old sequential loop serialized |L| job waves AND |L|
       // driver-CPU Lloyd runs; each label's result is keyed by label,
       // so completion order cannot change the map).
-      val perLabel: Map[String, (Array[Array[Double]], Int)] = {
-        val pool = java.util.concurrent.Executors
-          .newFixedThreadPool(math.min(counts.size, 4))
-        try counts.toSeq.map { case (l, n) =>
-          (l, pool.submit(
-            new java.util.concurrent.Callable[(Array[Array[Double]], Int)] {
-              def call(): (Array[Array[Double]], Int) = {
-                val nl = math.min(sqrtKnob(n), sampleSize)
-                val cents = sphericalLloyd(
-                  unitSample(base.filter(col("lbl") === l), sampleSize,
-                    s"hardNegativesAnnPerLabel($l)"), nl, dim, iters)
-                // derived nprobe is 2·max(4, ⌈√nlist_l⌉) — DOUBLE
-                // ivfKnn's self-knn law: cross-label probing ranks an
-                // anchor against ANOTHER population's centroids, where
-                // the target sits near a cluster boundary more often
-                // than in the self-knn case (SCALING.md r17/r18
-                // hard-negative recall ladder: the
-                // 1× knob decays 0.89→0.73 across decades while the 2×
-                // row holds 0.88-0.95; e13 pins the per-SF floors)
-                val np = math.min(
-                  if (nprobe > 0) nprobe
-                  else 2 * math.max(4, sqrtKnob(cents.length.toLong)),
-                  cents.length)
-                (cents, np)
-              }
-            }))
-        }.map { case (l, fut) => l -> fut.get() }.toMap
-        finally pool.shutdown()
-      }
+      val perLabel: Map[String, (Array[Array[Double]], Int)] =
+        graft.Scoped.overlap(counts.toSeq.map { case (l, n) => () =>
+          val nl = math.min(sqrtKnob(n), sampleSize)
+          val cents = sphericalLloyd(
+            unitSample(base.filter(col("lbl") === l), sampleSize,
+              s"hardNegativesAnnPerLabel($l)"), nl, dim, iters)
+          // derived nprobe is 2·max(4, ⌈√nlist_l⌉) — DOUBLE ivfKnn's
+          // self-knn law: cross-label probing ranks an anchor against
+          // ANOTHER population's centroids, where the target sits near a
+          // cluster boundary more often than in the self-knn case
+          // (SCALING.md r17/r18 hard-negative recall ladder: the 1× knob
+          // decays 0.89→0.73 across decades while the 2× row holds
+          // 0.88-0.95; e13 pins the per-SF floors)
+          val np = math.min(
+            if (nprobe > 0) nprobe
+            else 2 * math.max(4, sqrtKnob(cents.length.toLong)),
+            cents.length)
+          l -> ((cents, np))
+        }).toMap
       val bc = spark.sparkContext.broadcast(perLabel)
       // each vector is indexed under ITS OWN label's quantizer
       val assignUdf = udf { (l: String, v: Seq[Double]) =>

@@ -313,23 +313,24 @@ object LakeQueries {
 
   /** LAKE5 — TARGETED DELETE end to end ([[graft.sources.LakeMaintenance
     * .deleteWhere]], the right-to-be-forgotten / bad-batch-recall op):
-    * the events lake partitioned by category, every row of the
-    * user_id % 7 == 3 cohort deleted, the SURVIVING lake read back and
-    * aggregated. The operator rewrites only partitions containing
-    * matches (here all of them — user ids are uncorrelated with
-    * category; the partial-rewrite evidence, untouched-partition files
-    * byte-identical, is OperatorsSpec's crafted-layout test) and swaps
-    * directories atomically per partition. The oracle restates the
-    * surviving aggregate off the original table, so a row deleted too
-    * many or too few — or a partition lost in the swap — breaks the
-    * hash. */
+    * a lake partitioned by category, every row of the user_id % 7 == 3
+    * cohort deleted, the SURVIVING lake read back and aggregated. The
+    * lake holds only the three columns the delete and the aggregate
+    * consume (event_id, user_id, category), not full event rows, so the
+    * find pass and the survivor rewrite measured here move those three
+    * columns — a lake of full rows rewrites ts/value/props too and
+    * costs more per matched partition. The operator rewrites only
+    * partitions containing matches (here all of them — user ids are
+    * uncorrelated with category; the partial-rewrite evidence,
+    * untouched-partition files byte-identical, is OperatorsSpec's
+    * crafted-layout test) and swaps directories atomically per
+    * partition. The oracle restates the surviving aggregate off the
+    * original table, so a row deleted too many or too few — or a
+    * partition lost in the swap — breaks the hash. */
   def lake5Delete(s: SparkSession, d: String): DataFrame = {
     val dir = qtmp(s, "lake5_lake")
-    // project EARLY (r20; the lake3 narrowing applied here — guide
-    // §2.3/§6): the declared result and the delete predicate consume
-    // only (event_id, user_id, category), so the fabricated lake
-    // carries exactly those — the find pass, the survivor rewrite and
-    // the read-back stop moving ts/value/props through three passes.
+    // project EARLY (r20; the lake3 narrowing — guide §2.3/§6): the
+    // fabricated lake carries only the consumed columns (see docblock).
     // Same partitioned layout (writeEventsParquet), same delete
     // semantics, same oracle-checked aggregate.
     graft.sources.OsdbJson.writeEventsParquet(
@@ -387,9 +388,13 @@ object LakeQueries {
       |FROM events GROUP BY 1""".stripMargin
 
   /** LAKE4 — Z-ORDER LAYOUT end to end ([[graft.sources.LakeMaintenance
-    * .writeZOrdered]]): the events table rewritten along the Morton
-    * curve of (user_id, ts), then read back through a TWO-dimension box
-    * predicate (a user band AND a time band) and aggregated. Z-order is
+    * .writeZOrdered]]): the four event columns the box read consumes
+    * (event_id, user_id, event_type, ts as ts_us) rewritten along the
+    * Morton curve of (user_id, ts), then read back through a
+    * TWO-dimension box predicate (a user band AND a time band) and
+    * aggregated. The rewrite moves those four columns, not full event
+    * rows (value/props are never written), so it measures the curve's
+    * sort and layout, not a full-table rewrite. Z-order is
     * the multi-column data-skipping lever — a user_id-sorted layout
     * leaves every file spanning the full time range, so ts predicates
     * skip nothing; the curve keeps each file a localized (user, time)
@@ -401,10 +406,8 @@ object LakeQueries {
     * re-layout breaks the hash. */
   def lake4ZOrder(s: SparkSession, d: String): DataFrame = {
     val dst = qtmp(s, "lake4_z")
-    // project EARLY (r20; the lake3 narrowing — guide §2.3/§6): the
-    // box read consumes only (event_id, user_id, event_type, ts_us),
-    // so the Morton rewrite re-lays exactly those instead of dragging
-    // value/props through the full-table sort+write. Same curve, same
+    // project EARLY (r20; the lake3 narrowing — guide §2.3/§6): only
+    // the consumed columns are re-laid (see docblock). Same curve, same
     // box pruning demonstration, same oracle-checked aggregate.
     val ev = graft.Tables.events(s, d)
       .select(col("event_id"), col("user_id"), col("event_type"),

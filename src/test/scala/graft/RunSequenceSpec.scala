@@ -223,6 +223,32 @@ class RunSequenceSpec extends SparkSpec {
     assert(e.getMessage.contains("leak"))
   }
 
+  test("skeleton: an out-of-range fold fails loud with the guard's own exception") {
+    val events = evFrame(Seq(
+      ("E0", "Seizure", "other", 0),
+      ("E1", "False Alarm", "other", 1)))
+    val cfg = RunSequence.Config(k = 3, historyN = 2,
+      extract = FeatureExtract.Config(highPassHz = 0.0))
+    val e = intercept[IllegalArgumentException] {
+      RunSequence.skeleton(events, miniDps(Seq("E0", "E1")),
+        col("type") =!= "Unknown", lit(7), cfg)
+    }
+    assert(e.getMessage.contains("out of range"), e.getMessage)
+  }
+
+  test("skeleton releases its evW materialization: no cached partitions outlive it") {
+    def cached() =
+      spark.sparkContext.getRDDStorageInfo.map(_.numCachedPartitions.toLong).sum
+    val cfg = RunSequence.Config(historyN = 2,
+      extract = FeatureExtract.Config(highPassHz = 0.0))
+    val before = cached()
+    val rows = RunSequence.skeleton(sweepEvents,
+      miniDps(Seq("E0", "E1", "E2", "E3")),
+      col("type") =!= "Unknown", col("fold0"), cfg).collect()
+    assert(rows.length == 12)
+    assert(cached() <= before, s"cached partitions grew: $before -> ${cached()}")
+  }
+
   // --------------------------------------------------------------- full run
 
   test("runWith(mlpFamily): the architecture seam swaps in a neural net per fold") {

@@ -92,10 +92,15 @@ class TextOpsSpec extends SparkSpec {
   test("dupClusters: fails loudly instead of returning unconverged labels") {
     import spark.implicits._
     val deep = (0L until 40L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    def cached() =
+      spark.sparkContext.getRDDStorageInfo.map(_.numCachedPartitions.toLong).sum
+    val before = cached()
     val e = intercept[IllegalStateException] {
       Dedup.dupClustersWithRounds(deep, maxIter = 2)
     }
     assert(e.getMessage.contains("unconverged component ids"))
+    // the failed run releases e0 and its rounds
+    assert(cached() <= before, s"cached partitions grew: $before -> ${cached()}")
   }
 
   test("ngram jaccard: near-dup pair scores high, unrelated low") {
