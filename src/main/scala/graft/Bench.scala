@@ -29,15 +29,14 @@ object Bench {
     // counts — each rep now pays the declared plan's full cost.
     def timeOne(fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).queryExecution.toRdd.count() }
+      try Scoped.query(fn(spark, sfDir).queryExecution.toRdd.count())
       catch { case _: Throwable => return -1.0 }
       (System.nanoTime() - t0) / 1e9
     }
     // Streaming entries (st*) run LAST within each sweep: they leave
     // session residue (state-store providers, streaming-runtime threads)
     // that round 5 showed up as code-unchanged slowdowns in the queries
-    // scheduled after them. SPARK_GRAFT_BENCH_ORDER=alpha restores the
-    // interleaved order for A/B-ing that hypothesis.
+    // scheduled after them.
     // SPARK_GRAFT_BENCH_FILTER=q1,j5,... restricts the registry — the
     // SCALING.md probe times a hand-picked expensive subset at two data
     // scales without paying for the full sweep at 10x.
@@ -48,7 +47,6 @@ object Bench {
       case None => SparkEntry.queries
     }
     val alpha = filtered.toSeq.sortBy(_._1)
-    val alphaOrder = sys.env.get("SPARK_GRAFT_BENCH_ORDER").contains("alpha")
     val nonSt = alpha.filterNot(_._1.startsWith("st"))
     val sts = alpha.filter(_._1.startsWith("st"))
     // Each sweep ROTATES the (non-streaming) registry start by n/3:
@@ -61,20 +59,14 @@ object Bench {
     // deterministically. Streaming entries stay last in every sweep
     // (state-store residue — see above).
     val sweeps: Seq[Seq[(String, Double)]] = (1 to 3).map { pass =>
-      // alpha mode = the true interleaved alphabetical order (st* in
-      // place, no rotation) — the A/B arm for the st-residue hypothesis
-      val order = if (alphaOrder || nonSt.isEmpty) alpha
-      else {
-        val off = ((pass - 1) * nonSt.length) / 3
-        (nonSt.drop(off) ++ nonSt.take(off)) ++ sts
-      }
-      // Drop persisted tables between sweeps: several entries persist
-      // intra-query invariants (pipe7's cleaned corpus, lm1's bigram
-      // model, g1/g2's edge tables, BPE's vocab rounds), and the
-      // CacheManager dedupes by logical plan — without this, sweeps 2-3
-      // would read sweep 1's cache and their "reps" would measure
-      // cache hits, not query cost. Min-of-sweeps stays a WARM-JVM
-      // number, but every rep recomputes the declared plan.
+      val off = ((pass - 1) * nonSt.length) / 3
+      val order = (nonSt.drop(off) ++ nonSt.take(off)) ++ sts
+      // Each rep's query scope releases what the entry pinned (pipe7's
+      // cleaned corpus, lm1's bigram model, g1/g2's edge tables); the
+      // CacheManager dedupes by logical plan, so clear it between sweeps
+      // as well — a leaked cache would make sweeps 2-3 measure cache
+      // hits, not query cost. Min-of-sweeps stays a WARM-JVM number,
+      // but every rep recomputes the declared plan.
       spark.sharedState.cacheManager.clearCache()
       val t0 = System.nanoTime()
       val times = order.map { case (name, fn) => name -> timeOne(fn) }

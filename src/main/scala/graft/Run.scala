@@ -564,8 +564,8 @@ object Run {
     val cfg = cfg0.copy(algorithms =
       onlyEnabled(doc.source, cfg0.algorithms, a.only))
     val modelDir = a.modelDir.getOrElse(a.lakeDir)
-    val stats = ConfigTools.testrunnerFrame(cfg, replayDps(spark, lake), modelDir)
-      .persist()
+    val stats = Scoped.current.persist(
+      ConfigTools.testrunnerFrame(cfg, replayDps(spark, lake), modelDir))
     stats.write.mode("overwrite").parquet(s"${a.outDir}/detection_stats")
 
     // analyzeEventResults per algorithm: event label from the type
@@ -584,9 +584,7 @@ object Run {
     }.reduce(_.unionByName(_))
     analysis.coalesce(1).write.mode("overwrite")
       .parquet(s"${a.outDir}/results_analysis")
-    val n = stats.count()
-    stats.unpersist()
-    n
+    stats.count()
   }
 
   /** updateTestData.py (update_test_data:250-420): a NEW test set of
@@ -600,83 +598,79 @@ object Run {
                             a: Args): Long = {
     val efc = ConfigBridge.eventFilters(doc)
     val (events, _) = selectInputs(spark, lake)
-    val trainIds = loadIdSet(spark, a.trainIds.get).persist()
-    val selected = events.filter(EventFilters.compile(efc))
-      .withColumn("__sid", col("id").cast("string"))
-      .persist()
-    try {
-      val testNew = selected
-        .join(trainIds, selected("__sid") === trainIds("__tid"), "left_anti")
-        .persist()
-      // the reference's leakage abort: by anti-join construction the
-      // overlap is zero; verify it anyway so a broken id rendition
-      // (type mismatch, padding) cannot silently pass everything
-      val overlap = testNew
-        .join(trainIds, testNew("__sid") === trainIds("__tid")).count()
-      require(overlap == 0, s"train/test overlap $overlap — data leakage")
+    val trainIds = Scoped.current.persist(loadIdSet(spark, a.trainIds.get))
+    val selected = Scoped.current.persist(events.filter(EventFilters.compile(efc))
+      .withColumn("__sid", col("id").cast("string")))
+    val testNew = Scoped.current.persist(selected
+      .join(trainIds, selected("__sid") === trainIds("__tid"), "left_anti"))
+    // the reference's leakage abort: by anti-join construction the
+    // overlap is zero; verify it anyway so a broken id rendition
+    // (type mismatch, padding) cannot silently pass everything
+    val overlap = testNew
+      .join(trainIds, testNew("__sid") === trainIds("__tid")).count()
+    require(overlap == 0, s"train/test overlap $overlap — data leakage")
 
-      val nested = nestedEvents(spark, lake)
-      val outEvents = nested.join(
-        testNew.select(col("__sid").as("__keep")),
-        nested("id").cast("string") === col("__keep"), "left_semi")
-      val withCat =
-        if (outEvents.columns.contains("category")) outEvents
-        else outEvents.withColumn("category", lit("testDataNew"))
-      withCat.write.mode("overwrite").parquet(s"${a.outDir}/test_data_new")
-      OsdbJson.writeEventsJson(withCat, s"${a.outDir}/test_data_new_json")
+    val nested = nestedEvents(spark, lake)
+    val outEvents = nested.join(
+      testNew.select(col("__sid").as("__keep")),
+      nested("id").cast("string") === col("__keep"), "left_semi")
+    val withCat =
+      if (outEvents.columns.contains("category")) outEvents
+      else outEvents.withColumn("category", lit("testDataNew"))
+    withCat.write.mode("overwrite").parquet(s"${a.outDir}/test_data_new")
+    OsdbJson.writeEventsJson(withCat, s"${a.outDir}/test_data_new_json")
 
-      // added/removed vs the ORIGINAL test set (when supplied), split
-      // by the C4 seizure class — the reference's comparison block.
-      // removed = original_test_ids − new_test_ids over RAW id sets
-      // (updateTestData.py:360), NOT restricted to currently-selected
-      // events; the type lookup is the FILTERED event map (:355-356),
-      // so an original test event deleted from the lake or no longer
-      // passing the filters lands in the 'unknown' bucket (the
-      // reference's _count_ids_by_type, :227-247). added ids are a
-      // subset of the selection by construction, but the LAKE does not
-      // guarantee a type value — the reference buckets a None type as
-      // 'unknown' (:234-236), so __sz is three-valued: true/false by
-      // the C4 class, null when the event has no type at all.
-      val isSz = when(col("type").isNull, lit(null).cast("boolean"))
-        .otherwise(typeIdCol(col("type")) === 1).as("__sz")
-      val newIds = testNew.select(col("__sid"), isSz)
-      val (added, removed) = a.testIds match {
-        case None => (newIds, newIds.limit(0))
-        case Some(p) =>
-          val orig = loadIdSet(spark, p)
-          (newIds.join(orig, newIds("__sid") === orig("__tid"), "left_anti"),
-            orig.join(newIds.select(col("__sid").as("__nid")),
-                orig("__tid") === col("__nid"), "left_anti")
-              .join(selected.select(col("__sid"), isSz),
-                orig("__tid") === col("__sid"), "left")
-              .select(orig("__tid").as("__sid"), col("__sz")))
-      }
-      // szOnly: Some(b) = that class; None = the 'unknown' bucket —
-      // __sz null because the id has no filtered-lake row OR its event
-      // carries no type value
-      def cnt(df: DataFrame, szOnly: Option[Boolean]): Long = szOnly match {
-        case None => df.filter(col("__sz").isNull).count()
-        case Some(b) => df.filter(col("__sz") === b).count()
-      }
-      import spark.implicits._
-      val summary = Seq(
-        ("total_in_db", selected.count()),
-        ("in_training", trainIds.count()),
-        ("in_test_new", testNew.count()),
-        ("added_seizure", cnt(added, Some(true))),
-        ("added_non_seizure", cnt(added, Some(false))),
-        ("added_unknown", cnt(added, None)),
-        ("removed_seizure", cnt(removed, Some(true))),
-        ("removed_non_seizure", cnt(removed, Some(false))),
-        ("removed_unknown", cnt(removed, None)),
-        ("train_test_overlap", overlap))
-        .toDF("metric", "n")
-      summary.coalesce(1).write.mode("overwrite")
-        .parquet(s"${a.outDir}/update_summary")
-      summary.collect().foreach(r =>
-        println(s"graft.Run updatetest: ${r.getString(0)} = ${r.getLong(1)}"))
-      testNew.count()
-    } finally { trainIds.unpersist(); selected.unpersist() }
+    // added/removed vs the ORIGINAL test set (when supplied), split
+    // by the C4 seizure class — the reference's comparison block.
+    // removed = original_test_ids − new_test_ids over RAW id sets
+    // (updateTestData.py:360), NOT restricted to currently-selected
+    // events; the type lookup is the FILTERED event map (:355-356),
+    // so an original test event deleted from the lake or no longer
+    // passing the filters lands in the 'unknown' bucket (the
+    // reference's _count_ids_by_type, :227-247). added ids are a
+    // subset of the selection by construction, but the LAKE does not
+    // guarantee a type value — the reference buckets a None type as
+    // 'unknown' (:234-236), so __sz is three-valued: true/false by
+    // the C4 class, null when the event has no type at all.
+    val isSz = when(col("type").isNull, lit(null).cast("boolean"))
+      .otherwise(typeIdCol(col("type")) === 1).as("__sz")
+    val newIds = testNew.select(col("__sid"), isSz)
+    val (added, removed) = a.testIds match {
+      case None => (newIds, newIds.limit(0))
+      case Some(p) =>
+        val orig = loadIdSet(spark, p)
+        (newIds.join(orig, newIds("__sid") === orig("__tid"), "left_anti"),
+          orig.join(newIds.select(col("__sid").as("__nid")),
+              orig("__tid") === col("__nid"), "left_anti")
+            .join(selected.select(col("__sid"), isSz),
+              orig("__tid") === col("__sid"), "left")
+            .select(orig("__tid").as("__sid"), col("__sz")))
+    }
+    // szOnly: Some(b) = that class; None = the 'unknown' bucket —
+    // __sz null because the id has no filtered-lake row OR its event
+    // carries no type value
+    def cnt(df: DataFrame, szOnly: Option[Boolean]): Long = szOnly match {
+      case None => df.filter(col("__sz").isNull).count()
+      case Some(b) => df.filter(col("__sz") === b).count()
+    }
+    import spark.implicits._
+    val summary = Seq(
+      ("total_in_db", selected.count()),
+      ("in_training", trainIds.count()),
+      ("in_test_new", testNew.count()),
+      ("added_seizure", cnt(added, Some(true))),
+      ("added_non_seizure", cnt(added, Some(false))),
+      ("added_unknown", cnt(added, None)),
+      ("removed_seizure", cnt(removed, Some(true))),
+      ("removed_non_seizure", cnt(removed, Some(false))),
+      ("removed_unknown", cnt(removed, None)),
+      ("train_test_overlap", overlap))
+      .toDF("metric", "n")
+    summary.coalesce(1).write.mode("overwrite")
+      .parquet(s"${a.outDir}/update_summary")
+    summary.collect().foreach(r =>
+      println(s"graft.Run updatetest: ${r.getString(0)} = ${r.getLong(1)}"))
+    testNew.count()
   }
 
   /** Fields [[runSummarise]] CANNOT honor in `skipElements`: the
@@ -718,11 +712,8 @@ object Run {
       case TestdataLake(dir) => OsdbFixture.flatDps(spark, dir)
       case _ => nestedToFlatDps(kept)
     }
-    val pages = Summarise.writeReport(kept, dps, a.outDir, a.pageSize,
-      skip = cfg.skipElements.toSet)
-    val n = pages.count()
-    pages.unpersist()
-    n
+    Summarise.writeReport(kept, dps, a.outDir, a.pageSize,
+      skip = cfg.skipElements.toSet).count()
   }
 
   /** testDeviceHrAlg.py (runTest:28-58, testDeviceHrAlg.py:52 main):
@@ -741,8 +732,8 @@ object Run {
       if (a.lakeDir == "-") "." else a.lakeDir)
     // the frame already carries event_id + name per trace LIST ENTRY
     // (duplicate ids stay separate, like the reference's iteration)
-    val stats = ConfigTools.deviceHrFrame(spark, entries, traces, modelDir)
-      .persist()
+    val stats = Scoped.current.persist(
+      ConfigTools.deviceHrFrame(spark, entries, traces, modelDir))
     val verdicts = stats
       .withColumn("expect_alarm", lit(true))
       .withColumn("correct", col("detected") === 1)
@@ -752,9 +743,7 @@ object Run {
       count(lit(1)).as("n_traces"))
     rollup.coalesce(1).write.mode("overwrite")
       .parquet(s"${a.outDir}/hr_rollup")
-    val n = stats.count()
-    stats.unpersist()
-    n
+    stats.count()
   }
 
   // ---------------------------------------------------------------- main
@@ -774,8 +763,11 @@ object Run {
 
   /** The dispatch, separated from session lifecycle so specs can run
     * tools against their own session. Returns the row count of the
-    * tool's primary output. */
-  def run(spark: SparkSession, a: Args): Long = {
+    * tool's primary output. The tool runs as one [[Scoped.query]]:
+    * every frame it pins is released when it returns, on failure too. */
+  def run(spark: SparkSession, a: Args): Long = Scoped.query(dispatch(spark, a))
+
+  private def dispatch(spark: SparkSession, a: Args): Long = {
     // testConfig / osdbCfg formats own their key sets; the nnConfig
     // family validates the shared top level here (fail-loud)
     val doc0 = ConfigBridge.loadMerged(a.configFile)

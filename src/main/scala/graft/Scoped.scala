@@ -5,7 +5,7 @@ import java.util.concurrent.atomic.AtomicBoolean
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
@@ -19,8 +19,9 @@ import org.apache.spark.storage.StorageLevel
   *     an `ExecutionException` wrapper;
   *   - no overlapped task outlives the call, and none starts after a
   *     sibling has failed;
-  *   - no materialized block outlives the scope that made it, also when
-  *     the scope fails.
+  *   - no pinned block outlives the scope that made it, also when the
+  *     scope fails. A runner opens one [[query]] scope per query or
+  *     tool, and library code pins into it through [[current]].
   */
 object Scoped {
 
@@ -63,10 +64,11 @@ object Scoped {
       }
     }
 
-  /** An eagerly materialized frame: read it through `df`, free its
-    * blocks with `release()` once nothing reads them any more (a
-    * local checkpoint cannot be recomputed). `release()` is idempotent. */
-  final class Materialized private[Scoped] (val df: DataFrame) {
+  /** A pinned frame: read it through `df`, free its blocks with
+    * `release()` once nothing reads them any more (a local checkpoint
+    * cannot be recomputed). `release()` is idempotent. */
+  final class Materialized private[Scoped] (val df: DataFrame,
+                                            checkpointed: Boolean) {
     private val released = new AtomicBoolean(false)
 
     def release(): Unit = if (released.compareAndSet(false, true))
@@ -74,26 +76,72 @@ object Scoped {
         // checkpoint storage is not in the cache manager, so
         // Dataset.unpersist cannot reach it: free the LogicalRDD's own
         // RDD (Dataset.rdd would be a fresh deserializer over it)
-        case lr: LogicalRDD => lr.rdd.unpersist(false)
+        case lr: LogicalRDD if checkpointed => lr.rdd.unpersist(false)
         case _ => df.unpersist(false)
       }
   }
 
-  /** Pins frames for the length of one [[Materialize.scoped]] block. */
-  final class Scope private[Scoped] {
+  /** Pins frames and releases them together when it closes: the scope
+    * of one [[Materialize.scoped]] block or one [[query]]. Pinning is
+    * safe from [[overlap]] tasks; pinning into a closed scope throws. */
+  final class Scope private[Scoped] (keeps: Boolean) {
     private val held = ArrayBuffer.empty[Materialized]
+    private var closed = false
 
-    /** Materialize `df` and register it for release at scope exit.
-      * Safe to call from [[overlap]] tasks. */
-    def apply(df: DataFrame): DataFrame = {
-      val m = Materialize(df)
-      synchronized { held += m }
-      m.df
+    /** Materialize `df` eagerly ([[Materialize]]'s policy) and pin it. */
+    def apply(df: DataFrame): DataFrame = own(Materialize(df)).df
+
+    /** Pin `ds` as a lazy MEMORY_AND_DISK persist: its first action
+      * fills the blocks, later actions read them. */
+    def persist[T](ds: Dataset[T]): Dataset[T] = {
+      own(new Materialized(ds.persist(StorageLevel.MEMORY_AND_DISK).toDF(), false))
+      ds
     }
 
-    private[Scoped] def releaseAll(): Unit =
-      synchronized { held.foreach(_.release()) }
+    /** Pin a handle made elsewhere (a loop's last round, whose earlier
+      * rounds it released itself). */
+    private[graft] def own(m: Materialized): Materialized = synchronized {
+      if (closed) { m.release(); throw new IllegalStateException("pinned into a closed scope") }
+      if (keeps) held += m
+      m
+    }
+
+    /** The frames pinned so far, oldest first. */
+    private[graft] def pinned: Seq[DataFrame] = synchronized(held.map(_.df).toSeq)
+
+    private[Scoped] def close(): Unit = synchronized {
+      closed = true
+      held.reverseIterator.foreach(_.release())
+      held.clear()
+    }
   }
+
+  private val ambient = new InheritableThreadLocal[Scope]
+  private val unowned = new Scope(keeps = false)
+
+  /** The innermost open [[query]] scope of this thread, inherited by
+    * threads it creates (so [[overlap]] tasks pin into their caller's
+    * query). Outside any query, a scope that pins but keeps no handle:
+    * the ContextCleaner frees local-checkpoint blocks once the frame is
+    * unreachable, and a persisted frame stays cached until `clearCache`. */
+  def current: Scope = Option(ambient.get).getOrElse(unowned)
+
+  /** Run one query or tool: every frame pinned through [[current]]
+    * while `body` builds and runs is released when it exits, on
+    * failure too, and the body's exception comes out as thrown. The
+    * body must not return a lazy plan over a pinned frame. Scopes
+    * nest; the innermost one owns the pins. */
+  def query[T](body: => T): T = {
+    val s = new Scope(keeps = true)
+    val outer = ambient.get
+    ambient.set(s)
+    try body finally { ambient.set(outer); s.close() }
+  }
+
+  /** Cached partitions held in the session's block managers: blocks
+    * that a released scope left behind show up here. */
+  def cachedPartitions(spark: SparkSession): Long =
+    spark.sparkContext.getRDDStorageInfo.map(_.numCachedPartitions.toLong).sum
 
   object Materialize {
 
@@ -107,19 +155,20 @@ object Scoped {
       * leaves its partial local-checkpoint blocks to the ContextCleaner. */
     def apply(df: DataFrame): Materialized =
       if (df.sparkSession.sparkContext.isLocal)
-        new Materialized(df.localCheckpoint(true))
+        new Materialized(df.localCheckpoint(true), true)
       else {
         val p = df.persist(StorageLevel.MEMORY_AND_DISK)
         try p.count() catch { case e: Throwable => p.unpersist(false); throw e }
-        new Materialized(p)
+        new Materialized(p, false)
       }
 
     /** Run `body` with a [[Scope]]; every frame it pinned through
-      * `s(df)` is released when the block exits, on failure too. The
-      * body must not return a lazy plan over a pinned frame. */
+      * `s(df)` or `s.persist(df)` is released when the block exits, on
+      * failure too. The body must not return a lazy plan over a pinned
+      * frame. */
     def scoped[T](body: Scope => T): T = {
-      val s = new Scope
-      try body(s) finally s.releaseAll()
+      val s = new Scope(keeps = true)
+      try body(s) finally s.close()
     }
   }
 }

@@ -87,12 +87,10 @@ object Tables {
     * the threshold and the spread always fires.
     *
     * The materialization is [[Scoped.Materialize]]'s policy (a local
-    * checkpoint on a local master, an eager persist elsewhere). No
-    * handle is kept: callers return lazy plans over the frame, so no
-    * scope could release it before they run. Local-checkpoint blocks
-    * are freed by the ContextCleaner once the returned plan becomes
-    * unreachable; a persisted frame stays in the session's cache
-    * manager until `clearCache` (Verify clears per query). */
+    * checkpoint on a local master, an eager persist elsewhere), and it
+    * pins into the query scope ([[Scoped.current]]): callers return
+    * lazy plans over the frame, so the runner's [[Scoped.query]]
+    * releases it once the query has run. */
   def materialize(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     val advisory = spark.conf
@@ -101,7 +99,7 @@ object Tables {
       org.apache.spark.network.util.JavaUtils.byteStringAsBytes(advisory)
     val big = df.queryExecution.optimizedPlan.stats.sizeInBytes >
       BigInt(advisoryBytes)
-    Scoped.Materialize(if (big) spread(df) else df).df
+    Scoped.current(if (big) spread(df) else df)
   }
 
   def region(spark: SparkSession, d: String): DataFrame = load(spark, d, "region")

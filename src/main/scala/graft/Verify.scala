@@ -27,15 +27,16 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
+        try Scoped.query(fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name"))
         catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
         }
-        // several entries persist intra-query invariants (pipe7's
-        // cleaned corpus, lm1's bigram model, the graph edge tables);
-        // drop them once the result is written so 165 queries don't
-        // accumulate corpus-scale cached tables in one session
+        // the query scope released what the entry pinned: any cached
+        // partition still held here outlived its query
+        val leaked = Scoped.cachedPartitions(spark)
+        if (leaked > 0) System.err.println(s"[verify] $name leaked $leaked blocks")
+        // safety net, so one leak does not carry into the next census
         spark.sharedState.cacheManager.clearCache()
       }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

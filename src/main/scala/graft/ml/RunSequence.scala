@@ -3,7 +3,6 @@ package graft.ml
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
-import org.apache.spark.storage.StorageLevel
 
 import graft.Scoped.{Materialize, overlap}
 import graft.functions.EpochFeatures
@@ -559,13 +558,12 @@ object RunSequence {
                      outerFoldOf: Column, innerFoldOf: Column,
                      outerK: Int, innerK: Int): DataFrame = {
     val spark = events.sparkSession
-    val ev = events.filter(select).select(
-        col("id").cast("string").as("srcId"),
-        outerFoldOf.cast("long").as("ofold"),
-        innerFoldOf.cast("long").as("ifold"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    ev.count()
-    try {
+    Materialize.scoped { s =>
+      val ev = s.persist(events.filter(select).select(
+          col("id").cast("string").as("srcId"),
+          outerFoldOf.cast("long").as("ofold"),
+          innerFoldOf.cast("long").as("ifold")))
+      ev.count()
       // r19 opt round: ONE per-(ofold, ifold) CELL aggregate over ev
       // (≤ outerK·innerK rows) carries every count instead of a
       // crossJoin(folds) event-table blow-up per stage. r20: the stage
@@ -629,7 +627,7 @@ object RunSequence {
         org.apache.spark.sql.types.StructField("n_events",
           org.apache.spark.sql.types.LongType, nullable = false)))
       spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
-    } finally ev.unpersist(false)
+    }
   }
 
   /** The pipeline AUDIT frame — the reference's
@@ -646,10 +644,9 @@ object RunSequence {
   def auditFrame(events: DataFrame, select: Column, foldOf: Column,
                  cfg: Config = Config()): DataFrame = {
     val spark = events.sparkSession
-    val ev = selectedEvents(events, select, foldOf)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    ev.count()
-    try {
+    Materialize.scoped { s =>
+      val ev = s.persist(selectedEvents(events, select, foldOf))
+      ev.count()
       val planT = augmentPlan(ev, cfg)
         .join(ev.select(col("srcId").as("psrc"), col("type")),
           col("srcId") === col("psrc"))
@@ -710,7 +707,7 @@ object RunSequence {
         org.apache.spark.sql.types.StructField("n_other",
           org.apache.spark.sql.types.LongType, nullable = false)))
       spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
-    } finally ev.unpersist(false)
+    }
   }
 
   /** A nested-selection candidate: a model family plus the BASIS it
@@ -871,19 +868,11 @@ object RunSequence {
     // fold, and even the outer-train slicing (slices are subsets of
     // the selected corpus) — so each basis in use is extracted exactly
     // ONCE; every train/score frame below is a projection/join over
-    // these persisted frames
-    // every persist below registers here IMMEDIATELY, before its first
-    // count — a validation require or a basis-extraction failure must
-    // not strand pinned MEMORY_AND_DISK blocks (the session-lifetime
-    // leak the paramSweep docblock warns about)
-    val pinned = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def pin(df: DataFrame): DataFrame = {
-      val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-      pinned += p
-      p
-    }
-    try {
-      val evAll = pin(events.filter(select).select(
+    // these persisted frames. Every persist below pins into a scope
+    // before its first count, so a validation require or a
+    // basis-extraction failure strands no MEMORY_AND_DISK blocks
+    Materialize.scoped { s =>
+      val evAll = s.persist(events.filter(select).select(
         col("id").cast("string").as("srcId"),
         typeIdCol(col("type")).as("type"),
         col("subType"),
@@ -908,13 +897,13 @@ object RunSequence {
       val windowBase: Option[DataFrame] =
         if (inUse.contains("window") || inUse.contains("spectrogram")) {
           val w = assembledWindowBase(evAll, dps, bufferSamples)
-          Some(if (inUse.contains("window")) pin(w) else w)
+          Some(if (inUse.contains("window")) s.persist(w) else w)
         } else None
       val bases: Map[String, DataFrame] = inUse.map { basis =>
         val base = basis match {
-          case "features" => pin(assembledHistoryBase(evAll, dps, cfg))
+          case "features" => s.persist(assembledHistoryBase(evAll, dps, cfg))
           case "window" => windowBase.get
-          case _ => pin(specBaseFrom(windowBase.get, specCfg))
+          case _ => s.persist(specBaseFrom(windowBase.get, specCfg))
         }
         basis -> base
       }.toMap
@@ -926,40 +915,38 @@ object RunSequence {
           .select(col("eventId"), col("fold"), col("label"), col(basis))
       }
       (0 until outerK).map { o =>
-        val innerEv = pin(evAll.filter(col("ofold") =!= o)
-          .select(col("srcId"), col("type"), col("subType"),
-            col("ifold").as("fold")))
-        innerEv.count()
-        val innerAssembled = inUse.map(basis =>
-          basis -> pin(withFold(basis, innerEv))).toMap
-        innerAssembled.values.foreach(_.count())
-        val innerMean =
-          try candidates.map { c =>
+        // the inner slices and the outer split are freed per outer fold
+        val innerMean = Materialize.scoped { si =>
+          val innerEv = si.persist(evAll.filter(col("ofold") =!= o)
+            .select(col("srcId"), col("type"), col("subType"),
+              col("ifold").as("fold")))
+          innerEv.count()
+          val innerAssembled = inUse.map(basis =>
+            basis -> si.persist(withFold(basis, innerEv))).toMap
+          innerAssembled.values.foreach(_.count())
+          candidates.map { c =>
             val rs = foldLoop(innerEv, innerAssembled(c.basis), cfg, c.basis,
               c.fit, c.score, ownAssembled = false)
             c.name -> rs.map(_.heldOutAuroc).sum / rs.size
           }.toMap
-          finally {
-            innerAssembled.values.foreach(_.unpersist(false))
-            innerEv.unpersist(false)
-          }
+        }
         val chosen = innerMean.maxBy { case (n, a) => (a, n) }._1
         val winner = candidates.find(_.name == chosen).get
         // winner retrains on the FULL outer-train slice, scores outer
         // fold o once: the outer split as a 2-way fold column over the
         // SAME persisted basis, run only on the test fold
-        val outerEv = pin(evAll.select(col("srcId"), col("type"),
-            col("subType"),
-            when(col("ofold") === o, 1L).otherwise(0L).as("fold")))
-        outerEv.count()
-        val outerRun =
-          try foldLoop(outerEv, withFold(winner.basis, outerEv),
+        val outerRun = Materialize.scoped { so =>
+          val outerEv = so.persist(evAll.select(col("srcId"), col("type"),
+              col("subType"),
+              when(col("ofold") === o, 1L).otherwise(0L).as("fold")))
+          outerEv.count()
+          foldLoop(outerEv, withFold(winner.basis, outerEv),
             cfg.copy(k = 2), winner.basis, winner.fit, winner.score,
             Seq(1)).head
-          finally outerEv.unpersist(false)
+        }
         NestedResult[Any](o, chosen, innerMean, outerRun.copy(fold = o))
       }
-    } finally pinned.foreach(_.unpersist(false))
+    }
   }
 
   /** The P12+W7 feature-history basis assembled to (eventId, label,
@@ -1072,13 +1059,12 @@ object RunSequence {
                  foldOf: Column, cfg: Config = Config())(
                  fit: DataFrame => M,
                  score: (M, DataFrame) => DataFrame): Seq[FoldResult[M]] = {
-    val ev = selectedEvents(events, select, foldOf)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    ev.count()
-    requireFoldRange(ev, cfg.k)
-    try foldLoop(ev, assembledHistory(ev, dps, cfg), cfg, "features",
-      fit, score)
-    finally ev.unpersist(false)
+    Materialize.scoped { s =>
+      val ev = s.persist(selectedEvents(events, select, foldOf))
+      ev.count()
+      requireFoldRange(ev, cfg.k)
+      foldLoop(ev, assembledHistory(ev, dps, cfg), cfg, "features", fit, score)
+    }
   }
 
   /** The RAW-WINDOW basis run — the reference's convolutional
@@ -1095,19 +1081,19 @@ object RunSequence {
                         cfg: Config = Config(), bufferSamples: Int = 750)(
                         fit: DataFrame => M,
                         score: (M, DataFrame) => DataFrame): Seq[FoldResult[M]] = {
-    val ev = selectedEvents(events, select, foldOf)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    ev.count()
-    requireFoldRange(ev, cfg.k)
-    // ONE definition of the window-basis assembly (shared with the
-    // nested path) + the fold join — two inline copies had already
-    // started to drift risk onto the label/validate conventions
-    val assembled = assembledWindowBase(ev, dps, bufferSamples)
-      .join(ev.select(col("srcId"), col("fold")),
-        col("eventId") === col("srcId"))
-      .select(col("eventId"), col("fold"), col("label"), col("window"))
-    try foldLoop(ev, assembled, cfg, "window", fit, score)
-    finally ev.unpersist(false)
+    Materialize.scoped { s =>
+      val ev = s.persist(selectedEvents(events, select, foldOf))
+      ev.count()
+      requireFoldRange(ev, cfg.k)
+      // ONE definition of the window-basis assembly (shared with the
+      // nested path) + the fold join — two inline copies had already
+      // started to drift risk onto the label/validate conventions
+      val assembled = assembledWindowBase(ev, dps, bufferSamples)
+        .join(ev.select(col("srcId"), col("fold")),
+          col("eventId") === col("srcId"))
+        .select(col("eventId"), col("fold"), col("label"), col("window"))
+      foldLoop(ev, assembled, cfg, "window", fit, score)
+    }
   }
 
   /** The fold's training frame with the M13 weight column attached
@@ -1236,16 +1222,14 @@ object RunSequence {
                           foldsToRun: Seq[Int] = Seq.empty,
                           ownAssembled: Boolean = true): Seq[FoldResult[M]] = {
     val folds = if (foldsToRun.nonEmpty) foldsToRun else 0 until cfg.k
-    // ownAssembled = false: the caller persisted the frame and loops
-    // over this method (runNested's candidate loop) — taking ownership
-    // here would unpersist it between candidates and re-materialize
-    val assembled =
-      if (ownAssembled) assembledIn.persist(StorageLevel.MEMORY_AND_DISK)
-      else assembledIn
-    if (ownAssembled) assembled.count() // one materialization per loop
-    val plan = augmentPlan(ev, cfg).persist(StorageLevel.MEMORY_AND_DISK)
-    plan.count()
-    try {
+    Materialize.scoped { s =>
+      // ownAssembled = false: the caller persisted the frame and loops
+      // over this method (runNested's candidate loop) — taking ownership
+      // here would unpersist it between candidates and re-materialize
+      val assembled = if (ownAssembled) s.persist(assembledIn) else assembledIn
+      if (ownAssembled) assembled.count() // one materialization per loop
+      val plan = s.persist(augmentPlan(ev, cfg))
+      plan.count()
       folds.map { f =>
         val fplan = plan.filter(col("fold") =!= f)
         val test = assembled.filter(col("fold") === f)
@@ -1269,9 +1253,8 @@ object RunSequence {
           .select(col("augId").as("eventId"), col("label"),
             col("subType"), col(dataCol))
         val model = fit(train)
-        val scored = score(model, test)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        try {
+        Materialize.scoped { sf =>
+          val scored = sf.persist(score(model, test))
           val auroc = Trainer.auroc(scored)
           val m = Curate.eventLevelMetrics(
             scored, "eventId", "p_seizure", "label").head()
@@ -1285,11 +1268,8 @@ object RunSequence {
             eventTn = m.getAs[Long]("event_tn"),
             eventFn = m.getAs[Long]("event_fn"),
             model = model)
-        } finally scored.unpersist(false)
+        }
       }
-    } finally {
-      if (ownAssembled) assembled.unpersist(false)
-      plan.unpersist(false)
     }
   }
 }

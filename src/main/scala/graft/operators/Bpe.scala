@@ -48,17 +48,7 @@ object Bpe {
 
   val EndOfWord = "</w>"
 
-  case class BpeModel(merges: DataFrame, vocabSeqs: DataFrame,
-                      backing: Option[Materialized] = None) {
-    /** Release the model's executor-side storage: the vocabSeqs cache
-      * (local path: no-op — the table is a local relation) and, on the
-      * distributed path, the final round's materialization, which
-      * `Dataset.unpersist` on vocabSeqs cannot reach. */
-    def release(): Unit = {
-      vocabSeqs.unpersist()
-      backing.foreach(_.release())
-    }
-  }
+  case class BpeModel(merges: DataFrame, vocabSeqs: DataFrame)
 
   private val mergeUdf = udf { (seq: Seq[String], a: String, b: String) =>
     val out = ArrayBuffer.empty[String]
@@ -103,8 +93,8 @@ object Bpe {
     *         tokenize the corpus, [[tokenCountsBySource]]). vocabSeqs
     *         stays resident (vocab-bounded — a local relation on the
     *         local path, the final round's materialization on the
-    *         distributed one);
-    *         call `model.release()` when done with the model.
+    *         distributed one, which pins into the query scope
+    *         ([[graft.Scoped.current]]) and is released with it).
     */
   def train(docs: DataFrame, textCol: String, numMerges: Int,
             vocabParts: Int = 8,
@@ -115,52 +105,58 @@ object Bpe {
       .select(explode(split(lower(trim(col(textCol))), "\\s+")).as("w"))
       .filter(col("w") =!= "")
       .groupBy("w").agg(count(lit(1)).as("f"))
-    var seqs = words
-      // filter the trailing "" that Spark's limit=-1 split("") keeps
-      .withColumn("s", concat(
-        expr("filter(split(w, ''), x -> x <> '')"), array(lit(EndOfWord))))
-      .select("w", "f", "s")
-      // coalesce the vocab-bounded table: every merge round runs 2 jobs
-      // over it, and at shuffle-partition width (32+) the rounds pay
-      // 32 mostly-empty tasks of scheduling overhead each — measured
-      // ~1 s/round of pure overhead in pipe7. The corpus-scale collapse
-      // above keeps full map-side width; only the reduce/round side
-      // narrows. Heaps' law keeps vocab ≪ corpus at any sf; raise
-      // vocabParts for billion-word vocabs.
-      .coalesce(vocabParts)
-      .cache() // vocab-bounded: the corpus-scale pass is behind us
+    Materialize.scoped { sc =>
+      val seqs = sc.persist(words
+        // filter the trailing "" that Spark's limit=-1 split("") keeps
+        .withColumn("s", concat(
+          expr("filter(split(w, ''), x -> x <> '')"), array(lit(EndOfWord))))
+        .select("w", "f", "s")
+        // coalesce the vocab-bounded table: every merge round runs 2 jobs
+        // over it, and at shuffle-partition width (32+) the rounds pay
+        // 32 mostly-empty tasks of scheduling overhead each — measured
+        // ~1 s/round of pure overhead in pipe7. The corpus-scale collapse
+        // above keeps full map-side width; only the reduce/round side
+        // narrows. Heaps' law keeps vocab ≪ corpus at any sf; raise
+        // vocabParts for billion-word vocabs.
+        .coalesce(vocabParts)) // vocab-bounded: the corpus-scale pass is behind us
 
-    // Size the vocab (materializes the cache — this job replaces the
-    // first round's implicit materialization, so it costs nothing
-    // extra). Heap estimate: each 1-char symbol String is ~48 B on a
-    // 64-bit JVM and a word of c chars carries c+1 of them plus the
-    // word string and tuple overhead — 64 B/char + 160 B/word is
-    // deliberately conservative (over-estimating keeps oversized vocabs
-    // on the distributed path, which is the safe failure mode).
-    val stats = seqs.agg(
-      count(lit(1)).as("n"), sum(length(col("w"))).as("chars")).head()
-    val nWords = stats.getLong(0)
-    val totalChars = if (stats.isNullAt(1)) 0L else stats.getLong(1)
-    val estBytes = nWords * 160L + totalChars * 64L
+      // Size the vocab (materializes the cache — this job replaces the
+      // first round's implicit materialization, so it costs nothing
+      // extra). Heap estimate: each 1-char symbol String is ~48 B on a
+      // 64-bit JVM and a word of c chars carries c+1 of them plus the
+      // word string and tuple overhead — 64 B/char + 160 B/word is
+      // deliberately conservative (over-estimating keeps oversized vocabs
+      // on the distributed path, which is the safe failure mode).
+      val stats = seqs.agg(
+        count(lit(1)).as("n"), sum(length(col("w"))).as("chars")).head()
+      val nWords = stats.getLong(0)
+      val totalChars = if (stats.isNullAt(1)) 0L else stats.getLong(1)
+      val estBytes = nWords * 160L + totalChars * 64L
 
-    if (estBytes <= localVocabBytes) {
-      val vocab = seqs.select("w", "f", "s").collect().map { r =>
-        (r.getString(0), r.getLong(1),
-          r.getSeq[String](2).toArray)
+      if (estBytes > localVocabBytes) trainRounds(seqs, numMerges)
+      else {
+        val vocab = seqs.select("w", "f", "s").collect().map { r =>
+          (r.getString(0), r.getLong(1),
+            r.getSeq[String](2).toArray)
+        }
+        val (merges, finalVocab) = trainLocal(vocab, numMerges)
+        import spark.implicits._
+        BpeModel(
+          merges.toSeq.toDF("rank", "lhs", "rhs", "freq"),
+          finalVocab.toSeq.map { case (w, f, s) => (w, f, s.toSeq) }
+            .toDF("w", "f", "s"))
       }
-      seqs.unpersist(false)
-      val (merges, finalVocab) = trainLocal(vocab, numMerges)
-      import spark.implicits._
-      return BpeModel(
-        merges.toSeq.toDF("rank", "lhs", "rhs", "freq"),
-        finalVocab.toSeq.map { case (w, f, s) => (w, f, s.toSeq) }
-          .toDF("w", "f", "s"))
     }
+  }
 
+  /** The distributed path of [[train]]: one pair-count job and one
+    * merge materialization per round over the cached `base`. */
+  private def trainRounds(base: DataFrame, numMerges: Int): BpeModel = {
+    val spark = base.sparkSession
+    var seqs = base
     val merges = ArrayBuffer.empty[(Int, String, String, Long)]
-    val vocab0 = seqs
     // the latest round's materialization: the previous one is freed
-    // each round (no O(numMerges) vocab copies); a failure frees both
+    // each round (no O(numMerges) vocab copies); a failure frees it
     var backing: Option[Materialized] = None
     try {
       for (r <- 1 to numMerges) {
@@ -185,22 +181,21 @@ object Bpe {
         // 25 merges took 19+ MINUTES of plan-time CPU vs seconds.
         val next = Materialize(
           seqs.withColumn("s", mergeUdf(col("s"), lit(a), lit(b))))
-        vocab0.unpersist(false) // frees round 1's cache()d base (no-op later)
         backing.foreach(_.release())
         backing = Some(next)
         seqs = spark.createDataFrame(next.df.rdd, next.df.schema)
       }
     } catch {
       case t: Throwable =>
-        vocab0.unpersist(false)
         backing.foreach(_.release())
         throw t
     }
+    // the last round backs the returned vocabSeqs
+    backing.foreach(graft.Scoped.current.own(_))
     import spark.implicits._
     BpeModel(
       merges.toSeq.toDF("rank", "lhs", "rhs", "freq"),
-      seqs.select("w", "f", "s"),
-      backing = backing)
+      seqs.select("w", "f", "s"))
   }
 
   /** UTF-8 binary "less than" — the comparison Spark's orderBy applies

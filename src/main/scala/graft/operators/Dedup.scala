@@ -317,7 +317,8 @@ object Dedup {
     // a consumed round's blocks are RELEASED (r20) — else every round's
     // edge set stays pinned for the session, O(rounds × edges) — but
     // never e0's (the labels' singleton branch reads it) nor the final
-    // round's (the returned labels read it). A failure releases all.
+    // round's (the returned labels read it): those two pin into the
+    // query scope. A failure releases all.
     var prev = m0
     var cur = m0
     var it = 0
@@ -345,6 +346,7 @@ object Dedup {
         Seq(m0, prev, cur).foreach(_.release())
         throw t
     }
+    Seq(m0, cur).distinct.foreach(graft.Scoped.current.own(_))
     // star forest: every non-center node has exactly one (node, center)
     // edge; centers (and isolated self-pair nodes) label themselves
     val labels = e.select(col("u").as("doc_id"), col("v").as("component_id"))

@@ -1,10 +1,9 @@
 package graft.operators
 
-import scala.collection.mutable
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+import graft.Scoped
 
 /** Distributed graph primitives over edge-list DataFrames — the
   * centrality/structure companions to [[Dedup.dupClusters]]'s connected
@@ -12,14 +11,12 @@ import org.apache.spark.storage.StorageLevel
   * so Catalyst plans ordinary shuffles (AQE-skew-splittable); no driver
   * state beyond Catalyst itself.
   *
-  * Cache ownership: each operator persists its loop-invariant tables
+  * Loop invariants: each operator persists its loop-invariant tables
   * (the rounds' plans reference them `iters`× — without the persist
   * every execution re-runs the edge build per round). The persists must
-  * OUTLIVE the returned plan's execution, so the operator cannot drop
-  * them itself; callers that manage long-lived sessions pass `caches`
-  * (every persisted DataFrame is appended) and unpersist after
-  * consuming the result — the [[Bpe.BpeModel.vocabSeqs]] ownership
-  * pattern, as a parameter because these results are plain DataFrames.
+  * OUTLIVE the returned plan's execution, so each one pins into the
+  * query scope ([[graft.Scoped.current]]) and the runner's
+  * [[graft.Scoped.query]] releases it once the query has run.
   *
   * Cross-engine exactness contract (Exact.scala rules): inputs are
   * integer counts, every derived double is an int→double cast followed
@@ -57,7 +54,6 @@ object Graph {
   def pageRank(edges: DataFrame, nodes: DataFrame, iters: Int = 3,
                damping: Double = 0.85, teleport: Double = 0.15,
                broadcastRanks: Boolean = true,
-               caches: Option[mutable.Buffer[DataFrame]] = None,
                maxBroadcastNodes: Long = 10000000L): DataFrame = {
     require(iters >= 1, s"pageRank: iters must be >= 1, got $iters")
     val out = edges.groupBy("src").agg(sum(col("w")).as("o"))
@@ -66,16 +62,13 @@ object Graph {
     // the full edge build (scan+groupBy+join) from scratch: iters× the
     // work at 100 TB. MEMORY_AND_DISK so a trillion-edge table spills
     // instead of evicting. The canonical iterative-algorithm cache.
-    val e = edges.join(out, "src")
+    val e = Scoped.current.persist(edges.join(out, "src")
       .select(col("src"), col("dst"),
-        (col("w").cast("double") / col("o").cast("double")).as("ratio"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    caches.foreach(_ += e)
+        (col("w").cast("double") / col("o").cast("double")).as("ratio")))
     // nodes is as loop-invariant as e — the caller may pass an expensive
     // derivation (g1's distinct over the full event scan) that would
     // otherwise re-run in pr0 plus every round's left join
-    val nodesC = nodes.persist(StorageLevel.MEMORY_AND_DISK)
-    caches.foreach(_ += nodesC)
+    val nodesC = Scoped.current.persist(nodes)
     // ONE count job serves the broadcast guard AND the teleport terms:
     // 1/n and teleport/n are driver-side double literals (the identical
     // IEEE divisions the old per-row `lit(x)/col("n")` expressions
@@ -134,18 +127,15 @@ object Graph {
     * one broadcast build fewer at ANY scale, same labels. */
   def labelPropagation(und: DataFrame, rounds: Int = 3,
                        broadcastLabels: Boolean = true,
-                       caches: Option[mutable.Buffer[DataFrame]] = None,
                        maxBroadcastNodes: Long = 10000000L): DataFrame = {
     require(rounds >= 1, s"labelPropagation: rounds must be >= 1, got $rounds")
     // one scan, both directions: a union of two selects over `und`
     // would embed the caller's (possibly expensive, unpersisted) edge
     // derivation twice in the materialization plan
-    val bi = und.select(explode(array(
+    val bi = Scoped.current.persist(und.select(explode(array(
         struct(col("u").as("x"), col("v").as("y")),
         struct(col("v").as("x"), col("u").as("y")))).as("e"))
-      .select(col("e.x").as("x"), col("e.y").as("y"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    caches.foreach(_ += bi)
+      .select(col("e.x").as("x"), col("e.y").as("y")))
     // winner = most frequent label, ties to SMALLEST label — as an
     // argmin AGGREGATE (lexicographic min of (-c, lbl)), not a
     // row_number window: same winner on every input, but the
@@ -164,8 +154,7 @@ object Graph {
       .groupBy(col("x").as("node"), col("y").as("lbl"))
       .agg(count(lit(1)).as("c")))
     if (rounds == 1) return l1
-    val l1p = l1.persist(StorageLevel.MEMORY_AND_DISK)
-    caches.foreach(_ += l1p)
+    val l1p = Scoped.current.persist(l1)
     // same maxBroadcastNodes guard as pageRank: the label table is
     // node-sized every round, so one count job decides the join shape
     // once, loudly designed rather than silently collected — and that
@@ -194,7 +183,6 @@ object Graph {
     * change). Returns `(node, triangles)` for nodes in ≥1 triangle. */
   def triangleCounts(und: DataFrame,
                      broadcastDegrees: Boolean = true,
-                     caches: Option[mutable.Buffer[DataFrame]] = None,
                      maxBroadcastNodes: Long = 10000000L): DataFrame = {
     // the caller's edge derivation (g2: a full-corpus window lag +
     // distinct) feeds TWO separate materializations — the degree
@@ -203,13 +191,11 @@ object Graph {
     // ReusedExchange cannot dedupe across them and the derivation ran
     // twice (r20). Persist it: one pass at any scale, materialized by
     // the SAME guard count job (no new action — GraphSpec's budget
-    // pin), same release discipline as deg/ori via `caches`.
-    val undC = und.persist(StorageLevel.MEMORY_AND_DISK)
-    caches.foreach(_ += undC)
-    val deg = undC.select(explode(array(col("u"), col("v"))).as("x"))
-      .groupBy("x").agg(count(lit(1)).as("deg"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    caches.foreach(_ += deg)
+    // pin), pinned into the query scope like deg/ori.
+    val undC = Scoped.current.persist(und)
+    val deg = Scoped.current.persist(
+      undC.select(explode(array(col("u"), col("v"))).as("x"))
+        .groupBy("x").agg(count(lit(1)).as("deg")))
     // degree table is node-sized: same broadcast guard as pageRank/LPA
     // (the persist above keeps the guard's count from re-running the
     // degree build, which the orientation join needs twice anyway)
@@ -220,15 +206,13 @@ object Graph {
       (col("ud") === col("vd") && col("u") < col("v"))
     // oriented edges feed THREE plan legs (both wedge sides + closure);
     // persist or each leg re-runs the scan+degree+orientation chain
-    val ori = undC
+    val ori = Scoped.current.persist(undC
       .join(if (doBroadcast) broadcast(du) else du, "u")
       .join(if (doBroadcast) broadcast(dv) else dv, "v")
       .select(
         when(fwd, col("u")).otherwise(col("v")).as("a"),
         when(fwd, col("v")).otherwise(col("u")).as("b"),
-        when(fwd, col("vd")).otherwise(col("ud")).as("bd"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    caches.foreach(_ += ori)
+        when(fwd, col("vd")).otherwise(col("ud")).as("bd")))
     val e1 = ori.select(col("a"), col("b").as("b1"), col("bd").as("bd1"))
     val e2 = ori.select(col("a"), col("b").as("b2"), col("bd").as("bd2"))
     val wedges = e1.join(e2, Seq("a"))

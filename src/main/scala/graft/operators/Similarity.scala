@@ -624,7 +624,7 @@ object Similarity {
     // unpersist fired BEFORE the lazily-returned lists/queries passes
     // executed, so both exec-time passes recomputed the corpus from the
     // raw single-split scan anyway; materialize pays scan+kernel once
-    // and the blocks outlive the returned plan (ContextCleaner-released)
+    // and the blocks outlive the returned plan (released with the query)
     val base = graft.Tables.materialize(vectors
       .select(col(idCol).as("id"), col(labelCol).cast("string").as("lbl"),
         asDouble(col(vecCol)).as("v"))

@@ -174,9 +174,7 @@ object TextAnalysis {
     * bigrams) is exactly the AQE skew-join case, and the prefix table
     * broadcasts. No window over the token stream — that would sort the
     * full corpus per term. */
-  def bigramLmScores(docs: DataFrame, idCol: String, textCol: String,
-                     caches: Option[scala.collection.mutable.Buffer[DataFrame]] =
-                       None): DataFrame = {
+  def bigramLmScores(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     // Materialize the tokenized corpus ONCE (r20 / guide §5): the model
     // aggregation, the scoring join's bigram re-explode and the vocab
     // count each re-ran tokens() over the raw corpus scan — three
@@ -194,11 +192,9 @@ object TextAnalysis {
     // prefix fold — persist or both legs re-run the corpus-scale bigram
     // explode+aggregate (vocab²-bounded, so this is the classic
     // "materialize the trained model once" stage). The persist must
-    // outlive the result's execution — long-lived sessions pass
-    // `caches` and unpersist after consuming (Graph-object contract).
-    val c2 = bigrams.groupBy("w1", "w2").agg(count(lit(1)).as("c2"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    caches.foreach(_ += c2)
+    // outlive the result's execution, so it pins into the query scope.
+    val c2 = graft.Scoped.current.persist(
+      bigrams.groupBy("w1", "w2").agg(count(lit(1)).as("c2")))
     val c1 = c2.groupBy("w1").agg(sum(col("c2")).as("c1"))
     val vocab = docsT.select(explode(col("t")).as("term"))
       .agg(countDistinct(col("term")).as("v"))

@@ -398,18 +398,19 @@ object ReportQueries {
     // range-SAMPLING job, the range exchange, and the offsets pass.
     // writeReport persists idx at its call site; this direct entry
     // never did). The materialized rows are tiny (one metadata row per
-    // event×category); every downstream pass reads blocks.
-    val idx = graft.Tables.materialize(
-        graft.report.Summarise.indexSummary(
-            OsdbFixture.nested(s, d, arrays = false))
-          .select(col("category"), col("id"), col("userId"),
-            col("type").as("typeStr"), col("subType"), col("n_dp").as("nDp")))
-      .as[graft.report.Summarise.IdxRow]
-    val (shards, _) =
-      graft.report.Summarise.writeIndexShards(idx, outDir, pageSize = 7)
-    val rows = shards.collect()
-    shards.unpersist()
-    rows.toSeq.toDF()
+    // event×category); every downstream pass reads blocks. The shard
+    // metadata is collected, so an inner scope frees idx and the shards
+    // before the entry returns.
+    val shards = graft.Scoped.query {
+      val idx = graft.Tables.materialize(
+          graft.report.Summarise.indexSummary(
+              OsdbFixture.nested(s, d, arrays = false))
+            .select(col("category"), col("id"), col("userId"),
+              col("type").as("typeStr"), col("subType"), col("n_dp").as("nDp")))
+        .as[graft.report.Summarise.IdxRow]
+      graft.report.Summarise.writeIndexShards(idx, outDir, pageSize = 7)._1.collect()
+    }
+    shards.toSeq.toDF()
       .select(col("category"), col("shard"), col("nRows").as("n_rows"),
         col("loId").as("lo_id"), col("hiId").as("hi_id"))
   }

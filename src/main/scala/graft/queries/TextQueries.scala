@@ -361,15 +361,15 @@ object TextQueries {
     * it each one re-runs the full d7 span-removal chain — measured 3x
     * the whole entry's cost. At 100 TB this is the
     * standard "materialize the cleaned corpus once, then train and
-    * tokenize against it" stage (disk-backed, corpus-scale). */
+    * tokenize against it" stage (disk-backed, corpus-scale). It pins
+    * into the query scope. */
   private def pipe7Cleaned(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
-    graft.operators.Dedup
+    graft.Scoped.current.persist(graft.operators.Dedup
       .duplicateSpanRemoval(docs, "doc_id", "text", n = 20)
       .join(docs.select("doc_id", "source"), "doc_id")
       .filter(col("n_removed") * 5 < col("n_tok"))
-      .select(col("doc_id"), col("source"), col("clean_text"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("doc_id"), col("source"), col("clean_text")))
   }
 
   /** PIPE7 — the CAPSTONE pretraining-data pipeline, composing this
@@ -2347,16 +2347,15 @@ object TextQueries {
     val eb = Tables.embeddings(s, d)
     val base = eb.filter(col("vec_id") % 10 === 0)
       .select(col("vec_id").as("tgt"), col("embedding").as("b_emb"))
-    val planted = eb
+    // cached in the query scope: lloyd re-scans its input per iteration
+    // (plus the seed collect) and semDedupKept self-joins it — ~5
+    // executions of the planting join otherwise
+    val planted = graft.Scoped.current.persist(eb
       .withColumn("tgt", col("vec_id") - col("vec_id") % 10)
       .join(broadcast(base), Seq("tgt"), "left")
       .select(col("vec_id"),
         when(col("vec_id") % 17 === 5 && col("b_emb").isNotNull, col("b_emb"))
-          .otherwise(col("embedding")).as("embedding"))
-      // cached: lloyd re-scans its input per iteration (plus the seed
-      // collect) and semDedupKept self-joins it — ~5 executions of the
-      // planting join otherwise
-      .cache()
+          .otherwise(col("embedding")).as("embedding")))
     val clusters = graft.operators.KMeans.lloyd(
       planted, "vec_id", "embedding", k = 8, iters = 2)
     graft.operators.Similarity.semDedupKept(

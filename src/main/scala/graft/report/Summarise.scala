@@ -2,8 +2,8 @@ package graft.report
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
+import graft.Scoped
 import graft.operators.Flatten.FlatDp
 import graft.operators.Spectrogram
 
@@ -540,13 +540,12 @@ object Summarise {
     * user pages). */
   private def shardAssign[T](ds: Dataset[T], groupOf: T => String,
       rangeCols: Seq[Column], pageSize: Int)(implicit te: Encoder[T])
-      : (Dataset[(String, Long, Long, T)], Map[String, Long], Dataset[T],
+      : (Dataset[(String, Long, Long, T)], Map[String, Long],
          org.apache.spark.broadcast.Broadcast[Map[(Int, String), Long]]) = {
     require(pageSize > 0, s"pageSize must be positive, got $pageSize")
     val spark = ds.sparkSession
-    val ranged = ds.repartitionByRange(rangeCols: _*)
-      .sortWithinPartitions(rangeCols: _*)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val ranged = Scoped.current.persist(ds.repartitionByRange(rangeCols: _*)
+      .sortWithinPartitions(rangeCols: _*))
     // bounded collect: (partition, group) counts, O(partitions + groups)
     // — the shared two-phase-rank core ([[graft.operators.TwoPhaseRank]])
     val (offsets, totals) =
@@ -566,11 +565,12 @@ object Summarise {
         }
       })
     // the persisted range partition is what makes the count job and the
-    // assignment job see identical partition contents/order — the caller
-    // unpersists it (and the offset broadcast) after forcing the
-    // downstream write; unpersist (not destroy) keeps a cache-evicted
-    // recompute legal — Spark re-ships an unpersisted broadcast lazily
-    (assigned, totals.toMap, ranged, bOff)
+    // assignment job see identical partition contents/order; it pins
+    // into the query scope. The caller unpersists the offset broadcast
+    // after forcing the downstream write; unpersist (not destroy) keeps
+    // a cache-evicted recompute legal — Spark re-ships an unpersisted
+    // broadcast lazily
+    (assigned, totals.toMap, bOff)
   }
 
   private def pageShell(title: String, nav: String, body: String): String =
@@ -634,18 +634,19 @@ object Summarise {
     * group — at most `pageSize` rows — renders and writes
     * `index_<cat>_<n>.html` with prev/next links. The write is forced
     * exactly once here (persist + count — a second action on the
-    * returned metadata reads the cache, not the renderer). Also returns
-    * per-category totals (bounded, 4 entries) for the TOC. */
+    * returned metadata reads the cache, not the renderer); the persists
+    * pin into the query scope. Also returns per-category totals
+    * (bounded, 4 entries) for the TOC. */
   def writeIndexShards(idx: Dataset[IdxRow], outDir: String, pageSize: Int)
       : (Dataset[IndexShard], Map[String, Long]) = {
     val spark = idx.sparkSession
     import spark.implicits._
     val confBox = HadoopConfBox.fromSession(spark)
-    val (assigned, totals, ranged, bOff) =
+    val (assigned, totals, bOff) =
       shardAssign[IdxRow](idx, _.category, Seq(col("category"), col("id")), pageSize)
     val nShards: Map[String, Long] =
       totals.map { case (c, t) => c -> ((t + pageSize - 1) / pageSize) }
-    val shards = assigned
+    val shards = Scoped.current.persist(assigned
       .groupByKey { case (cat, shard, _, _) => (cat, shard) }
       .mapGroups { (key, it) =>
         val (cat, shard) = key
@@ -659,17 +660,16 @@ object Summarise {
         out.write(bytes); out.close()
         IndexShard(cat, shard, p.toString, rows.length.toLong,
           bytes.length.toLong, rows.head.id, rows.last.id)
-      }
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      })
     shards.count()
-    ranged.unpersist(false)
     bOff.unpersist(false)
     (shards, totals)
   }
 
   /** Executor-rendered user-summary shards over the (userId, category)
     * rollup: one row per user (≤4 category entries each), sharded by
-    * userId range — `users_<n>.html`, at most `pageSize` users per page. */
+    * userId range — `users_<n>.html`, at most `pageSize` users per page.
+    * Its persists pin into the query scope. */
   def writeUserShards(idx: Dataset[IdxRow], outDir: String, pageSize: Int)
       : (Dataset[IndexShard], Long) = {
     val spark = idx.sparkSession
@@ -689,12 +689,12 @@ object Summarise {
         }
         (u, n.iterator.map { case (c, (k, dp)) => (c, k, dp) }.toSeq)
       }
-    val (assigned, totals, ranged, bOff) =
+    val (assigned, totals, bOff) =
       shardAssign(perUser, (_: (String, Seq[(String, Long, Long)])) => "",
         Seq(col("_1")), pageSize)
     val nUsers = totals.getOrElse("", 0L)
     val nShards = (nUsers + pageSize - 1) / pageSize
-    val shards = assigned
+    val shards = Scoped.current.persist(assigned
       .groupByKey { case (_, shard, _, _) => shard }
       .mapGroups { (shard, it) =>
         val users = it.toArray.sortBy(_._3).map(_._4)
@@ -706,10 +706,8 @@ object Summarise {
         out.write(bytes); out.close()
         IndexShard("users", shard, p.toString, users.length.toLong,
           bytes.length.toLong, users.head._1, users.last._1)
-      }
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      })
     shards.count()
-    ranged.unpersist(false)
     bOff.unpersist(false)
     (shards, nShards)
   }
@@ -742,11 +740,10 @@ object Summarise {
     * arrays=false fixtures / projected scans); `dps` supplies the
     * per-event series. Returns the page-metadata table (persisted — the
     * side-effecting render is forced exactly once here; re-running an
-    * action on the result reads the cache, not the renderer). THE CALLER
-    * OWNS the returned frame's cache lifetime: call `.unpersist()` when
-    * done with the metadata, or repeated reports in a long-lived session
-    * accumulate cached partitions. (The persist cannot be dropped here —
-    * it is what makes the render exactly-once.) */
+    * action on the result reads the cache, not the renderer). The
+    * persist pins into the query scope ([[Scoped.current]]) and is
+    * released with it; the index and shard tables are released before
+    * this returns. */
   def writeReport(nested: DataFrame, dps: Dataset[FlatDp], outDir: String,
                   pageSize: Int = 1000,
                   skip: Set[String] = Set.empty): DataFrame = {
@@ -758,33 +755,35 @@ object Summarise {
     // running two actions on the result would render every page twice.
     // count() is an O(1)-to-the-driver aggregate (the round-9 form
     // collected the whole metadata table here).
-    val pages = writeEventPages(dps, outDir, skip = skip)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val pages = Scoped.current.persist(writeEventPages(dps, outDir, skip = skip)
+      .toDF("eventId", "path", "nBytes"))
     pages.count()
-    val idx = indexSummary(nested)
-      .select(col("category"), col("id"), col("userId"),
-        col("type").as("typeStr"), col("subType"), col("n_dp").as("nDp"))
-      .as[IdxRow]
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val (idxShards, totals) = writeIndexShards(idx, outDir, pageSize)
-    val (userShards, nUserShards) = writeUserShards(idx, outDir, pageSize)
-    // verification is a distributed aggregate over the (persisted)
-    // shard metadata — shard-count + row-sum — never a localized Seq
-    val idxStats = idxShards.agg(count(lit(1)), sum(col("nRows"))).head()
-    val written = idxStats.getLong(0)
-    val rowsOut = if (idxStats.isNullAt(1)) 0L else idxStats.getLong(1)
-    val expected = totals.values.sum
-    require(rowsOut == expected,
-      s"index shards carry $rowsOut rows, expected $expected across $written shards")
-    idxShards.unpersist(false)
-    userShards.unpersist(false)
-    idx.unpersist()
+    // the index, range and shard tables live in an inner scope: the
+    // shard writers pin into it, and it frees them before the TOC is
+    // written
+    val (totals, nUserShards) = Scoped.query {
+      val idx = Scoped.current.persist(indexSummary(nested)
+        .select(col("category"), col("id"), col("userId"),
+          col("type").as("typeStr"), col("subType"), col("n_dp").as("nDp"))
+        .as[IdxRow])
+      val (idxShards, totals) = writeIndexShards(idx, outDir, pageSize)
+      val (_, nUserShards) = writeUserShards(idx, outDir, pageSize)
+      // verification is a distributed aggregate over the (persisted)
+      // shard metadata — shard-count + row-sum — never a localized Seq
+      val idxStats = idxShards.agg(count(lit(1)), sum(col("nRows"))).head()
+      val written = idxStats.getLong(0)
+      val rowsOut = if (idxStats.isNullAt(1)) 0L else idxStats.getLong(1)
+      val expected = totals.values.sum
+      require(rowsOut == expected,
+        s"index shards carry $rowsOut rows, expected $expected across $written shards")
+      (totals, nUserShards)
+    }
     val root = new org.apache.hadoop.fs.Path(outDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.mkdirs(root)
     val out = fs.create(new org.apache.hadoop.fs.Path(root, "index.html"), true)
     out.write(renderTocHtml(totals, nUserShards).getBytes("UTF-8"))
     out.close()
-    pages.toDF("eventId", "path", "nBytes")
+    pages
   }
 }

@@ -31,9 +31,8 @@ object CodegenSweep {
           // only inserted per query stage AT materialization — a
           // plan-only audit sees zero stages for any exchange-bearing
           // query (the first sweep audited 51/202 for exactly this)
-          val reports = org.apache.spark.sql.graft.CodegenAudit
-            .audit(fn(spark, sf), execute = true)
-          spark.sharedState.cacheManager.clearCache()
+          val reports = graft.Scoped.query(org.apache.spark.sql.graft
+            .CodegenAudit.audit(fn(spark, sf), execute = true))
           reports.map(r => (name, r.stage, r.maxMethodCodeSize, r.error))
         } catch {
           case e: Throwable =>

@@ -16,6 +16,12 @@ object OsdbDemo {
   def main(args: Array[String]): Unit = {
     val spark = graft.Session.builder("local[4]", 4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    try graft.Scoped.query(demo(spark)) finally spark.stop()
+  }
+
+  /** The drive itself, as one query: the validated datapoints it pins
+    * are released when it returns. */
+  private def demo(spark: org.apache.spark.sql.SparkSession): Unit = {
     import spark.implicits._
 
     // synth category file: 6 events, one with a 5 Hz "seizure" signature
@@ -64,7 +70,7 @@ object OsdbDemo {
       .withColumn("type",
         when(lower(col("typeStr")).contains("seizure"), 1).otherwise(0))
       .as[FlatDp]
-    val valid = Flatten.validateAndFill(dps).cache()
+    val valid = graft.Scoped.current.persist(Flatten.validateAndFill(dps))
     println(s"[demo] flatten+validate: ${valid.count()} datapoints")
 
     val feats = FeatureExtract.extract(valid)
@@ -126,6 +132,5 @@ object OsdbDemo {
     val kept = Curate.keepMaxDedup(evts, Seq("type"), "wts", "ndp",
       "id", maxSeconds = 120L)
     println(s"[demo] curation dedup: ${evts.count()} -> ${kept.count()} events")
-    spark.stop()
   }
 }

@@ -27,9 +27,10 @@ object QueryProbe {
       sys.error(s"unknown query $name; known: $known"))
     val spark = graft.Session.builder("local[8]", 8).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val df = fn(spark, sfDir)
-    if (mode == "show") df.show(1000, truncate = false)
-    else df.explain("formatted")
-    spark.stop()
+    try graft.Scoped.query {
+      val df = fn(spark, sfDir)
+      if (mode == "show") df.show(1000, truncate = false)
+      else df.explain("formatted")
+    } finally spark.stop()
   }
 }

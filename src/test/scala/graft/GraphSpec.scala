@@ -173,29 +173,32 @@ class GraphSpec extends SparkSpec {
     assert(aTri == 2, s"triangleCounts ran $aTri actions (want guard + collect)")
   }
 
-  test("caches handle: every persisted loop invariant is released after unpersist") {
+  test("query scope: every persisted loop invariant is released on exit") {
     import org.apache.spark.storage.StorageLevel
     val edges = Seq((1L, 2L, 1L), (2L, 3L, 1L), (3L, 1L, 1L))
       .toDF("src", "dst", "w")
     val und = Seq((1L, 2L), (2L, 3L), (1L, 3L)).toDF("u", "v")
-    val buf = scala.collection.mutable.Buffer.empty[org.apache.spark.sql.DataFrame]
-    Graph.pageRank(edges, Seq(1L, 2L, 3L).toDF("node"),
-      caches = Some(buf)).collect()
-    Graph.labelPropagation(und, caches = Some(buf)).collect()
-    Graph.triangleCounts(und, caches = Some(buf)).collect()
-    graft.operators.TextAnalysis.bigramLmScores(
-      Seq((1L, "a b a b c")).toDF("doc_id", "text"), "doc_id", "text",
-      caches = Some(buf)).collect()
-    // pageRank registers 2 (edge invariant + nodes), LPA 2 (bi + lbl0),
-    // triangles 3 (undirected edges + degrees + oriented edges — the
-    // und persist pays the caller's derivation once across the two
-    // materializing actions, r20), bigram LM 1 — all persisted while
-    // in use, all gone after release
-    assert(buf.size == 8, s"expected 8 tracked caches, got ${buf.size}")
-    assert(buf.forall(_.storageLevel != StorageLevel.NONE),
-      "tracked frames must still be persisted after execution")
-    buf.foreach(_.unpersist(true))
-    assert(buf.forall(_.storageLevel == StorageLevel.NONE),
-      "unpersisting the handles must release every cache")
+    val before = Scoped.cachedPartitions(spark)
+    val pinned = Scoped.query {
+      Graph.pageRank(edges, Seq(1L, 2L, 3L).toDF("node")).collect()
+      Graph.labelPropagation(und).collect()
+      Graph.triangleCounts(und).collect()
+      graft.operators.TextAnalysis.bigramLmScores(
+        Seq((1L, "a b a b c")).toDF("doc_id", "text"), "doc_id", "text").collect()
+      val pinned = Scoped.current.pinned
+      // pageRank pins 2 (edge invariant + nodes), LPA 2 (bi + lbl0),
+      // triangles 3 (undirected edges + degrees + oriented edges — the
+      // und persist pays the caller's derivation once across the two
+      // materializing actions, r20), bigram LM 1 persist plus its
+      // materialized token table — all held while the query runs
+      val persisted = pinned.filter(_.storageLevel != StorageLevel.NONE)
+      assert(pinned.size == 9, s"expected 9 pinned frames, got ${pinned.size}")
+      assert(persisted.size == 8, s"expected 8 persisted invariants, got ${persisted.size}")
+      pinned
+    }
+    assert(pinned.forall(_.storageLevel == StorageLevel.NONE),
+      "closing the query scope must release every cache")
+    assert(Scoped.cachedPartitions(spark) <= before,
+      s"cached partitions grew: $before -> ${Scoped.cachedPartitions(spark)}")
   }
 }

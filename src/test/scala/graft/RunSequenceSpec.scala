@@ -237,16 +237,15 @@ class RunSequenceSpec extends SparkSpec {
   }
 
   test("skeleton releases its evW materialization: no cached partitions outlive it") {
-    def cached() =
-      spark.sparkContext.getRDDStorageInfo.map(_.numCachedPartitions.toLong).sum
     val cfg = RunSequence.Config(historyN = 2,
       extract = FeatureExtract.Config(highPassHz = 0.0))
-    val before = cached()
+    val before = Scoped.cachedPartitions(spark)
     val rows = RunSequence.skeleton(sweepEvents,
       miniDps(Seq("E0", "E1", "E2", "E3")),
       col("type") =!= "Unknown", col("fold0"), cfg).collect()
     assert(rows.length == 12)
-    assert(cached() <= before, s"cached partitions grew: $before -> ${cached()}")
+    val after = Scoped.cachedPartitions(spark)
+    assert(after <= before, s"cached partitions grew: $before -> $after")
   }
 
   // --------------------------------------------------------------- full run

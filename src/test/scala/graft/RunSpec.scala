@@ -361,6 +361,23 @@ class RunSpec extends SparkSpec {
     assert(n3 == 0)
   }
 
+  test("updatetest releases every frame it persisted") {
+    val tmp = Files.createTempDirectory("graft_run_")
+    val nnCfg = resourceToFile("/osdb/nnConfig.json", tmp)
+    val selOut = tmp.resolve("sel").toString
+    Run.run(spark, Run.Args("select", nnCfg, sf, selOut))
+    val idsFile = tmp.resolve("trainIds.txt")
+    Files.writeString(idsFile, spark.read.parquet(s"$selOut/selected_events")
+      .select("id").collect().map(_.getString(0)).sorted
+      .zipWithIndex.collect { case (id, i) if i % 2 == 0 => id }
+      .mkString("", "\n", "\n"))
+    val before = Scoped.cachedPartitions(spark)
+    Run.run(spark, Run.Args("updatetest", nnCfg, sf, tmp.resolve("out").toString,
+      trainIds = Some(idsFile.toString)))
+    val after = Scoped.cachedPartitions(spark)
+    assert(after <= before, s"updatetest left cached partitions: $before -> $after")
+  }
+
   test("runseq --nestedKfold writes the nested skeleton and (with --train) outer-fold metrics") {
     val tmp = Files.createTempDirectory("graft_run_")
     val cfg = resourceToFile("/osdb/nnConfig.json", tmp)

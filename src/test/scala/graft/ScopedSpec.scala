@@ -7,14 +7,11 @@ import scala.jdk.CollectionConverters._
 
 import graft.Scoped.{Materialize, overlap}
 
-/** The overlap helper and the scoped materialize handle: results in
-  * input order, the original exception on failure, no task started
-  * after a sibling failed, and no cached partition left behind by a
-  * scope — also one that failed. */
+/** The overlap helper, the scoped materialize handle and the query
+  * scope: results in input order, the original exception on failure,
+  * no task started after a sibling failed, and no cached partition
+  * left behind by a scope — also one that failed. */
 class ScopedSpec extends SparkSpec {
-
-  private def cached(): Long =
-    spark.sparkContext.getRDDStorageInfo.map(_.numCachedPartitions.toLong).sum
 
   test("overlap returns results in input order, whatever order tasks finish in") {
     val out = overlap((0 until 6).map(i => () => {
@@ -27,7 +24,7 @@ class ScopedSpec extends SparkSpec {
   }
 
   test("fault injection: a failing overlapped task inside a scope leaks no blocks") {
-    val before = cached()
+    val before = Scoped.cachedPartitions(spark)
     val pinned = new CountDownLatch(2)
     var during = -1L
     val e = intercept[IllegalStateException] {
@@ -37,14 +34,54 @@ class ScopedSpec extends SparkSpec {
           () => { val n = s(spark.range(0, 500, 1, 4).toDF()).count(); pinned.countDown(); n },
           () => {
             assert(pinned.await(60, TimeUnit.SECONDS), "pinning tasks never finished")
-            during = cached()
+            during = Scoped.cachedPartitions(spark)
             throw new IllegalStateException("injected")
           }))
       }
     }
     assert(e.getMessage == "injected")
     assert(during > before, s"the pinned frames held no blocks ($before -> $during)")
-    assert(cached() <= before, s"cached partitions grew: $before -> ${cached()}")
+    val after = Scoped.cachedPartitions(spark)
+    assert(after <= before, s"cached partitions grew: $before -> $after")
+  }
+
+  test("fault injection: a query that throws after pinning leaks no blocks") {
+    import spark.implicits._
+    val before = Scoped.cachedPartitions(spark)
+    var during = -1L
+    val e = intercept[IllegalStateException] {
+      Scoped.query {
+        val docs = Tables.materialize(spark.range(0, 1000, 1, 4).toDF("id"))
+        val edges = Seq((1L, 2L, 1L), (2L, 3L, 1L), (3L, 1L, 1L))
+          .toDF("src", "dst", "w")
+        // the Graph persists run on an overlap thread: it inherits the
+        // caller's query scope, so they pin into it too
+        overlap(Seq(
+          () => graft.operators.Graph.pageRank(edges,
+            Seq(1L, 2L, 3L).toDF("node")).collect().length.toLong,
+          () => docs.count()))
+        during = Scoped.cachedPartitions(spark)
+        throw new IllegalStateException("injected")
+      }
+    }
+    assert(e.getMessage == "injected")
+    assert(during > before, s"the pinned frames held no blocks ($before -> $during)")
+    val after = Scoped.cachedPartitions(spark)
+    assert(after <= before, s"cached partitions grew: $before -> $after")
+  }
+
+  test("pinning into a closed scope throws and pins nothing") {
+    val df = spark.range(0, 10, 1, 2).toDF("id")
+    val before = Scoped.cachedPartitions(spark)
+    val closedQuery = Scoped.query(Scoped.current)
+    val closedLocal = Materialize.scoped(identity)
+    intercept[IllegalStateException](closedQuery.persist(df))
+    intercept[IllegalStateException](closedLocal(df))
+    assert(df.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
+      "a refused pin left the frame in the cache manager")
+    assert(Scoped.cachedPartitions(spark) <= before)
+    // outside a query the ambient scope is the unowned one again
+    assert(!(Scoped.current eq closedQuery))
   }
 
   test("overlap: no queued task starts after a failure; later failures ride as suppressed") {
@@ -72,19 +109,19 @@ class ScopedSpec extends SparkSpec {
   }
 
   test("a materialized handle releases once; a second release is a no-op") {
-    val before = cached()
+    val before = Scoped.cachedPartitions(spark)
     val m = Materialize(spark.range(0, 100, 1, 2).toDF())
     assert(m.df.count() == 100)
-    assert(cached() > before)
+    assert(Scoped.cachedPartitions(spark) > before)
     m.release()
     m.release()
-    assert(cached() <= before)
+    assert(Scoped.cachedPartitions(spark) <= before)
   }
 
   test("distributed BPE frees its rounds and the base cache when the corpus runs out") {
     import spark.implicits._
     import graft.operators.Bpe
-    val before = cached()
+    val before = Scoped.cachedPartitions(spark)
     // "ab" learns (a,b) then (ab,</w>); the third merge finds no pair
     val e1 = intercept[IllegalArgumentException](
       Bpe.train(Seq("ab").toDF("text"), "text", numMerges = 3,
@@ -95,11 +132,26 @@ class ScopedSpec extends SparkSpec {
       Bpe.train(Seq.empty[String].toDF("text"), "text", numMerges = 1,
         localVocabBytes = -1L))
     assert(e2.getMessage.contains("corpus exhausted after 0 merges"))
-    assert(cached() <= before, s"cached partitions grew: $before -> ${cached()}")
+    val after = Scoped.cachedPartitions(spark)
+    assert(after <= before, s"cached partitions grew: $before -> $after")
   }
 
   test("only Scoped.scala makes thread pools or local checkpoints") {
-    val banned = Seq("Executors.new", ".localCheckpoint(", "LogicalRDD =>")
+    val banned = Seq("Executors.new", ".localCheckpoint(", "LogicalRDD =>", ".cache()")
+    // a Dataset/RDD persist takes a storage level or nothing; a scope's
+    // persist takes the frame, so it does not match
+    val rawPersist = """\.persist\(\s*(\)|[\w.]*(StorageLevel|MEMORY|DISK|OFF_HEAP))""".r
+    // files that keep a persist/unpersist pair freeing blocks early:
+    //   - RDD-level `.rdd.persist(` of the training sets and their
+    //     per-batch weights: TowerFusion, ConvPipe, LstmStack, SpecCnn,
+    //     Lstm, Cnn (try … finally unpersist);
+    //   - StreamQueries' feed prep: fileFeedDrain's slice, st4's docs,
+    //     st7's static profile (try … finally unpersist) and st6's
+    //     slice (unpersisted after the phase-2 chunk lands);
+    //   - Trainer.auroc's range-partitioned score table.
+    val keepsPairs = Set("TowerFusion.scala", "ConvPipe.scala", "LstmStack.scala",
+      "SpecCnn.scala", "Lstm.scala", "Cnn.scala", "StreamQueries.scala",
+      "Trainer.scala")
     def files(d: java.io.File): Seq[java.io.File] =
       Option(d.listFiles).toSeq.flatten.flatMap(f =>
         if (f.isDirectory) files(f) else Seq(f).filter(_.getName.endsWith(".scala")))
@@ -108,7 +160,8 @@ class ScopedSpec extends SparkSpec {
     val hits = for {
       f <- files(root) if f.getName != "Scoped.scala"
       (line, n) <- java.nio.file.Files.readAllLines(f.toPath).asScala.zipWithIndex
-      b <- banned if line.contains(b)
+      b <- banned.filter(line.contains) ++
+        rawPersist.findFirstIn(line).filterNot(_ => keepsPairs(f.getName))
     } yield s"${f.getPath}:${n + 1}: $b"
     assert(hits.isEmpty, hits.mkString("\n"))
   }

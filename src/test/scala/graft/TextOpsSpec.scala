@@ -92,15 +92,14 @@ class TextOpsSpec extends SparkSpec {
   test("dupClusters: fails loudly instead of returning unconverged labels") {
     import spark.implicits._
     val deep = (0L until 40L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    def cached() =
-      spark.sparkContext.getRDDStorageInfo.map(_.numCachedPartitions.toLong).sum
-    val before = cached()
+    val before = Scoped.cachedPartitions(spark)
     val e = intercept[IllegalStateException] {
       Dedup.dupClustersWithRounds(deep, maxIter = 2)
     }
     assert(e.getMessage.contains("unconverged component ids"))
     // the failed run releases e0 and its rounds
-    assert(cached() <= before, s"cached partitions grew: $before -> ${cached()}")
+    val after = Scoped.cachedPartitions(spark)
+    assert(after <= before, s"cached partitions grew: $before -> $after")
   }
 
   test("ngram jaccard: near-dup pair scores high, unrelated low") {
@@ -525,30 +524,32 @@ class TextOpsSpec extends SparkSpec {
         (0 until (1 + rnd.nextInt(3))).map(_ => syll(rnd.nextInt(syll.size))).mkString)
       (id, words.mkString(" "))
     }.toDF("doc_id", "text")
-    val local = Bpe.train(docs, "text", numMerges = 25)
-    val dist = Bpe.train(docs, "text", numMerges = 25, localVocabBytes = 0L)
-    val lm = local.merges.orderBy("rank").collect().map(_.toSeq).toSeq
-    val dm = dist.merges.orderBy("rank").collect().map(_.toSeq).toSeq
+    val (lm, dm, lv, dv, finalRound) = Scoped.query {
+      val local = Bpe.train(docs, "text", numMerges = 25)
+      val dist = Bpe.train(docs, "text", numMerges = 25, localVocabBytes = 0L)
+      // storage hygiene: the per-round localCheckpoints and the cached
+      // base are already freed; only the final round's materialization
+      // survives training, pinned into the query scope (the local path
+      // pins nothing: its vocab is a local relation)
+      val pinned = Scoped.current.pinned
+      assert(pinned.size == 1, s"expected the final round pinned, got ${pinned.size} frames")
+      val rddId = pinned.head.queryExecution.logical match {
+        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
+      }
+      assert(spark.sparkContext.getPersistentRDDs.contains(rddId),
+        "the final round held no blocks during the query")
+      def vocab(m: Bpe.BpeModel) = m.vocabSeqs.collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getSeq[String](2))).sortBy(_._1).toSeq
+      (local.merges.orderBy("rank").collect().map(_.toSeq).toSeq,
+        dist.merges.orderBy("rank").collect().map(_.toSeq).toSeq,
+        vocab(local), vocab(dist), rddId)
+    }
     assert(lm == dm, "merge tables diverge between paths")
-    val lv = local.vocabSeqs.collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getSeq[String](2))).sortBy(_._1).toSeq
-    val dv = dist.vocabSeqs.collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getSeq[String](2))).sortBy(_._1).toSeq
     assert(lv == dv, "final vocab sequences diverge between paths")
-    // storage hygiene: the per-round localCheckpoints must already be
-    // freed (only the final round's backing survives training), and
-    // release() frees that too — Dataset.unpersist alone cannot (it is
-    // a no-op on checkpoint storage, which is why BpeModel carries the
-    // RDD handle)
-    assert(dist.backing.nonEmpty, "distributed model lost its backing handle")
-    val persisted = spark.sparkContext.getPersistentRDDs.values
-      .count(_.getStorageLevel.useMemory)
-    dist.release()
-    local.release()
-    val after = spark.sparkContext.getPersistentRDDs.values
-      .count(_.getStorageLevel.useMemory)
-    assert(after < persisted,
-      s"release() freed nothing ($persisted -> $after persisted RDDs)")
+    // the query scope frees the final round too — Dataset.unpersist on
+    // vocabSeqs alone cannot (it is a no-op on checkpoint storage)
+    assert(!spark.sparkContext.getPersistentRDDs.contains(finalRound),
+      "closing the query left the final round's blocks")
   }
 
   test("Bpe.tokenCountsBySource: vocab hits via broadcast, out-of-vocab fallback") {

@@ -4,8 +4,9 @@
 # shuffle partitions / scan splits) at sf0.01, and the executing
 # full-registry codegen census (0 interpreted stages + 48 KB method
 # headroom). Oracle legs must end "== N ok, 0 bad ==" with the same N
-# (the declared-query count); the script exits nonzero if ANY leg
-# fails, with per-leg logs under $OUT.
+# (the declared-query count) and log no "[verify] <name> leaked N
+# blocks" line; the script exits nonzero if ANY leg fails, with
+# per-leg logs under $OUT.
 #
 # Usage: tools/audit_all.sh [outBase]   (default /tmp/graft_audit)
 #
@@ -50,6 +51,13 @@ leg() { # name sfDir [env assignments...]
     *" 0 bad ==") : ;;
     *) echo "LEG FAILED: oracle mismatch in $name"; FAILED=1 ;;
   esac
+  # block census: Verify reads the cached partitions after each query's
+  # scope has closed; any left over outlived the query that made them
+  if grep -q '^\[verify\] .* leaked [0-9]* blocks' "$OUT/$name.log"; then
+    echo "LEG FAILED: leaked blocks in $name"
+    grep '^\[verify\] .* leaked [0-9]* blocks' "$OUT/$name.log" | head -5
+    FAILED=1
+  fi
 }
 
 # cross-SF legs (the de-pinned gates dispatch on the events row count)
