@@ -322,7 +322,11 @@ object Run {
   /** runSequence.py run_sequence: the k-fold skeleton + modelClass
     * receipt ([[ConfigTools.runseqFrame]] — cfg1's frame); with
     * `--train`, additionally the per-fold fit/score loop on the
-    * dispatched candidate's basis. */
+    * dispatched candidate's basis. The skeleton is written concurrently
+    * with training: neither reads the other's frames, and each runs its
+    * own extraction (sharing one would move the training basis's
+    * partition layout, and with it the forest's bagging). An empty fold
+    * fails loud in the fold loop's bookkeeping round, before any fit. */
   private def runRunseq(spark: SparkSession, doc: Doc, lake: Lake,
                         a: Args): Long = {
     val (events, dps) = selectInputs(spark, lake)
@@ -336,29 +340,21 @@ object Run {
       case TestdataLake(_) => Exact.knuthHash32(col("id")) % a.kfold
       case _ => pmod(xxhash64(col("id").cast("string")), lit(a.kfold.toLong))
     }
-    val frame = ConfigTools.runseqFrame(doc, events, dps, foldOf, a.kfold)
-    frame.coalesce(1).write.mode("overwrite")
-      .parquet(s"${a.outDir}/runseq_skeleton")
+    def skeleton(): Long = {
+      val frame = ConfigTools.runseqFrame(doc, events, dps, foldOf, a.kfold)
+      frame.coalesce(1).write.mode("overwrite")
+        .parquet(s"${a.outDir}/runseq_skeleton")
+      frame.count()
+    }
     if (a.nestedKfold > 0) return runNestedSeq(spark, doc, lake, a,
-      events, dps, frame.count())
-    if (a.train) {
+      events, dps, skeleton())
+    if (!a.train) return skeleton()
+    def train(): Unit = {
       val cand = graft.ml.RunSequence.NestedCandidate.forModelClass(
         ConfigBridge.modelClass(doc), ConfigBridge.subtypeWeights(doc))
       val cfg = ConfigBridge.runSequenceConfig(
         ConfigBridge.dataProcessing(doc), a.kfold)
       val select = EventFilters.compile(ConfigBridge.eventFilters(doc))
-      // fail loud BEFORE training when any fold is empty — the
-      // symptom downstream is MLlib's cryptic "empty dataset" on the
-      // complementary fold's training slice
-      val occupied = events.filter(select)
-        .select(foldOf.cast("long").as("f")).distinct()
-        .collect().map(_.getLong(0)).toSet
-      val missing = (0L until a.kfold.toLong).filterNot(occupied)
-      require(missing.isEmpty,
-        s"--train: fold(s) ${missing.mkString(",")} have no events " +
-          s"under --kfold ${a.kfold} — too few selected events, or a " +
-          "degenerate id distribution for this k; pick a smaller or " +
-          "different k")
       val folds = cand.basis match {
         case "features" => graft.ml.RunSequence.runWith(
           events, dps, select, foldOf, cfg)(cand.fit, cand.score)
@@ -378,7 +374,7 @@ object Run {
         .coalesce(1).write.mode("overwrite")
         .parquet(s"${a.outDir}/fold_metrics")
     }
-    frame.count()
+    Scoped.overlap(Seq(() => skeleton(), () => { train(); 0L })).head
   }
 
   /** The `--nestedKfold N` protocol (runSequence.py:1702 + the

@@ -110,9 +110,10 @@ object RunSequence {
       col("subType"),
       foldOf.cast("long").as("fold"))
 
-  /** Fail-loud fold-range validation for the single-assignment paths
-    * (the [[runNestedBases]] contract applied everywhere): every fold
-    * value must land in 0..k-1. An out-of-range fold — a negative
+  /** Fail-loud fold-range validation for [[paramSweepWithStats]],
+    * before its extractions (the skeleton and the fold loop read the
+    * same checks off their per-fold aggregate, [[foldCountsOf]]): every
+    * fold value must land in 0..k-1. An out-of-range fold — a negative
     * hash, a `% k` without pmod — otherwise sits in EVERY training
     * slice and NO test slice: the F14 guard stays 0 and every metric
     * is silently computed on wrong splits. An empty selection passes
@@ -926,7 +927,7 @@ object RunSequence {
           innerAssembled.values.foreach(_.count())
           candidates.map { c =>
             val rs = foldLoop(innerEv, innerAssembled(c.basis), cfg, c.basis,
-              c.fit, c.score, ownAssembled = false)
+              c.fit, c.score)
             c.name -> rs.map(_.heldOutAuroc).sum / rs.size
           }.toMap
         }
@@ -940,9 +941,10 @@ object RunSequence {
               col("subType"),
               when(col("ofold") === o, 1L).otherwise(0L).as("fold")))
           outerEv.count()
-          foldLoop(outerEv, withFold(winner.basis, outerEv),
-            cfg.copy(k = 2), winner.basis, winner.fit, winner.score,
-            Seq(1)).head
+          val outerAssembled = so.persist(withFold(winner.basis, outerEv))
+          outerAssembled.count()
+          foldLoop(outerEv, outerAssembled, cfg.copy(k = 2), winner.basis,
+            winner.fit, winner.score, Seq(1)).head
         }
         NestedResult[Any](o, chosen, innerMean, outerRun.copy(fold = o))
       }
@@ -1051,10 +1053,16 @@ object RunSequence {
     * runSequence loop with the file handoffs replaced by one persisted
     * lineage and the model architecture swapped through `fit`/`score`
     * exactly like the reference's modelClass knob (nnConfig.json →
-    * `cnnModel.py` vs `deepEpiCnnModel_torch.py`). `fit` sees the
-    * fold's assembled (eventId, label, features) training frame;
-    * `score` must return (eventId, label, p_seizure) for the held-out
-    * slice. Fails loudly on fold contamination. */
+    * `cnnModel.py` vs `deepEpiCnnModel_torch.py`). The selected events
+    * and the assembled basis are pinned once in this call's scope;
+    * [[foldLoop]] then collects every fold's counts and guards in one
+    * bookkeeping round and runs the k folds concurrently, each on its
+    * own pinned training slice. `fit` sees the fold's (eventId, label,
+    * subType, features) training frame; `score` must return (eventId,
+    * label, p_seizure) for the held-out slice. Fails loudly, before any
+    * fit, on an out-of-range or null fold, on a fold with no events,
+    * and on fold contamination (F14). `fit` and `score` run on
+    * concurrent threads, one fold each. */
   def runWith[M](events: DataFrame, dps: Dataset[FlatDp], select: Column,
                  foldOf: Column, cfg: Config = Config())(
                  fit: DataFrame => M,
@@ -1062,8 +1070,9 @@ object RunSequence {
     Materialize.scoped { s =>
       val ev = s.persist(selectedEvents(events, select, foldOf))
       ev.count()
-      requireFoldRange(ev, cfg.k)
-      foldLoop(ev, assembledHistory(ev, dps, cfg), cfg, "features", fit, score)
+      val assembled = s.persist(assembledHistory(ev, dps, cfg))
+      assembled.count()
+      foldLoop(ev, assembled, cfg, "features", fit, score)
     }
   }
 
@@ -1071,9 +1080,10 @@ object RunSequence {
     * modelClass path (`deepEpiCnnModel_torch.py` trains on M8
     * dp2vector buffers, not the P12 CSV): select → P14 validate → M8
     * sliding buffers ([[graft.streaming.NnBuffer.dp2vectors]]) →
-    * per-fold fit/score through the same seam, guard, and A4/ml1
-    * metrics as [[runWith]]. `fit` sees (eventId, label,
-    * window: array<double>); [[cnnFamily]] is the intended occupant.
+    * per-fold fit/score through the same seam, guards, concurrent
+    * folds and A4/ml1 metrics as [[runWith]]. `fit` sees (eventId,
+    * label, subType, window: array<double>); [[cnnFamily]] is the
+    * intended occupant.
     * `bufferSamples` is the trained input length (nnConfig.json's
     * analysisPeriod × sampleFreq). */
   def runWithWindows[M](events: DataFrame, dps: Dataset[FlatDp],
@@ -1084,14 +1094,14 @@ object RunSequence {
     Materialize.scoped { s =>
       val ev = s.persist(selectedEvents(events, select, foldOf))
       ev.count()
-      requireFoldRange(ev, cfg.k)
       // ONE definition of the window-basis assembly (shared with the
       // nested path) + the fold join — two inline copies had already
       // started to drift risk onto the label/validate conventions
-      val assembled = assembledWindowBase(ev, dps, bufferSamples)
+      val assembled = s.persist(assembledWindowBase(ev, dps, bufferSamples)
         .join(ev.select(col("srcId"), col("fold")),
           col("eventId") === col("srcId"))
-        .select(col("eventId"), col("fold"), col("label"), col("window"))
+        .select(col("eventId"), col("fold"), col("label"), col("window")))
+      assembled.count()
       foldLoop(ev, assembled, cfg, "window", fit, score)
     }
   }
@@ -1208,59 +1218,90 @@ object RunSequence {
     (fit, score)
   }
 
-  /** The shared per-fold loop: materialize the basis frame once, then
-    * per fold — F14 leak guard (fail loud), copy-replicate the training
-    * slice through the fold-invariant [[augmentPlan]], fit, score the
-    * held-out slice, A4 event metrics + ml1 AUROC. `dataCol` is the
+  /** The shared per-fold loop over a caller-pinned basis frame
+    * `assembled` (eventId, fold, label, `dataCol`). `dataCol` is the
     * basis column the model family consumes ("features" vector, raw
-    * "window" array, or flattened "spectrogram" image); everything
-    * else is basis-independent. */
-  private def foldLoop[M](ev: DataFrame, assembledIn: DataFrame,
+    * "window" array, or flattened "spectrogram" image); everything else
+    * is basis-independent.
+    *
+    * One bookkeeping round, then the folds. The fold-invariant
+    * [[augmentPlan]] is pinned once. Three O(k)-row aggregates are
+    * collected together in one [[overlap]] round before any fit: `ev`
+    * by fold, the plan by fold, and the F14 leak pairs by test fold
+    * (plan ids that are test-slice event ids of another fold, the
+    * [[skeletonFromEvW]] guard shape). The `ev` aggregate carries the
+    * fold-range and null-fold checks ([[foldCountsOf]]), then every
+    * fold 0..k-1 must hold events and no fold may leak, so an empty
+    * fold fails here instead of in MLlib's "empty dataset". With null
+    * folds ruled out, each fold's training counts are the exact long
+    * complements `total − own fold`, equal to counting the slices.
+    *
+    * The folds then run concurrently through [[overlap]], each in its
+    * own [[Materialize.scoped]] block: it pins its copy-replicated
+    * training slice (basis ⋈ plan ⋈ subType) once before `fit`, so a
+    * model that makes many passes reads the pinned rows instead of
+    * re-running the joins and their broadcasts on every pass. The pin
+    * keeps the join's partition layout, so partition-seeded training
+    * (the forest's bagging) sees the same rows as on the unpinned
+    * frame. Each fold then scores its held-out slice into a pinned
+    * frame and reads the A4 event metrics and ml1 AUROC off it. A
+    * failing fold's exception reaches the caller unwrapped, and every
+    * fold's scope releases its frames, on failure too. */
+  private def foldLoop[M](ev: DataFrame, assembled: DataFrame,
                           cfg: Config, dataCol: String,
                           fit: DataFrame => M,
                           score: (M, DataFrame) => DataFrame,
-                          foldsToRun: Seq[Int] = Seq.empty,
-                          ownAssembled: Boolean = true): Seq[FoldResult[M]] = {
+                          foldsToRun: Seq[Int] = Seq.empty): Seq[FoldResult[M]] = {
     val folds = if (foldsToRun.nonEmpty) foldsToRun else 0 until cfg.k
     Materialize.scoped { s =>
-      // ownAssembled = false: the caller persisted the frame and loops
-      // over this method (runNested's candidate loop) — taking ownership
-      // here would unpersist it between candidates and re-materialize
-      val assembled = if (ownAssembled) s.persist(assembledIn) else assembledIn
-      if (ownAssembled) assembled.count() // one materialization per loop
       val plan = s.persist(augmentPlan(ev, cfg))
       plan.count()
-      folds.map { f =>
-        val fplan = plan.filter(col("fold") =!= f)
-        val test = assembled.filter(col("fold") === f)
-        // F14 guard: no training id (original or synthetic) may reach
-        // the held-out slice — fail loud, never a silent metric skew
-        val leak = fplan.select(col("id"))
-          .join(test.select(col("eventId")).distinct(),
-            col("id") === col("eventId"), "inner")
-          .count()
-        require(leak == 0,
-          s"fold $f: $leak training ids leak into the test slice")
-        // subType rides into the training frame (from the fold's event
-        // slice, keyed by source id) so weighted families can apply the
-        // M13 subtypeWeights knob — the reference passes it through
-        // nnConfig into this exact loop
-        val train = assembled.join(
-            fplan.select(col("id").as("augId"), col("srcId")),
-            assembled("eventId") === col("srcId"))
-          .join(ev.select(col("srcId").as("stSrc"), col("subType")),
-            col("srcId") === col("stSrc"), "left")
-          .select(col("augId").as("eventId"), col("label"),
-            col("subType"), col(dataCol))
-        val model = fit(train)
+      // a plan id that is a test-slice event id of another fold leaks
+      // into that fold's training slice: count the pairs by test fold
+      val leaks = plan.select(col("id"), col("fold").as("trFold"))
+        .join(assembled.select(col("eventId"), col("fold").as("teFold")).distinct(),
+          col("id") === col("eventId"))
+        .filter(col("trFold") =!= col("teFold"))
+        .groupBy(col("teFold")).agg(count(lit(1)))
+      def foldsOf(df: DataFrame) = foldCountsOf(df.withColumn("nEp", lit(0L)), cfg.k)
+      val Seq(evC: FoldCounts, planC: FoldCounts,
+              leak: Map[Long, Long] @unchecked) = overlap(Seq[() => Any](
+        () => foldsOf(ev.select(col("fold"))),
+        () => foldsOf(plan.select(col("fold"))),
+        () => leaks.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap))
+      val missing = (0L until cfg.k.toLong).filterNot(evC.ne.contains)
+      require(missing.isEmpty,
+        s"fold(s) ${missing.mkString(",")} have no events under --kfold " +
+          s"${cfg.k} — too few selected events, or a degenerate id " +
+          "distribution for this k; pick a smaller or different k")
+      // F14 guard: no training id (original or synthetic) may reach the
+      // held-out slice — fail loud, never a silent metric skew
+      folds.foreach { f =>
+        val n = leak.getOrElse(f.toLong, 0L)
+        require(n == 0, s"fold $f: $n training ids leak into the test slice")
+      }
+      overlap(folds.map { f => () =>
         Materialize.scoped { sf =>
-          val scored = sf.persist(score(model, test))
+          // subType rides into the training frame (from the fold's event
+          // slice, keyed by source id) so weighted families can apply the
+          // M13 subtypeWeights knob — the reference passes it through
+          // nnConfig into this exact loop
+          val train = sf(assembled.join(
+              plan.filter(col("fold") =!= f)
+                .select(col("id").as("augId"), col("srcId")),
+              assembled("eventId") === col("srcId"))
+            .join(ev.select(col("srcId").as("stSrc"), col("subType")),
+              col("srcId") === col("stSrc"), "left")
+            .select(col("augId").as("eventId"), col("label"),
+              col("subType"), col(dataCol)))
+          val model = fit(train)
+          val scored = sf.persist(score(model, assembled.filter(col("fold") === f)))
           val auroc = Trainer.auroc(scored)
           val m = Curate.eventLevelMetrics(
             scored, "eventId", "p_seizure", "label").head()
           FoldResult(f,
-            nTrainEvents = ev.filter(col("fold") =!= f).count(),
-            nTrainAugEvents = fplan.count(),
+            nTrainEvents = evC.totNe - evC.ne.getOrElse(f.toLong, 0L),
+            nTrainAugEvents = planC.totNe - planC.ne.getOrElse(f.toLong, 0L),
             nTestEvents = m.getAs[Long]("n_events"),
             heldOutAuroc = auroc,
             eventTp = m.getAs[Long]("event_tp"),
@@ -1269,7 +1310,7 @@ object RunSequence {
             eventFn = m.getAs[Long]("event_fn"),
             model = model)
         }
-      }
+      })
     }
   }
 }

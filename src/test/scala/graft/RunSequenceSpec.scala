@@ -781,15 +781,16 @@ class RunSequenceSpec extends SparkSpec {
       ("E5", "False Alarm", "other", 2)))
     val cfg = RunSequence.Config(historyN = 2,
       extract = FeatureExtract.Config(highPassHz = 0.0))
-    @volatile var seenCols: Seq[String] = Nil
-    @volatile var tcWeighted = 0L
+    // the folds train concurrently: record every fold's view
+    val seenCols = new java.util.concurrent.ConcurrentLinkedQueue[Seq[String]]
+    val tcWeighted = new java.util.concurrent.ConcurrentLinkedQueue[Long]
     val fit = (train: org.apache.spark.sql.DataFrame) => {
-      seenCols = train.columns.toSeq
+      seenCols.add(train.columns.toSeq)
       // the reference's nnConfig subtypeWeights knob must be derivable
       // HERE, inside the composed loop — subType values flow with rows
-      tcWeighted = train.withColumn("w",
+      tcWeighted.add(train.withColumn("w",
           graft.ml.Trainer.subtypeWeightCol(Map("Tonic-Clonic" -> 10.0)))
-        .filter(col("w") === 10.0).count()
+        .filter(col("w") === 10.0).count())
       ()
     }
     val score = (_: Unit, test: org.apache.spark.sql.DataFrame) =>
@@ -810,12 +811,103 @@ class RunSequenceSpec extends SparkSpec {
     val rs = RunSequence.runWith(events, dps,
       lit(true), col("fold0"), cfg)(fit, score)
     assert(rs.size == cfg.k)
-    assert(seenCols.contains("subType"),
+    import scala.jdk.CollectionConverters._
+    assert(seenCols.asScala.forall(_.contains("subType")),
       s"fold training frame lost subType: $seenCols")
-    // the last fold trained (fold 2): training slice = folds 0+1 =
-    // E0 (seizure TC, x4), E1 (x1), E2 (seizure, x2), E3 (TC, x1);
-    // TC rows = E0's 4 copies + E3 = 5 events x 3 epochs each
-    assert(tcWeighted == 15L, s"TC-weighted epoch rows: $tcWeighted")
+    // TC-weighted epoch rows (3 epochs per event) per training slice:
+    // fold 0 trains on folds 1+2, TC = E3 (x1) -> 3; fold 1 on folds
+    // 0+2, TC = E0's 4 copies -> 12; fold 2 on folds 0+1 = E0 (seizure
+    // TC, x4), E1 (x1), E2 (seizure, x2), E3 (TC, x1) -> 5 events, 15
+    assert(tcWeighted.asScala.toSeq.sorted == Seq(3L, 12L, 15L),
+      s"TC-weighted epoch rows: $tcWeighted")
+  }
+
+  /** Six events, two per fold, both classes in every fold. */
+  private def foldEvents = evFrame(Seq(
+    ("F0a", "Seizure", "Tonic-Clonic", 0),
+    ("F1a", "Seizure", "other", 1),
+    ("F2a", "Seizure", "other", 2),
+    ("F0b", "False Alarm", "other", 0),
+    ("F1b", "False Alarm", "Tonic-Clonic", 1),
+    ("F2b", "False Alarm", "other", 2)))
+
+  /** [[foldEvents]]' datapoints; the epoch label rides the datapoint
+    * type, so the "b" (false alarm) events carry class 0. */
+  private def foldDps = {
+    import spark.implicits._
+    spark.createDataset(for {
+      (id, i) <- Seq("F0a", "F1a", "F2a", "F0b", "F1b", "F2b").zipWithIndex
+      d <- 0 until 4
+    } yield {
+      val base = dp(id, 1000L + i * 10000L + d * 5L, d.toLong, acc = true)
+      if (id.endsWith("a")) base else base.copy(typeStr = "False Alarm", `type` = 0)
+    })
+  }
+
+  /** A model-free family: `fit` returns Unit, `score` a constant. */
+  private val constScore = (_: Unit, test: org.apache.spark.sql.DataFrame) =>
+    test.select(col("eventId"), col("label"), lit(0.5).as("p_seizure"))
+
+  test("runWith: an empty fold fails loud before any fit") {
+    // k = 2 with every event in fold 0: fold 0's training slice is empty
+    val events = evFrame(Seq(
+      ("E0", "Seizure", "other", 0),
+      ("E1", "False Alarm", "other", 0)))
+    val cfg = RunSequence.Config(k = 2, historyN = 2,
+      extract = FeatureExtract.Config(highPassHz = 0.0))
+    val fits = new java.util.concurrent.atomic.AtomicInteger
+    val e = intercept[IllegalArgumentException] {
+      RunSequence.runWith(events, miniDps(Seq("E0", "E1")), lit(true),
+        col("fold0"), cfg)(
+        train => { fits.incrementAndGet()
+          graft.ml.Trainer.trainLogistic(train, cfg.maxIter, cfg.regParam) },
+        (m: org.apache.spark.ml.classification.LogisticRegressionModel,
+         test: org.apache.spark.sql.DataFrame) =>
+          m.transform(test).select(col("eventId"), col("label"),
+            lit(0.5).as("p_seizure")))
+    }
+    assert(e.getMessage.contains("fold(s) 1 have no events"), e.getMessage)
+    assert(fits.get == 0, s"fit ran ${fits.get} times before the guard")
+  }
+
+  test("runWith: a failing fold surfaces unwrapped and no pinned frame leaks") {
+    val cfg = RunSequence.Config(historyN = 2,
+      extract = FeatureExtract.Config(highPassHz = 0.0))
+    val dps = foldDps
+    val before = Scoped.cachedPartitions(spark)
+    val e = intercept[IllegalStateException] {
+      RunSequence.runWith(foldEvents, dps, lit(true), col("fold0"), cfg)(
+        train => {
+          // fold 1's training slice is the one without fold-1 ids
+          val ids = train.select("eventId").collect().map(_.getString(0))
+          if (!ids.exists(_.startsWith("F1"))) throw new IllegalStateException("fold 1 fit")
+          ()
+        }, constScore)
+    }
+    assert(e.getMessage == "fold 1 fit")
+    val after = Scoped.cachedPartitions(spark)
+    assert(after <= before, s"cached partitions grew: $before -> $after")
+  }
+
+  test("runWith: fold training counts equal the skeleton's train and train_aug rows") {
+    val cfg = RunSequence.Config(historyN = 2,
+      extract = FeatureExtract.Config(highPassHz = 0.0))
+    val dps = foldDps
+    val rs = RunSequence.runWith(foldEvents, dps, lit(true), col("fold0"), cfg)(
+      _ => (), constScore)
+    val sk = RunSequence.skeleton(foldEvents, dps, lit(true), col("fold0"), cfg)
+      .collect()
+      .map(r => (r.getLong(0), r.getString(1)) -> r.getLong(2)).toMap
+    assert(rs.map(_.fold) == Seq(0, 1, 2))
+    rs.foreach { fr =>
+      assert(fr.nTrainEvents == sk((fr.fold.toLong, "train")))
+      assert(fr.nTrainAugEvents == sk((fr.fold.toLong, "train_aug")))
+      assert(fr.nTestEvents == sk((fr.fold.toLong, "test")))
+    }
+    // plan multiplicities: seizure x2, seizure TC x4, others x1, so
+    // fold 0 trains on F1a x2 + F2a x2 + F1b + F2b = 6 plan rows
+    assert(rs.map(_.nTrainAugEvents) == Seq(6L, 8L, 8L))
+    assert(rs.map(_.nTrainEvents) == Seq(4L, 4L, 4L))
   }
 
   // ------------------------------------------------------- parameter sweep
