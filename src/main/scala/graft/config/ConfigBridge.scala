@@ -646,6 +646,30 @@ object ConfigBridge {
             s"$window — the buffer length is artifact-owned; drop " +
             "bufferSeconds or deploy a matching artifact")
       }
+    // the window-model artifact at `path` as a replay detector, for the
+    // `formats` the calling algorithm class deploys; `what` names them
+    def windowAlg(path: String, base: => NnSettings, formats: Set[String],
+                  what: String): graft.streaming.NnAlg = {
+      val format = graft.ml.ModelIo.formatOf(path)
+      if (!formats(format)) throw new IllegalArgumentException(
+        s"$src: $path format '$format' is not $what")
+      val (alg, window) = format match {
+        case "graft-cnn" =>
+          val m = graft.ml.ModelIo.loadCnn(path)
+          (graft.ml.Cnn.deployedCnn(m, base), m.window)
+        case "graft-lstm" =>
+          val m = graft.ml.ModelIo.loadLstm(path)
+          (graft.ml.Lstm.deployedLstm(m, base), m.window)
+        case "graft-lstm2" =>
+          val m = graft.ml.ModelIo.loadLstm2(path)
+          (graft.ml.LstmStack.deployedLstm2(m, base), m.window)
+        case "graft-convpipe" =>
+          val m = graft.ml.ModelIo.loadConvPipe(path)
+          (graft.ml.ConvPipe.deployedConvPipe(m, base), m.front.inputLen)
+      }
+      checkBuffer(window)
+      alg
+    }
     a.algClass.split('.').takeRight(2).mkString(".") match {
       case "osdAlg.OsdAlg" =>
         failUnknown(src, sec, st.keys, OsdSettingKeys)
@@ -721,26 +745,9 @@ object ConfigBridge {
           alarmTime = num("alarmTime", 10.0)))
       case "nnAlg.NnAlg" =>
         failUnknown(src, sec, st.keys, NnSettingKeys)
-        val path = modelPath()
-        val (alg, window) = graft.ml.ModelIo.formatOf(path) match {
-          case "graft-cnn" =>
-            val m = graft.ml.ModelIo.loadCnn(path)
-            (graft.ml.Cnn.deployedCnn(m, nnBase()), m.window)
-          case "graft-lstm" =>
-            val m = graft.ml.ModelIo.loadLstm(path)
-            (graft.ml.Lstm.deployedLstm(m, nnBase()), m.window)
-          case "graft-lstm2" =>
-            val m = graft.ml.ModelIo.loadLstm2(path)
-            (graft.ml.LstmStack.deployedLstm2(m, nnBase()), m.window)
-          case "graft-convpipe" =>
-            val m = graft.ml.ModelIo.loadConvPipe(path)
-            (graft.ml.ConvPipe.deployedConvPipe(m, nnBase()), m.front.inputLen)
-          case other => throw new IllegalArgumentException(
-            s"$src: $path format '$other' is not an nnAlg-deployable " +
-              "window model (graft-cnn/lstm/lstm2/convpipe)")
-        }
-        checkBuffer(window)
-        alg
+        windowAlg(modelPath(), nnBase(),
+          Set("graft-cnn", "graft-lstm", "graft-lstm2", "graft-convpipe"),
+          "an nnAlg-deployable window model (graft-cnn/lstm/lstm2/convpipe)")
       case "specAlg.SpecAlg" =>
         failUnknown(src, sec, st.keys, SpecSettingKeys)
         val path = modelPath()
@@ -768,20 +775,9 @@ object ConfigBridge {
         failUnknown(src, sec, st.keys, AmberSettingKeys)
         val path = modelPath()
         val base = nnBase().copy(sdThresh = num("sdThresh", 5.0))
-        val (alg, window) = graft.ml.ModelIo.formatOf(path) match {
-          case "graft-lstm2" =>
-            val m = graft.ml.ModelIo.loadLstm2(path)
-            (graft.ml.LstmStack.deployedLstm2(m, base), m.window)
-          case "graft-convpipe" =>
-            val m = graft.ml.ModelIo.loadConvPipe(path)
-            (graft.ml.ConvPipe.deployedConvPipe(m, base), m.front.inputLen)
-          case other => throw new IllegalArgumentException(
-            s"$src: $path format '$other' is not an amber-family " +
-              "artifact (graft-lstm2/convpipe — the LSTM-stack and " +
-              "conv-pipe lines amberAlg's model.py builds)")
-        }
-        checkBuffer(window)
-        alg
+        windowAlg(path, base, Set("graft-lstm2", "graft-convpipe"),
+          "an amber-family artifact (graft-lstm2/convpipe — the " +
+            "LSTM-stack and conv-pipe lines amberAlg's model.py builds)")
       case other => throw new IllegalArgumentException(
         s"$src: unknown algorithm class '$other' — the reference ships " +
           "osdAlg.OsdAlg, osdAlg_v1.OsdAlg_v1, hrAlg.HrAlg, nnAlg.NnAlg, " +

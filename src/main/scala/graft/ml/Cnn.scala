@@ -1,7 +1,6 @@
 package graft.ml
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
 
 /** A 1-D convolutional network trained IN-ENGINE — the round-12
   * verdict's "missing #2" boundary (the reference's conv architectures,
@@ -10,8 +9,8 @@ import org.apache.spark.sql.functions._
   * architecture is a per-row pure function (forward pass = native
   * Catalyst column expressions, codegen'd, no UDF in the batch path)
   * and training is distributed first-order optimization — breeze LBFGS
-  * on the driver over a loss/gradient computed as ONE `treeAggregate`
-  * pass per evaluation, the exact execution shape MLlib's own
+  * on the driver over a loss/gradient computed as ONE distributed pass
+  * per evaluation ([[DetAgg.fit]]), the execution shape MLlib's own
   * `LogisticRegression` uses. Driver state is the parameter vector
   * (`nf·w + 2nf + 1` doubles); no training row ever reaches the driver.
   *
@@ -182,110 +181,42 @@ object Cnn {
       }, nP)
   }
 
-  /** Distributed training: breeze LBFGS where each loss/gradient
-    * evaluation is one `treeAggregate` over `(label, window)` rows —
-    * max-pool routes the gradient to its argmax position, ReLU gates
-    * it, L2 on the weights (not the biases). Input frame: `label`
-    * (0/1 double) + `window` (`array<double>`, all the same length).
-    * Deterministic: seeded init, fixed partitioning per run.
-    *
-    * `weightCol` (M13, the reference's `subtypeWeights` knob applied to
-    * the conv family): an optional per-row positive weight multiplying
-    * that row's loss and gradient; the objective normalizes by the
-    * WEIGHT SUM, so all-1.0 weights reproduce the unweighted model
-    * bit-exactly (summing 1.0s is exact integer arithmetic < 2^53).
-    * Build it with [[Trainer.subtypeWeightCol]]. The z-scaling stats
-    * stay unweighted — weighting steers the LOSS, not the input
-    * normalization (same contract as MLlib's standardization). */
+  /** Distributed training through [[DetAgg.fit]], the discipline
+    * every gradient family shares. Input frame: `label` (0/1 double) +
+    * `window` (`array<double>`, all the same length) + the optional M13
+    * `weightCol`. Max-pool routes the gradient to its argmax position,
+    * ReLU gates it; L2 on the conv and dense weights. Deterministic:
+    * seeded init. */
   def train(windows: DataFrame, cfg: Config = Config(),
             weightCol: Option[String] = None): CnnModel = {
-    import breeze.linalg.{DenseVector => BDV}
-    val spark = windows.sparkSession
-    import spark.implicits._
-    val wCol = weightCol.map(col).getOrElse(lit(1.0))
-    val ds = windows.select(col("label").cast("double"),
-        wCol.cast("double").as("__w"),
-        col("window").cast("array<double>"))
-      .as[(Double, Double, Array[Double])]
-      .rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // Stats + weight-sum partials per partition, combined in
-      // partition-index order (DetAgg): `reduce`'s completion-order
-      // merge would make (mean, std, weight sum) — and therefore the
-      // trained model — nondeterministic in final ulps.
-      val (sum, sumSq, cnt, wLen, wSum) = DetAgg.windowStats(ds)
-      val mean = sum / cnt
-      val varr = math.max(sumSq / cnt - mean * mean, 0.0)
-      val std = if (varr == 0.0) 1.0 else math.sqrt(varr)
-      val nf = cfg.nFilters; val w = cfg.width
-      require(wLen >= w, s"window $wLen shorter than filter width $w")
-      val nP = nf * w + 2 * nf + 1
-      // Objective normalizer: the weight sum (== row count when
-      // unweighted — summing 1.0s is exact, so the unweighted model is
-      // bit-identical to the pre-weighting code).
-      val nRows = wSum
-      require(nRows > 0 && !nRows.isNaN && !nRows.isInfinite,
-        s"weight sum must be positive finite: $nRows")
-      val sc = spark.sparkContext
-
-      val fn = new breeze.optimize.DiffFunction[BDV[Double]] {
-        def calculate(p: BDV[Double]): (Double, BDV[Double]) = {
-          val bw = sc.broadcast(p.data.clone())
-          try {
-            val (lossSum, gradSum) =
-              gradientPass(ds, bw, nf, w, mean, std)
-            // L2 on conv + dense weights only (indices < nf*w and the
-            // dense block) — biases unpenalized, the standard choice
-            var reg = 0.0
-            val grad = new Array[Double](nP)
-            var i = 0
-            while (i < nP) {
-              grad(i) = gradSum(i) / nRows
-              val isWeight = i < nf * w ||
-                (i >= nf * w + nf && i < nf * w + 2 * nf)
-              if (isWeight) {
-                reg += 0.5 * cfg.regParam * p.data(i) * p.data(i)
-                grad(i) += cfg.regParam * p.data(i)
-              }
-              i += 1
-            }
-            (lossSum / nRows + reg, BDV(grad))
-          } finally bw.unpersist(false)
-        }
-      }
-
-      val rnd = new scala.util.Random(cfg.seed)
-      val init = new Array[Double](nP)
-      (0 until nf * w).foreach(i => init(i) = rnd.nextGaussian() * 0.3)
-      (0 until nf).foreach(f =>
-        init(nf * w + nf + f) = rnd.nextGaussian() * 0.3)
-      val lbfgs = new breeze.optimize.LBFGS[BDV[Double]](
-        maxIter = cfg.maxIter, m = 10, tolerance = 1e-7)
-      val sol = lbfgs.minimize(fn, BDV(init)).data
-      CnnModel(nf, w, wLen,
-        filters = sol.slice(0, nf * w),
-        filterBias = sol.slice(nf * w, nf * w + nf),
-        dense = sol.slice(nf * w + nf, nf * w + 2 * nf),
-        bias = sol(nP - 1), mean = mean, std = std)
-    } finally ds.unpersist(false)
+    val nf = cfg.nFilters; val w = cfg.width
+    val nP = nf * w + 2 * nf + 1
+    val rnd = new scala.util.Random(cfg.seed)
+    val init = new Array[Double](nP)
+    (0 until nf * w).foreach(i => init(i) = rnd.nextGaussian() * 0.3)
+    (0 until nf).foreach(f =>
+      init(nf * w + nf + f) = rnd.nextGaussian() * 0.3)
+    val isWeight = Array.tabulate(nP)(i =>
+      i < nf * w || (i >= nf * w + nf && i < nf * w + 2 * nf))
+    DetAgg.fit(windows, "window", weightCol, init, isWeight,
+        cfg.regParam, cfg.maxIter) { (mean, std, len) =>
+      require(len >= w, s"window $len shorter than filter width $w")
+      ((ds, bw) => gradientPass(ds, bw, nf, w, mean, std),
+       sol => CnnModel(nf, w, len,
+         filters = sol.slice(0, nf * w),
+         filterBias = sol.slice(nf * w, nf * w + nf),
+         dense = sol.slice(nf * w + nf, nf * w + 2 * nf),
+         bias = sol(nP - 1), mean = mean, std = std))
+    }
   }
 
-  /** Batch scoring: per-row logit + probability over a window column —
-    * pure codegen'd column work, no shuffle. The serve-time window
-    * contract is enforced HERE, same as [[forward]]'s require: a
-    * wrong-length window fails loudly instead of convolving a
-    * different-length input into a confidently wrong score
-    * ([[logitCol]] itself stays permissive — the ml3 oracle applies it
-    * to raw fixture arrays). */
+  /** Batch scoring: per-row logit + probability over a window column,
+    * with the serve-time window contract of [[forward]]'s require
+    * ([[DetAgg.scoreChecked]]). */
   def scoreWindows(m: CnnModel, windows: DataFrame,
-                   winCol: String = "window"): DataFrame = {
-    val z = when(size(col(winCol)) === m.window, logitCol(m, col(winCol)))
-      .otherwise(raise_error(concat(
-        lit("window "), coalesce(size(col(winCol)).cast("string"), lit("NULL")),
-        lit(s" != trained window ${m.window}"))).cast("double"))
-    windows.withColumn("logit", z)
-      .withColumn("p_seizure", lit(1.0) / (lit(1.0) + exp(-col("logit"))))
-  }
+                   winCol: String = "window"): DataFrame =
+    DetAgg.scoreChecked(windows, winCol, m.window, "window",
+      s"trained window ${m.window}")(logitCol(m, _))
 
   /** The CNN as a replay scorer closure. UNIT CONTRACT: this model
     * family trains directly on the buffer's window (G, via

@@ -11,11 +11,8 @@ import graft.ml.LstmStack.Lstm2Model
   * Bidirectional(LSTM) → LSTM) trained END-TO-END as one parameter
   * vector: gradients flow from the logistic head through the stacked
   * recurrence ([[LstmStack.rowGrad]]'s input-gradient output) into the
-  * conv front-end backward ([[ConvFront.rowBackward]]). Same training
-  * discipline as every family: breeze LBFGS over one [[DetAgg]]
-  * gradient pass per evaluation, L2 on weight matrices (conv kernels +
-  * channel mix + the stack's weight ranges), deterministic seeded
-  * init, driver state = one parameter vector.
+  * conv front-end backward ([[ConvFront.rowBackward]]). Trained by
+  * [[DetAgg.fit]], the discipline every gradient family shares.
   *
   * Scoring composes the two codegen'd expressions —
   * `LstmStackLogit(ConvFrontSeq(window))` — one projection, no
@@ -61,19 +58,13 @@ object ConvPipe {
   def logitCol(m: ConvPipeModel, win: Column): Column =
     LstmStack.logitCol(m.stack, ConvFront.seqCol(m.front, win))
 
-  /** Fail-loud serve-length contract, like every scoring seam. The
+  /** Fail-loud serve-length contract ([[DetAgg.scoreChecked]]). The
     * expected array length is [[ConvFront.ConvFrontModel.inputLen]]
     * (cIn0 · window — interleaved channels). */
   def scoreWindows(m: ConvPipeModel, windows: DataFrame,
-                   winCol: String = "window"): DataFrame = {
-    val z = when(size(col(winCol)) === m.front.inputLen,
-        logitCol(m, col(winCol)))
-      .otherwise(raise_error(concat(
-        lit("window "), coalesce(size(col(winCol)).cast("string"), lit("NULL")),
-        lit(s" != trained input length ${m.front.inputLen}"))).cast("double"))
-    windows.withColumn("logit", z)
-      .withColumn("p_seizure", lit(1.0) / (lit(1.0) + exp(-col("logit"))))
-  }
+                   winCol: String = "window"): DataFrame =
+    DetAgg.scoreChecked(windows, winCol, m.front.inputLen, "window",
+      s"trained input length ${m.front.inputLen}")(logitCol(m, _))
 
   def scorer(m: ConvPipeModel): Array[Double] => Double =
     (w: Array[Double]) => 1.0 / (1.0 + math.exp(-forward(m, w)))
@@ -94,11 +85,10 @@ object ConvPipe {
                      subtypeWeights: Map[String, Double] = Map.empty)
       : (DataFrame => ConvPipeModel,
          (ConvPipeModel, DataFrame) => DataFrame) = {
-    val fit = (train0: DataFrame) =>
-      if (subtypeWeights.isEmpty) train(train0, cfg)
-      else train(
-        train0.withColumn("__m13_w", Trainer.subtypeWeightCol(subtypeWeights)),
-        cfg, Some("__m13_w"))
+    val fit = (train0: DataFrame) => {
+      val (t, w) = RunSequence.withSubtypeWeight(train0, subtypeWeights)
+      train(t, cfg, w)
+    }
     val score = (m: ConvPipeModel, test: DataFrame) =>
       scoreWindows(m, test)
         .select(col("eventId"), col("label"), col("p_seizure"))
@@ -116,6 +106,52 @@ object ConvPipe {
   private[ml] def convParamCount(shapes: Seq[(Int, Int, Int)]): Int =
     shapes.map { case (ci, co, k) => co * ci * k + 3 * co }.sum +
       shapes.last._2 + 1 // mix + mixBias
+
+  /** The shape checks of a conv front over `len`-value rows of `cIn`
+    * interleaved channels: (per-channel window length, positions left
+    * after the blocks). Shared with [[TowerFusion]]. */
+  private[ml] def frontShape(len: Int, cIn: Int, shapes: Seq[(Int, Int, Int)],
+      blocks: Seq[BlockSpec]): (Int, Int) = {
+    require(cIn >= 1 && len % cIn == 0,
+      s"input length $len not a multiple of $cIn channels")
+    val tLen = len / cIn
+    val outLen = shapes.foldLeft(tLen)((t, s) => (t - s._3 + 1) / 2)
+    require(outLen >= 2,
+      s"window $tLen collapses to $outLen positions through $blocks")
+    (tLen, outLen)
+  }
+
+  /** L2-regularizable index ranges of a conv front's parameter block
+    * at `off`: the kernels and the channel mix (conv biases and the
+    * affine (scale, shift) are bias-like). Shared with [[TowerFusion]],
+    * one front per tower. */
+  private[ml] def convWeightRanges(shapes: Seq[(Int, Int, Int)],
+      off: Int): Seq[(Int, Int)] = {
+    var o = off
+    val rs = shapes.map { case (ci, co, k) =>
+      val r = (o, o + co * ci * k); o += co * ci * k + 3 * co; r
+    }
+    rs :+ ((o, o + shapes.last._2)) // mix
+  }
+
+  /** Deterministic seeded init of a conv front's parameter block at
+    * `off`: Gaussian·0.3 kernels and mix, affine scale 1, zero conv
+    * biases and affine shifts. */
+  private[ml] def convInit(rnd: scala.util.Random,
+      shapes: Seq[(Int, Int, Int)], init: Array[Double], off: Int): Unit = {
+    var o = off
+    shapes.foreach { case (ci, co, k) =>
+      (0 until co * ci * k).foreach(j =>
+        init(o + j) = rnd.nextGaussian() * 0.3)
+      o += co * ci * k
+      o += co // conv bias 0
+      (0 until co).foreach(j => init(o + j) = 1.0) // affine scale 1
+      o += co
+      o += co // affine shift 0
+    }
+    (0 until shapes.last._2).foreach(j =>
+      init(o + j) = rnd.nextGaussian() * 0.3) // mix
+  }
 
   /** Build the front-end model from the parameter vector (blocks at
     * ascending offsets, then mix/mixBias — [[ConvFront.rowBackward]]'s
@@ -138,122 +174,48 @@ object ConvPipe {
 
   // ------------------------------------------------------------ training
 
+  /** Distributed END-TO-END training through [[DetAgg.fit]], the
+    * discipline every gradient family shares. L2 on the conv kernels,
+    * the channel mix and the stack's weight ranges; conv biases and the
+    * affine (scale, shift) are bias-like. */
   def train(windows: DataFrame, cfg: Config = Config(),
             weightCol: Option[String] = None): ConvPipeModel = {
-    import breeze.linalg.{DenseVector => BDV}
-    val spark = windows.sparkSession
-    import spark.implicits._
-    val wCol = weightCol.map(col).getOrElse(lit(1.0))
-    val ds = windows.select(col("label").cast("double"),
-        wCol.cast("double").as("__w"),
-        col("window").cast("array<double>"))
-      .as[(Double, Double, Array[Double])]
-      .rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val (sum, sumSq, cnt, wLen, wSum) = DetAgg.windowStats(ds)
-      val mean = sum / cnt
-      val varr = math.max(sumSq / cnt - mean * mean, 0.0)
-      val std = if (varr == 0.0) 1.0 else math.sqrt(varr)
-      require(cfg.cIn >= 1 && wLen % cfg.cIn == 0,
-        s"input length $wLen not a multiple of ${cfg.cIn} channels")
-      val tLen = wLen / cfg.cIn // per-channel window length
-      val shapes = shapesOf(cfg.blocks, cfg.cIn)
-      val nConv = convParamCount(shapes)
-      val h1N = cfg.h1; val h2N = cfg.h2
-      val mha = cfg.head == "mha"
-      val nH = if (mha) cfg.nHeads else 1
-      val nStack = LstmStack.nParams(h1N, h2N, cfg.head, cfg.bidir, nH)
-      val nP = nConv + nStack
-      val outLen = shapes.foldLeft(tLen)((t, s) => (t - s._3 + 1) / 2)
-      require(outLen >= 2,
-        s"window $tLen collapses to $outLen positions through ${cfg.blocks}")
-      val nRows = wSum
-      require(nRows > 0 && !nRows.isNaN && !nRows.isInfinite,
-        s"weight sum must be positive finite: $nRows")
-      val sc = spark.sparkContext
+    val shapes = shapesOf(cfg.blocks, cfg.cIn)
+    val nConv = convParamCount(shapes)
+    val h1N = cfg.h1; val h2N = cfg.h2
+    val mha = cfg.head == "mha"
+    val nH = if (mha) cfg.nHeads else 1
+    val nStack = LstmStack.nParams(h1N, h2N, cfg.head, cfg.bidir, nH)
+    val nP = nConv + nStack
+    val wRanges = convWeightRanges(shapes, 0) ++ LstmStack
+      .stackWeightRanges(h1N, h2N, cfg.head, cfg.bidir, nH)
+      .map(r => (nConv + r._1, nConv + r._2))
+    val isWeight = Array.tabulate(nP)(i =>
+      wRanges.exists(r => i >= r._1 && i < r._2))
 
-      // L2: conv kernels + channel mix + the stack's weight ranges;
-      // conv biases and the affine (scale, shift) are bias-like
-      val convWRanges = {
-        var o = 0
-        val rs = shapes.map { case (ci, co, k) =>
-          val r = (o, o + co * ci * k); o += co * ci * k + 3 * co; r
-        }
-        rs :+ ((o, o + shapes.last._2)) // mix
-      }
-      val stackRanges = LstmStack
-        .stackWeightRanges(h1N, h2N, cfg.head, cfg.bidir, nH)
-        .map(r => (nConv + r._1, nConv + r._2))
-      val wRanges = convWRanges ++ stackRanges
-      def isWeight(i: Int): Boolean =
-        wRanges.exists(r => i >= r._1 && i < r._2)
+    val rnd = new scala.util.Random(cfg.seed)
+    val init = new Array[Double](nP)
+    convInit(rnd, shapes, init, 0)
+    System.arraycopy(
+      LstmStack.stackInit(rnd, h1N, h2N, cfg.head, cfg.bidir, nH),
+      0, init, nConv, nStack)
 
-      val fn = new breeze.optimize.DiffFunction[BDV[Double]] {
-        def calculate(p: BDV[Double]): (Double, BDV[Double]) = {
-          val bw = sc.broadcast(p.data.clone())
-          try {
-            // the RDD pass lives in gradientPass (an object method):
-            // a closure defined HERE would capture this anonymous
-            // DiffFunction and fail serialization
-            val (lossSum, gradSum) = gradientPass(ds, bw, cfg, tLen,
-              mean, std)
-            val grad = new Array[Double](nP)
-            var reg = 0.0
-            var i = 0
-            while (i < nP) {
-              grad(i) = gradSum(i) / nRows
-              if (isWeight(i)) {
-                reg += 0.5 * cfg.regParam * p.data(i) * p.data(i)
-                grad(i) += cfg.regParam * p.data(i)
-              }
-              i += 1
-            }
-            (lossSum / nRows + reg, BDV(grad))
-          } finally bw.unpersist(false)
-        }
-      }
-
-      val rnd = new scala.util.Random(cfg.seed)
-      val init = new Array[Double](nP);
-      {
-        var o = 0
-        shapes.foreach { case (ci, co, k) =>
-          (0 until co * ci * k).foreach(j =>
-            init(o + j) = rnd.nextGaussian() * 0.3)
-          o += co * ci * k
-          o += co // conv bias 0
-          (0 until co).foreach(j => init(o + j) = 1.0) // affine scale 1
-          o += co
-          o += co // affine shift 0
-        }
-        (0 until shapes.last._2).foreach(j =>
-          init(o + j) = rnd.nextGaussian() * 0.3) // mix
-      }
-      System.arraycopy(
-        LstmStack.stackInit(rnd, h1N, h2N, cfg.head, cfg.bidir, nH),
-        0, init, nConv, nStack)
-      val lbfgs = new breeze.optimize.LBFGS[BDV[Double]](
-        maxIter = cfg.maxIter, m = 10, tolerance = 1e-7)
-      val sol = lbfgs.minimize(fn, BDV(init)).data
-      ConvPipeModel(
-        frontOf(sol, shapes, tLen, mean, std),
-        LstmStack.stackUnpack(sol, nConv, h1N, h2N, outLen, 0.0, 1.0,
-          cfg.head, cfg.bidir, nH))
-    } finally ds.unpersist(false)
+    DetAgg.fit(windows, "window", weightCol, init, isWeight,
+        cfg.regParam, cfg.maxIter) { (mean, std, len) =>
+      val (tLen, outLen) = frontShape(len, cfg.cIn, shapes, cfg.blocks)
+      ((ds, bw) => gradientPass(ds, bw, cfg, tLen, mean, std),
+       sol => ConvPipeModel(
+         frontOf(sol, shapes, tLen, mean, std),
+         LstmStack.stackUnpack(sol, nConv, h1N, h2N, outLen, 0.0, 1.0,
+           cfg.head, cfg.bidir, nH)))
+    }
   }
-
-  /** Exposed for ConvPipeSpec's finite-difference gradient check. */
-  private[graft] def gradientPassForTest(
-      ds: org.apache.spark.rdd.RDD[(Double, Double, Array[Double])],
-      bw: org.apache.spark.broadcast.Broadcast[Array[Double]],
-      cfg: Config, window: Int, mean: Double, std: Double)
-      : (Double, Array[Double]) =
-    gradientPass(ds, bw, cfg, window, mean, std)
 
   /** One composed loss/gradient evaluation (recurrence rowGrad feeding
     * the conv backward), partials combined in partition-index order.
-    * `window` is the PER-CHANNEL length (raw rows are cIn·window). */
-  private def gradientPass(
+    * `window` is the PER-CHANNEL length (raw rows are cIn·window).
+    * ConvPipeSpec's finite-difference checks drive it directly. */
+  private[graft] def gradientPass(
       ds: org.apache.spark.rdd.RDD[(Double, Double, Array[Double])],
       bw: org.apache.spark.broadcast.Broadcast[Array[Double]],
       cfg: Config, window: Int, mean: Double, std: Double)

@@ -2,11 +2,21 @@ package graft.ml
 
 import scala.reflect.ClassTag
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
-/** Deterministic replacement for `treeAggregate`/`reduce` over training
-  * partials. Spark's `reduce` (and `treeAggregate`'s final level) folds
-  * task results in COMPLETION order, and double addition is commutative
+/** The shared training and serving machinery of the six gradient model
+  * families — [[Cnn]], [[Lstm]], [[LstmStack]], [[ConvPipe]],
+  * [[TowerFusion]] and [[SpecCnn]]: [[fit]] is their one LBFGS training
+  * loop, [[scoreChecked]] their one fail-loud batch-scoring seam.
+  *
+  * Training aggregates through [[ordered]], the deterministic
+  * replacement for `treeAggregate`/`reduce` over training partials.
+  * Spark's `reduce` (and `treeAggregate`'s final level) folds task
+  * results in COMPLETION order, and double addition is commutative
   * but not associative — so two runs of the identical training job can
   * produce models differing in final ulps. That made the "deterministic:
   * seeded init" claim quietly false, and it breaks the M13 gate that
@@ -40,7 +50,7 @@ object DetAgg {
     groups.map(_._2).foldLeft(zero)(add)
   }
 
-  /** The (loss, gradient) shape both model families aggregate: one
+  /** The (loss, gradient) shape every gradient family aggregates: one
     * partial per partition, summed index-ascending. */
   def lossGrad(perPartition: RDD[(Int, (Double, Array[Double]))],
                nP: Int): (Double, Array[Double]) =
@@ -51,16 +61,15 @@ object DetAgg {
       (a._1 + b._1, g)
     }
 
-  /** The pre-training stats pass every gradient family shares
-    * ([[Cnn.train]]/[[Lstm.train]]/[[LstmStack.train]]/[[ConvPipe.train]]):
-    * per partition, (Σx, Σx², sample count, window length, Σweight),
-    * combined in partition-index order. A partition emits its partial
+  /** The pre-training stats pass of [[fit]]: per partition, (Σx, Σx²,
+    * sample count, window length, Σweight), combined in
+    * partition-index order. A partition emits its partial
     * whenever it saw ANY row — keying the skip on the SAMPLE count
     * would silently drop the weights of a partition holding only
     * zero-length windows and hide its length-0 from the ragged check;
     * here such a partition emits len = 0, which collides loudly with
     * every real window length at the combine. */
-  def windowStats(ds: RDD[(Double, Double, Array[Double])])
+  private def windowStats(ds: RDD[(Double, Double, Array[Double])])
       : (Double, Double, Long, Int, Double) =
     ordered(
       ds.mapPartitionsWithIndex { case (pi, it) =>
@@ -83,4 +92,105 @@ object DetAgg {
       (a._1 + b._1, a._2 + b._2, a._3 + b._3, math.max(a._4, b._4),
         a._5 + b._5)
     }
+
+  /** One distributed loss/gradient evaluation of a family: (Σ weighted
+    * row loss, Σ weighted row gradient) over `(label, weight, data)`
+    * rows against the broadcast parameter vector. The family's
+    * `gradientPass` behind it must be an object method, so its executor
+    * lambdas capture only their arguments — a closure built inside
+    * [[fit]]'s anonymous `DiffFunction` would capture that instance and
+    * fail serialization. */
+  type Pass = (RDD[(Double, Double, Array[Double])], Broadcast[Array[Double]])
+    => (Double, Array[Double])
+
+  /** The training discipline every gradient family shares — the
+    * reference's one `nnTrainer` loop, with the family supplying only
+    * its architecture:
+    *
+    *   - rows are (`label`, weight, `dataCol`) — the weight is
+    *     `weightCol` (the M13 per-row weight, built with
+    *     [[Trainer.subtypeWeightCol]]) or 1.0 — persisted once for the
+    *     whole fit and released however it ends;
+    *   - [[windowStats]] gives the corpus-global z-scaling (mean, std)
+    *     over every input value (UNWEIGHTED: weighting steers the loss,
+    *     not the input normalization, the MLlib standardization
+    *     contract), the common data length, and the weight sum. A
+    *     training set with no input value (no rows, or only empty
+    *     arrays), or whose weight sum is not positive finite, fails
+    *     here, before any family shape check;
+    *   - `model(mean, std, length)` runs the family's shape checks and
+    *     returns its gradient [[Pass]] and how to unpack the solution;
+    *   - the objective is Σ loss / Σ weight plus ½·`regParam`·p² over
+    *     the entries `isWeight` marks (weights, never biases). Summing
+    *     1.0s is exact, so all-1.0 weights reproduce the unweighted
+    *     model bit-exactly (the M13 identity the family specs pin);
+    *   - breeze LBFGS (m = 10, tolerance 1e-7) from `init`, one
+    *     broadcast of the parameter vector per evaluation. */
+  private[ml] def fit[M](frame: DataFrame, dataCol: String,
+      weightCol: Option[String], init: Array[Double],
+      isWeight: Array[Boolean], regParam: Double, maxIter: Int)(
+      model: (Double, Double, Int) => (Pass, Array[Double] => M)): M = {
+    import breeze.linalg.{DenseVector => BDV}
+    val spark = frame.sparkSession
+    import spark.implicits._
+    val ds = frame.select(col("label").cast("double"),
+        weightCol.map(col).getOrElse(lit(1.0)).cast("double").as("__w"),
+        col(dataCol).cast("array<double>"))
+      .as[(Double, Double, Array[Double])]
+      .rdd.persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val (sum, sumSq, cnt, len, wSum) = windowStats(ds)
+      require(cnt > 0 && wSum > 0 && !wSum.isInfinite,
+        s"training set needs at least one sample and a positive finite " +
+          s"weight sum: $cnt samples, weight sum $wSum")
+      val mean = sum / cnt
+      val varr = math.max(sumSq / cnt - mean * mean, 0.0)
+      val std = if (varr == 0.0) 1.0 else math.sqrt(varr)
+      val (pass, unpack) = model(mean, std, len)
+      val nP = init.length
+      val sc = spark.sparkContext
+      val fn = new breeze.optimize.DiffFunction[BDV[Double]] {
+        def calculate(p: BDV[Double]): (Double, BDV[Double]) = {
+          val bw = sc.broadcast(p.data.clone())
+          try {
+            val (lossSum, gradSum) = pass(ds, bw)
+            val grad = new Array[Double](nP)
+            var reg = 0.0
+            var i = 0
+            while (i < nP) {
+              grad(i) = gradSum(i) / wSum
+              if (isWeight(i)) {
+                reg += 0.5 * regParam * p.data(i) * p.data(i)
+                grad(i) += regParam * p.data(i)
+              }
+              i += 1
+            }
+            (lossSum / wSum + reg, BDV(grad))
+          } finally bw.unpersist(false)
+        }
+      }
+      val lbfgs = new breeze.optimize.LBFGS[BDV[Double]](
+        maxIter = maxIter, m = 10, tolerance = 1e-7)
+      unpack(lbfgs.minimize(fn, BDV(init)).data)
+    } finally ds.unpersist(false)
+  }
+
+  /** Batch scoring with the serve-length contract: `logit` applied to
+    * `dataCol` where its length is the trained `len`, a `raise_error`
+    * reading "`what` <length> != `trained`" everywhere else, plus the
+    * sigmoid as `p_seizure`. Pure codegen'd column work, no shuffle. A
+    * wrong-length input fails loudly instead of scoring a
+    * different-length input into a confidently wrong number (the
+    * families' `logitCol`s themselves stay permissive — the oracle
+    * queries apply them to raw fixture arrays). */
+  private[ml] def scoreChecked(df: DataFrame, dataCol: String, len: Int,
+      what: String, trained: String)(logit: Column => Column): DataFrame = {
+    val c = col(dataCol)
+    val z = when(size(c) === len, logit(c))
+      .otherwise(raise_error(concat(
+        lit(s"$what "), coalesce(size(c).cast("string"), lit("NULL")),
+        lit(s" != $trained"))).cast("double"))
+    df.withColumn("logit", z)
+      .withColumn("p_seizure", lit(1.0) / (lit(1.0) + exp(-col("logit"))))
+  }
 }

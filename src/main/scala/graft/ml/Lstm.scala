@@ -1,7 +1,6 @@
 package graft.ml
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
 
 /** A hard-gate LSTM trained IN-ENGINE — the recurrent half of the
   * round-12 verdict's "missing #2" boundary (the reference's AMBER
@@ -10,10 +9,10 @@ import org.apache.spark.sql.functions._
   * architecture is a per-row pure function (forward pass = ONE native
   * Catalyst expression, codegen'd, no UDF in the batch path) and
   * training is distributed first-order optimization — breeze LBFGS on
-  * the driver over a loss/gradient computed as one `treeAggregate`
-  * BPTT pass per evaluation. Driver state is the parameter vector
-  * (4H + 4H² + 5H + 1 doubles); no training row ever reaches the
-  * driver.
+  * the driver over a loss/gradient computed as one distributed BPTT
+  * pass per evaluation ([[DetAgg.fit]]). Driver state is the
+  * parameter vector (4H + 4H² + 5H + 1 doubles); no training row ever
+  * reaches the driver.
   *
   * Architecture (single recurrent layer over the scalar magnitude
   * series, the in-engine boundary of the reference's stacked
@@ -146,15 +145,16 @@ object Lstm {
       win, m.nUnits, m.wx.toSeq, m.wh.toSeq, m.b.toSeq, m.dense.toSeq,
       m.bias, m.mean, m.std)
 
-  /** One distributed loss/gradient evaluation: a `treeAggregate` BPTT
-    * pass over `(label, window)` rows against the broadcast parameter
+  /** One distributed loss/gradient evaluation: a BPTT pass over
+    * `(label, weight, window)` rows against the broadcast parameter
     * vector. Piecewise-linear gates make every local derivative exact:
     * hardSig' is 0.25 strictly inside (0,1) post-activation and 0 at
     * the clamps; hardTanh' is 1 strictly inside (-1,1) and 0 at the
     * clamps (the boundary points are measure-zero and get the
     * subgradient 0, same convention as ReLU in [[Cnn]]).
-    * Top-level method so executor lambdas capture only arguments. */
-  private def gradientPass(
+    * Top-level method so executor lambdas capture only arguments;
+    * LstmSpec's finite-difference check drives it directly. */
+  private[graft] def gradientPass(
       ds: org.apache.spark.rdd.RDD[(Double, Double, Array[Double])],
       bw: org.apache.spark.broadcast.Broadcast[Array[Double]],
       hN: Int, mean: Double, std: Double)
@@ -279,121 +279,52 @@ object Lstm {
       }, nP)
   }
 
-  /** Distributed training: breeze LBFGS where each loss/gradient
-    * evaluation is one `treeAggregate` BPTT pass over `(label,
-    * window)` rows. L2 on wx/wh/dense (not the biases). Forget-gate
-    * bias initialized to +1 (the standard LSTM trick — start with a
-    * remembering cell so gradients reach early timesteps).
-    * Deterministic: seeded init. Input frame: `label` (0/1 double) +
-    * `window` (`array<double>`, all the same length).
+  /** Distributed training through [[DetAgg.fit]], the discipline
+    * every gradient family shares, one BPTT pass per evaluation.
+    * L2 on wx/wh/dense (not the biases). Forget-gate bias initialized
+    * to +1 (the standard LSTM trick — start with a remembering cell so
+    * gradients reach early timesteps). Deterministic: seeded init.
+    * Input frame: `label` (0/1 double) + `window` (`array<double>`, all
+    * the same length) + the optional M13 `weightCol`.
     *
     * Expect occasional "Line search zoom failed → Resetting history"
     * log lines from breeze: the hard gates make the objective
     * piecewise-smooth, and Wolfe line searches can stall exactly on a
     * gate kink. LBFGS resets its curvature history and keeps
     * descending — LstmSpec's planted-corpus gate passes through these
-    * resets; they are noise, not divergence.
-    *
-    * `weightCol` (M13, the reference's `subtypeWeights` knob applied to
-    * the recurrent family): an optional per-row positive weight
-    * multiplying that row's loss and gradient; the objective normalizes
-    * by the WEIGHT SUM, so all-1.0 weights reproduce the unweighted
-    * model bit-exactly. Build it with [[Trainer.subtypeWeightCol]].
-    * The z-scaling stats stay unweighted (same contract as
-    * [[Cnn.train]]). */
+    * resets; they are noise, not divergence. */
   def train(windows: DataFrame, cfg: Config = Config(),
             weightCol: Option[String] = None): LstmModel = {
-    import breeze.linalg.{DenseVector => BDV}
-    val spark = windows.sparkSession
-    import spark.implicits._
-    val wCol = weightCol.map(col).getOrElse(lit(1.0))
-    val ds = windows.select(col("label").cast("double"),
-        wCol.cast("double").as("__w"),
-        col("window").cast("array<double>"))
-      .as[(Double, Double, Array[Double])]
-      .rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // Stats + weight-sum partials per partition, combined in
-      // partition-index order (DetAgg) — same determinism reasoning as
-      // [[Cnn.train]].
-      val (sum, sumSq, cnt, wLen, wSum) = DetAgg.windowStats(ds)
-      val mean = sum / cnt
-      val varr = math.max(sumSq / cnt - mean * mean, 0.0)
-      val std = if (varr == 0.0) 1.0 else math.sqrt(varr)
-      val hN = cfg.nUnits
-      val nP = nParams(hN)
-      // Objective normalizer: the weight sum (== row count when
-      // unweighted — summing 1.0s is exact integer arithmetic).
-      val nRows = wSum
-      require(nRows > 0 && !nRows.isNaN && !nRows.isInfinite,
-        s"weight sum must be positive finite: $nRows")
-      val sc = spark.sparkContext
-
-      val fn = new breeze.optimize.DiffFunction[BDV[Double]] {
-        def calculate(p: BDV[Double]): (Double, BDV[Double]) = {
-          val bw = sc.broadcast(p.data.clone())
-          try {
-            val (lossSum, gradSum) = gradientPass(ds, bw, hN, mean, std)
-            val grad = new Array[Double](nP)
-            var reg = 0.0
-            var i = 0
-            while (i < nP) {
-              grad(i) = gradSum(i) / nRows
-              val isWeight = i < oB(hN) || (i >= oDv(hN) && i < oBias(hN))
-              if (isWeight) {
-                reg += 0.5 * cfg.regParam * p.data(i) * p.data(i)
-                grad(i) += cfg.regParam * p.data(i)
-              }
-              i += 1
-            }
-            (lossSum / nRows + reg, BDV(grad))
-          } finally bw.unpersist(false)
-        }
-      }
-
-      val rnd = new scala.util.Random(cfg.seed)
-      val init = new Array[Double](nP)
-      var i = 0
-      while (i < oB(hN)) { init(i) = rnd.nextGaussian() * 0.3; i += 1 }
-      // forget-gate biases (+1); others stay 0
-      (0 until hN).foreach(u => init(oB(hN) + hN + u) = 1.0)
-      (0 until hN).foreach(u => init(oDv(hN) + u) = rnd.nextGaussian() * 0.3)
-      val lbfgs = new breeze.optimize.LBFGS[BDV[Double]](
-        maxIter = cfg.maxIter, m = 10, tolerance = 1e-7)
-      val sol = lbfgs.minimize(fn, BDV(init)).data
-      LstmModel(hN, wLen,
-        wx = sol.slice(oWx(hN), oWh(hN)),
-        wh = sol.slice(oWh(hN), oB(hN)),
-        b = sol.slice(oB(hN), oDv(hN)),
-        dense = sol.slice(oDv(hN), oBias(hN)),
-        bias = sol(oBias(hN)), mean = mean, std = std)
-    } finally ds.unpersist(false)
+    val hN = cfg.nUnits
+    val nP = nParams(hN)
+    val rnd = new scala.util.Random(cfg.seed)
+    val init = new Array[Double](nP)
+    var i = 0
+    while (i < oB(hN)) { init(i) = rnd.nextGaussian() * 0.3; i += 1 }
+    // forget-gate biases (+1); others stay 0
+    (0 until hN).foreach(u => init(oB(hN) + hN + u) = 1.0)
+    (0 until hN).foreach(u => init(oDv(hN) + u) = rnd.nextGaussian() * 0.3)
+    val isWeight = Array.tabulate(nP)(i =>
+      i < oB(hN) || (i >= oDv(hN) && i < oBias(hN)))
+    DetAgg.fit(windows, "window", weightCol, init, isWeight,
+        cfg.regParam, cfg.maxIter) { (mean, std, len) =>
+      ((ds, bw) => gradientPass(ds, bw, hN, mean, std),
+       sol => LstmModel(hN, len,
+         wx = sol.slice(oWx(hN), oWh(hN)),
+         wh = sol.slice(oWh(hN), oB(hN)),
+         b = sol.slice(oB(hN), oDv(hN)),
+         dense = sol.slice(oDv(hN), oBias(hN)),
+         bias = sol(oBias(hN)), mean = mean, std = std))
+    }
   }
 
-  /** Exposed for LstmSpec's finite-difference gradient check — the
-    * distributed BPTT against numeric differentiation of the forward
-    * loss, the only honest gate on hand-written recurrence calculus. */
-  private[graft] def gradientPassForTest(
-      ds: org.apache.spark.rdd.RDD[(Double, Double, Array[Double])],
-      bw: org.apache.spark.broadcast.Broadcast[Array[Double]],
-      hN: Int, mean: Double, std: Double): (Double, Array[Double]) =
-    gradientPass(ds, bw, hN, mean, std)
-
-  /** Batch scoring: per-row logit + probability over a window column —
-    * pure codegen'd column work, no shuffle. The serve-time window
-    * contract is enforced HERE, same as [[forward]]'s require
-    * ([[logitCol]] stays permissive for the ml4 oracle): a
-    * wrong-length window fails loudly, never a silently-wrong score
-    * over a mismatched recurrence length. */
+  /** Batch scoring: per-row logit + probability over a window column,
+    * with the serve-time window contract of [[forward]]'s require
+    * ([[DetAgg.scoreChecked]]). */
   def scoreWindows(m: LstmModel, windows: DataFrame,
-                   winCol: String = "window"): DataFrame = {
-    val z = when(size(col(winCol)) === m.window, logitCol(m, col(winCol)))
-      .otherwise(raise_error(concat(
-        lit("window "), coalesce(size(col(winCol)).cast("string"), lit("NULL")),
-        lit(s" != trained window ${m.window}"))).cast("double"))
-    windows.withColumn("logit", z)
-      .withColumn("p_seizure", lit(1.0) / (lit(1.0) + exp(-col("logit"))))
-  }
+                   winCol: String = "window"): DataFrame =
+    DetAgg.scoreChecked(windows, winCol, m.window, "window",
+      s"trained window ${m.window}")(logitCol(m, _))
 
   /** The LSTM as a replay scorer closure — same unit contract as
     * [[Cnn.scorer]]: trains directly on the buffer's window (G), no

@@ -475,12 +475,13 @@ object LstmStack {
     * through pool → layer 2 → layer 1, partials combined in
     * partition-index order ([[DetAgg.lossGrad]]). Derivative regimes
     * are exact (hard gates — see [[Lstm]]); the pool backpropagates
-    * dz·v_u/T into EVERY timestep's dh2. */
-  private def gradientPass(
+    * dz·v_u/T into EVERY timestep's dh2. LstmStackSpec's
+    * finite-difference checks drive it directly. */
+  private[graft] def gradientPass(
       ds: org.apache.spark.rdd.RDD[(Double, Double, Array[Double])],
       bw: org.apache.spark.broadcast.Broadcast[Array[Double]],
       h1N: Int, h2N: Int, mean: Double, std: Double,
-      head: String, bidir: Boolean = false, nHeads: Int = 1)
+      head: String = "mean", bidir: Boolean = false, nHeads: Int = 1)
       : (Double, Array[Double]) = {
     val nP = nParams(h1N, h2N, head, bidir, nHeads)
     val seqOp: ((Double, Array[Double]), (Double, Double, Array[Double]))
@@ -1166,98 +1167,41 @@ object LstmStack {
              else Array.emptyDoubleArray)
   }
 
-  /** Distributed training — same shape as [[Lstm.train]]: breeze LBFGS,
-    * one BPTT pass per evaluation, L2 on weight matrices (not biases),
-    * forget-gate biases of BOTH layers initialized to +1, deterministic
-    * seeded init, [[DetAgg]] combine. `weightCol` is the M13 per-row
-    * weight (see [[Lstm.train]]). */
+  /** Distributed training through [[DetAgg.fit]], the discipline
+    * every gradient family shares, one BPTT pass per evaluation: L2
+    * on the weight matrices, dense and attention weights
+    * ([[stackWeightRanges]]), never biases; forget-gate biases of BOTH
+    * layers initialized to +1; deterministic seeded init. */
   def train(windows: DataFrame, cfg: Config = Config(),
             weightCol: Option[String] = None): Lstm2Model = {
-    import breeze.linalg.{DenseVector => BDV}
-    val spark = windows.sparkSession
-    import spark.implicits._
-    val wCol = weightCol.map(col).getOrElse(lit(1.0))
-    val ds = windows.select(col("label").cast("double"),
-        wCol.cast("double").as("__w"),
-        col("window").cast("array<double>"))
-      .as[(Double, Double, Array[Double])]
-      .rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val (sum, sumSq, cnt, wLen, wSum) = DetAgg.windowStats(ds)
-      val mean = sum / cnt
-      val varr = math.max(sumSq / cnt - mean * mean, 0.0)
-      val std = if (varr == 0.0) 1.0 else math.sqrt(varr)
-      val h1N = cfg.h1; val h2N = cfg.h2
-      val attn = cfg.head == "attn"
-      val mha = cfg.head == "mha"
-      val bidir = cfg.bidir
-      require(cfg.head == "mean" || attn || mha,
-        s"unknown head '${cfg.head}'")
-      require(!mha || cfg.nHeads >= 1, s"nHeads must be >= 1: ${cfg.nHeads}")
-      val nH = if (mha) cfg.nHeads else 1
-      val nP = nParams(h1N, h2N, cfg.head, bidir, nH)
-      val nRows = wSum
-      require(nRows > 0 && !nRows.isNaN && !nRows.isInfinite,
-        s"weight sum must be positive finite: $nRows")
-      val sc = spark.sparkContext
-
-      // L2 applies to the weight matrices + dense + attention weights,
-      // never biases (ranges shared with ConvPipe via stackWeightRanges)
-      val wRanges = stackWeightRanges(h1N, h2N, cfg.head, bidir, nH)
-      def isWeight(i: Int): Boolean =
-        wRanges.exists(r => i >= r._1 && i < r._2)
-
-      val fn = new breeze.optimize.DiffFunction[BDV[Double]] {
-        def calculate(p: BDV[Double]): (Double, BDV[Double]) = {
-          val bw = sc.broadcast(p.data.clone())
-          try {
-            val (lossSum, gradSum) =
-              gradientPass(ds, bw, h1N, h2N, mean, std, cfg.head, bidir, nH)
-            val grad = new Array[Double](nP)
-            var reg = 0.0
-            var i = 0
-            while (i < nP) {
-              grad(i) = gradSum(i) / nRows
-              if (isWeight(i)) {
-                reg += 0.5 * cfg.regParam * p.data(i) * p.data(i)
-                grad(i) += cfg.regParam * p.data(i)
-              }
-              i += 1
-            }
-            (lossSum / nRows + reg, BDV(grad))
-          } finally bw.unpersist(false)
-        }
-      }
-
-      val init = stackInit(new scala.util.Random(cfg.seed),
-        h1N, h2N, cfg.head, bidir, nH)
-      val lbfgs = new breeze.optimize.LBFGS[BDV[Double]](
-        maxIter = cfg.maxIter, m = 10, tolerance = 1e-7)
-      val sol = lbfgs.minimize(fn, BDV(init)).data
-      stackUnpack(sol, 0, h1N, h2N, wLen, mean, std, cfg.head, bidir, nH)
-    } finally ds.unpersist(false)
+    val h1N = cfg.h1; val h2N = cfg.h2
+    val attn = cfg.head == "attn"
+    val mha = cfg.head == "mha"
+    val bidir = cfg.bidir
+    require(cfg.head == "mean" || attn || mha,
+      s"unknown head '${cfg.head}'")
+    require(!mha || cfg.nHeads >= 1, s"nHeads must be >= 1: ${cfg.nHeads}")
+    val nH = if (mha) cfg.nHeads else 1
+    val init = stackInit(new scala.util.Random(cfg.seed),
+      h1N, h2N, cfg.head, bidir, nH)
+    val wRanges = stackWeightRanges(h1N, h2N, cfg.head, bidir, nH)
+    val isWeight = Array.tabulate(init.length)(i =>
+      wRanges.exists(r => i >= r._1 && i < r._2))
+    DetAgg.fit(windows, "window", weightCol, init, isWeight,
+        cfg.regParam, cfg.maxIter) { (mean, std, len) =>
+      ((ds, bw) =>
+         gradientPass(ds, bw, h1N, h2N, mean, std, cfg.head, bidir, nH),
+       sol => stackUnpack(sol, 0, h1N, h2N, len, mean, std, cfg.head,
+         bidir, nH))
+    }
   }
-
-  /** Exposed for LstmStackSpec's finite-difference gradient check. */
-  private[graft] def gradientPassForTest(
-      ds: org.apache.spark.rdd.RDD[(Double, Double, Array[Double])],
-      bw: org.apache.spark.broadcast.Broadcast[Array[Double]],
-      h1N: Int, h2N: Int, mean: Double, std: Double,
-      head: String = "mean", bidir: Boolean = false, nHeads: Int = 1)
-      : (Double, Array[Double]) =
-    gradientPass(ds, bw, h1N, h2N, mean, std, head, bidir, nHeads)
 
   /** Batch scoring — fail-loud serve-time window contract, same as
     * [[Lstm.scoreWindows]]. */
   def scoreWindows(m: Lstm2Model, windows: DataFrame,
-                   winCol: String = "window"): DataFrame = {
-    val z = when(size(col(winCol)) === m.window, logitCol(m, col(winCol)))
-      .otherwise(raise_error(concat(
-        lit("window "), coalesce(size(col(winCol)).cast("string"), lit("NULL")),
-        lit(s" != trained window ${m.window}"))).cast("double"))
-    windows.withColumn("logit", z)
-      .withColumn("p_seizure", lit(1.0) / (lit(1.0) + exp(-col("logit"))))
-  }
+                   winCol: String = "window"): DataFrame =
+    DetAgg.scoreChecked(windows, winCol, m.window, "window",
+      s"trained window ${m.window}")(logitCol(m, _))
 
   /** Replay scorer closure — [[Lstm.scorer]]'s unit contract. */
   def scorer(m: Lstm2Model): Array[Double] => Double =
@@ -1277,11 +1221,10 @@ object LstmStack {
   def lstm2Family(cfg: Config = Config(),
                   subtypeWeights: Map[String, Double] = Map.empty)
       : (DataFrame => Lstm2Model, (Lstm2Model, DataFrame) => DataFrame) = {
-    val fit = (train: DataFrame) =>
-      if (subtypeWeights.isEmpty) LstmStack.train(train, cfg)
-      else LstmStack.train(
-        train.withColumn("__m13_w", Trainer.subtypeWeightCol(subtypeWeights)),
-        cfg, Some("__m13_w"))
+    val fit = (train: DataFrame) => {
+      val (t, w) = RunSequence.withSubtypeWeight(train, subtypeWeights)
+      LstmStack.train(t, cfg, w)
+    }
     val score = (m: Lstm2Model, test: DataFrame) =>
       scoreWindows(m, test)
         .select(col("eventId"), col("label"), col("p_seizure"))

@@ -1108,13 +1108,17 @@ object RunSequence {
 
   /** The fold's training frame with the M13 weight column attached
     * when `subtypeWeights` is non-empty — the shared plumbing of the
-    * weighted family constructors below. [[foldLoop]] carries `subType`
-    * into every training frame for exactly this. */
-  private def withSubtypeWeight(train: DataFrame,
+    * weighted family constructors below and of
+    * [[LstmStack.lstm2Family]]/[[ConvPipe.convPipeFamily]].
+    * [[foldLoop]] carries `subType` into every training frame for
+    * exactly this. */
+  private[ml] def withSubtypeWeight(train: DataFrame,
       subtypeWeights: Map[String, Double]): (DataFrame, Option[String]) =
     if (subtypeWeights.isEmpty) (train, None)
-    else (train.withColumn("__m13_w",
-      Trainer.subtypeWeightCol(subtypeWeights)), Some("__m13_w"))
+    else {
+      val w = "__m13_w"
+      (train.withColumn(w, Trainer.subtypeWeightCol(subtypeWeights)), Some(w))
+    }
 
   /** The CNN family for [[runWithWindows]] — [[Cnn.train]] per fold on
     * the raw-window slice, [[Cnn.scoreWindows]]' codegen'd forward pass

@@ -1,7 +1,6 @@
 package graft.ml
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
 import graft.functions.Signal
 
 /** The SPECTROGRAM-INPUT CNN — the reference's `SpecCnnModel`
@@ -18,7 +17,7 @@ import graft.functions.Signal
   * architecture is a per-row pure function (forward = ONE native
   * codegen'd expression, [[org.apache.spark.sql.graft.SpecCnn2dLogit]]),
   * training is driver LBFGS over a deterministic one-pass distributed
-  * gradient ([[DetAgg]] ordered combine), and the spectrogram extraction
+  * gradient ([[DetAgg.fit]]), and the spectrogram extraction
   * is a pure per-window function — a third BASIS for
   * [[RunSequence.runNestedBases]], extracted once per nested run exactly
   * like the features and raw-window bases.
@@ -465,99 +464,56 @@ object SpecCnn {
         }
       }, nP)
 
-  /** Distributed training over `(label, [weight], spectrogram)` rows:
-    * breeze LBFGS, one [[gradientPass]] per evaluation, weighted loss
-    * normalized by the WEIGHT SUM, L2 on conv + dense weights (not
-    * biases), seeded init — the [[Cnn.train]] contract verbatim on the
-    * spectrogram basis. Image geometry is taken from the first row's
-    * length via `nFreq`/`nSpec` args (callers have the window length and
-    * the [[Config]]; [[imageDims]] derives the shape). */
+  /** Distributed training over `(label, [weight], spectrogram)` rows
+    * through [[DetAgg.fit]], the discipline every gradient family
+    * shares: L2 on conv + dense weights (not biases), seeded init.
+    * Image geometry comes from the `nFreq`/`nSpec` args (callers have
+    * the window length and the [[Config]]; [[imageDims]] derives the
+    * shape), and every image must have that many values. */
   def train(images: DataFrame, nFreq: Int, nSpec: Int,
             cfg: Config = Config(),
             weightCol: Option[String] = None): SpecCnnModel = {
-    import breeze.linalg.{DenseVector => BDV}
-    // fail at TRAINING time on degenerate geometry: a windowSamples <
-    // specSamp yields nSpec = 0 via imageDims, every image is empty
-    // (pLen 0 == nFreq*0 passes the shape require below), and LBFGS
-    // would silently fit a bias-only model — the failure would only
-    // surface later at serving via SpecCnn2dLogit's own require
+    // name degenerate geometry at TRAINING time: a windowSamples <
+    // specSamp yields nSpec = 0 via imageDims, and every image is empty
     require(nFreq >= 1 && nSpec >= 1,
       s"degenerate spectrogram geometry nFreq=$nFreq nSpec=$nSpec — " +
         "window shorter than one spectral slice?")
-    val spark = images.sparkSession
-    import spark.implicits._
-    val wCol = weightCol.map(col).getOrElse(lit(1.0))
-    val ds = images.select(col("label").cast("double"),
-        wCol.cast("double").as("__w"),
-        col("spectrogram").cast("array<double>"))
-      .as[(Double, Double, Array[Double])]
-      .rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val (sum, sumSq, cnt, pLen, wSum) = DetAgg.windowStats(ds)
-      require(pLen == nFreq * nSpec,
-        s"image length $pLen != $nFreq*$nSpec")
-      val mean = sum / cnt
-      val varr = math.max(sumSq / cnt - mean * mean, 0.0)
-      val std = if (varr == 0.0) 1.0 else math.sqrt(varr)
-      val channels = cfg.channels
-      val (h, w) = channels.indices.foldLeft((nFreq, nSpec))((d, _) =>
-        ((d._1 + 1) / 2, (d._2 + 1) / 2))
-      val denseLen = channels.last * h * w
-      var cIn = 1
-      var nW = 0
-      channels.foreach { co => nW += co * cIn * 9 + co; cIn = co }
-      val nP = nW + denseLen + 1
-      val nRows = wSum
-      require(nRows > 0 && !nRows.isNaN && !nRows.isInfinite,
-        s"weight sum must be positive finite: $nRows")
-      val sc = spark.sparkContext
+    val channels = cfg.channels
+    val (h, w) = channels.indices.foldLeft((nFreq, nSpec))((d, _) =>
+      ((d._1 + 1) / 2, (d._2 + 1) / 2))
+    val denseLen = channels.last * h * w
+    var cIn = 1
+    var nW = 0
+    channels.foreach { co => nW += co * cIn * 9 + co; cIn = co }
+    val nP = nW + denseLen + 1
 
-      // L2 applies to conv + dense WEIGHTS only — precompute the mask
-      val isWeight = new Array[Boolean](nP)
-      var off = 0; cIn = 1
-      channels.foreach { co =>
-        (0 until co * cIn * 9).foreach(i => isWeight(off + i) = true)
-        off += co * cIn * 9 + co // biases excluded
-        cIn = co
-      }
-      (0 until denseLen).foreach(i => isWeight(off + i) = true)
+    // L2 applies to conv + dense WEIGHTS only
+    val isWeight = new Array[Boolean](nP)
+    var off = 0; cIn = 1
+    channels.foreach { co =>
+      (0 until co * cIn * 9).foreach(i => isWeight(off + i) = true)
+      off += co * cIn * 9 + co // biases excluded
+      cIn = co
+    }
+    (0 until denseLen).foreach(i => isWeight(off + i) = true)
 
-      val fn = new breeze.optimize.DiffFunction[BDV[Double]] {
-        def calculate(pv: BDV[Double]): (Double, BDV[Double]) = {
-          val bw = sc.broadcast(pv.data.clone())
-          try {
-            val (lossSum, gradSum) = gradientPass(
-              ds, bw, nFreq, nSpec, channels, mean, std, nP)
-            var reg = 0.0
-            val grad = new Array[Double](nP)
-            var i = 0
-            while (i < nP) {
-              grad(i) = gradSum(i) / nRows
-              if (isWeight(i)) {
-                reg += 0.5 * cfg.regParam * pv.data(i) * pv.data(i)
-                grad(i) += cfg.regParam * pv.data(i)
-              }
-              i += 1
-            }
-            (lossSum / nRows + reg, BDV(grad))
-          } finally bw.unpersist(false)
-        }
-      }
+    val rnd = new scala.util.Random(cfg.seed)
+    val init = new Array[Double](nP)
+    off = 0; cIn = 1
+    channels.foreach { co =>
+      (0 until co * cIn * 9).foreach(i => init(off + i) = rnd.nextGaussian() * 0.3)
+      off += co * cIn * 9 + co
+      cIn = co
+    }
+    (0 until denseLen).foreach(i => init(off + i) = rnd.nextGaussian() * 0.3)
 
-      val rnd = new scala.util.Random(cfg.seed)
-      val init = new Array[Double](nP)
-      off = 0; cIn = 1
-      channels.foreach { co =>
-        (0 until co * cIn * 9).foreach(i => init(off + i) = rnd.nextGaussian() * 0.3)
-        off += co * cIn * 9 + co
-        cIn = co
-      }
-      (0 until denseLen).foreach(i => init(off + i) = rnd.nextGaussian() * 0.3)
-      val lbfgs = new breeze.optimize.LBFGS[BDV[Double]](
-        maxIter = cfg.maxIter, m = 10, tolerance = 1e-7)
-      val sol = lbfgs.minimize(fn, BDV(init)).data
-      unpack(sol, nFreq, nSpec, channels, mean, std)
-    } finally ds.unpersist(false)
+    DetAgg.fit(images, "spectrogram", weightCol, init, isWeight,
+        cfg.regParam, cfg.maxIter) { (mean, std, len) =>
+      require(len == nFreq * nSpec, s"image length $len != $nFreq*$nSpec")
+      ((ds, bw) =>
+         gradientPass(ds, bw, nFreq, nSpec, channels, mean, std, nP),
+       sol => unpack(sol, nFreq, nSpec, channels, mean, std))
+    }
   }
 
   /** TEST SEAM: one weighted loss/gradient at a given parameter vector
@@ -581,14 +537,9 @@ object SpecCnn {
     * loudly (the serve-length contract; [[logitCol]] itself stays
     * permissive for the oracle fixtures). */
   def scoreSpectrograms(m: SpecCnnModel, images: DataFrame,
-                        imgCol: String = "spectrogram"): DataFrame = {
-    val z = when(size(col(imgCol)) === m.nFreq * m.nSpec, logitCol(m, col(imgCol)))
-      .otherwise(raise_error(concat(
-        lit("image "), coalesce(size(col(imgCol)).cast("string"), lit("NULL")),
-        lit(s" != trained ${m.nFreq}x${m.nSpec}"))).cast("double"))
-    images.withColumn("logit", z)
-      .withColumn("p_seizure", lit(1.0) / (lit(1.0) + exp(-col("logit"))))
-  }
+                        imgCol: String = "spectrogram"): DataFrame =
+    DetAgg.scoreChecked(images, imgCol, m.nFreq * m.nSpec, "image",
+      s"trained ${m.nFreq}x${m.nSpec}")(logitCol(m, _))
 
   /** The spectrogram CNN as a replay scorer closure — extraction + the
     * JVM forward twin, same unit contract as [[Cnn.scorer]] (buffer in

@@ -225,114 +225,55 @@ object TowerFusion {
     * recurrence, the fusion matrix, and the dense head; per row the
     * gradient flows dz → fusion backward → per-tower pooled-vector
     * gradients → [[LstmStack.backwardFromPooled]] → conv backward.
-    * Same training discipline as every family (breeze LBFGS, one
-    * [[DetAgg]] pass per evaluation, deterministic seeded init,
-    * driver state = one parameter vector). */
+    * Trained by [[DetAgg.fit]], the discipline every gradient family
+    * shares; the off-axis block-0 weights start at 0, get a zero
+    * gradient and no L2, so LBFGS keeps them at exactly 0. */
   def train(windows: DataFrame, cfg: TrainConfig = TrainConfig(),
             weightCol: Option[String] = None): TowerFusionModel = {
-    import breeze.linalg.{DenseVector => BDV}
-    val spark = windows.sparkSession
-    import spark.implicits._
-    val wCol = weightCol.map(col).getOrElse(lit(1.0))
-    val ds = windows.select(col("label").cast("double"),
-        wCol.cast("double").as("__w"),
-        col("window").cast("array<double>"))
-      .as[(Double, Double, Array[Double])]
-      .rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val (sum, sumSq, cnt, wLen, wSum) = DetAgg.windowStats(ds)
-      val mean = sum / cnt
-      val varr = math.max(sumSq / cnt - mean * mean, 0.0)
-      val std = if (varr == 0.0) 1.0 else math.sqrt(varr)
-      require(wLen % cfg.nTowers == 0,
-        s"input length $wLen not a multiple of ${cfg.nTowers} channels")
-      val tLen = wLen / cfg.nTowers
-      val lay = Layout(cfg)
-      val outLen = lay.shapes.foldLeft(tLen)((t, s) => (t - s._3 + 1) / 2)
-      require(outLen >= 2,
-        s"window $tLen collapses to $outLen positions through ${cfg.blocks}")
-      val nRows = wSum
-      require(nRows > 0 && !nRows.isNaN && !nRows.isInfinite,
-        s"weight sum must be positive finite: $nRows")
-      val sc = spark.sparkContext
+    val lay = Layout(cfg)
+    // L2 weight ranges: per tower, conv kernels (trainable entries
+    // only, via the mask) + channel mix + stack weight ranges; plus
+    // fuse / w1 / w2 (biases b1, b2 and the conv affine excluded)
+    val wRanges: Seq[(Int, Int)] = (0 until cfg.nTowers).flatMap { t =>
+      ConvPipe.convWeightRanges(lay.shapes, lay.towerOff(t)) ++ LstmStack
+        .stackWeightRanges(cfg.h1, cfg.h2, "mha", bidir = true, cfg.nHeads)
+        .map(r => (lay.stackOff(t) + r._1, lay.stackOff(t) + r._2))
+    } ++ Seq((lay.fuseO, lay.w1O), (lay.w1O, lay.b1O),
+      (lay.w2O, lay.b2O))
+    val isWeight = Array.tabulate(lay.nP)(i =>
+      lay.trainable(i) && wRanges.exists(r => i >= r._1 && i < r._2))
 
-      // L2 weight ranges: per tower, conv kernels (trainable entries
-      // only, via the mask) + channel mix + stack weight ranges; plus
-      // fuse / w1 / w2 (biases b1, b2 and the conv affine excluded)
-      val wRanges: Seq[(Int, Int)] = (0 until cfg.nTowers).flatMap { t =>
-        val convW = {
-          var o = lay.towerOff(t)
-          val rs = lay.shapes.map { case (ci, co, k) =>
-            val r = (o, o + co * ci * k); o += co * ci * k + 3 * co; r
-          }
-          rs :+ ((o, o + lay.shapes.last._2)) // mix
-        }
-        convW ++ LstmStack
-          .stackWeightRanges(cfg.h1, cfg.h2, "mha", bidir = true, cfg.nHeads)
-          .map(r => (lay.stackOff(t) + r._1, lay.stackOff(t) + r._2))
-      } ++ Seq((lay.fuseO, lay.w1O), (lay.w1O, lay.b1O),
-        (lay.w2O, lay.b2O))
-      def isWeight(i: Int): Boolean =
-        lay.trainable(i) && wRanges.exists(r => i >= r._1 && i < r._2)
+    val rnd = new scala.util.Random(cfg.seed)
+    val init = new Array[Double](lay.nP)
+    (0 until cfg.nTowers).foreach { t =>
+      ConvPipe.convInit(rnd, lay.shapes, init, lay.towerOff(t))
+      System.arraycopy(
+        LstmStack.stackInit(rnd, cfg.h1, cfg.h2, "mha", bidir = true,
+          cfg.nHeads),
+        0, init, lay.stackOff(t), lay.nStack)
+    }
+    (lay.fuseO until lay.w1O).foreach(i =>
+      init(i) = rnd.nextGaussian() * 0.1)
+    (lay.w1O until lay.b1O).foreach(i =>
+      init(i) = rnd.nextGaussian() * 0.3)
+    (lay.w2O until lay.b2O).foreach(i => init(i) = rnd.nextGaussian())
+    // the mask pins off-axis block-0 weights at EXACTLY 0 (the draw
+    // above keeps the rnd stream deterministic regardless of mask)
+    (0 until lay.nP).foreach(i => if (!lay.trainable(i)) init(i) = 0.0)
 
-      val fn = new breeze.optimize.DiffFunction[BDV[Double]] {
-        def calculate(p: BDV[Double]): (Double, BDV[Double]) = {
-          val bw = sc.broadcast(p.data.clone())
-          try {
-            val (lossSum, gradSum) =
-              gradientPass(ds, bw, cfg, tLen, mean, std)
-            val grad = new Array[Double](lay.nP)
-            var reg = 0.0
-            var i = 0
-            while (i < lay.nP) {
-              // masked (off-axis) entries: zero gradient, zero init —
-              // LBFGS keeps them at exactly 0
-              grad(i) = if (lay.trainable(i)) gradSum(i) / nRows else 0.0
-              if (isWeight(i)) {
-                reg += 0.5 * cfg.regParam * p.data(i) * p.data(i)
-                grad(i) += cfg.regParam * p.data(i)
-              }
-              i += 1
-            }
-            (lossSum / nRows + reg, BDV(grad))
-          } finally bw.unpersist(false)
-        }
-      }
-
-      val rnd = new scala.util.Random(cfg.seed)
-      val init = new Array[Double](lay.nP)
-      (0 until cfg.nTowers).foreach { t =>
-        var o = lay.towerOff(t)
-        lay.shapes.foreach { case (ci, co, k) =>
-          (0 until co * ci * k).foreach(j =>
-            init(o + j) = rnd.nextGaussian() * 0.3)
-          o += co * ci * k
-          o += co // conv bias 0
-          (0 until co).foreach(j => init(o + j) = 1.0) // affine scale 1
-          o += co
-          o += co // affine shift 0
-        }
-        (0 until lay.shapes.last._2).foreach(j =>
-          init(o + j) = rnd.nextGaussian() * 0.3) // mix
-        System.arraycopy(
-          LstmStack.stackInit(rnd, cfg.h1, cfg.h2, "mha", bidir = true,
-            cfg.nHeads),
-          0, init, lay.stackOff(t), lay.nStack)
-      }
-      (lay.fuseO until lay.w1O).foreach(i =>
-        init(i) = rnd.nextGaussian() * 0.1)
-      (lay.w1O until lay.b1O).foreach(i =>
-        init(i) = rnd.nextGaussian() * 0.3)
-      (lay.w2O until lay.b2O).foreach(i => init(i) = rnd.nextGaussian())
-      // the mask pins off-axis block-0 weights at EXACTLY 0 (the draw
-      // above keeps the rnd stream deterministic regardless of mask)
-      (0 until lay.nP).foreach(i => if (!lay.trainable(i)) init(i) = 0.0)
-
-      val lbfgs = new breeze.optimize.LBFGS[BDV[Double]](
-        maxIter = cfg.maxIter, m = 10, tolerance = 1e-7)
-      val sol = lbfgs.minimize(fn, BDV(init)).data
-      unpack(sol, cfg, tLen, mean, std)
-    } finally ds.unpersist(false)
+    DetAgg.fit(windows, "window", weightCol, init, isWeight,
+        cfg.regParam, cfg.maxIter) { (mean, std, len) =>
+      val (tLen, _) =
+        ConvPipe.frontShape(len, cfg.nTowers, lay.shapes, cfg.blocks)
+      ((ds, bw) => {
+         val (loss, grad) = gradientPass(ds, bw, cfg, tLen, mean, std)
+         // masked (off-axis) entries get a zero gradient
+         var i = 0
+         while (i < lay.nP) { if (!lay.trainable(i)) grad(i) = 0.0; i += 1 }
+         (loss, grad)
+       },
+       sol => unpack(sol, cfg, tLen, mean, std))
+    }
   }
 
   private def unpack(p: Array[Double], cfg: TrainConfig, tLen: Int,
@@ -355,22 +296,15 @@ object TowerFusion {
       b2 = p(lay.b2O))
   }
 
-  /** Exposed for TowerFusionSpec's finite-difference gradient check. */
-  private[graft] def gradientPassForTest(
-      ds: org.apache.spark.rdd.RDD[(Double, Double, Array[Double])],
-      bw: org.apache.spark.broadcast.Broadcast[Array[Double]],
-      cfg: TrainConfig, tLen: Int, mean: Double, std: Double)
-      : (Double, Array[Double]) =
-    gradientPass(ds, bw, cfg, tLen, mean, std)
-
   /** One composed loss/gradient evaluation: per row, every tower's
     * conv forward → stored-recurrence forward → pooled vector; the
     * fusion forward/backward on the driver-free executor path; then
     * per-tower [[LstmStack.backwardFromPooled]] seeding the conv
     * backward. Partials combine in partition-index order. (Lives in an
     * object method — a closure inside the anonymous DiffFunction would
-    * capture it and fail serialization, the ConvPipe lesson.) */
-  private def gradientPass(
+    * capture it and fail serialization, the ConvPipe lesson.)
+    * TowerFusionSpec's finite-difference check drives it directly. */
+  private[graft] def gradientPass(
       ds: org.apache.spark.rdd.RDD[(Double, Double, Array[Double])],
       bw: org.apache.spark.broadcast.Broadcast[Array[Double]],
       cfg: TrainConfig, tLen: Int, mean: Double, std: Double)

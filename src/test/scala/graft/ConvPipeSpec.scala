@@ -33,7 +33,7 @@ class ConvPipeSpec extends SparkSpec {
     p0(12 + 18 - 4) = 1.05; p0(12 + 18 - 3) = 0.95
     def evalAt(p: Array[Double]) = {
       val bw = spark.sparkContext.broadcast(p)
-      try ConvPipe.gradientPassForTest(rdd, bw, cfg, W, 0.1, 1.3)
+      try ConvPipe.gradientPass(rdd, bw, cfg, W, 0.1, 1.3)
       finally bw.unpersist(false)
     }
     val (_, grad) = evalAt(p0)
@@ -68,7 +68,7 @@ class ConvPipeSpec extends SparkSpec {
     p0(24 + 18 - 4) = 1.05; p0(24 + 18 - 3) = 0.95
     def evalAt(p: Array[Double]) = {
       val bw = spark.sparkContext.broadcast(p)
-      try ConvPipe.gradientPassForTest(rdd, bw, cfg, T, 0.1, 1.3)
+      try ConvPipe.gradientPass(rdd, bw, cfg, T, 0.1, 1.3)
       finally bw.unpersist(false)
     }
     val (_, grad) = evalAt(p0)

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators._
 
@@ -59,6 +60,26 @@ class EmptyInputSpec extends SparkSpec {
         Seq.empty[(Long, Long)].toDF("a", "b"),
         new java.io.File(dir, "z").getAbsolutePath, col("a"), col("b"), 4))
     assert(e3.getMessage.contains("empty input"))
+  }
+
+  test("gradient families: an empty or zero-length training set fails with one message") {
+    import graft.ml._
+    val trainers: Seq[(String, String, DataFrame => Any)] = Seq(
+      ("Cnn", "window", df => Cnn.train(df)),
+      ("Lstm", "window", df => Lstm.train(df)),
+      ("LstmStack", "window", df => LstmStack.train(df)),
+      ("ConvPipe", "window", df => ConvPipe.train(df)),
+      ("TowerFusion", "window", df => TowerFusion.train(df)),
+      ("SpecCnn", "spectrogram", df => SpecCnn.train(df, 25, 4)))
+    val sets = Seq("empty" -> Seq.empty[Seq[Double]],
+      "zero-length" -> Seq(Seq.empty[Double], Seq.empty[Double]))
+    for ((family, dataCol, train) <- trainers; (set, rows) <- sets) {
+      val df = rows.map(r => (1.0, r)).toDF("label", dataCol)
+      val e = intercept[IllegalArgumentException](train(df))
+      assert(e.getMessage.contains(
+        "at least one sample and a positive finite weight sum"),
+        s"$family, $set training set: ${e.getMessage}")
+    }
   }
 
   test("text analysis and packing: empty corpus -> empty, not null aggregates") {

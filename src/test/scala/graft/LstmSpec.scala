@@ -114,12 +114,12 @@ class LstmSpec extends SparkSpec {
 
     def lossAt(p: Array[Double]): Double = {
       val bw = spark.sparkContext.broadcast(p)
-      try Lstm.gradientPassForTest(rdd, bw, hN, 0.0, 1.0)._1
+      try Lstm.gradientPass(rdd, bw, hN, 0.0, 1.0)._1
       finally bw.unpersist(false)
     }
     val bw0 = spark.sparkContext.broadcast(p0)
     val (_, grad) =
-      try Lstm.gradientPassForTest(rdd, bw0, hN, 0.0, 1.0)
+      try Lstm.gradientPass(rdd, bw0, hN, 0.0, 1.0)
       finally bw0.unpersist(false)
 
     val eps = 1e-6

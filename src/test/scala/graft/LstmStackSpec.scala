@@ -143,12 +143,12 @@ class LstmStackSpec extends SparkSpec {
 
     def lossAt(p: Array[Double]): Double = {
       val bw = spark.sparkContext.broadcast(p)
-      try LstmStack.gradientPassForTest(rdd, bw, h1, h2, 0.0, 1.0)._1
+      try LstmStack.gradientPass(rdd, bw, h1, h2, 0.0, 1.0)._1
       finally bw.unpersist(false)
     }
     val bw0 = spark.sparkContext.broadcast(p0)
     val (_, grad) =
-      try LstmStack.gradientPassForTest(rdd, bw0, h1, h2, 0.0, 1.0)
+      try LstmStack.gradientPass(rdd, bw0, h1, h2, 0.0, 1.0)
       finally bw0.unpersist(false)
 
     val eps = 1e-6
@@ -235,12 +235,12 @@ class LstmStackSpec extends SparkSpec {
     val p0 = Array.fill(nP)(rnd.nextGaussian() * 0.4)
     def lossAt(p: Array[Double]): Double = {
       val bw = spark.sparkContext.broadcast(p)
-      try LstmStack.gradientPassForTest(rdd, bw, h1, h2, 0.0, 1.0, "attn")._1
+      try LstmStack.gradientPass(rdd, bw, h1, h2, 0.0, 1.0, "attn")._1
       finally bw.unpersist(false)
     }
     val bw0 = spark.sparkContext.broadcast(p0)
     val (_, grad) =
-      try LstmStack.gradientPassForTest(rdd, bw0, h1, h2, 0.0, 1.0, "attn")
+      try LstmStack.gradientPass(rdd, bw0, h1, h2, 0.0, 1.0, "attn")
       finally bw0.unpersist(false)
     val eps = 1e-6
     (0 until nP).foreach { j =>
@@ -357,13 +357,13 @@ class LstmStackSpec extends SparkSpec {
     val p0 = Array.fill(nP)(rnd.nextGaussian() * 0.4)
     def lossAt(p: Array[Double]): Double = {
       val bw = spark.sparkContext.broadcast(p)
-      try LstmStack.gradientPassForTest(rdd, bw, h1, h2, 0.0, 1.0,
+      try LstmStack.gradientPass(rdd, bw, h1, h2, 0.0, 1.0,
         "attn", bidir = true)._1
       finally bw.unpersist(false)
     }
     val bw0 = spark.sparkContext.broadcast(p0)
     val (_, grad) =
-      try LstmStack.gradientPassForTest(rdd, bw0, h1, h2, 0.0, 1.0,
+      try LstmStack.gradientPass(rdd, bw0, h1, h2, 0.0, 1.0,
         "attn", bidir = true)
       finally bw0.unpersist(false)
     val eps = 1e-6
@@ -496,13 +496,13 @@ class LstmStackSpec extends SparkSpec {
     val p0 = Array.fill(nP)(rnd.nextGaussian() * 0.4)
     def lossAt(p: Array[Double]): Double = {
       val bw = spark.sparkContext.broadcast(p)
-      try LstmStack.gradientPassForTest(rdd, bw, h1, h2, 0.0, 1.0,
+      try LstmStack.gradientPass(rdd, bw, h1, h2, 0.0, 1.0,
         "mha", bidir = true, nHeads = nHeads)._1
       finally bw.unpersist(false)
     }
     val bw0 = spark.sparkContext.broadcast(p0)
     val (_, grad) =
-      try LstmStack.gradientPassForTest(rdd, bw0, h1, h2, 0.0, 1.0,
+      try LstmStack.gradientPass(rdd, bw0, h1, h2, 0.0, 1.0,
         "mha", bidir = true, nHeads = nHeads)
       finally bw0.unpersist(false)
     val eps = 1e-6

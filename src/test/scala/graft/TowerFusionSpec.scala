@@ -124,7 +124,7 @@ class TowerFusionSpec extends SparkSpec {
     (0 until lay.nP).foreach(i => if (!lay.trainable(i)) p0(i) = 0.0)
     def evalAt(p: Array[Double]) = {
       val bw = spark.sparkContext.broadcast(p)
-      try TowerFusion.gradientPassForTest(rdd, bw, cfg, T, 0.1, 1.3)
+      try TowerFusion.gradientPass(rdd, bw, cfg, T, 0.1, 1.3)
       finally bw.unpersist(false)
     }
     val (_, grad) = evalAt(p0)
