@@ -284,7 +284,9 @@ object Run {
   // ------------------------------------------------------------ the tools
 
   /** selectData.py: filters → selected events, written as the lake's
-    * nested shape (parquet) + NDJSON (S8). */
+    * nested shape (parquet) + NDJSON (S8). The selection is pinned once
+    * in the query scope; both sinks write from it concurrently, and the
+    * row count comes from the pinned frame. */
   private def runSelect(spark: SparkSession, doc: Doc, lake: Lake,
                         outDir: String): Long = {
     val efc = ConfigBridge.eventFilters(doc)
@@ -294,12 +296,13 @@ object Run {
     val nested = nestedEvents(spark, lake)
     val selected = nested
       .join(keep, nested("id").cast("string") === col("__keep"), "left_semi")
-    val withCat =
+    val withCat = Scoped.current(
       if (selected.columns.contains("category")) selected
-      else selected.withColumn("category", lit("selected"))
-    withCat.write.mode("overwrite").parquet(s"$outDir/selected_events")
-    OsdbJson.writeEventsJson(withCat, s"$outDir/selected_events_json")
-    spark.read.parquet(s"$outDir/selected_events").count()
+      else selected.withColumn("category", lit("selected")))
+    Scoped.overlap(Seq(
+      () => withCat.write.mode("overwrite").parquet(s"$outDir/selected_events"),
+      () => OsdbJson.writeEventsJson(withCat, s"$outDir/selected_events_json")))
+    withCat.count()
   }
 
   /** flattenData.py: nested → [[Flatten.flattenedWide]] CSV (S10),
@@ -535,9 +538,6 @@ object Run {
     n
   }
 
-  /** testRunner.py runTest: config-built detector farm → replay →
-    * detection stats ([[ConfigTools.testrunnerFrame]] — cfg2's frame)
-    * + the analyzeEventResults rollup per algorithm. */
   /** `--only` narrowing shared by the farm tools (testrunner /
     * devicehr): keep entries whose name or class contains one of the
     * substrings; fail loud when no enabled entry survives. */
@@ -554,6 +554,24 @@ object Run {
     kept
   }
 
+  /** The analyzeEventResults input of [[runTestrunner]]: one row per
+    * (event, algorithm) with the event label from the type string and
+    * the prediction from the replay verdict. */
+  private[graft] def testrunnerResults(stats: DataFrame, events: DataFrame): DataFrame = {
+    val meta = events.select(col("id").cast("string").as("event_id"),
+      col("userId"), col("subType"),
+      when(typeIdCol(col("type")) === 1, 1).otherwise(0).as("label"))
+    stats.join(meta, "event_id").select(
+      col("event_id").as("eventId"), col("userId"), col("label"),
+      col("detected").cast("int").as("prediction"), col("subType"), col("alg"))
+  }
+
+  /** testRunner.py runTest: config-built detector farm → replay →
+    * detection stats ([[ConfigTools.testrunnerFrame]] — cfg2's frame)
+    * + the analyzeEventResults rollup per algorithm. The results frame
+    * (stats ⋈ event metadata) is pinned once; one
+    * [[ResultsAnalysis.analyzeEach]] pass rolls every enabled algorithm
+    * up, and it writes concurrently with the stats. */
   private def runTestrunner(spark: SparkSession, doc: Doc, lake: Lake,
                             a: Args): Long = {
     val cfg0 = ConfigBridge.testRunnerConfig(doc)
@@ -562,24 +580,15 @@ object Run {
     val modelDir = a.modelDir.getOrElse(a.lakeDir)
     val stats = Scoped.current.persist(
       ConfigTools.testrunnerFrame(cfg, replayDps(spark, lake), modelDir))
-    stats.write.mode("overwrite").parquet(s"${a.outDir}/detection_stats")
-
-    // analyzeEventResults per algorithm: event label from the type
-    // string, prediction from the replay verdict
-    val (events, _) = selectInputs(spark, lake)
-    val meta = events.select(col("id").cast("string").as("event_id"),
-      col("userId"), col("subType"),
-      when(typeIdCol(col("type")) === 1, 1).otherwise(0).as("label"))
-    val results = stats.join(meta, "event_id").select(
-      col("event_id").as("eventId"), col("userId"), col("label"),
-      col("detected").cast("int").as("prediction"), col("subType"), col("alg"))
+    // pinning the joined results fills `stats` too
+    val results = Scoped.current(
+      testrunnerResults(stats, selectInputs(spark, lake)._1))
     val algNames = cfg.algorithms.filter(_.enabled).map(_.name)
-    val analysis = algNames.map { nm =>
-      ResultsAnalysis.analyze(results.filter(col("alg") === nm))
-        .withColumn("alg", lit(nm))
-    }.reduce(_.unionByName(_))
-    analysis.coalesce(1).write.mode("overwrite")
-      .parquet(s"${a.outDir}/results_analysis")
+    Scoped.overlap(Seq(
+      () => stats.write.mode("overwrite").parquet(s"${a.outDir}/detection_stats"),
+      () => ResultsAnalysis.analyzeEach(results, "alg", algNames)
+        .coalesce(1).write.mode("overwrite")
+        .parquet(s"${a.outDir}/results_analysis")))
     stats.count()
   }
 

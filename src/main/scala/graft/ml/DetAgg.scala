@@ -2,6 +2,8 @@ package graft.ml
 
 import scala.reflect.ClassTag
 
+import breeze.linalg.{DenseVector => BDV}
+import breeze.optimize.{DiffFunction, FirstOrderMinimizer, LBFGS}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
@@ -125,12 +127,12 @@ object DetAgg {
     *     1.0s is exact, so all-1.0 weights reproduce the unweighted
     *     model bit-exactly (the M13 identity the family specs pin);
     *   - breeze LBFGS (m = 10, tolerance 1e-7) from `init`, one
-    *     broadcast of the parameter vector per evaluation. */
+    *     broadcast of the parameter vector per evaluation; an early stop
+    *     is reported ([[minimizeReported]]). */
   private[ml] def fit[M](frame: DataFrame, dataCol: String,
       weightCol: Option[String], init: Array[Double],
       isWeight: Array[Boolean], regParam: Double, maxIter: Int)(
       model: (Double, Double, Int) => (Pass, Array[Double] => M)): M = {
-    import breeze.linalg.{DenseVector => BDV}
     val spark = frame.sparkSession
     import spark.implicits._
     val ds = frame.select(col("label").cast("double"),
@@ -149,7 +151,7 @@ object DetAgg {
       val (pass, unpack) = model(mean, std, len)
       val nP = init.length
       val sc = spark.sparkContext
-      val fn = new breeze.optimize.DiffFunction[BDV[Double]] {
+      val fn = new DiffFunction[BDV[Double]] {
         def calculate(p: BDV[Double]): (Double, BDV[Double]) = {
           val bw = sc.broadcast(p.data.clone())
           try {
@@ -169,10 +171,26 @@ object DetAgg {
           } finally bw.unpersist(false)
         }
       }
-      val lbfgs = new breeze.optimize.LBFGS[BDV[Double]](
-        maxIter = maxIter, m = 10, tolerance = 1e-7)
-      unpack(lbfgs.minimize(fn, BDV(init)).data)
+      val lbfgs = new LBFGS[BDV[Double]](maxIter = maxIter, m = 10, tolerance = 1e-7)
+      unpack(minimizeReported(lbfgs, fn, BDV(init)).data)
     } finally ds.unpersist(false)
+  }
+
+  /** `lbfgs.minimize(fn, init)` that does not stop silently: when breeze
+    * stops for a reason other than convergence or its `maxIter` (it
+    * gives up after two line-search failures in a row), one warning on
+    * stderr names the iteration count and breeze's reason. The point
+    * returned is the one `minimize` returns. */
+  private[graft] def minimizeReported(lbfgs: LBFGS[BDV[Double]],
+      fn: DiffFunction[BDV[Double]], init: BDV[Double]): BDV[Double] = {
+    import FirstOrderMinimizer.{FunctionValuesConverged, GradientConverged, MaxIterations}
+    val st = lbfgs.minimizeAndReturnState(fn, init)
+    st.convergenceReason match {
+      case Some(MaxIterations | FunctionValuesConverged | GradientConverged) =>
+      case r => Console.err.println(s"[graft] LBFGS stopped after ${st.iter} " +
+        s"iterations: ${r.fold("no reason given")(_.reason)}")
+    }
+    st.x
   }
 
   /** Batch scoring with the serve-length contract: `logit` applied to

@@ -1,6 +1,6 @@
 package graft.ml
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
 
@@ -1054,11 +1054,12 @@ object RunSequence {
     * lineage and the model architecture swapped through `fit`/`score`
     * exactly like the reference's modelClass knob (nnConfig.json →
     * `cnnModel.py` vs `deepEpiCnnModel_torch.py`). The selected events
-    * and the assembled basis are pinned once in this call's scope;
-    * [[foldLoop]] then collects every fold's counts and guards in one
-    * bookkeeping round and runs the k folds concurrently, each on its
-    * own pinned training slice. `fit` sees the fold's (eventId, label,
-    * subType, features) training frame; `score` must return (eventId,
+    * are pinned and filled first, and the assembled basis is pinned
+    * lazily in this call's scope; [[foldLoop]]'s one bookkeeping round
+    * fills it while it collects every fold's counts and guards, then
+    * runs the k folds concurrently, each on its own pinned training
+    * slice. `fit` sees the fold's (eventId, label, subType, features)
+    * training frame; `score` must return (eventId,
     * label, p_seizure) for the held-out slice. Fails loudly, before any
     * fit, on an out-of-range or null fold, on a fold with no events,
     * and on fold contamination (F14). `fit` and `score` run on
@@ -1071,7 +1072,6 @@ object RunSequence {
       val ev = s.persist(selectedEvents(events, select, foldOf))
       ev.count()
       val assembled = s.persist(assembledHistory(ev, dps, cfg))
-      assembled.count()
       foldLoop(ev, assembled, cfg, "features", fit, score)
     }
   }
@@ -1101,7 +1101,6 @@ object RunSequence {
         .join(ev.select(col("srcId"), col("fold")),
           col("eventId") === col("srcId"))
         .select(col("eventId"), col("fold"), col("label"), col("window")))
-      assembled.count()
       foldLoop(ev, assembled, cfg, "window", fit, score)
     }
   }
@@ -1229,12 +1228,14 @@ object RunSequence {
     * is basis-independent.
     *
     * One bookkeeping round, then the folds. The fold-invariant
-    * [[augmentPlan]] is pinned once. Three O(k)-row aggregates are
-    * collected together in one [[overlap]] round before any fit: `ev`
-    * by fold, the plan by fold, and the F14 leak pairs by test fold
-    * (plan ids that are test-slice event ids of another fold, the
-    * [[skeletonFromEvW]] guard shape). The `ev` aggregate carries the
-    * fold-range and null-fold checks ([[foldCountsOf]]), then every
+    * [[augmentPlan]] is pinned once, lazily. Three O(k)-row aggregates
+    * are collected together in one [[overlap]] round before any fit:
+    * `ev` by fold, the plan by fold, and the F14 leak pairs by test
+    * fold (plan ids that are test-slice event ids of another fold, the
+    * [[skeletonFromEvW]] guard shape). The plan and leak aggregates
+    * scan all of the plan and of `assembled`, so this round also fills
+    * both lazy pins; neither gets a count of its own. The `ev`
+    * aggregate carries the fold-range and null-fold checks ([[foldCountsOf]]), then every
     * fold 0..k-1 must hold events and no fold may leak, so an empty
     * fold fails here instead of in MLlib's "empty dataset". With null
     * folds ruled out, each fold's training counts are the exact long
@@ -1247,10 +1248,11 @@ object RunSequence {
     * re-running the joins and their broadcasts on every pass. The pin
     * keeps the join's partition layout, so partition-seeded training
     * (the forest's bagging) sees the same rows as on the unpinned
-    * frame. Each fold then scores its held-out slice into a pinned
-    * frame and reads the A4 event metrics and ml1 AUROC off it. A
-    * failing fold's exception reaches the caller unwrapped, and every
-    * fold's scope releases its frames, on failure too. */
+    * frame. Each fold then scores its held-out slice into an eagerly
+    * pinned frame and reads the ml1 AUROC and the A4 event metrics off
+    * it concurrently. A failing fold's exception reaches the caller
+    * unwrapped, and every fold's scope releases its frames, on failure
+    * too. */
   private def foldLoop[M](ev: DataFrame, assembled: DataFrame,
                           cfg: Config, dataCol: String,
                           fit: DataFrame => M,
@@ -1259,7 +1261,6 @@ object RunSequence {
     val folds = if (foldsToRun.nonEmpty) foldsToRun else 0 until cfg.k
     Materialize.scoped { s =>
       val plan = s.persist(augmentPlan(ev, cfg))
-      plan.count()
       // a plan id that is a test-slice event id of another fold leaks
       // into that fold's training slice: count the pairs by test fold
       val leaks = plan.select(col("id"), col("fold").as("trFold"))
@@ -1299,10 +1300,11 @@ object RunSequence {
             .select(col("augId").as("eventId"), col("label"),
               col("subType"), col(dataCol)))
           val model = fit(train)
-          val scored = sf.persist(score(model, assembled.filter(col("fold") === f)))
-          val auroc = Trainer.auroc(scored)
-          val m = Curate.eventLevelMetrics(
-            scored, "eventId", "p_seizure", "label").head()
+          val scored = sf(score(model, assembled.filter(col("fold") === f)))
+          val Seq(auroc: Double, m: Row) = overlap(Seq[() => Any](
+            () => Trainer.auroc(scored),
+            () => Curate.eventLevelMetrics(
+              scored, "eventId", "p_seizure", "label").head()))
           FoldResult(f,
             nTrainEvents = evC.totNe - evC.ne.getOrElse(f.toLong, 0L),
             nTrainAugEvents = planC.totNe - planC.ne.getOrElse(f.toLong, 0L),

@@ -5,6 +5,7 @@ import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
+import graft.Scoped.Materialize
 import graft.functions.EpochFeatures
 import graft.operators.FeatureExtract.EpochRow
 
@@ -480,33 +481,35 @@ object Trainer {
       .agg(count(lit(1)).as("n"), sum(col(labelCol).cast("double")).as("npos"))
       .select(col("s").cast("double"), col("n"), col("npos"))
       .as[(Double, Long, Double)]
-    val ranged = byScore.repartitionByRange(col("s"))
-      .sortWithinPartitions("s")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // bounded collect: per-partition ROW-WEIGHT subtotals, O(partitions)
-    // — the shared two-phase-rank core ([[graft.operators.TwoPhaseRank]];
-    // one global group, weight = the tie group's row count n)
-    val (offsets, _) = graft.operators.TwoPhaseRank
-      .prefixOffsets[(Double, Long, Double)](ranged, _ => "", _._2)
-    val bOff = spark.sparkContext.broadcast(offsets)
-    val (rankSumPos, nPos, nAll) = ranged.rdd
-      .mapPartitionsWithIndex { (pid, it) =>
-        var cum = bOff.value.getOrElse((pid, ""), 0L)
-        var rs = 0.0; var np = 0.0; var na = 0L
-        it.foreach { case (_, n, npos) =>
-          cum += n
-          rs += (cum - (n - 1) / 2.0) * npos
-          np += npos; na += n
+    // the range table is pinned for the offsets job and the rank pass,
+    // and the offsets broadcast lives only for the pass: both are freed
+    // however the jobs end
+    val (rankSumPos, nPos, nAll) = Materialize.scoped { s =>
+      val ranged = s.persist(byScore.repartitionByRange(col("s"))
+        .sortWithinPartitions("s"))
+      // bounded collect: per-partition ROW-WEIGHT subtotals, O(partitions)
+      // — the shared two-phase-rank core ([[graft.operators.TwoPhaseRank]];
+      // one global group, weight = the tie group's row count n)
+      val (offsets, _) = graft.operators.TwoPhaseRank
+        .prefixOffsets[(Double, Long, Double)](ranged, _ => "", _._2)
+      val bOff = spark.sparkContext.broadcast(offsets)
+      try ranged.rdd
+        .mapPartitionsWithIndex { (pid, it) =>
+          var cum = bOff.value.getOrElse((pid, ""), 0L)
+          var rs = 0.0; var np = 0.0; var na = 0L
+          it.foreach { case (_, n, npos) =>
+            cum += n
+            rs += (cum - (n - 1) / 2.0) * npos
+            np += npos; na += n
+          }
+          Iterator.single((rs, np, na))
         }
-        Iterator.single((rs, np, na))
-      }
-      .fold((0.0, 0.0, 0L)) { case ((a1, b1, c1), (a2, b2, c2)) =>
-        (a1 + a2, b1 + b2, c1 + c2)
-      }
-    ranged.unpersist(false)
-    // the fold above is the only consumer — free the executor copies
-    // (unpersist, not destroy: harmless if the lineage ever re-runs)
-    bOff.unpersist(false)
+        .fold((0.0, 0.0, 0L)) { case ((a1, b1, c1), (a2, b2, c2)) =>
+          (a1 + a2, b1 + b2, c1 + c2)
+        }
+      // unpersist, not destroy: harmless if the lineage ever re-runs
+      finally bOff.unpersist(false)
+    }
     require(nAll > 0, "AUROC needs a non-empty scored frame")
     val nNeg = nAll - nPos
     require(nPos > 0 && nNeg > 0, "AUROC needs both classes present")

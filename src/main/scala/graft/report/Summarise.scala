@@ -738,9 +738,13 @@ object Summarise {
     * rendered index/user shards + the driver's bounded category TOC.
     * `nested` supplies the index metadata (the cheap shape — pass
     * arrays=false fixtures / projected scans); `dps` supplies the
-    * per-event series. Returns the page-metadata table (persisted — the
-    * side-effecting render is forced exactly once here; re-running an
-    * action on the result reads the cache, not the renderer). The
+    * per-event series. The event pages, the index shards and the user
+    * shards write disjoint files and none reads another's output, so
+    * they render in one [[Scoped.overlap]] round; the TOC is written
+    * after all three, so it never links a page or shard that is not
+    * there. Returns the page-metadata table (persisted —
+    * the side-effecting render is forced exactly once here; re-running
+    * an action on the result reads the cache, not the renderer). The
     * persist pins into the query scope ([[Scoped.current]]) and is
     * released with it; the index and shard tables are released before
     * this returns. */
@@ -757,17 +761,20 @@ object Summarise {
     // collected the whole metadata table here).
     val pages = Scoped.current.persist(writeEventPages(dps, outDir, skip = skip)
       .toDF("eventId", "path", "nBytes"))
-    pages.count()
     // the index, range and shard tables live in an inner scope: the
-    // shard writers pin into it, and it frees them before the TOC is
-    // written
+    // shard writers pin into it (overlap tasks inherit it), and it
+    // frees them before the TOC is written
     val (totals, nUserShards) = Scoped.query {
       val idx = Scoped.current.persist(indexSummary(nested)
         .select(col("category"), col("id"), col("userId"),
           col("type").as("typeStr"), col("subType"), col("n_dp").as("nDp"))
         .as[IdxRow])
-      val (idxShards, totals) = writeIndexShards(idx, outDir, pageSize)
-      val (_, nUserShards) = writeUserShards(idx, outDir, pageSize)
+      val Seq(_, (idxShards: Dataset[IndexShard] @unchecked,
+                  totals: Map[String, Long] @unchecked),
+              (_, nUserShards: Long)) = Scoped.overlap(Seq[() => Any](
+        () => pages.count(),
+        () => writeIndexShards(idx, outDir, pageSize),
+        () => writeUserShards(idx, outDir, pageSize)))
       // verification is a distributed aggregate over the (persisted)
       // shard metadata — shard-count + row-sum — never a localized Seq
       val idxStats = idxShards.agg(count(lit(1)), sum(col("nRows"))).head()

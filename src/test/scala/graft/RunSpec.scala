@@ -88,6 +88,35 @@ class RunSpec extends SparkSpec {
       .isin("user_tpr", "user_far")).count() > 0)
   }
 
+  test("testrunner: results_analysis over two algorithms equals the per-algorithm definition") {
+    import org.apache.spark.sql.functions._
+    val tmp = Files.createTempDirectory("graft_run_")
+    val cfg = resourceToFile("/osdb/testConfig.json", tmp)
+    val algs = Seq("OSD_flap", "OSD_no_flap")
+    val out = tmp.resolve("out").toString
+    Run.run(spark, Run.Args("testrunner", cfg, sf, out, only = Seq("osdAlg.OsdAlg")))
+    val stats = spark.read.parquet(s"$out/detection_stats")
+    val results = Run.testrunnerResults(stats, MlQueries.cfg1Inputs(spark, sf)._1)
+    assert(results.select("alg").distinct().collect().map(_.getString(0)).toSet == algs.toSet)
+    val ana = spark.read.parquet(s"$out/results_analysis")
+    assert(ResultsAnalysisOracle.rows(ana) ==
+      ResultsAnalysisOracle.rows(ResultsAnalysisOracle.analyzeEach(results, "alg", algs)))
+    assert(ana.filter(col("side") === "tc_combined").groupBy("alg").count()
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap == algs.map(_ -> 1L).toMap)
+
+    // a nested lake whose events carry no datapoints replays nothing:
+    // each enabled algorithm still gets its zero tc_combined row
+    val lakeDir = tmp.resolve("lake")
+    queries.OsdbFixture.nested(spark, sf)
+      .withColumn("datapoints", expr("filter(datapoints, d -> false)"))
+      .write.parquet(lakeDir.resolve("events.parquet").toString)
+    val outEmpty = tmp.resolve("outEmpty").toString
+    assert(Run.run(spark, Run.Args("testrunner", cfg, lakeDir.toString, outEmpty,
+      only = Seq("osdAlg.OsdAlg"))) == 0)
+    assert(ResultsAnalysisOracle.rows(spark.read.parquet(s"$outEmpty/results_analysis")) ==
+      algs.map(a => s"tc_combined|tc_combined|0|0|0|0.0|$a").sorted)
+  }
+
   test("select + flatten + summarise run from the shipped configs over the testdata lake") {
     val tmp = Files.createTempDirectory("graft_run_")
     val nnCfg = resourceToFile("/osdb/nnConfig.json", tmp)

@@ -148,9 +148,8 @@ class ScopedSpec extends SparkSpec {
     //     listed, so a family that persists on its own fails here;
     //   - StreamQueries' feed prep: fileFeedDrain's slice, st4's docs,
     //     st7's static profile (try … finally unpersist) and st6's
-    //     slice (unpersisted after the phase-2 chunk lands);
-    //   - Trainer.auroc's range-partitioned score table.
-    val keepsPairs = Set("DetAgg.scala", "StreamQueries.scala", "Trainer.scala")
+    //     slice (unpersisted after the phase-2 chunk lands).
+    val keepsPairs = Set("DetAgg.scala", "StreamQueries.scala")
     def files(d: java.io.File): Seq[java.io.File] =
       Option(d.listFiles).toSeq.flatten.flatMap(f =>
         if (f.isDirectory) files(f) else Seq(f).filter(_.getName.endsWith(".scala")))
