@@ -322,6 +322,19 @@ object Run {
     spark.read.option("header", "true").csv(s"$outDir/flattened_csv").count()
   }
 
+  /** The flat k-fold assignment of `runseq` and `sweep`, decided in one
+    * place (the benchmark's lake builder relies on it): testdata mode
+    * uses the cfg1 gate's exact hash (numeric ids by fixture
+    * construction — the CLI ≡ gate equality pin); real lakes hash the
+    * id STRING through xxhash64, which is both string-id-safe and
+    * parity-free (the multiplicative hash preserves id parity in its
+    * low bits, so an all-even-id corpus under an even k would put
+    * every event in fold 0). */
+  private def flatFoldOf(lake: Lake, k: Int): Column = lake match {
+    case TestdataLake(_) => Exact.knuthHash32(col("id")) % k
+    case _ => pmod(xxhash64(col("id").cast("string")), lit(k.toLong))
+  }
+
   /** runSequence.py run_sequence: the k-fold skeleton + modelClass
     * receipt ([[ConfigTools.runseqFrame]] — cfg1's frame); with
     * `--train`, additionally the per-fold fit/score loop on the
@@ -333,16 +346,7 @@ object Run {
   private def runRunseq(spark: SparkSession, doc: Doc, lake: Lake,
                         a: Args): Long = {
     val (events, dps) = selectInputs(spark, lake)
-    // fold assignment: testdata mode uses the cfg1 gate's exact hash
-    // (numeric ids by fixture construction — the CLI ≡ gate equality
-    // pin); real lakes hash the id STRING through xxhash64, which is
-    // both string-id-safe and parity-free (the multiplicative hash
-    // preserves id parity in its low bits, so an all-even-id corpus
-    // under an even k would put every event in fold 0)
-    val foldOf = lake match {
-      case TestdataLake(_) => Exact.knuthHash32(col("id")) % a.kfold
-      case _ => pmod(xxhash64(col("id").cast("string")), lit(a.kfold.toLong))
-    }
+    val foldOf = flatFoldOf(lake, a.kfold)
     def skeleton(): Long = {
       val frame = ConfigTools.runseqFrame(doc, events, dps, foldOf, a.kfold)
       frame.coalesce(1).write.mode("overwrite")
@@ -388,7 +392,11 @@ object Run {
     * dispatched candidate and its single evaluation on the untouched
     * outer test slice. Fold hashes follow ml6's dual-multiplier
     * convention on the testdata lake and seed-separated xxhash64 on
-    * real lakes. */
+    * real lakes. A null, out-of-range or empty outer fold fails loud in
+    * [[graft.ml.RunSequence.runNestedBases]]' fold validation, before
+    * any extraction or fit (testdata ids are multiples of 20, so the
+    * multiplicative outer hash leaves a fold empty under an even outer
+    * k). */
   private def runNestedSeq(spark: SparkSession, doc: Doc, lake: Lake,
       a: Args, events: DataFrame, dps: Dataset[FlatDp],
       skeletonRows: Long): Long = {
@@ -407,19 +415,6 @@ object Run {
     skel.coalesce(1).write.mode("overwrite")
       .parquet(s"${a.outDir}/nested_skeleton")
     if (a.train) {
-      // same fail-loud-before-training contract as the flat path: an
-      // empty OUTER fold trains the complementary fold on nothing
-      // (testdata ids are multiples of 20, so the gate-convention
-      // multiplicative hash is parity-degenerate under an even outer k)
-      val occupied = events.filter(select)
-        .select(outerFoldOf.cast("long").as("f")).distinct()
-        .collect().map(_.getLong(0)).toSet
-      val missing = (0L until a.nestedKfold.toLong).filterNot(occupied)
-      require(missing.isEmpty,
-        s"--train: outer fold(s) ${missing.mkString(",")} have no " +
-          s"events under --nestedKfold ${a.nestedKfold} — too few " +
-          "selected events, or a degenerate id distribution for this " +
-          "k; pick a smaller or different k")
       val cand = graft.ml.RunSequence.NestedCandidate.forModelClass(
         ConfigBridge.modelClass(doc), ConfigBridge.subtypeWeights(doc))
       val cfg = ConfigBridge.runSequenceConfig(
@@ -456,10 +451,7 @@ object Run {
                        a: Args): Long = {
     import org.json4s.JInt
     val (events, dps) = selectInputs(spark, lake)
-    val foldOf = lake match {
-      case TestdataLake(_) => Exact.knuthHash32(col("id")) % a.kfold
-      case _ => pmod(xxhash64(col("id").cast("string")), lit(a.kfold.toLong))
-    }
+    val foldOf = flatFoldOf(lake, a.kfold)
     val select = EventFilters.compile(ConfigBridge.eventFilters(doc))
     val base = ConfigBridge.runSequenceConfig(
       ConfigBridge.dataProcessing(doc), a.kfold)

@@ -110,30 +110,6 @@ object RunSequence {
       col("subType"),
       foldOf.cast("long").as("fold"))
 
-  /** Fail-loud fold-range validation for [[paramSweepWithStats]],
-    * before its extractions (the skeleton and the fold loop read the
-    * same checks off their per-fold aggregate, [[foldCountsOf]]): every
-    * fold value must land in 0..k-1. An out-of-range fold — a negative
-    * hash, a `% k` without pmod — otherwise sits in EVERY training
-    * slice and NO test slice: the F14 guard stays 0 and every metric
-    * is silently computed on wrong splits. An empty selection passes
-    * (downstream paths fail loudly on their own terms). */
-  private def requireFoldRange(ev: DataFrame, k: Int): Unit = {
-    // NULL folds checked explicitly (r19 ADVICE): min/max IGNORE nulls,
-    // but the complement algebra (train = total − own fold) silently
-    // counts null-fold rows into every train slice where the old
-    // crossJoin(folds) form dropped them — a nullable foldOf must fail
-    // loudly here, not shift metrics. Same single agg on the same frame.
-    val b = ev.agg(min("fold"), max("fold"),
-      sum(when(col("fold").isNull, 1L).otherwise(0L))).head()
-    require(b.isNullAt(2) || b.getLong(2) == 0L,
-      s"foldOf evaluated to NULL on ${if (b.isNullAt(2)) 0 else b.getLong(2)} rows " +
-        "— every fold value must land in 0..k-1")
-    if (!b.isNullAt(0))
-      require(b.getLong(0) >= 0 && b.getLong(1) < k,
-        s"foldOf out of range 0..${k - 1}: saw [${b.getLong(0)}, ${b.getLong(1)}]")
-  }
-
   /** The fold-invariant copy-augmentation plan: one row per training
     * event id (synthetic or original) with its source id and the
     * source's fold. M3 oversamples seizures ×`oversampleFactor`, M7
@@ -256,35 +232,52 @@ object RunSequence {
   }
 
   /** Per-fold (n_events, n_epochs) counts of one source frame plus the
-    * grand totals — the collected form of the skeleton's ONE per-fold
-    * aggregate per frame (r20). O(k) rows by construction (k ≤ folds),
+    * grand totals — the collected form of [[foldCountsOf]]'s ONE
+    * per-fold aggregate (r20). O(k) rows by construction (k ≤ folds),
     * the documented gate-instrument collect class. */
   private[graft] case class FoldCounts(ne: Map[Long, Long],
                                        nep: Map[Long, Long],
-                                       totNe: Long, totNep: Long)
+                                       totNe: Long, totNep: Long) {
+    /** Fail loud when a fold in 0..k-1 holds no events: its complement
+      * would train on everything and it would test on nothing. `what`
+      * names the folds ("fold(s)", "outer fold(s)"), `flag` the CLI
+      * option that sets k. */
+    def requireOccupied(k: Int, what: String, flag: String): Unit = {
+      val missing = (0L until k.toLong).filterNot(ne.contains)
+      require(missing.isEmpty,
+        s"$what ${missing.mkString(",")} have no events under $flag $k " +
+          "— too few selected events, or a degenerate id distribution " +
+          "for this k; pick a smaller or different k")
+    }
+  }
 
-  /** ONE groupBy(fold) aggregate over `src` (columns fold, nEp),
-    * collected — O(k) rows. It ALSO enforces the requireFoldRange
-    * contract (no null folds, every fold in 0..k-1) off the same
-    * collected rows, so the skeleton pays no separate guard job: the
-    * guard that used to be its own eager `.head()` per skeleton is now
-    * a free read of the aggregate the slices need anyway. Because a
+  /** THE fold validator: every k-fold path (skeleton, audit, sweep, fold
+    * loop, both nested fold columns) reads its fold column through this
+    * one function, and only it decides what a valid fold column is.
+    * ONE groupBy(fold) aggregate over `src` (columns fold, nEp — nEp is
+    * the per-row long the second count sums: epochs per event, the
+    * seizure flag in the audit, 0 where only events count), collected —
+    * O(k) rows. Off the same rows it fails loud on a NULL fold and on a
+    * fold outside 0..k-1, naming the fold column `name` (foldOf,
+    * outerFoldOf, innerFoldOf). An out-of-range or null fold — a
+    * negative hash, a `% k` without pmod, a nullable id — otherwise sits
+    * in EVERY training slice and NO test slice: the F14 guard stays 0
+    * and every metric is silently computed on wrong splits. An empty
+    * `src` passes (callers fail loudly on their own terms). Because a
     * null fold always throws, no row can fall silently out of the
-    * totals: they are Σ over the per-fold longs — exactly the old
-    * separate grand-total aggregate (count(*) = Σ per-fold counts once
-    * zero null folds is enforced; long addition is associative and
-    * exact). */
-  private def foldCountsOf(src: DataFrame, k: Int): FoldCounts = {
+    * totals: they are Σ over the per-fold longs, exact. */
+  private def foldCountsOf(src: DataFrame, k: Int,
+                           name: String = "foldOf"): FoldCounts = {
     val rows = src.groupBy(col("fold"))
       .agg(count(lit(1)).as("ne"), sum("nEp").as("nep")).collect()
     val nullNe = rows.filter(_.isNullAt(0)).map(_.getLong(1)).sum
     require(nullNe == 0L,
-      s"foldOf evaluated to NULL on $nullNe rows " +
-        "— every fold value must land in 0..k-1")
+      s"$name evaluated to NULL on $nullNe rows " +
+        s"— every fold value must land in 0..${k - 1}")
     val fs = rows.map(_.getLong(0))
     if (fs.nonEmpty)
       require(fs.min >= 0 && fs.max < k,
-        s"foldOf out of range 0..${k - 1}: saw [${fs.min}, ${fs.max}]")
+        s"$name out of range 0..${k - 1}: saw [${fs.min}, ${fs.max}]")
     def nepOf(r: org.apache.spark.sql.Row) =
       if (r.isNullAt(2)) 0L else r.getLong(2)
     FoldCounts(
@@ -292,6 +285,35 @@ object RunSequence {
       rows.map(r => r.getLong(0) -> nepOf(r)).toMap,
       rows.map(_.getLong(1)).sum,
       rows.map(nepOf).sum)
+  }
+
+  /** The k-fold bookkeeping round, shared by [[skeletonFromEvW]] and
+    * [[foldLoop]]: three O(k)-row aggregates collected together in one
+    * [[overlap]] round (guide §2.6: independent jobs back-fill each
+    * other's task tails, on a cluster as locally) — `events` (fold,
+    * nEp) by fold, `plan` (id, fold, nEp) by fold, both through
+    * [[foldCountsOf]], and the F14 leak pairs by test fold: a plan id
+    * that is a test-slice id of ANOTHER fold (`tests`: id, fold) leaks
+    * into that fold's training slice, so the matched pairs with
+    * trFold ≠ teFold are counted by teFold (one exchange, not a
+    * crossJoin(folds) k-fanout). `evCounts` skips the events aggregate
+    * when the caller already holds it (the sweep's memoized evW
+    * counts). Returns (events, plan, leaks by test fold). */
+  private def foldBookkeeping(events: DataFrame, plan: DataFrame,
+                              tests: DataFrame, k: Int,
+                              evCounts: Option[FoldCounts] = None)
+      : (FoldCounts, FoldCounts, Map[Long, Long]) = {
+    val leaks = plan.select(col("id"), col("fold").as("trFold"))
+      .join(tests.select(col("id").as("tid"), col("fold").as("teFold")),
+        col("id") === col("tid"))
+      .filter(col("trFold") =!= col("teFold"))
+      .groupBy(col("teFold")).agg(count(lit(1)))
+    val Seq(evC: FoldCounts, planC: FoldCounts,
+            leak: Map[Long, Long] @unchecked) = overlap(Seq[() => Any](
+      () => evCounts.getOrElse(foldCountsOf(events, k)),
+      () => foldCountsOf(plan, k),
+      () => leaks.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap))
+    (evC, planC, leak)
   }
 
   /** The skeleton's output schema — pinned so the driver-assembled
@@ -320,47 +342,24 @@ object RunSequence {
     * dominated by 0.6-0.7 s no-job planning gaps and ~150 ms-spaced
     * tiny jobs). The three aggregates each skeleton actually needs
     * (evW by fold, the augment plan by fold, the F14 overlap counts by
-    * test fold) are now collected as THREE O(k)-row results — submitted
-    * CONCURRENTLY (guide §2.6: independent jobs back-fill each other's
-    * task tails, on a cluster as locally) — and the slice rows are
-    * assembled on the driver with the IDENTICAL exact long arithmetic
-    * (train = total − own fold, zero rows for empty folds, guard
-    * zero-filled). Same counts off the same real distributed frames;
-    * only the k-row complement/zero-fill bookkeeping moved out of
-    * Catalyst. The fold-range guard rides the evW aggregate itself
-    * (see [[foldCountsOf]]) instead of a separate eager job. */
-  private[graft] def skeletonFromEvW(ev: DataFrame, evW: DataFrame,
-                                     cfg: Config): DataFrame =
-    skeletonFromEvW(ev, evW, cfg, None)
-
+    * test fold) are collected in the one bookkeeping round
+    * ([[foldBookkeeping]]), and the slice rows are assembled on the
+    * driver with the IDENTICAL exact long arithmetic (train = total −
+    * own fold, zero rows for empty folds, guard zero-filled). Same
+    * counts off the same real distributed frames; only the k-row
+    * complement/zero-fill bookkeeping moved out of Catalyst. The fold
+    * validation rides the evW aggregate itself ([[foldCountsOf]]); a
+    * violation throws before any slice row is assembled. */
   private[graft] def skeletonFromEvW(ev: DataFrame, evW: DataFrame,
                                      cfg: Config,
-                                     evCounts: Option[FoldCounts]): DataFrame = {
+                                     evCounts: Option[FoldCounts] = None): DataFrame = {
     val spark = ev.sparkSession
-    val plan = augmentPlan(ev, cfg)
-    val planW = plan.join(
+    val planW = augmentPlan(ev, cfg).join(
         evW.select(col("srcId").as("psrc"), col("nEp")),
         col("srcId") === col("psrc"))
-      .select(col("id"), col("srcId"), col("fold"), col("nEp"))
-    // the F14 guard as data: a (plan id = test-slice event id) pair
-    // leaks into fold f exactly when the test row's fold IS f and the
-    // plan row's fold is not — i.e. count the matched pairs with
-    // trFold ≠ teFold by teFold (same counts as the old
-    // crossJoin(folds) filter, one exchange instead of k-fanout)
-    val overlaps = planW.select(col("id"), col("fold").as("trFold"))
-      .join(evW.select(col("srcId").as("tid"), col("fold").as("teFold")),
-        col("id") === col("tid"))
-      .filter(col("trFold") =!= col("teFold"))
-      .groupBy(col("teFold")).agg(count(lit(1)).as("nOver"))
-    // three independent aggregate jobs, overlapped (§2.6). The
-    // fold-range validation (load-bearing for the complement algebra)
-    // is read off each fold aggregate; a violation still throws before
-    // any slice row is assembled.
-    val Seq(evC: FoldCounts, augC: FoldCounts,
-            over: Map[Long, Long] @unchecked) = overlap(Seq[() => Any](
-      () => evCounts.getOrElse(foldCountsOf(evW, cfg.k)),
-      () => foldCountsOf(planW, cfg.k),
-      () => overlaps.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap))
+      .select(col("id"), col("fold"), col("nEp"))
+    val (evC, augC, over) = foldBookkeeping(evW, planW,
+      evW.select(col("srcId").as("id"), col("fold")), cfg.k, evCounts)
     // driver-side assembly: identical exact long arithmetic as the old
     // aggregate plan (train = Σ_g − own(f)), identical explicit-zero
     // discipline (every fold 0..k-1 emits a row per stage), identical
@@ -438,7 +437,9 @@ object RunSequence {
     * folds the new k cannot reach in every train slice and no test
     * slice, a silently-wrong comparison frame. Sweeping the fold count
     * is [[runNested]]'s territory (where both fold expressions are
-    * explicit). */
+    * explicit). The fold column itself goes through the one fold
+    * validator ([[foldCountsOf]]: no null, nothing outside 0..k-1) on
+    * the pinned selection, before any extraction. */
   def paramSweepWithStats(events: DataFrame, dps: Dataset[FlatDp],
                           select: Column, foldOf: Column,
                           base: Config = Config(),
@@ -463,7 +464,8 @@ object RunSequence {
     // summary before the scope releases the frames.
     Materialize.scoped { s =>
       val ev = s(selectedEvents(events, select, foldOf))
-      requireFoldRange(ev, base.k)
+      // the one fold validator, before any extraction
+      foldCountsOf(ev.select(col("fold"), lit(0L).as("nEp")), base.k)
       // The evW frame only needs the per-event SURVIVOR COUNT of the
       // history stage, and addHistory's drop depends solely on row
       // position within the event (deepest lag null ⇔ first historyN−1
@@ -659,45 +661,25 @@ object RunSequence {
       // stage rows assembled on the driver with the identical exact
       // long arithmetic — the r19 form's 4-branch union of tiny
       // aggregates was Catalyst-analysis and stage-job bound, not data
-      // bound (the skeletonFromEvW finding). The fail-loud
-      // fold-range/null guard (r19 ADVICE — LOAD-BEARING for the
-      // complement subtraction) now rides the collected ev aggregate
-      // itself instead of a separate eager job.
-      def classCounts(src: DataFrame) = src.groupBy(col("fold"))
-        .agg(sum(when(col("type") === 1, 1L).otherwise(0L)).as("nsz"),
-          sum(when(col("type") =!= 1, 1L).otherwise(0L)).as("noth"),
-          count(lit(1)).as("cnt"))
-        .collect()
-        .map(r => (if (r.isNullAt(0)) None else Some(r.getLong(0)),
-          if (r.isNullAt(1)) 0L else r.getLong(1),
-          if (r.isNullAt(2)) 0L else r.getLong(2),
-          r.getLong(3))).toSeq
+      // bound (the skeletonFromEvW finding). Both aggregates go through
+      // the one fold validator, [[foldCountsOf]], with the seizure flag
+      // as its summed column: n_seizure is its nep and n_other = ne −
+      // nep (type is never null — typeIdCol maps every value to 0/1/2).
+      def seizures(src: DataFrame) = foldCountsOf(src.select(col("fold"),
+        when(col("type") === 1, 1L).otherwise(0L).as("nEp")), cfg.k)
       val Seq(evC, augC) =
-        overlap(Seq(() => classCounts(ev), () => classCounts(planT)))
-      // requireFoldRange's contract off the same collected aggregate
-      val nullCnt = evC.collect { case (None, _, _, c) => c }.sum
-      require(nullCnt == 0L,
-        s"foldOf evaluated to NULL on $nullCnt rows " +
-          "— every fold value must land in 0..k-1")
-      val seen = evC.flatMap(_._1)
-      if (seen.nonEmpty)
-        require(seen.min >= 0 && seen.max < cfg.k,
-          s"foldOf out of range 0..${cfg.k - 1}: saw [${seen.min}, ${seen.max}]")
-      def szOf(c: Seq[(Option[Long], Long, Long, Long)], f: Long) =
-        c.collect { case (Some(`f`), s, _, _) => s }.sum
-      def othOf(c: Seq[(Option[Long], Long, Long, Long)], f: Long) =
-        c.collect { case (Some(`f`), _, o, _) => o }.sum
-      val (totSz, totOth) = (evC.map(_._2).sum, evC.map(_._3).sum)
-      val (aTotSz, aTotOth) = (augC.map(_._2).sum, augC.map(_._3).sum)
+        overlap(Seq(() => seizures(ev), () => seizures(planT)))
+      def row(f: Long, stage: String, ne: Long, nsz: Long) =
+        org.apache.spark.sql.Row(f, stage, nsz, ne - nsz)
+      def g(m: Map[Long, Long], f: Long) = m.getOrElse(f, 0L)
       val fs = 0L.until(cfg.k.toLong)
       val rows: Seq[org.apache.spark.sql.Row] =
-        org.apache.spark.sql.Row(-1L, "selected", totSz, totOth) +:
-        (fs.map(f => org.apache.spark.sql.Row(f, "train",
-          totSz - szOf(evC, f), totOth - othOf(evC, f))) ++
-         fs.map(f => org.apache.spark.sql.Row(f, "train_aug",
-          aTotSz - szOf(augC, f), aTotOth - othOf(augC, f))) ++
-         fs.map(f => org.apache.spark.sql.Row(f, "test",
-          szOf(evC, f), othOf(evC, f))))
+        row(-1L, "selected", evC.totNe, evC.totNep) +:
+        (fs.map(f => row(f, "train",
+          evC.totNe - g(evC.ne, f), evC.totNep - g(evC.nep, f))) ++
+         fs.map(f => row(f, "train_aug",
+          augC.totNe - g(augC.ne, f), augC.totNep - g(augC.nep, f))) ++
+         fs.map(f => row(f, "test", g(evC.ne, f), g(evC.nep, f))))
       val schema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("fold",
           org.apache.spark.sql.types.LongType, nullable = false),
@@ -844,11 +826,15 @@ object RunSequence {
     * both bases are in play + outerK × |candidates| × innerK training
     * passes — training, not extraction, stays the dominant term.
     *
-    * Fold-column contract (fail-loud, not silent): `outerFoldOf` must
+    * Fold-column contract (fail-loud, not silent, checked by
+    * [[foldCountsOf]] before any extraction): `outerFoldOf` must
     * evaluate into 0..outerK-1 and `innerFoldOf` into 0..cfg.k-1 on
-    * every selected event — an out-of-range inner fold would otherwise
-    * leave those events in EVERY inner training slice and no validation
-    * slice, silently skewing candidate selection. */
+    * every selected event, never NULL, and every outer fold must hold
+    * events. An out-of-range or null inner fold would otherwise leave
+    * those events in EVERY inner training slice and no validation
+    * slice, silently skewing candidate selection; a null outer fold
+    * would put its events in every outer training slice, never tested
+    * and never in an inner CV. */
   def runNestedBases(events: DataFrame, dps: Dataset[FlatDp], select: Column,
                      outerFoldOf: Column, innerFoldOf: Column,
                      outerK: Int, cfg: Config = Config(),
@@ -880,15 +866,16 @@ object RunSequence {
         outerFoldOf.cast("long").as("ofold"),
         innerFoldOf.cast("long").as("ifold")))
       evAll.count()
-      // fail-loud fold-range validation (one agg over the persisted frame)
-      val b = evAll.agg(min("ofold"), max("ofold"), min("ifold"), max("ifold"))
-        .head()
-      require(!b.isNullAt(0), "nested selection over an empty selected corpus")
-      require(b.getLong(0) >= 0 && b.getLong(1) < outerK,
-        s"outerFoldOf out of range 0..${outerK - 1}: saw [${b.getLong(0)}, ${b.getLong(1)}]")
-      require(b.getLong(2) >= 0 && b.getLong(3) < cfg.k,
-        s"innerFoldOf out of range 0..${cfg.k - 1} (inner fold count = cfg.k): " +
-          s"saw [${b.getLong(2)}, ${b.getLong(3)}]")
+      // both fold columns through the one fold validator, concurrently;
+      // then no outer fold may be empty (its complement would train on
+      // everything, and it would test on nothing) — all before any
+      // extraction or fit
+      def foldsOf(c: String, k: Int, name: String) = () => foldCountsOf(
+        evAll.select(col(c).as("fold"), lit(0L).as("nEp")), k, name)
+      val Seq(outerC, _) = overlap(Seq(foldsOf("ofold", outerK, "outerFoldOf"),
+        foldsOf("ifold", cfg.k, "innerFoldOf")))
+      require(outerC.totNe > 0, "nested selection over an empty selected corpus")
+      outerC.requireOccupied(outerK, "outer fold(s)", "--nestedKfold")
       val inUse = candidates.map(_.basis).distinct
       // the spectrogram basis DERIVES from the window basis: when both
       // are in play, build spec from the PERSISTED window frame so the
@@ -1228,14 +1215,14 @@ object RunSequence {
     * is basis-independent.
     *
     * One bookkeeping round, then the folds. The fold-invariant
-    * [[augmentPlan]] is pinned once, lazily. Three O(k)-row aggregates
-    * are collected together in one [[overlap]] round before any fit:
-    * `ev` by fold, the plan by fold, and the F14 leak pairs by test
-    * fold (plan ids that are test-slice event ids of another fold, the
-    * [[skeletonFromEvW]] guard shape). The plan and leak aggregates
-    * scan all of the plan and of `assembled`, so this round also fills
-    * both lazy pins; neither gets a count of its own. The `ev`
-    * aggregate carries the fold-range and null-fold checks ([[foldCountsOf]]), then every
+    * [[augmentPlan]] is pinned once, lazily. [[foldBookkeeping]] — the
+    * round [[skeletonFromEvW]] runs too — collects `ev` by fold, the
+    * plan by fold, and the F14 leak pairs by test fold (plan ids that
+    * are test-slice ids of another fold, taken from `assembled`) before
+    * any fit. The plan and leak aggregates scan all of the plan and of
+    * `assembled`, so this round also fills both lazy pins; neither gets
+    * a count of its own. The `ev` aggregate is the one fold validator
+    * ([[foldCountsOf]]: no null, nothing outside 0..k-1), then every
     * fold 0..k-1 must hold events and no fold may leak, so an empty
     * fold fails here instead of in MLlib's "empty dataset". With null
     * folds ruled out, each fold's training counts are the exact long
@@ -1261,24 +1248,13 @@ object RunSequence {
     val folds = if (foldsToRun.nonEmpty) foldsToRun else 0 until cfg.k
     Materialize.scoped { s =>
       val plan = s.persist(augmentPlan(ev, cfg))
-      // a plan id that is a test-slice event id of another fold leaks
-      // into that fold's training slice: count the pairs by test fold
-      val leaks = plan.select(col("id"), col("fold").as("trFold"))
-        .join(assembled.select(col("eventId"), col("fold").as("teFold")).distinct(),
-          col("id") === col("eventId"))
-        .filter(col("trFold") =!= col("teFold"))
-        .groupBy(col("teFold")).agg(count(lit(1)))
-      def foldsOf(df: DataFrame) = foldCountsOf(df.withColumn("nEp", lit(0L)), cfg.k)
-      val Seq(evC: FoldCounts, planC: FoldCounts,
-              leak: Map[Long, Long] @unchecked) = overlap(Seq[() => Any](
-        () => foldsOf(ev.select(col("fold"))),
-        () => foldsOf(plan.select(col("fold"))),
-        () => leaks.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap))
-      val missing = (0L until cfg.k.toLong).filterNot(evC.ne.contains)
-      require(missing.isEmpty,
-        s"fold(s) ${missing.mkString(",")} have no events under --kfold " +
-          s"${cfg.k} — too few selected events, or a degenerate id " +
-          "distribution for this k; pick a smaller or different k")
+      // the test ids come from `assembled`, so the round fills its pin
+      val (evC, planC, leak) = foldBookkeeping(
+        ev.select(col("fold"), lit(0L).as("nEp")),
+        plan.withColumn("nEp", lit(0L)),
+        assembled.select(col("eventId").as("id"), col("fold")).distinct(),
+        cfg.k)
+      evC.requireOccupied(cfg.k, "fold(s)", "--kfold")
       // F14 guard: no training id (original or synthetic) may reach the
       // held-out slice — fail loud, never a silent metric skew
       folds.foreach { f =>

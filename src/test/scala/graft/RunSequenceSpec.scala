@@ -752,17 +752,38 @@ class RunSequenceSpec extends SparkSpec {
     val events = (0 until 8).map(i =>
       (s"E$i", "Seizure", "other", i % 2, i % 3))
       .toDF("id", "type", "subType", "ofold", "ifold")
+    val fits = new java.util.concurrent.atomic.AtomicInteger
     val dud = RunSequence.NestedCandidate.features[Unit]("d")((
-      (_: org.apache.spark.sql.DataFrame) => (),
+      (_: org.apache.spark.sql.DataFrame) => { fits.incrementAndGet(); () },
       (_: Unit, t: org.apache.spark.sql.DataFrame) =>
         t.select(col("eventId"), col("label"), lit(0.5).as("p_seizure"))))
-    // ifold reaches 2 but cfg.k = 2 — those events would sit in every
-    // inner training slice and no validation slice
-    val e = intercept[IllegalArgumentException](
+    def nested(outer: org.apache.spark.sql.Column,
+               inner: org.apache.spark.sql.Column) =
       RunSequence.runNestedBases(events, miniDps(Seq("E0")), lit(true),
-        col("ofold"), col("ifold"), outerK = 2,
-        RunSequence.Config(k = 2))(Seq(dud)))
-    assert(e.getMessage.contains("innerFoldOf out of range"))
+        outer, inner, outerK = 2, RunSequence.Config(k = 2))(Seq(dud))
+    val nullOnE3 = (c: String) =>
+      when(col("id") === "E3", lit(null)).otherwise(col(c))
+    // ifold reaches 2 but cfg.k = 2 — those events would sit in every
+    // inner training slice and no validation slice; a null inner fold
+    // would do the same. A null outer fold would put E3 in every outer
+    // training slice, never tested and never in an inner CV; an empty
+    // outer fold would test on nothing.
+    Seq(
+      "outer null" -> (() => nested(nullOnE3("ofold"), col("ifold") % 2)) ->
+        "outerFoldOf evaluated to NULL on 1 rows",
+      "inner null" -> (() => nested(col("ofold"), nullOnE3("ifold") % 2)) ->
+        "innerFoldOf evaluated to NULL on 1 rows",
+      "outer out of range" -> (() => nested(col("ofold") + 1, col("ifold") % 2)) ->
+        "outerFoldOf out of range 0..1: saw [1, 2]",
+      "inner out of range" -> (() => nested(col("ofold"), col("ifold"))) ->
+        "innerFoldOf out of range 0..1: saw [0, 2]",
+      "outer empty" -> (() => nested(lit(0), col("ifold") % 2)) ->
+        "outer fold(s) 1 have no events"
+    ).foreach { case ((what, run), msg) =>
+      val e = intercept[IllegalArgumentException](run())
+      assert(e.getMessage.contains(msg), s"$what: ${e.getMessage}")
+    }
+    assert(fits.get == 0, s"fit ran ${fits.get} times before the guard")
     val e2 = intercept[IllegalArgumentException](
       RunSequence.runNestedBases(events, miniDps(Seq("E0")), lit(true),
         col("ofold"), col("ifold") % 2, outerK = 2,
@@ -868,6 +889,50 @@ class RunSequenceSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("fold(s) 1 have no events"), e.getMessage)
     assert(fits.get == 0, s"fit ran ${fits.get} times before the guard")
+  }
+
+  test("every flat k-fold entry point rejects a null or out-of-range fold with the one validator's message") {
+    val cfg = RunSequence.Config(historyN = 2,
+      extract = FeatureExtract.Config(highPassHz = 0.0))
+    val dps = foldDps
+    val fits = new java.util.concurrent.atomic.AtomicInteger
+    type C = org.apache.spark.sql.Column
+    val entries = Seq[(String, C => Any)](
+      ("skeleton", (f: C) => RunSequence.skeleton(foldEvents, dps, lit(true), f, cfg)),
+      ("auditFrame", (f: C) => RunSequence.auditFrame(foldEvents, lit(true), f, cfg)),
+      ("paramSweep", (f: C) => RunSequence.paramSweep(foldEvents, dps, lit(true),
+        f, cfg, sweeps = Seq("oversampleFactor" -> Seq(3L)))),
+      ("runWith", (f: C) => RunSequence.runWith(foldEvents, dps, lit(true), f, cfg)(
+        _ => { fits.incrementAndGet(); () }, constScore)))
+    val folds = Seq(
+      when(col("id") === "F1b", lit(null)).otherwise(col("fold0")) ->
+        "foldOf evaluated to NULL on 1 rows",
+      (col("fold0") + 2) -> "foldOf out of range 0..2: saw [2, 4]")
+    for ((name, entry) <- entries; (fold, msg) <- folds) {
+      val e = intercept[IllegalArgumentException](entry(fold))
+      assert(e.getMessage.contains(msg), s"$name: ${e.getMessage}")
+    }
+    assert(fits.get == 0, s"fit ran ${fits.get} times before the guard")
+  }
+
+  test("only foldCountsOf says a fold column is NULL or out of range") {
+    import scala.jdk.CollectionConverters._
+    val phrases = Seq("evaluated to NULL", "out of range 0..")
+    val defLine = """^\s*(?:(?:private|protected|override|final|implicit)(?:\[\w+\])?\s+)*def\s+(\w+)""".r
+    def files(d: java.io.File): Seq[java.io.File] =
+      Option(d.listFiles).toSeq.flatten.flatMap(f =>
+        if (f.isDirectory) files(f) else Seq(f).filter(_.getName.endsWith(".scala")))
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"run from the repo root: ${root.getAbsolutePath}")
+    // each phrase's enclosing function: the nearest def above its line
+    val sites = (for (f <- files(root)) yield {
+      var enclosing = "<file scope>"
+      java.nio.file.Files.readAllLines(f.toPath).asScala.flatMap { line =>
+        defLine.findFirstMatchIn(line).foreach(m => enclosing = m.group(1))
+        if (phrases.exists(line.contains)) Some(s"${f.getName}:$enclosing") else None
+      }
+    }).flatten.distinct
+    assert(sites == Seq("RunSequence.scala:foldCountsOf"), sites.mkString(", "))
   }
 
   test("runWith: a failing fold surfaces unwrapped and no pinned frame leaks") {
