@@ -27,10 +27,17 @@ object Bench {
     // rounds collapsed to a node-table scan). toRdd materializes every
     // result row on the executors with zero driver transfer beyond task
     // counts — each rep now pays the declared plan's full cost.
-    def timeOne(fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    // A failed rep keeps -1 in the record; its cause goes to stderr
+    // (stdout carries only the contract lines).
+    def timeOne(name: String,
+        fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
       try Scoped.query(fn(spark, sfDir).queryExecution.toRdd.count())
-      catch { case _: Throwable => return -1.0 }
+      catch {
+        case e: Throwable =>
+          Console.err.println(s"[bench] $name failed: ${e.getClass.getName}: ${e.getMessage}")
+          return -1.0
+      }
       (System.nanoTime() - t0) / 1e9
     }
     // Streaming entries (st*) run LAST within each sweep: they leave
@@ -69,7 +76,7 @@ object Bench {
       // but every rep recomputes the declared plan.
       spark.sharedState.cacheManager.clearCache()
       val t0 = System.nanoTime()
-      val times = order.map { case (name, fn) => name -> timeOne(fn) }
+      val times = order.map { case (name, fn) => name -> timeOne(name, fn) }
       System.err.println(f"[sweep $pass] ${(System.nanoTime() - t0) / 1e9}%.1f s total")
       times
     }
@@ -83,7 +90,7 @@ object Bench {
       Seq("ml9_param_sweep", "cfg1_config_bridge").filter(filtered.contains)
     val extras: Seq[(String, Double)] = (1 to 2).flatMap { _ =>
       spark.sharedState.cacheManager.clearCache()
-      extraRepNames.map(n => n -> timeOne(filtered(n)))
+      extraRepNames.map(n => n -> timeOne(n, filtered(n)))
     }
     val repsByName: Map[String, Seq[Double]] =
       (sweeps.flatten ++ extras).groupBy(_._1)

@@ -1,13 +1,15 @@
 package graft.ml
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.types.{DataType, DoubleType}
 
 /** A 1-D convolutional network trained IN-ENGINE — the round-12
   * verdict's "missing #2" boundary (the reference's conv architectures,
   * `user_tools/nnTraining2/cnnModel.py:43-76`,
   * `deepEpiCnnModel_torch.py:249-331`) re-expressed the Spark way: the
-  * architecture is a per-row pure function (forward pass = native
-  * Catalyst column expressions, codegen'd, no UDF in the batch path)
+  * architecture is a per-row pure function (forward pass = one JVM
+  * kernel, served in batch by a native Catalyst expression inside
+  * whole-stage codegen, no UDF in the batch path)
   * and training is distributed first-order optimization — breeze LBFGS
   * on the driver over a loss/gradient computed as ONE distributed pass
   * per evaluation ([[DetAgg.fit]]), the execution shape MLlib's own
@@ -23,11 +25,11 @@ import org.apache.spark.sql.{Column, DataFrame}
   *     → ReLU → global max-pool per filter (pool_f = max(0, max_t c_f,t))
   *     → dense: logit = b + Σ_f v_f·pool_f   (sigmoid at serve time)
   *
-  * Exactness contract: [[forward]] (the JVM loop used by the streaming
-  * scorer) and [[logitCol]] (the Catalyst expression used by batch
-  * scoring and the ml3 oracle row) accumulate in the SAME order
-  * (j ascending inside a filter, filters ascending into the logit), so
-  * their doubles are bit-identical — CnnSpec pins the equality. With
+  * Exactness contract: [[forward]] (the streaming scorer's path) and
+  * [[logitCol]] (the column used by batch scoring and the ml3 oracle
+  * row) run the ONE kernel [[logit]] (j ascending inside a filter,
+  * filters ascending into the logit), so their doubles are
+  * bit-identical — CnnSpec and GraftExpressionsSpec pin it. With
   * integer inputs and integer weights every intermediate is an exact
   * integer (|values| ≪ 2^53), which is what lets the ml3 oracle gate
   * the REAL forward pass cross-engine with a plain hash compare.
@@ -68,48 +70,67 @@ object Cnn {
       regParam: Double = 1e-4,
       seed: Long = 42L)
 
-  /** Forward pass → LOGIT (pre-sigmoid), JVM loop form — the streaming
-    * scorer's hot path and [[logitCol]]'s bit-exact twin (same
-    * accumulation order; see the object docblock). */
+  /** Forward pass → LOGIT (pre-sigmoid) at the trained window — the
+    * replay scorer's path; [[logitCol]] runs the same [[logit]] kernel. */
   def forward(m: CnnModel, x: Array[Double]): Double = {
     require(x.length == m.window,
       s"window ${x.length} != trained window ${m.window}")
-    val L = x.length - m.width + 1
+    logit(m, x)
+  }
+
+  /** The one forward kernel, over any window with at least `width`
+    * samples: xs pre-scaled element-wise; every position's c_t sums
+    * its taps j ascending (the t loop runs innermost, over all
+    * positions at once); the `c > best` max fold seeded at 0.0 (ReLU
+    * folded in); filters ascending into the logit (see the object
+    * docblock). */
+  private def logit(m: CnnModel, x: Array[Double]): Double = {
+    val w = m.width
+    val xs = new Array[Double](x.length)
+    var i = 0
+    while (i < x.length) { xs(i) = (x(i) - m.mean) / m.std; i += 1 }
+    val L = x.length - w + 1
+    val cs = new Array[Double](L) // c_t of the current filter, every t
     var z = m.bias
     var f = 0
     while (f < m.nFilters) {
+      java.util.Arrays.fill(cs, m.filterBias(f))
+      var j = 0
+      while (j < w) {
+        val wj = m.filters(f * w + j)
+        var t = 0
+        while (t < L) { cs(t) += wj * xs(t + j); t += 1 }
+        j += 1
+      }
       var best = 0.0 // pool_f = max(0, max_t c_t): ReLU folded into the max
       var t = 0
-      while (t < L) {
-        var c = m.filterBias(f)
-        var j = 0
-        while (j < m.width) {
-          c += m.filters(f * m.width + j) * ((x(t + j) - m.mean) / m.std)
-          j += 1
-        }
-        if (c > best) best = c
-        t += 1
-      }
+      while (t < L) { if (cs(t) > best) best = cs(t); t += 1 }
       z += m.dense(f) * best
       f += 1
     }
     z
   }
 
+  /** [[logit]] as the column's kernel: NULL for a window shorter than
+    * the filter (nothing to convolve). */
+  private[graft] final case class Kernel(m: CnnModel)
+      extends org.apache.spark.sql.graft.ForwardKernel {
+    def dataType: DataType = DoubleType
+    def apply(x: Array[Double]): Any = if (x.length < m.width) null else logit(m, x)
+    override def toString: String =
+      s"cnn(filters=${m.nFilters}x${m.width}, window=${m.window})"
+  }
+
   /** The forward pass as a native Catalyst column over an
     * `array<double>` window
-    * ([[org.apache.spark.sql.graft.Conv1dMaxPoolLogit]], codegen'd
-    * tight loop — NOT composed from `transform`/`array_max`, whose
-    * interpreted lambda dispatch measured ~280–1200× slower;
-    * SCALING.md, "Round 13: CNN forward pass", has the numbers).
-    * Accumulation order matches
-    * [[forward]] bit-for-bit. NULL for a window shorter than the
-    * filter (nothing to convolve). */
+    * ([[org.apache.spark.sql.graft.ModelForward]] over [[logit]], so
+    * the column and [[forward]] are bit-identical; NOT composed from
+    * `transform`/`array_max`, whose interpreted lambda dispatch
+    * measured ~280–1200× slower — SCALING.md, "Round 13: CNN forward
+    * pass"). Scores any window length; NULL for a window shorter than
+    * the filter. */
   def logitCol(m: CnnModel, win: Column): Column =
-    org.apache.spark.sql.graft.GraftSqlBridge.conv1dLogit(
-      win, m.nFilters, m.width,
-      m.filters.toSeq, m.filterBias.toSeq, m.dense.toSeq,
-      m.bias, m.mean, m.std)
+    org.apache.spark.sql.graft.GraftSqlBridge.modelForward(win, Kernel(m))
 
   /** One distributed loss/gradient evaluation: a map-side partial pass
     * over `(label, weight, window)` rows against the broadcast
@@ -224,7 +245,7 @@ object Cnn {
     * P12 basis, unlike [[Trainer.scorer]]; what must match is the
     * WINDOW LENGTH, enforced by [[forward]]'s require. */
   def scorer(m: CnnModel): Array[Double] => Double =
-    (vecG: Array[Double]) => 1.0 / (1.0 + math.exp(-forward(m, vecG)))
+    (vecG: Array[Double]) => DetAgg.sigmoid(forward(m, vecG))
 
   /** The trained CNN as a fully-assembled replay detector —
     * bufferSamples pinned to the trained window, normalise off (the

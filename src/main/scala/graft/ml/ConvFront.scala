@@ -1,6 +1,7 @@
 package graft.ml
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** The convolutional FRONT-END of the reference's `lstm_pipe`
   * (`user_tools/nnTraining2/amber/model.py:31-39`: conv_block =
@@ -21,10 +22,11 @@ import org.apache.spark.sql.Column
   *     the 1×1 conv that makes the composition exact rather than a
   *     re-architecture of the recurrence).
   *
-  * Composition is by COLUMN NESTING: `LstmStack.logitCol(lstm,
-  * ConvFront.seqCol(cf, win))` — two codegen'd expressions in one
-  * projection, still scan → project, no shuffle. The conv stack's
-  * backward (for [[ConvPipe]] training) lives here too.
+  * Composition is by KERNEL: [[ConvPipe]] and [[TowerFusion]] serve
+  * front → stack (→ fusion) as one forward kernel over the window, one
+  * column in one projection, still scan → project, no shuffle;
+  * [[seqCol]] serves the front end alone. The conv stack's backward
+  * (for [[ConvPipe]] training) lives here too.
   */
 object ConvFront {
 
@@ -84,8 +86,15 @@ object ConvFront {
     require(x.length % cIn0 == 0,
       s"input ${x.length} not a multiple of $cIn0 channels")
     val tLen = x.length / cIn0
-    Array.tabulate(cIn0)(a =>
-      Array.tabulate(tLen)(t => (x(t * cIn0 + a) - mean) / std))
+    val out = Array.ofDim[Double](cIn0, tLen)
+    var a = 0
+    while (a < cIn0) {
+      val ch = out(a)
+      var t = 0
+      while (t < tLen) { ch(t) = (x(t * cIn0 + a) - mean) / std; t += 1 }
+      a += 1
+    }
+    out
   }
 
   @inline private def relu(a: Double): Double = if (a > 0.0) a else 0.0
@@ -101,21 +110,25 @@ object ConvFront {
     val a = if (acts != null) acts else Array.ofDim[Double](bl.cOut, nPos)
     var o = 0
     while (o < bl.cOut) {
-      var t = 0
-      while (t < nPos) {
-        var acc = bl.b(o)
-        var ci = 0
-        while (ci < bl.cIn) {
-          var j = 0
-          while (j < bl.k) {
-            acc += bl.w((o * bl.cIn + ci) * bl.k + j) * in(ci)(t + j)
-            j += 1
-          }
-          ci += 1
+      // a(o)(t) = b + Σ_ci Σ_j w·in(ci)(t+j), ci then j ascending for
+      // every t; the t loop innermost
+      val ao = a(o)
+      java.util.Arrays.fill(ao, 0, nPos, bl.b(o))
+      var ci = 0
+      while (ci < bl.cIn) {
+        val xi = in(ci)
+        var j = 0
+        while (j < bl.k) {
+          val wj = bl.w((o * bl.cIn + ci) * bl.k + j)
+          var t = 0
+          while (t < nPos) { ao(t) += wj * xi(t + j); t += 1 }
+          j += 1
         }
-        a(o)(t) = relu(bl.scale(o) * acc + bl.shift(o))
-        t += 1
+        ci += 1
       }
+      val so = bl.scale(o); val sh = bl.shift(o)
+      var t = 0
+      while (t < nPos) { ao(t) = relu(so * ao(t) + sh); t += 1 }
       o += 1
     }
     val out = Array.ofDim[Double](bl.cOut, tOut)
@@ -132,13 +145,20 @@ object ConvFront {
     out
   }
 
+  /** The raw input lengths the front end scores: whole channel frames
+    * with at least one position surviving the conv stack. [[forward]]
+    * requires it; [[seqCol]] is NULL everywhere else. */
+  private[ml] def scores(m: ConvFrontModel, n: Int): Boolean =
+    n % m.cIn0 == 0 &&
+      m.blocks.foldLeft(n / m.cIn0)((t, bl) => bl.outLen(t)) >= 1
+
   /** Full front-end forward: raw window → scaled → blocks → mixed
     * scalar sequence (length [[ConvFrontModel.outLen]] when
-    * x.length == window; any length with ≥1 surviving position works —
-    * the serve guard belongs to the caller). */
+    * x.length == inputLen; any length that [[scores]] works — the
+    * serve guard belongs to the caller). The one kernel behind
+    * [[seqCol]] and the composed families' columns. */
   def forward(m: ConvFrontModel, x: Array[Double]): Array[Double] = {
-    require(x.length % m.cIn0 == 0 &&
-      m.blocks.foldLeft(x.length / m.cIn0)((t, bl) => bl.outLen(t)) >= 1,
+    require(scores(m, x.length),
       s"window ${x.length} collapses below one position through the " +
         s"conv stack (model window ${m.window}, ${m.cIn0} channels)")
     var cur = deinterleave(x, m.cIn0, m.mean, m.std)
@@ -156,17 +176,25 @@ object ConvFront {
     y
   }
 
+  private[ml] def shapeOf(m: ConvFrontModel): String =
+    m.blocks.map(bl => s"${bl.cIn}->${bl.cOut}k${bl.k}").mkString("conv=", ",", "") +
+      s", window=${m.window}"
+
+  /** [[forward]] as the column's kernel: NULL where it does not
+    * [[scores]] the length. */
+  private[graft] final case class Kernel(m: ConvFrontModel)
+      extends org.apache.spark.sql.graft.ForwardKernel {
+    def dataType: DataType = ArrayType(DoubleType, containsNull = false)
+    def apply(x: Array[Double]): Any =
+      if (scores(m, x.length)) forward(m, x) else null
+    override def toString: String = s"conv_front(${shapeOf(m)})"
+  }
+
   /** The front end as a native Catalyst column
-    * ([[org.apache.spark.sql.graft.ConvFrontSeq]], codegen'd): window →
-    * the mixed scalar sequence. Nest inside [[LstmStack.logitCol]] for
-    * the one-projection composed architecture. */
+    * ([[org.apache.spark.sql.graft.ModelForward]] over [[forward]]):
+    * window → the mixed scalar sequence. */
   def seqCol(m: ConvFrontModel, win: Column): Column =
-    org.apache.spark.sql.graft.GraftSqlBridge.convFrontSeq(
-      win,
-      m.blocks.map(bl => (bl.cIn, bl.cOut, bl.k)),
-      m.blocks.map(_.w.toSeq), m.blocks.map(_.b.toSeq),
-      m.blocks.map(_.scale.toSeq), m.blocks.map(_.shift.toSeq),
-      m.mix.toSeq, m.mixBias, m.mean, m.std)
+    org.apache.spark.sql.graft.GraftSqlBridge.modelForward(win, Kernel(m))
 
   // ----------------------------------------------------------- backward
 

@@ -2,6 +2,7 @@ package graft.ml
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DoubleType}
 
 import graft.ml.ConvFront.{ConvBlock, ConvFrontModel}
 import graft.ml.LstmStack.Lstm2Model
@@ -14,10 +15,10 @@ import graft.ml.LstmStack.Lstm2Model
   * conv front-end backward ([[ConvFront.rowBackward]]). Trained by
   * [[DetAgg.fit]], the discipline every gradient family shares.
   *
-  * Scoring composes the two codegen'd expressions —
-  * `LstmStackLogit(ConvFrontSeq(window))` — one projection, no
-  * shuffle. The stack consumes the conv output RAW (its mean/std are
-  * identity); the input normalization lives in the front end.
+  * Scoring is one column over one kernel — front → stack, the
+  * functions [[forward]] runs — one projection, no shuffle. The stack
+  * consumes the conv output RAW (its mean/std are identity); the input
+  * normalization lives in the front end.
   *
   * Parameter layout: [block₀ w|b|scale|shift | block₁ … | mix |
   * mixBias | stack block ([[LstmStack]] layout)].
@@ -50,13 +51,30 @@ object ConvPipe {
       "the stack consumes the conv output raw; scaling lives in the front")
   }
 
+  /** Forward pass → LOGIT at the trained input length (the stack's
+    * window require) — the replay scorer's path. */
   def forward(m: ConvPipeModel, x: Array[Double]): Double =
     LstmStack.forward(m.stack, ConvFront.forward(m.front, x))
 
-  /** One projection: conv sequence expression nested in the stacked
-    * recurrence expression. */
+  /** front → stack as the column's kernel: NULL where the front end
+    * does not score the length (the stack never sees an empty
+    * sequence). */
+  private[graft] final case class Kernel(m: ConvPipeModel)
+      extends org.apache.spark.sql.graft.ForwardKernel {
+    def dataType: DataType = DoubleType
+    def apply(x: Array[Double]): Any =
+      if (ConvFront.scores(m.front, x.length))
+        LstmStack.logit(m.stack, ConvFront.forward(m.front, x))
+      else null
+    override def toString: String =
+      s"conv_pipe(${ConvFront.shapeOf(m.front)}; ${LstmStack.shapeOf(m.stack)})"
+  }
+
+  /** The composed model as ONE native column
+    * ([[org.apache.spark.sql.graft.ModelForward]]): front → stack in
+    * one kernel over the window, the same functions [[forward]] runs. */
   def logitCol(m: ConvPipeModel, win: Column): Column =
-    LstmStack.logitCol(m.stack, ConvFront.seqCol(m.front, win))
+    org.apache.spark.sql.graft.GraftSqlBridge.modelForward(win, Kernel(m))
 
   /** Fail-loud serve-length contract ([[DetAgg.scoreChecked]]). The
     * expected array length is [[ConvFront.ConvFrontModel.inputLen]]
@@ -67,7 +85,7 @@ object ConvPipe {
       s"trained input length ${m.front.inputLen}")(logitCol(m, _))
 
   def scorer(m: ConvPipeModel): Array[Double] => Double =
-    (w: Array[Double]) => 1.0 / (1.0 + math.exp(-forward(m, w)))
+    (w: Array[Double]) => DetAgg.sigmoid(forward(m, w))
 
   /** The composed model as a replay detector (same contract as
     * [[Lstm.deployedLstm]]). */

@@ -193,6 +193,12 @@ object DetAgg {
     st.x
   }
 
+  /** The replay scorers' probability: the sigmoid [[scoreChecked]]'s
+    * `p_seizure` computes, bit for bit. Spark's `exp` is
+    * `StrictMath.exp` on both its interpreted and its generated path;
+    * `math.exp` may be a JIT intrinsic that differs in the last bit. */
+  private[ml] def sigmoid(z: Double): Double = 1.0 / (1.0 + StrictMath.exp(-z))
+
   /** Batch scoring with the serve-length contract: `logit` applied to
     * `dataCol` where its length is the trained `len`, a `raise_error`
     * reading "`what` <length> != `trained`" everywhere else, plus the

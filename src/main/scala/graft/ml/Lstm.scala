@@ -1,13 +1,15 @@
 package graft.ml
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.types.{DataType, DoubleType}
 
 /** A hard-gate LSTM trained IN-ENGINE — the recurrent half of the
   * round-12 verdict's "missing #2" boundary (the reference's AMBER
   * LSTM family, `user_tools/nnTraining2/amber/model.py:31-39`,
   * `amberModel.py`), re-expressed the same way as [[Cnn]]: the
-  * architecture is a per-row pure function (forward pass = ONE native
-  * Catalyst expression, codegen'd, no UDF in the batch path) and
+  * architecture is a per-row pure function (forward pass = one JVM
+  * kernel, served in batch by a native Catalyst expression, no UDF in
+  * the batch path) and
   * training is distributed first-order optimization — breeze LBFGS on
   * the driver over a loss/gradient computed as one distributed BPTT
   * pass per evaluation ([[DetAgg.fit]]). Driver state is the
@@ -36,12 +38,14 @@ import org.apache.spark.sql.{Column, DataFrame}
   * ulps. Saturation gradients are exact too (0.25 or 0 / 1 or 0), so
   * BPTT below has no approximation anywhere.
   *
-  * Exactness contract: [[forward]] (the JVM loop used by the streaming
-  * scorer) and [[logitCol]] (the Catalyst expression used by batch
-  * scoring and the ml4 oracle row) accumulate in the SAME order —
-  * gate pre-activation b + wx·x + Σ_v wh_v·h_v (v ascending), c' =
-  * f·c + i·g, logit terms u ascending — so their doubles are
-  * bit-identical; LstmSpec pins the equality.
+  * Exactness contract: [[forward]] (the streaming scorer's path) and
+  * [[logitCol]] (the column used by batch scoring and the ml4 oracle
+  * row) run the ONE kernel [[logit]] — gate pre-activation b + wx·x +
+  * Σ_v wh_v·h_v (v ascending), c' = f·c + i·g, logit terms u
+  * ascending — so their doubles are bit-identical; LstmSpec pins it.
+  * Clamps are comparison ladders (a < lo, a > hi), never min/max
+  * intrinsics: the ladder passes the datum through untouched (±0.0
+  * included) and reads identically in the DuckDB replay.
   *
   * Scale slope: training cost per LBFGS iteration is one map-side
   * BPTT pass (O(rows·T·H²) flops, combiner-collapsed to one O(P)
@@ -92,38 +96,63 @@ object Lstm {
   @inline private def hardTanh(a: Double): Double =
     if (a < -1.0) -1.0 else if (a > 1.0) 1.0 else a
 
-  /** Forward pass → LOGIT (pre-sigmoid), JVM loop form — the streaming
-    * scorer's hot path and [[logitCol]]'s bit-exact twin (same
-    * accumulation order; see the object docblock). */
+  /** One hard-gate cell step over all `hN` units — the forward kernels'
+    * recurrence ([[logit]], every [[LstmStack]] layer). The four gates
+    * of unit u accumulate side by side, each in the contract order:
+    * b + Σ_j wx·x_j (j ascending) + Σ_v wh·hp_v (v ascending), so a
+    * scalar input (`xN` = 1) reads b + wx·x + Σ wh·h. Weights are
+    * gate-major: gate g of unit u is row r = g·hN + u, wx at r·xN + j,
+    * wh at r·hN + v. Writes (h, c) in place; `hp` is the previous
+    * hidden state. */
+  private[ml] def cellStep(x: Array[Double], xN: Int, hp: Array[Double],
+      h: Array[Double], c: Array[Double], hN: Int,
+      wx: Array[Double], wh: Array[Double], b: Array[Double]): Unit = {
+    var u = 0
+    while (u < hN) {
+      val r0 = u; val r1 = hN + u; val r2 = 2 * hN + u; val r3 = 3 * hN + u
+      var a0 = b(r0); var a1 = b(r1); var a2 = b(r2); var a3 = b(r3)
+      var j = 0
+      while (j < xN) {
+        val xj = x(j)
+        a0 += wx(r0 * xN + j) * xj; a1 += wx(r1 * xN + j) * xj
+        a2 += wx(r2 * xN + j) * xj; a3 += wx(r3 * xN + j) * xj
+        j += 1
+      }
+      var v = 0
+      while (v < hN) {
+        val hv = hp(v)
+        a0 += wh(r0 * hN + v) * hv; a1 += wh(r1 * hN + v) * hv
+        a2 += wh(r2 * hN + v) * hv; a3 += wh(r3 * hN + v) * hv
+        v += 1
+      }
+      val cn = hardSig(a1) * c(u) + hardSig(a0) * hardTanh(a2)
+      c(u) = cn
+      h(u) = hardSig(a3) * hardTanh(cn)
+      u += 1
+    }
+  }
+
+  /** Forward pass → LOGIT (pre-sigmoid) at the trained window — the
+    * replay scorer's path; [[logitCol]] runs the same [[logit]] kernel. */
   def forward(m: LstmModel, x: Array[Double]): Double = {
     require(x.length == m.window,
       s"window ${x.length} != trained window ${m.window}")
+    logit(m, x)
+  }
+
+  /** The one forward kernel, over a window of any length (see the
+    * object docblock for the accumulation order). */
+  private def logit(m: LstmModel, x: Array[Double]): Double = {
     val hN = m.nUnits
-    val h = new Array[Double](hN)
+    var h = new Array[Double](hN)
+    var hp = new Array[Double](hN)
     val c = new Array[Double](hN)
-    val hp = new Array[Double](hN)
+    val xv = new Array[Double](1)
     var t = 0
     while (t < x.length) {
-      val xv = (x(t) - m.mean) / m.std
-      System.arraycopy(h, 0, hp, 0, hN)
-      var u = 0
-      while (u < hN) {
-        val pre = new Array[Double](4)
-        var g = 0
-        while (g < 4) {
-          var acc = m.b(g * hN + u) + m.wx(g * hN + u) * xv
-          var v = 0
-          while (v < hN) { acc += m.wh((g * hN + u) * hN + v) * hp(v); v += 1 }
-          pre(g) = acc
-          g += 1
-        }
-        val gi = hardSig(pre(0)); val gf = hardSig(pre(1))
-        val gg = hardTanh(pre(2)); val go = hardSig(pre(3))
-        val cn = gf * c(u) + gi * gg
-        c(u) = cn
-        h(u) = go * hardTanh(cn)
-        u += 1
-      }
+      val prev = hp; hp = h; h = prev
+      xv(0) = (x(t) - m.mean) / m.std
+      cellStep(xv, 1, hp, h, c, hN, m.wx, m.wh, m.b)
       t += 1
     }
     var z = m.bias
@@ -132,18 +161,22 @@ object Lstm {
     z
   }
 
+  /** [[logit]] as the column's kernel: NULL for an empty window. */
+  private[graft] final case class Kernel(m: LstmModel)
+      extends org.apache.spark.sql.graft.ForwardKernel {
+    def dataType: DataType = DoubleType
+    def apply(x: Array[Double]): Any = if (x.length == 0) null else logit(m, x)
+    override def toString: String = s"lstm(units=${m.nUnits}, window=${m.window})"
+  }
+
   /** The forward pass as a native Catalyst column over an
-    * `array<double>` window
-    * ([[org.apache.spark.sql.graft.LstmHardLogit]], codegen'd
-    * recurrence — the HOF/`aggregate` composition is a non-starter
+    * `array<double>` window ([[org.apache.spark.sql.graft.ModelForward]]
+    * over [[logit]] — the HOF/`aggregate` composition is a non-starter
     * here for the same reason SCALING.md round 13 measured for the conv
-    * kernel: interpreted lambda dispatch per timestep). Accumulation
-    * order matches [[forward]] bit-for-bit. NULL for an empty
-    * window. */
+    * kernel: interpreted lambda dispatch per timestep). Scores any
+    * window length; NULL for an empty window. */
   def logitCol(m: LstmModel, win: Column): Column =
-    org.apache.spark.sql.graft.GraftSqlBridge.lstmLogit(
-      win, m.nUnits, m.wx.toSeq, m.wh.toSeq, m.b.toSeq, m.dense.toSeq,
-      m.bias, m.mean, m.std)
+    org.apache.spark.sql.graft.GraftSqlBridge.modelForward(win, Kernel(m))
 
   /** One distributed loss/gradient evaluation: a BPTT pass over
     * `(label, weight, window)` rows against the broadcast parameter
@@ -330,7 +363,7 @@ object Lstm {
     * [[Cnn.scorer]]: trains directly on the buffer's window (G), no
     * mG conversion, window length enforced by [[forward]]. */
   def scorer(m: LstmModel): Array[Double] => Double =
-    (vecG: Array[Double]) => 1.0 / (1.0 + math.exp(-forward(m, vecG)))
+    (vecG: Array[Double]) => DetAgg.sigmoid(forward(m, vecG))
 
   /** The trained LSTM as a fully-assembled replay detector —
     * bufferSamples pinned to the trained window, normalise off (the

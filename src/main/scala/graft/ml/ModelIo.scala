@@ -10,24 +10,29 @@ import org.json4s.jackson.JsonMethods
   * workflow (`user_tools/nnTraining2/convertToTFLite.py`,
   * `convertPt2Pte.py`, EXECUTORCH_EXPORT.md: train → serialize → ship
   * to the device runtime) re-expressed for the engine's own model
-  * families: the in-engine [[Cnn.CnnModel]] and [[Lstm.LstmModel]]
-  * serialize to a versioned JSON artifact; the MLlib-backed families
+  * families. Each in-engine family serializes to a versioned JSON
+  * artifact: [[Cnn.CnnModel]] (`graft-cnn`), [[SpecCnn.SpecCnnModel]]
+  * (`graft-speccnn`), [[Lstm.LstmModel]] (`graft-lstm`),
+  * [[LstmStack.Lstm2Model]] (`graft-lstm2`), [[ConvPipe.ConvPipeModel]]
+  * (`graft-convpipe`), [[TowerFusion.TowerFusionModel]]
+  * (`graft-towerfusion`, its towers embedded as convpipe blocks) and
+  * [[Forest.ForestModel]] (`graft-forest`). The MLlib-backed families
   * (LR, MLP) already have MLlib's native parquet save/load and ride a
-  * thin manifest here.
+  * thin manifest here (`graft-model-manifest`).
   *
   * Exactness contract: weights round-trip BIT-EXACTLY. Doubles are
   * written as Java's shortest-round-trip decimal (`Double.toString`)
   * and re-parsed with `java.lang.Double.parseDouble` — the
   * correctly-rounded pair, so `load(save(m))` scores every window
-  * bit-identically to `m` (ModelIoSpec pins it through [[Cnn.forward]]
-  * / [[Lstm.forward]]). NaN/Inf weights are rejected at save time —
-  * they are not JSON and not a deployable model.
+  * bit-identically to `m` (ModelIoSpec pins it through each family's
+  * `forward`). NaN/Inf weights are rejected at save time — they are
+  * not JSON and not a deployable model.
   *
   * Format: one JSON object, `format` + `version` header first, shapes
   * as integers, weights as arrays. Loaders FAIL LOUDLY on a wrong
-  * format tag, an unknown version, or inconsistent shapes (the
-  * LstmModel/CnnModel constructors re-validate) — a deployment
-  * artifact must never half-load. */
+  * format tag, an unknown version, or inconsistent shapes (each
+  * family's model constructor re-validates) — a deployment artifact
+  * must never half-load. */
 object ModelIo {
 
   private val Version = 1

@@ -1,6 +1,7 @@
 package graft.ml
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.types.{DataType, DoubleType}
 import graft.functions.Signal
 
 /** The SPECTROGRAM-INPUT CNN — the reference's `SpecCnnModel`
@@ -14,8 +15,8 @@ import graft.functions.Signal
   * spectrogram basis.
   *
   * Spark-first boundary, same as the rest of the family: the
-  * architecture is a per-row pure function (forward = ONE native
-  * codegen'd expression, [[org.apache.spark.sql.graft.SpecCnn2dLogit]]),
+  * architecture is a per-row pure function (forward = one JVM kernel,
+  * served in batch by [[org.apache.spark.sql.graft.ModelForward]]),
   * training is driver LBFGS over a deterministic one-pass distributed
   * gradient ([[DetAgg.fit]]), and the spectrogram extraction
   * is a pure per-window function — a third BASIS for
@@ -137,12 +138,23 @@ object SpecCnn {
     img
   }
 
-  /** Forward pass → LOGIT, JVM loop form — [[logitCol]]'s bit-exact
-    * twin (same accumulation order; the expression docblock is the
-    * contract). */
+  /** Forward pass → LOGIT over the trained image shape — the replay
+    * scorer's path; [[logitCol]] runs the same [[logit]] kernel. */
   def forward(m: SpecCnnModel, img: Array[Double]): Double = {
     require(img.length == m.nFreq * m.nSpec,
       s"image ${img.length} != trained ${m.nFreq}x${m.nSpec}")
+    logit(m, img)
+  }
+
+  /** The one forward kernel over a freq-major image, pixel (f, s) at
+    * f·nSpec + s. "Same" conv pads (k−1)/2 zeros on each side; "same"
+    * pool emits ceil(dim/2) cells, edge cells maxing over the covered
+    * elements only. Accumulation order is the cross-engine contract
+    * (the generated ml10 SQL replays it): conv acc = b(o) then ci, dy,
+    * dx ascending; readout c, f, s ascending. With integer inputs and
+    * weights every intermediate is an exact integer — the ml3 oracle
+    * class. */
+  private def logit(m: SpecCnnModel, img: Array[Double]): Double = {
     var h = m.nFreq; var w = m.nSpec
     var cur = Array.tabulate(1, m.nFreq, m.nSpec)((_, f, s) =>
       (img(f * m.nSpec + s) - m.mean) / m.std)
@@ -247,15 +259,24 @@ object SpecCnn {
     out
   }
 
+  /** [[logit]] as the column's kernel: NULL for a wrong-shape image (it
+    * has no meaningful convolution; the fail-loud serve guard is
+    * [[scoreSpectrograms]]'). */
+  private[graft] final case class Kernel(m: SpecCnnModel)
+      extends org.apache.spark.sql.graft.ForwardKernel {
+    def dataType: DataType = DoubleType
+    def apply(x: Array[Double]): Any =
+      if (x.length == m.nFreq * m.nSpec) logit(m, x) else null
+    override def toString: String =
+      s"spec_cnn(image=${m.nFreq}x${m.nSpec}, " +
+        m.layers.map(l => s"${l.cIn}->${l.cOut}").mkString("channels=", ",", ")")
+  }
+
   /** The forward pass as a native Catalyst column over the flattened
-    * freq-major image ([[org.apache.spark.sql.graft.SpecCnn2dLogit]],
-    * codegen'd; NULL for a wrong-shape image). */
+    * freq-major image ([[org.apache.spark.sql.graft.ModelForward]] over
+    * [[logit]]; NULL for a wrong-shape image). */
   def logitCol(m: SpecCnnModel, img: Column): Column =
-    org.apache.spark.sql.graft.GraftSqlBridge.specCnn2dLogit(
-      img, m.nFreq, m.nSpec,
-      m.layers.map(l => (l.cIn, l.cOut)).toSeq,
-      m.layers.map(_.w.toSeq).toSeq, m.layers.map(_.b.toSeq).toSeq,
-      m.dense.toSeq, m.bias, m.mean, m.std)
+    org.apache.spark.sql.graft.GraftSqlBridge.modelForward(img, Kernel(m))
 
   // ------------------------------------------------------------ training
 
@@ -542,12 +563,12 @@ object SpecCnn {
       s"trained ${m.nFreq}x${m.nSpec}")(logitCol(m, _))
 
   /** The spectrogram CNN as a replay scorer closure — extraction + the
-    * JVM forward twin, same unit contract as [[Cnn.scorer]] (buffer in
+    * [[forward]], same unit contract as [[Cnn.scorer]] (buffer in
     * G, length must produce the trained image shape). */
   def scorer(m: SpecCnnModel, cfg: Config): Array[Double] => Double =
     (vecG: Array[Double]) => {
       val img = specImage(vecG, cfg.specSamp, cfg.specStep, cfg.zeroTol)
-      1.0 / (1.0 + math.exp(-forward(m, img)))
+      DetAgg.sigmoid(forward(m, img))
     }
 
   /** The trained spectrogram CNN as a fully-assembled replay detector

@@ -2,6 +2,7 @@ package graft.ml
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DoubleType}
 
 import graft.ml.ConvPipe.ConvPipeModel
 
@@ -32,16 +33,11 @@ import graft.ml.ConvPipe.ConvPipeModel
   *     put the FINAL value on the ×1e6 round grid in the oracle (the
   *     ml5 FMA discipline).
   *
-  * Plan shape: ONE projection — the N tower expressions (each a nested
-  * codegen'd `LstmStackLogit(ConvFrontSeq(w))` in K-mode) are direct
-  * children of one native [[org.apache.spark.sql.graft.FusionDenseLogit]],
-  * which runs the fusion/dense arithmetic in its own generated method.
-  * No shuffle, no UDF, each tower's recurrence evaluated exactly once
-  * per row (expression children evaluate once by construction). The
-  * round-15 staged-projection form measured 2.3× the three-recurrence
-  * floor on per-level UnsafeRow copies; the native form measures AT the
-  * floor (523k vs ~435k·3-pipe-share rows/s, round-16 probe) with the
-  * ml4i hash unchanged. */
+  * Plan shape: ONE projection — one native
+  * [[org.apache.spark.sql.graft.ModelForward]] column whose kernel runs
+  * every tower (front → K-mode stack) and then the fusion/dense
+  * arithmetic, the same functions [[forward]] runs. No shuffle, no UDF,
+  * each tower's recurrence evaluated exactly once per row. */
 object TowerFusion {
 
   case class TowerFusionModel(
@@ -54,12 +50,14 @@ object TowerFusion {
     require(towers.nonEmpty, "tower fusion over zero towers")
     require(towers.map(_.front.inputLen).distinct.size == 1,
       "towers must consume the same raw input length")
-    val dims: Seq[Int] = towers.map(t => pooledDim(t.stack))
-    val d: Int = dims.sum
+    val d: Int = towers.map(t => pooledDim(t.stack)).sum
     require(fuse.length == d * d, s"fuse must be $d x $d: ${fuse.length}")
     require(w1.length == b1.length * d && w2.length == b1.length,
       s"dense layer shapes inconsistent: |w1|=${w1.length} |b1|=${b1.length}")
     def inputLen: Int = towers.head.front.inputLen
+    /** each tower's [[unitKHead]], built once per model, not per row */
+    private[ml] lazy val unitHeads: Seq[LstmStack.KHead] =
+      towers.map(t => unitKHead(t.stack))
   }
 
   /** Dimension of the pooled head-input vector: the residual/mean pool
@@ -70,7 +68,7 @@ object TowerFusion {
 
   /** The pooled vector as a K-class head with UNIT readout rows: class
     * c reads exactly pooled component c (zero rows elsewhere — zero
-    * multiplies are value-preserving), so `logitsKCol` emits the
+    * multiplies are value-preserving), so `LstmStack.logitsK` emits the
     * pooled head-input vector from one recurrence evaluation. */
   def unitKHead(m: LstmStack.Lstm2Model): LstmStack.KHead = {
     val dd = pooledDim(m)
@@ -93,13 +91,25 @@ object TowerFusion {
     LstmStack.KHead(dd, denseK, new Array[Double](dd), attDK)
   }
 
-  /** JVM twin of the column form: tower pooled vectors → fusion →
-    * dense → scalar logit, all in the column's accumulation order. */
-  def forward(m: TowerFusionModel, x: Array[Double]): Double = {
-    val v = m.towers.flatMap(t =>
-      LstmStack.forwardK(t.stack, unitKHead(t.stack),
-        ConvFront.forward(t.front, x))).toArray
-    fusionScalar(m, v)
+  /** Forward pass → LOGIT at the trained input length (each tower
+    * stack's window require): tower pooled vectors → fusion → dense →
+    * scalar logit. [[logitCol]] runs the same functions. */
+  def forward(m: TowerFusionModel, x: Array[Double]): Double =
+    fusionScalar(m, pooled(m, x, LstmStack.forwardK))
+
+  /** concat of the towers' pooled vectors, each tower's recurrence
+    * evaluated once through `readout` (checked or not). */
+  private def pooled(m: TowerFusionModel, x: Array[Double],
+      readout: (LstmStack.Lstm2Model, LstmStack.KHead, Array[Double]) => Array[Double])
+      : Array[Double] = {
+    val v = new Array[Double](m.d)
+    var off = 0
+    m.towers.zip(m.unitHeads).foreach { case (t, kh) =>
+      val p = readout(t.stack, kh, ConvFront.forward(t.front, x))
+      System.arraycopy(p, 0, v, off, p.length)
+      off += p.length
+    }
+    v
   }
 
   private def fusionScalar(m: TowerFusionModel, v: Array[Double]): Double = {
@@ -125,29 +135,28 @@ object TowerFusion {
     z
   }
 
-  /** The fused logit as ONE native column: each tower's pooled vector
-    * (a nested codegen'd K-mode `LstmStackLogit(ConvFrontSeq(w))`)
-    * nested directly as a child of
-    * [[org.apache.spark.sql.graft.FusionDenseLogit]], which runs the
-    * concat → (v + A·v) → ReLU dense → scalar arithmetic in one
-    * generated method. One projection, each tower evaluated exactly
-    * once per row (expression children evaluate once by construction).
-    *
-    * History: round 15 staged this as pooled/fused/ReLU column LEVELS
-    * behind CollapseProject's non-cheap-alias guard — correct and
-    * codegen'd, but the per-level UnsafeRow copies measured 2.3× over
-    * the three-recurrence floor (SCALING.md:1540). The native form
-    * removes the copies with the SAME accumulation order
-    * ([[fusionScalar]]'s), so the ml4i oracle hash pins the swap
-    * bit-exact. (The round-15 lesson about ONE MONOLITHIC column
-    * expression still stands — that form duplicated every fused(j)
-    * subtree into all H dense rows; a generated method with local
-    * arrays duplicates nothing.) */
+  /** front → stack → fusion as the column's kernel, over any length:
+    * NULL where some tower's front end does not score it. */
+  private[graft] final case class Kernel(m: TowerFusionModel)
+      extends org.apache.spark.sql.graft.ForwardKernel {
+    def dataType: DataType = DoubleType
+    def apply(x: Array[Double]): Any =
+      if (m.towers.forall(t => ConvFront.scores(t.front, x.length)))
+        fusionScalar(m, pooled(m, x, LstmStack.logitsK))
+      else null
+    override def toString: String =
+      s"tower_fusion(towers=${m.towers.size}, d=${m.d}, hidden=${m.b1.length}; " +
+        m.towers.map(t => s"${ConvFront.shapeOf(t.front)}; " +
+          LstmStack.shapeOf(t.stack)).mkString("[", " | ", "])")
+  }
+
+  /** The fused logit as ONE native column
+    * ([[org.apache.spark.sql.graft.ModelForward]]): one kernel over the
+    * window runs front → stack → fusion, [[forward]]'s functions in its
+    * accumulation order, each tower evaluated exactly once per row. One
+    * projection, no shuffle. */
   def logitCol(m: TowerFusionModel, win: Column): Column =
-    org.apache.spark.sql.graft.GraftSqlBridge.fusionDenseLogit(
-      m.towers.map(t => LstmStack.logitsKCol(t.stack, unitKHead(t.stack),
-        ConvFront.seqCol(t.front, win))),
-      m.dims, m.fuse.toSeq, m.w1.toSeq, m.b1.toSeq, m.w2.toSeq, m.b2)
+    org.apache.spark.sql.graft.GraftSqlBridge.modelForward(win, Kernel(m))
 
   /** Attach the fused logit to `df` — [[logitCol]] under the original
     * staged-API name (all call sites go through here). */

@@ -961,8 +961,8 @@ object MlQueries {
   /** ML4F — the composed conv→recurrence forward pass under the oracle
     * gate: Conv1D blocks → Bidirectional(LSTM) → LSTM → multi-head
     * attention ⊕ residual → dense, the reference's complete lstm_pipe +
-    * fusion line, as ONE projection of two nested codegen'd
-    * expressions. The oracle chains the conv CTEs (window taps,
+    * fusion line, as ONE projection of one model column (the ConvPipe
+    * kernel: conv front → stack). The oracle chains the conv CTEs (window taps,
     * piecewise-linear activations, pair-max pooling) into the
     * three-recursion bidirectional oracle — bit-exact throughout
     * because every op is IEEE mul/add/compare. */
@@ -1008,7 +1008,7 @@ object MlQueries {
     * under the oracle gate: 3-channel Conv1D (X/Y/Z de-interleaved
     * from the interleaved rawData3D) → conv block → Bidirectional
     * (LSTM) → LSTM → multi-head attention ⊕ residual → dense, as ONE
-    * projection of two nested codegen'd expressions over the raw
+    * projection of one model column (the ConvPipe kernel) over the raw
     * interleaved array. The oracle's first conv CTE reads the three
     * axis streams (samp3.vx/vy/vz) as three value columns; everything
     * downstream is the ml4f chain — bit-exact throughout (IEEE
@@ -1122,9 +1122,9 @@ object MlQueries {
   }
 
   /** ML4I — the N-tower fused forward pass under the oracle gate:
-    * three tower projections (each ONE nested codegen'd
-    * K-mode recurrence over its axis) + one arithmetic projection,
-    * scan → project chain, no shuffle. The oracle chains THREE
+    * one model column whose kernel runs the three towers (each a
+    * K-mode recurrence over its axis) and the fusion arithmetic,
+    * scan → project, no shuffle. The oracle chains THREE
     * conv-CTE + three-recursion blocks and states the fusion
     * arithmetic over the joined per-tower pooled components. */
   def ml4iTowerFusion(s: SparkSession, d: String): DataFrame =

@@ -53,6 +53,24 @@ class CnnSpec extends SparkSpec {
       col("vec").as("window"))
   }
 
+  test("scorer's probability == scoreWindows' p_seizure bit for bit (20k logits)") {
+    import spark.implicits._
+    // logit = bias + max(0, x): a one-tap model sweeps the logit over
+    // [-10, 10). Every family's replay scorer uses this sigmoid
+    // (DetAgg.sigmoid); math.exp differs from Spark's StrictMath.exp in
+    // the last bit on a few percent of such logits.
+    val m = Cnn.CnnModel(1, 1, 1, filters = Array(1.0),
+      filterBias = Array(0.0), dense = Array(1.0), bias = -10.0,
+      mean = 0.0, std = 1.0)
+    val rnd = new scala.util.Random(5)
+    val xs = Seq.fill(20000)(rnd.nextDouble() * 20.0)
+    val got = Cnn.scoreWindows(m, xs.map(x => Tuple1(Array(x))).toDF("window"))
+      .select(col("window")(0), col("p_seizure")).collect()
+    assert(got.length == xs.length)
+    val bad = got.count(r => Cnn.scorer(m)(Array(r.getDouble(0))) != r.getDouble(1))
+    assert(bad == 0, s"$bad of ${got.length} probabilities differ")
+  }
+
   test("logitCol == forward bit-exactly (float weights, float windows)") {
     import spark.implicits._
     val rnd = new scala.util.Random(7)
@@ -96,18 +114,17 @@ class CnnSpec extends SparkSpec {
     val a = graft.ml.Trainer.auroc(scored)
     assert(a > 0.95, s"CNN held-out AUROC only $a")
 
-    // batch (column) and serve (closure) scoring agree: LOGITS bit-exact
-    // (+,*,max only — same accumulation order), sigmoid to a few ulps
-    // (Math.exp may differ by an ulp between a JIT-intrinsified call
-    // site and the codegen'd one). One collect: limit() without an
-    // order can pick different rows per execution.
+    // batch (column) and serve (closure) scoring agree bit for bit: both
+    // run the one forward kernel, and both sigmoids use StrictMath.exp.
+    // One collect: limit() without an order can pick different rows per
+    // execution.
     Cnn.scoreWindows(model, heldOut.limit(3))
       .select(col("window"), col("logit"), col("p_seizure"))
       .collect().foreach { r =>
         val win = r.getAs[Seq[Double]]("window").toArray
         assert(Cnn.forward(model, win) == r.getAs[Double]("logit"))
         val pc = Cnn.scorer(model)(win)
-        assert(math.abs(pc - r.getAs[Double]("p_seizure")) <= 4 * math.ulp(pc),
+        assert(pc == r.getAs[Double]("p_seizure"),
           s"closure $pc vs column ${r.getAs[Double]("p_seizure")}")
       }
 

@@ -219,8 +219,12 @@ class ConvPipeSpec extends SparkSpec {
         .select(col("eventId"), col("label"), col("p_seizure")))
     assert(a > 0.9, s"composed conv->recurrence held-out AUROC only $a")
     // deploys through the replay seam: scorer agrees with the column
+    // bit for bit
     val w0 = heldOut.limit(1).collect()(0).getAs[Seq[Double]]("window").toArray
     val p = ConvPipe.scorer(m)(w0)
-    assert(p > 0.0 && p < 1.0)
+    import spark.implicits._
+    val pCol = ConvPipe.scoreWindows(m, Seq(Tuple1(w0)).toDF("window"))
+      .select("p_seizure").collect().head.getDouble(0)
+    assert(p > 0.0 && p < 1.0 && p == pCol, s"closure $p vs column $pCol")
   }
 }

@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import graft.ml.{Cnn, ConvFront, ConvPipe, Lstm, LstmStack, SpecCnn, TowerFusion}
 import graft.plans.GraftExpressions
 
 /** The native codegen expression tier (§7.3(b)): ArrayDot must match the
@@ -161,233 +163,262 @@ class GraftExpressionsSpec extends SparkSpec {
     assert(math.abs(got - expected) < 1e-15)
   }
 
-  test("lstm_hard_logit compiles under codegen with fallback disabled") {
-    val prev = spark.conf.getOption("spark.sql.codegen.fallback")
-    spark.conf.set("spark.sql.codegen.fallback", "false")
-    try {
-      val rnd = new scala.util.Random(9)
-      val h = 3
-      val m = graft.ml.Lstm.LstmModel(h, 24,
-        wx = Array.fill(4 * h)(rnd.nextGaussian() * 0.5),
-        wh = Array.fill(4 * h * h)(rnd.nextGaussian() * 0.3),
-        b = Array.fill(4 * h)(rnd.nextGaussian() * 0.2),
-        dense = Array.fill(h)(rnd.nextGaussian()),
-        bias = 0.1, mean = 12.0, std = 9.0)
-      // range-based window construction keeps the input out of
-      // LocalTableScan so doGenCode must run
-      val winCol = array((0 until 24).map(j =>
-        ((col("id") * 5 + j) % 29).cast("double")): _*)
-      val df = spark.range(40).select(col("id"), winCol.as("w"))
-        .select(col("id"), graft.ml.Lstm.logitCol(m, col("w")).as("z"))
-      val rows = df.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      val codegenStages = df.queryExecution.executedPlan.collect {
-        case w: org.apache.spark.sql.execution.WholeStageCodegenExec
-          if w.toString.contains("lstm_hard_logit") => w
-      }
-      assert(codegenStages.nonEmpty,
-        df.queryExecution.executedPlan.toString.take(1500))
-      // codegen path == JVM loop bit-for-bit
-      (0 until 40).foreach { i =>
-        val win = Array.tabulate(24)(j => ((i * 5 + j) % 29).toDouble)
-        assert(java.lang.Double.doubleToLongBits(rows(i.toLong)) ==
-          java.lang.Double.doubleToLongBits(graft.ml.Lstm.forward(m, win)))
-      }
-      // empty window: NULL under codegen too
-      val nul = spark.range(1)
-        .select(array().cast("array<double>").as("w"))
-        .select(graft.ml.Lstm.logitCol(m, col("w")))
-        .collect().head
-      assert(nul.isNullAt(0))
-    } finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.codegen.fallback", v)
-      case None => spark.conf.unset("spark.sql.codegen.fallback")
+  // ------------------------------------------------- model columns
+
+  /** One row of the model-column table: a family's column and its
+    * `forward` (the replay path) at the trained `inputLen`, plus the
+    * family's column NULL rule restated from its contract. */
+  private case class ModelRow(name: String, inputLen: Int,
+      column: Column => Column, forward: Array[Double] => Any,
+      isNull: Int => Boolean)
+
+  private def stackModel(r: scala.util.Random, h1: Int, h2: Int,
+      window: Int, head: String = "mean", bidir: Boolean = false,
+      nHeads: Int = 1, mean: Double = 0.0, std: Double = 1.0)
+      : LstmStack.Lstm2Model = {
+    val x2 = if (bidir) 2 * h1 else h1
+    def g(n: Int, sc: Double) = Array.fill(n)(r.nextGaussian() * sc)
+    LstmStack.Lstm2Model(h1, h2, window,
+      wx1 = g(4 * h1, 0.5), wh1 = g(4 * h1 * h1, 0.3), b1 = g(4 * h1, 0.2),
+      wx2 = g(4 * h2 * x2, 0.5), wh2 = g(4 * h2 * h2, 0.3),
+      b2 = g(4 * h2, 0.2), dense = g(h2, 1.0), bias = 0.1,
+      mean = mean, std = std, head = head,
+      attA = head match {
+        case "attn" => g(h2, 0.6)
+        case "mha" => g(nHeads * h2, 0.5)
+        case _ => Array.emptyDoubleArray
+      },
+      attC = if (head == "attn") r.nextGaussian() * 0.3 else 0.0,
+      bidir = bidir,
+      wx1b = if (bidir) g(4 * h1, 0.5) else Array.emptyDoubleArray,
+      wh1b = if (bidir) g(4 * h1 * h1, 0.3) else Array.emptyDoubleArray,
+      b1b = if (bidir) g(4 * h1, 0.2) else Array.emptyDoubleArray,
+      nHeads = nHeads,
+      attCs = if (head == "mha") g(nHeads, 0.3) else Array.emptyDoubleArray,
+      attD = if (head == "mha") g(nHeads * h2, 1.0) else Array.emptyDoubleArray)
+  }
+
+  /** A conv front over `cIn` interleaved channels; `blocks` are
+    * (cOut, k) per block. */
+  private def frontModel(r: scala.util.Random, cIn: Int, window: Int,
+      blocks: Seq[(Int, Int)]): ConvFront.ConvFrontModel = {
+    val chans = cIn +: blocks.map(_._1)
+    val bl = blocks.zipWithIndex.map { case ((co, k), i) =>
+      val ci = chans(i)
+      ConvFront.ConvBlock(ci, co, k,
+        w = Array.fill(co * ci * k)(r.nextGaussian() * 0.4),
+        b = Array.fill(co)(r.nextGaussian() * 0.1),
+        scale = Array.fill(co)(1.0 + r.nextGaussian() * 0.1),
+        shift = Array.fill(co)(r.nextGaussian() * 0.1))
+    }
+    ConvFront.ConvFrontModel(window, bl,
+      mix = Array.fill(blocks.last._1)(r.nextGaussian()),
+      mixBias = 0.1, mean = 1.0, std = 2.5)
+  }
+
+  private def pipeModel(r: scala.util.Random, cIn: Int, window: Int)
+      : ConvPipe.ConvPipeModel = {
+    val f = frontModel(r, cIn, window, Seq((2, 3), (2, 3)))
+    ConvPipe.ConvPipeModel(f,
+      stackModel(r, 2, 2, f.outLen, head = "mha", bidir = true, nHeads = 2))
+  }
+
+  private def towerModel(r: scala.util.Random, window: Int)
+      : TowerFusion.TowerFusionModel = {
+    val towers = Seq.fill(3)(pipeModel(r, 3, window))
+    val d = towers.map(t => TowerFusion.pooledDim(t.stack)).sum
+    val h = 4
+    TowerFusion.TowerFusionModel(towers,
+      fuse = Array.fill(d * d)(r.nextGaussian() * 0.2),
+      w1 = Array.fill(h * d)(r.nextGaussian()),
+      b1 = Array.fill(h)(r.nextGaussian() * 0.1),
+      w2 = Array.fill(h)(r.nextGaussian()), b2 = r.nextGaussian())
+  }
+
+  /** The conv front's NULL rule: no whole channel frames, or no
+    * position left after the valid-conv + pool(2) blocks of widths `ks`. */
+  private def frontNull(cIn: Int, ks: Seq[Int])(n: Int): Boolean =
+    n % cIn != 0 || ks.foldLeft(n / cIn)((t, k) => (t - k + 1) / 2) < 1
+
+  private val modelRows: Seq[ModelRow] = {
+    val r = new scala.util.Random(97)
+    val cnn = Cnn.CnnModel(3, 5, 32,
+      filters = Array.fill(15)(r.nextGaussian()),
+      filterBias = Array.fill(3)(r.nextGaussian() * 0.1),
+      dense = Array.fill(3)(r.nextGaussian()),
+      bias = 0.2, mean = 0.3, std = 1.7)
+    val lstm = Lstm.LstmModel(3, 24,
+      wx = Array.fill(12)(r.nextGaussian() * 0.5),
+      wh = Array.fill(36)(r.nextGaussian() * 0.3),
+      b = Array.fill(12)(r.nextGaussian() * 0.2),
+      dense = Array.fill(3)(r.nextGaussian()),
+      bias = 0.1, mean = 0.4, std = 1.9)
+    def stackRow(name: String, m: LstmStack.Lstm2Model) =
+      ModelRow(name, m.window, LstmStack.logitCol(m, _),
+        LstmStack.forward(m, _), _ == 0)
+    val kStack = stackModel(r, 2, 2, 16, head = "mha", nHeads = 2,
+      mean = 0.2, std = 1.5)
+    val kHead = LstmStack.KHead(3,
+      denseK = Array.fill(3 * 2)(r.nextGaussian()),
+      biasK = Array.fill(3)(r.nextGaussian() * 0.2),
+      attDK = Array.fill(3 * 2 * 2)(r.nextGaussian()))
+    val front3 = frontModel(r, 3, 16, Seq((2, 3)))
+    val pipe1 = pipeModel(r, 1, 24)
+    val pipe3 = pipeModel(r, 3, 16)
+    val tower = towerModel(r, 16)
+    val layers = Array(
+      SpecCnn.Layer(1, 2, Array.fill(18)(r.nextGaussian()),
+        Array.fill(2)(r.nextGaussian())),
+      SpecCnn.Layer(2, 3, Array.fill(54)(r.nextGaussian()),
+        Array.fill(3)(r.nextGaussian())))
+    val spec = SpecCnn.SpecCnnModel(5, 6, layers,
+      Array.fill(3 * 2 * 2)(r.nextGaussian()), r.nextGaussian(),
+      mean = 0.11, std = 1.3)
+    Seq(
+      ModelRow("Cnn", 32, Cnn.logitCol(cnn, _), Cnn.forward(cnn, _), _ < 5),
+      ModelRow("Lstm", 24, Lstm.logitCol(lstm, _), Lstm.forward(lstm, _),
+        _ == 0),
+      stackRow("LstmStack mean", stackModel(r, 3, 2, 20, mean = 0.5, std = 2.0)),
+      stackRow("LstmStack attn", stackModel(r, 2, 2, 20, head = "attn")),
+      stackRow("LstmStack mha", stackModel(r, 2, 3, 20, head = "mha",
+        nHeads = 2)),
+      stackRow("LstmStack bidir", stackModel(r, 2, 2, 20, bidir = true)),
+      ModelRow("LstmStack K-mode", 16, LstmStack.logitsKCol(kStack, kHead, _),
+        LstmStack.forwardK(kStack, kHead, _), _ == 0),
+      ModelRow("ConvFront seq, 3 channels", 48, ConvFront.seqCol(front3, _),
+        ConvFront.forward(front3, _), frontNull(3, Seq(3))),
+      ModelRow("ConvPipe, 1 channel", 24, ConvPipe.logitCol(pipe1, _),
+        ConvPipe.forward(pipe1, _), frontNull(1, Seq(3, 3))),
+      ModelRow("ConvPipe, 3 channels", 48, ConvPipe.logitCol(pipe3, _),
+        ConvPipe.forward(pipe3, _), frontNull(3, Seq(3, 3))),
+      ModelRow("TowerFusion", 48, TowerFusion.logitCol(tower, _),
+        TowerFusion.forward(tower, _), frontNull(3, Seq(3, 3))),
+      ModelRow("SpecCnn", 30, SpecCnn.logitCol(spec, _),
+        SpecCnn.forward(spec, _), _ != 30))
+  }
+
+  /** Windows of every length 0..2·inputLen (`id` = length), then 12 of
+    * the trained length. The values are non-integer doubles computed in
+    * the plan from `id`: a local relation would be evaluated at planning
+    * time, and the generated path would never run. */
+  private def windows(inputLen: Int) = {
+    val maxLen = 2 * inputLen
+    val full = array((0 until maxLen).map(j =>
+      ((col("id") * 7919 + j * 104729) % 1000).cast("double") / 137.0 - 3.5): _*)
+    spark.range(maxLen + 13).select(col("id"), slice(full, lit(1),
+      when(col("id") <= maxLen, col("id")).otherwise(inputLen).cast("int"))
+      .as("w"))
+  }
+
+  private def withConfs[T](kv: (String, String)*)(body: => T): T = {
+    val prev = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
     }
   }
 
-  test("conv1d_maxpool_logit compiles under codegen with fallback disabled") {
-    val prev = spark.conf.getOption("spark.sql.codegen.fallback")
-    spark.conf.set("spark.sql.codegen.fallback", "false")
-    try {
-      val rnd = new scala.util.Random(3)
-      val m = graft.ml.Cnn.CnnModel(3, 5, 32,
-        filters = Array.fill(15)(rnd.nextGaussian()),
-        filterBias = Array.fill(3)(rnd.nextGaussian() * 0.1),
-        dense = Array.fill(3)(rnd.nextGaussian()),
-        bias = 0.2, mean = 10.0, std = 4.0)
-      // range-based window construction, same rationale as array_dot:
-      // keep the input out of LocalTableScan so doGenCode must run
-      val winCol = array((0 until 32).map(j =>
-        ((col("id") * 7 + j) % 37).cast("double")): _*)
-      val df = spark.range(50).select(col("id"), winCol.as("w"))
-        .select(col("id"), graft.ml.Cnn.logitCol(m, col("w")).as("z"))
-      val rows = df.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      val codegenStages = df.queryExecution.executedPlan.collect {
-        case w: org.apache.spark.sql.execution.WholeStageCodegenExec
-          if w.toString.contains("conv1d_maxpool_logit") => w
+  private def planOf(df: org.apache.spark.sql.DataFrame) =
+    df.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        a.executedPlan
+      case p => p
+    }
+
+  /** A logit or K-logit/sequence value as its raw bits (None = NULL). */
+  private def bits(v: Any): Option[Seq[Long]] = v match {
+    case null => None
+    case d: Double => Some(Seq(java.lang.Double.doubleToLongBits(d)))
+    case a: Array[Double] => Some(a.toSeq.map(java.lang.Double.doubleToLongBits))
+    case s: scala.collection.Seq[_] =>
+      Some(s.toSeq.map(x => java.lang.Double.doubleToLongBits(x.asInstanceOf[Double])))
+  }
+
+  modelRows.foreach { row =>
+    test(s"model column table: ${row.name}") {
+      def run() = {
+        val df = windows(row.inputLen)
+          .select(col("id"), col("w"), row.column(col("w")).as("z"))
+        (df.collect(), planOf(df))
       }
-      assert(codegenStages.nonEmpty,
-        df.queryExecution.executedPlan.toString.take(1500))
-      // codegen path == JVM loop bit-for-bit
-      (0 until 50).foreach { i =>
-        val win = Array.tabulate(32)(j => ((i * 7 + j) % 37).toDouble)
-        assert(java.lang.Double.doubleToLongBits(rows(i.toLong)) ==
-          java.lang.Double.doubleToLongBits(graft.ml.Cnn.forward(m, win)))
+      val (gen, genPlan) = withConfs(
+        "spark.sql.codegen.wholeStage" -> "true",
+        "spark.sql.codegen.fallback" -> "false")(run())
+      val staged = genPlan.collect {
+        case w: org.apache.spark.sql.execution.WholeStageCodegenExec =>
+          w.child.collect {
+            case p: org.apache.spark.sql.execution.ProjectExec
+              if p.projectList.exists(_.name == "z") => p
+          }
+      }.flatten
+      assert(staged.nonEmpty, s"the column is not in a generated stage: $genPlan")
+      val (interp, intPlan) = withConfs(
+        "spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(run())
+      assert(intPlan.collect {
+        case w: org.apache.spark.sql.execution.WholeStageCodegenExec => w
+      }.isEmpty, intPlan.toString)
+      val interpBy = interp.map(r => r.getLong(0) -> bits(r.get(2))).toMap
+      var served = 0
+      gen.foreach { r =>
+        val w = r.getSeq[Double](1).toArray
+        val z = bits(r.get(2))
+        assert(interpBy(r.getLong(0)) == z,
+          s"${row.name}, length ${w.length}: generated != NO_CODEGEN")
+        if (w.length == row.inputLen) {
+          assert(z == bits(row.forward(w)),
+            s"${row.name}, row ${r.getLong(0)}: column != forward")
+          served += 1
+        }
       }
-      // short window: NULL under codegen too
-      val nul = spark.range(1)
-        .select(array(lit(1.0), lit(2.0)).as("w"))
-        .select(graft.ml.Cnn.logitCol(m, col("w")))
-        .collect().head
-      assert(nul.isNullAt(0))
-    } finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.codegen.fallback", v)
-      case None => spark.conf.unset("spark.sql.codegen.fallback")
+      assert(served == 13)
+      val nullLengths = gen.collect {
+        case r if r.isNullAt(2) => r.getSeq[Double](1).length
+      }.toSet
+      assert(nullLengths == (0 to 2 * row.inputLen).filter(row.isNull).toSet,
+        s"${row.name}: NULL lengths ${nullLengths.toSeq.sorted}")
     }
   }
 
-  test("conv_front_seq nested in bidir+mha lstm_stack_logit compiles under codegen with fallback disabled") {
-    val prev = spark.conf.getOption("spark.sql.codegen.fallback")
-    spark.conf.set("spark.sql.codegen.fallback", "false")
-    try {
-      val rnd = new scala.util.Random(97)
-      val front = graft.ml.ConvFront.ConvFrontModel(24,
-        blocks = Seq(
-          graft.ml.ConvFront.ConvBlock(1, 2, 3,
-            w = Array.fill(6)(rnd.nextGaussian() * 0.5),
-            b = Array.fill(2)(rnd.nextGaussian() * 0.1),
-            scale = Array.fill(2)(1.0 + rnd.nextGaussian() * 0.1),
-            shift = Array.fill(2)(rnd.nextGaussian() * 0.1)),
-          graft.ml.ConvFront.ConvBlock(2, 2, 3,
-            w = Array.fill(12)(rnd.nextGaussian() * 0.5),
-            b = Array.fill(2)(rnd.nextGaussian() * 0.1),
-            scale = Array.fill(2)(1.0 + rnd.nextGaussian() * 0.1),
-            shift = Array.fill(2)(rnd.nextGaussian() * 0.1))),
-        mix = Array.fill(2)(rnd.nextGaussian()),
-        mixBias = 0.1, mean = 14.0, std = 8.0)
-      val h1 = 2; val h2 = 2; val nH = 2
-      val stack = graft.ml.LstmStack.Lstm2Model(h1, h2, front.outLen,
-        wx1 = Array.fill(4 * h1)(rnd.nextGaussian() * 0.5),
-        wh1 = Array.fill(4 * h1 * h1)(rnd.nextGaussian() * 0.3),
-        b1 = Array.fill(4 * h1)(rnd.nextGaussian() * 0.2),
-        wx2 = Array.fill(4 * h2 * 2 * h1)(rnd.nextGaussian() * 0.5),
-        wh2 = Array.fill(4 * h2 * h2)(rnd.nextGaussian() * 0.3),
-        b2 = Array.fill(4 * h2)(rnd.nextGaussian() * 0.2),
-        dense = Array.fill(h2)(rnd.nextGaussian()),
-        bias = 0.1, mean = 0.0, std = 1.0,
-        head = "mha", bidir = true,
-        wx1b = Array.fill(4 * h1)(rnd.nextGaussian() * 0.5),
-        wh1b = Array.fill(4 * h1 * h1)(rnd.nextGaussian() * 0.3),
-        b1b = Array.fill(4 * h1)(rnd.nextGaussian() * 0.2),
-        nHeads = nH,
-        attA = Array.fill(nH * h2)(rnd.nextGaussian() * 0.5),
-        attCs = Array.fill(nH)(rnd.nextGaussian() * 0.3),
-        attD = Array.fill(nH * h2)(rnd.nextGaussian()))
-      val m = graft.ml.ConvPipe.ConvPipeModel(front, stack)
-      // range-based window so doGenCode must run (no LocalTableScan)
-      val winCol = array((0 until 24).map(j =>
-        ((col("id") * 7 + j) % 31).cast("double")): _*)
-      val df = spark.range(30).select(col("id"), winCol.as("w"))
-        .select(col("id"),
-          graft.ml.ConvPipe.logitCol(m, col("w")).as("z"))
-      val rows = df.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      val codegenStages = df.queryExecution.executedPlan.collect {
-        case w: org.apache.spark.sql.execution.WholeStageCodegenExec
-          if w.toString.contains("lstm_stack_logit") &&
-            w.toString.contains("conv_front_seq") => w
+  test("model_forward: a second model of the family compiles no new class") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val r = new scala.util.Random(41)
+    def cnn(nf: Int, w: Int) = Cnn.CnnModel(nf, w, 32,
+      filters = Array.fill(nf * w)(r.nextGaussian()),
+      filterBias = Array.fill(nf)(r.nextGaussian() * 0.1),
+      dense = Array.fill(nf)(r.nextGaussian()),
+      bias = 0.2, mean = 0.3, std = 1.7)
+    def score(c: Column => Column) =
+      withConfs("spark.sql.codegen.fallback" -> "false") {
+        windows(32).select(col("id"), c(col("w")).as("z")).collect()
       }
-      assert(codegenStages.nonEmpty,
-        df.queryExecution.executedPlan.toString.take(1500))
-      (0 until 30).foreach { i =>
-        val win = Array.tabulate(24)(j => ((i * 7 + j) % 31).toDouble)
-        assert(java.lang.Double.doubleToLongBits(rows(i.toLong)) ==
-          java.lang.Double.doubleToLongBits(graft.ml.ConvPipe.forward(m, win)),
-          s"row $i")
-      }
-      // degenerate inputs stay NULL under codegen
-      val nul = spark.range(1)
-        .select(array((0 until 6).map(_ => lit(1.0)): _*)
-          .cast("array<double>").as("w"))
-        .select(graft.ml.ConvFront.seqCol(front, col("w")))
-        .collect().head
-      assert(nul.isNullAt(0))
-    } finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.codegen.fallback", v)
-      case None => spark.conf.unset("spark.sql.codegen.fallback")
-    }
+    score(Cnn.logitCol(cnn(3, 5), _))
+    score(LstmStack.logitCol(stackModel(r, 3, 2, 32), _))
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    score(Cnn.logitCol(cnn(4, 7), _))
+    score(LstmStack.logitCol(stackModel(r, 2, 3, 32, head = "mha",
+      bidir = true, nHeads = 2), _))
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiled,
+      "a model's weights or shapes reached the generated source")
   }
 
-  test("3-channel conv_front_seq and K-class lstm_stack_logit compile under codegen with fallback disabled") {
-    val prev = spark.conf.getOption("spark.sql.codegen.fallback")
-    spark.conf.set("spark.sql.codegen.fallback", "false")
-    try {
-      val rnd = new scala.util.Random(83)
-      // multi-channel front: 3 interleaved channels, per-channel T=16
-      val front = graft.ml.ConvFront.ConvFrontModel(16,
-        blocks = Seq(graft.ml.ConvFront.ConvBlock(3, 2, 3,
-          w = Array.fill(18)(rnd.nextGaussian() * 0.4),
-          b = Array.fill(2)(rnd.nextGaussian() * 0.1),
-          scale = Array.fill(2)(1.0 + rnd.nextGaussian() * 0.1),
-          shift = Array.fill(2)(rnd.nextGaussian() * 0.1))),
-        mix = Array.fill(2)(rnd.nextGaussian()),
-        mixBias = 0.1, mean = 3.0, std = 5.0)
-      val winCol = array((0 until 48).map(j =>
-        ((col("id") * 7 + j) % 31).cast("double")): _*)
-      val df = spark.range(20).select(col("id"), winCol.as("w"))
-        .select(col("id"),
-          graft.ml.ConvFront.seqCol(front, col("w")).as("seq"))
-      val rows = df.collect()
-        .map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
-      val stages = df.queryExecution.executedPlan.collect {
-        case w: org.apache.spark.sql.execution.WholeStageCodegenExec
-          if w.toString.contains("conv_front_seq") => w
-      }
-      assert(stages.nonEmpty)
-      (0 until 20).foreach { i =>
-        val win = Array.tabulate(48)(j => ((i * 7 + j) % 31).toDouble)
-        assert(rows(i.toLong) ==
-          graft.ml.ConvFront.forward(front, win).toSeq, s"row $i")
-      }
-      // a non-multiple-of-cIn0 input is NULL under codegen too
-      assert(spark.range(1)
-        .select(array((0 until 47).map(j => lit(j.toDouble)): _*).as("w"))
-        .select(graft.ml.ConvFront.seqCol(front, col("w")))
-        .collect().head.isNullAt(0))
-
-      // K-class stacked readout under codegen
-      val h1 = 2; val h2 = 2
-      val m = graft.ml.LstmStack.Lstm2Model(h1, h2, 16,
-        wx1 = Array.fill(4 * h1)(rnd.nextGaussian() * 0.5),
-        wh1 = Array.fill(4 * h1 * h1)(rnd.nextGaussian() * 0.3),
-        b1 = Array.fill(4 * h1)(rnd.nextGaussian() * 0.2),
-        wx2 = Array.fill(4 * h2 * h1)(rnd.nextGaussian() * 0.5),
-        wh2 = Array.fill(4 * h2 * h2)(rnd.nextGaussian() * 0.3),
-        b2 = Array.fill(4 * h2)(rnd.nextGaussian() * 0.2),
-        dense = Array.fill(h2)(rnd.nextGaussian()),
-        bias = 0.1, mean = 2.0, std = 4.0)
-      val kh = graft.ml.LstmStack.KHead(3,
-        denseK = Array.fill(3 * h2)(rnd.nextGaussian()),
-        biasK = Array.fill(3)(rnd.nextGaussian() * 0.2))
-      val winCol2 = array((0 until 16).map(j =>
-        ((col("id") * 5 + j) % 23).cast("double")): _*)
-      val dfk = spark.range(20).select(col("id"), winCol2.as("w"))
-        .select(col("id"),
-          graft.ml.LstmStack.logitsKCol(m, kh, col("w")).as("lk"))
-      val rowsK = dfk.collect()
-        .map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
-      val stagesK = dfk.queryExecution.executedPlan.collect {
-        case w: org.apache.spark.sql.execution.WholeStageCodegenExec
-          if w.toString.contains("lstm_stack_logit") => w
-      }
-      assert(stagesK.nonEmpty)
-      (0 until 20).foreach { i =>
-        val win = Array.tabulate(16)(j => ((i * 5 + j) % 23).toDouble)
-        assert(rowsK(i.toLong) ==
-          graft.ml.LstmStack.forwardK(m, kh, win).toSeq, s"row $i")
-      }
-    } finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.codegen.fallback", v)
-      case None => spark.conf.unset("spark.sql.codegen.fallback")
-    }
+  test("only ArrayDot and ArrayMag3D generate Java loops or methods") {
+    import scala.jdk.CollectionConverters._
+    val src = new java.io.File(
+      "src/main/scala/org/apache/spark/sql/graft/expressions.scala")
+    assert(src.isFile, s"run from the repo root: ${src.getAbsolutePath}")
+    val decl = """^\s*(?:case class|abstract class|class|object|trait)\s+(\w+)""".r
+    var enclosing = "<file scope>"
+    val sites = java.nio.file.Files.readAllLines(src.toPath).asScala.flatMap { line =>
+      decl.findFirstMatchIn(line).foreach(m => enclosing = m.group(1))
+      if (line.contains("ctx.addNewFunction") || line.contains("for (int"))
+        Some(enclosing)
+      else None
+    }.distinct
+    assert(sites.nonEmpty && sites.toSet.subsetOf(Set("ArrayDot", "ArrayMag3D")),
+      sites.mkString(", "))
   }
 
   test("spec_cnn2d_logit: INTERPRETED eval == JVM forward bit-for-bit; wrong shape null") {
@@ -403,11 +434,8 @@ class GraftExpressionsSpec extends SparkSpec {
       Array.fill(3 * 2 * 2)(rnd.nextGaussian()), rnd.nextGaussian(),
       mean = 0.11, std = 1.3)
     def exprOf(img: Array[Double]) =
-      org.apache.spark.sql.graft.SpecCnn2dLogit(
-        Literal.create(img.toSeq, ArrayType(DoubleType)), 5, 6,
-        m.layers.map(l => (l.cIn, l.cOut)).toSeq,
-        m.layers.map(_.w.toSeq).toSeq, m.layers.map(_.b.toSeq).toSeq,
-        m.dense.toSeq, m.bias, m.mean, m.std)
+      org.apache.spark.sql.graft.ModelForward(
+        Literal.create(img.toSeq, ArrayType(DoubleType)), SpecCnn.Kernel(m))
     (0 until 15).foreach { i =>
       val img = Array.fill(30)(rnd.nextGaussian() * 3)
       val got = exprOf(img).eval(null)
@@ -463,45 +491,36 @@ class GraftExpressionsSpec extends SparkSpec {
     assert(nulls.getString(0) == "und" && nulls.getString(1) == "und")
   }
 
-  test("fusion_dense_logit: INTERPRETED eval == independent restatement; wrong dim raises") {
+  test("tower fusion: INTERPRETED eval == forward == a restatement of fusion") {
     import org.apache.spark.sql.catalyst.expressions.Literal
     import org.apache.spark.sql.types.{ArrayType, DoubleType}
     val rnd = new scala.util.Random(31)
-    val dims = Seq(3, 2, 4)
-    val d = dims.sum
-    val h = 3
-    val fuse = Array.fill(d * d)(rnd.nextGaussian() * 0.2)
-    val w1 = Array.fill(h * d)(rnd.nextGaussian())
-    val b1 = Array.fill(h)(rnd.nextGaussian() * 0.1)
-    val w2 = Array.fill(h)(rnd.nextGaussian())
-    val b2 = rnd.nextGaussian()
+    val m = towerModel(rnd, 16)
+    val d = m.d
+    val h = m.b1.length
     // independent restatement of the documented accumulation order
     def expected(v: Array[Double]): Double = {
       val fused = Array.tabulate(d)(j =>
-        (0 until d).foldLeft(v(j))((a, i) => a + fuse(j * d + i) * v(i)))
-      (0 until h).foldLeft(b2) { (z, r) =>
-        val hr = (0 until d).foldLeft(b1(r))((a, j) => a + w1(r * d + j) * fused(j))
-        z + w2(r) * (if (hr > 0.0) hr else 0.0)
+        (0 until d).foldLeft(v(j))((a, i) => a + m.fuse(j * d + i) * v(i)))
+      (0 until h).foldLeft(m.b2) { (z, r) =>
+        val hr = (0 until d).foldLeft(m.b1(r))((a, j) => a + m.w1(r * d + j) * fused(j))
+        z + m.w2(r) * (if (hr > 0.0) hr else 0.0)
       }
     }
-    def exprOf(towers: Seq[Array[Double]]) =
-      org.apache.spark.sql.graft.FusionDenseLogit(
-        towers.map(t => Literal.create(t.toSeq, ArrayType(DoubleType))),
-        dims, fuse.toSeq, w1.toSeq, b1.toSeq, w2.toSeq, b2)
+    def exprOf(x: Array[Double]) =
+      org.apache.spark.sql.graft.ModelForward(
+        Literal.create(x.toSeq, ArrayType(DoubleType)), TowerFusion.Kernel(m))
     (0 until 15).foreach { i =>
-      val towers = dims.map(n => Array.fill(n)(rnd.nextGaussian()))
-      val got = exprOf(towers).eval(null)
+      val x = Array.fill(m.inputLen)(rnd.nextGaussian() * 2)
+      val v = m.towers.flatMap(t => LstmStack.forwardK(t.stack,
+        TowerFusion.unitKHead(t.stack), ConvFront.forward(t.front, x))).toArray
+      val want = java.lang.Double.doubleToLongBits(expected(v))
+      assert(java.lang.Double.doubleToLongBits(TowerFusion.forward(m, x)) == want,
+        s"trial $i: forward diverges from the restatement")
+      val got = exprOf(x).eval(null)
       assert(got != null, s"trial $i")
-      assert(java.lang.Double.doubleToLongBits(got.asInstanceOf[Double]) ==
-        java.lang.Double.doubleToLongBits(expected(towers.flatten.toArray)),
+      assert(java.lang.Double.doubleToLongBits(got.asInstanceOf[Double]) == want,
         s"trial $i: interpreted eval diverges from the restatement")
-    }
-    // a wrong-length tower child is a CONSTRUCTION bug (dims and the
-    // tower children derive from one model object) — it raises rather
-    // than silently nulling every logit
-    intercept[IllegalStateException] {
-      exprOf(Seq(Array.fill(3)(1.0), Array.fill(1)(1.0),
-        Array.fill(4)(1.0))).eval(null)
     }
   }
 }

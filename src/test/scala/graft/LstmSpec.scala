@@ -145,18 +145,17 @@ class LstmSpec extends SparkSpec {
     val a = graft.ml.Trainer.auroc(scored)
     assert(a > 0.9, s"LSTM held-out AUROC only $a")
 
-    // batch (column) and serve (closure) scoring agree: LOGITS bit-exact
-    // (+,*,clamp only — same accumulation order), sigmoid to a few ulps
-    // (Math.exp may differ by an ulp between a JIT-intrinsified call
-    // site and the codegen'd one). One collect: limit() without an
-    // order can pick different rows per execution.
+    // batch (column) and serve (closure) scoring agree bit for bit: both
+    // run the one forward kernel, and both sigmoids use StrictMath.exp.
+    // One collect: limit() without an order can pick different rows per
+    // execution.
     Lstm.scoreWindows(model, heldOut.limit(3))
       .select(col("window"), col("logit"), col("p_seizure"))
       .collect().foreach { r =>
         val win = r.getAs[Seq[Double]]("window").toArray
         assert(Lstm.forward(model, win) == r.getAs[Double]("logit"))
         val pc = Lstm.scorer(model)(win)
-        assert(math.abs(pc - r.getAs[Double]("p_seizure")) <= 4 * math.ulp(pc),
+        assert(pc == r.getAs[Double]("p_seizure"),
           s"closure $pc vs column ${r.getAs[Double]("p_seizure")}")
       }
 

@@ -171,14 +171,17 @@ class SpecCnnSpec extends SparkSpec {
     val a = graft.ml.Trainer.auroc(scored)
     assert(a > 0.95, s"SpecCnn held-out AUROC only $a")
 
-    // column and closure scoring agree on the SAME window: the closure
-    // re-derives the image from the raw window via the trained geometry
+    // column and closure scoring agree bit for bit on the SAME window:
+    // the closure re-derives the image from the raw window via the
+    // trained geometry
     val v = graft.streaming.NnBuffer.dp2vectors(corpus, bufferSamples = 125)
       .filter(_.eventId == "SZ1").head()
     val img = SpecCnn.specImage(v.vec, cfg.specSamp, cfg.specStep, cfg.zeroTol)
     val pc = SpecCnn.scorer(model, cfg)(v.vec)
-    val pf = 1.0 / (1.0 + math.exp(-SpecCnn.forward(model, img)))
-    assert(pc == pf)
+    val pf = SpecCnn.scoreSpectrograms(model,
+        Seq(Tuple1(img)).toDF("spectrogram"))
+      .select("p_seizure").collect().head.getDouble(0)
+    assert(pc == pf, s"closure $pc vs column $pf")
 
     // deploy: the trained spec-CNN inside the same alarm FSM as the
     // other families; wrong buffer geometry is loud at assembly time
